@@ -15,8 +15,9 @@ Reference semantics (/root/reference/src/groups.rs:16-41, src/lib.rs):
   exists; empty result → NULL (lib.rs:1393-1411)
 
 Spark shape: one narrow projection explodes commands into group ops, one
-shuffle keyed by (group_type, group_key), `applyInPandas` replays the LWW
-fold per key in (request_seq, item_index, sub) order — per-key serial
+shuffle keyed by (group_type, group_key), a partition-streaming
+`mapInPandas` replays the LWW fold per key in (request_seq, item_index,
+sub) order — per-key serial
 processing, exactly the reference's Durable-Object-per-group model
 (groups.rs:183-235). Hydration results join back to events on the seq
 pair. At 100 TB the op stream is a small projection of events and the
@@ -43,7 +44,6 @@ from pyspark.sql.types import (
 )
 
 from hogflare_spark.operators.person_store import synthetic_time
-from hogflare_spark.functions.caching import cached
 
 _GROUP_OPS = StructType(
     [
@@ -184,7 +184,6 @@ def _seed_group_ops(prior_groups: DataFrame) -> DataFrame:
 def fold_group_state(
     commands: DataFrame,
     prior_groups: DataFrame | None = None,
-    fast_path: bool | str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (results, groups_table).
 
@@ -197,18 +196,10 @@ def fold_group_state(
     `prior_groups` (streaming incremental folds): GROUP_SCHEMA frame seeded
     into the replay before this batch's ops.
 
-    `fast_path` mirrors fold_person_state's knob: "auto" uses the Python
-    replay unless person_state.FAST_PATH_MIN_COMMANDS is configured and
-    exceeded (measured: the replay wins at every locally measurable
-    size — see scripts/fold_crossover.py), except that individual cells
-    whose op count reaches person_state.MEGA_COMPONENT_MIN_OPS route to
-    the JVM fold for memory robustness; True forces the pure-JVM LWW
-    fold (group_fast.py — the memory-robust / Python-less-executor mode,
-    pinned by the hf_event_group_props driver gate); False forces the
-    replay.
+    Every cell is folded by the partition-streaming LWW replay
+    (`_replay_stream` below), which keeps one cell's record, never its op
+    list: a hot (group_type, group_key) cell streams through one task.
     """
-    from hogflare_spark.operators import person_state
-
     if prior_groups is None:
         # Group-free traffic short-circuit (pure capture streams are the
         # common case): one JVM-only scan of the cached commands frame
@@ -232,24 +223,6 @@ def fold_group_state(
                 "props", "present", "echo",
             )
             return results, _groups_table_of(empty)
-
-    if fast_path == "auto":
-        n_commands = commands.count()
-        if (
-            person_state.FAST_PATH_MIN_COMMANDS is not None
-            and n_commands >= person_state.FAST_PATH_MIN_COMMANDS
-        ):
-            fast_path = True
-        elif n_commands * 8 >= person_state.MEGA_COMPONENT_MIN_OPS:
-            # per-cell routing (see person_state.MEGA_COMPONENT_MIN_OPS):
-            # oversized (group_type, group_key) cells take the JVM fold,
-            # the rest keep the Python replay. One command derives a
-            # handful of group ops (≤ group-slot count of updates +
-            # lookups), so ×8 bounds the op count from the command count
-            # well enough to skip the flag pass on small batches.
-            fast_path = "mega"
-        else:
-            fast_path = False
 
     ops = derive_group_ops(commands)
     if prior_groups is not None:
@@ -363,85 +336,14 @@ def fold_group_state(
     # matching note in person_state.fold_person_state (AQE would coalesce
     # this to 1-4 partitions by bytes)
     n_fold = ops.sparkSession.sparkContext.defaultParallelism
-    partitioned = ops.repartition(n_fold, "group_type", "group_key")
-
-    def _stream_fold(df: DataFrame) -> DataFrame:
-        return df.sortWithinPartitions(*_SORT).mapInPandas(_replay_stream, _FOLD_OUT)
-
-    if fast_path == "mega":
-        # Cheap pre-check (see person_state): mega routing only matters
-        # if SOME cell's op count reaches the threshold — a partial-agg
-        # count over the pinned frame answers that without the window
-        # flag pass. mx=None doubles as the empty-ops short-circuit
-        # (group-free traffic, e.g. pure capture streams): zero group
-        # work past this point.
-        partitioned = partitioned.localCheckpoint(eager=True)
-        mx = (
-            partitioned.groupBy("group_type", "group_key")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("mx"))
-            .first()["mx"]
-        )
-        if mx is None:
-            empty = commands.sparkSession.createDataFrame([], _FOLD_OUT)
-            results = empty.select(
-                "request_seq", "item_index", "group_type", "group_key",
-                "props", "present", "echo",
-            )
-            groups_table = _groups_table_of(empty)
-            return results, groups_table
-        if mx < person_state.MEGA_COMPONENT_MIN_OPS:
-            fast_path = False
-
-    if fast_path:
-        from pyspark.sql import Window
-
-        from hogflare_spark.operators.group_fast import (
-            fast_group_fold,
-            group_op_fast_eligible,
-        )
-
-        wc = Window.partitionBy("group_type", "group_key")
-        # localCheckpoint, not cache: the fast pipeline self-joins this
-        # frame (probes × core × keys) and self-join dedup defeats the
-        # cache lookup — see person_state.fold_person_state.
-        eligible = (
-            F.min(F.when(group_op_fast_eligible(), 1).otherwise(0)).over(wc) == 1
-        )
-        if fast_path == "mega":
-            # only cells whose op count reaches the mega threshold take
-            # the JVM fold; partition-local count, no extra exchange
-            eligible = eligible & (
-                F.count(F.lit(1)).over(wc)
-                >= F.lit(person_state.MEGA_COMPONENT_MIN_OPS)
-            )
-        flagged = partitioned.withColumn("_fast", eligible).localCheckpoint(
-            eager=True
-        )
-        counts = {
-            r["_fast"]: r["count"]
-            for r in flagged.groupBy("_fast").count().collect()
-        }
-        branches = []
-        if counts.get(False, 0):
-            branches.append(_stream_fold(flagged.where(~F.col("_fast")).drop("_fast")))
-        if counts.get(True, 0):
-            branches.append(
-                fast_group_fold(flagged.where(F.col("_fast")), _FOLD_OUT)
-            )
-        if not branches:
-            branches = [flagged.sparkSession.createDataFrame([], _FOLD_OUT)]
-        folded = branches[0]
-        for b in branches[1:]:
-            folded = folded.unionByName(b)
-    else:
-        folded = _stream_fold(partitioned)
-    # see person_state.FOLD_PIN: physical pin, replay runs exactly once
     folded = (
-        folded.localCheckpoint(eager=True)
-        if person_state.FOLD_PIN
-        else cached(folded)
+        ops.repartition(n_fold, "group_type", "group_key")
+        .sortWithinPartitions(*_SORT)
+        .mapInPandas(_replay_stream, _FOLD_OUT)
     )
+    # physical pin (see person_state.fold_person_state): the replay runs
+    # exactly once across the results and groups-table consumers
+    folded = folded.localCheckpoint(eager=True)
 
     results = folded.where(F.col("row_type") == "result").select(
         "request_seq", "item_index", "group_type", "group_key", "props", "present", "echo"

@@ -65,16 +65,12 @@ def ingest_commands(
     group_types: tuple[str | None, ...] = DEFAULT_GROUP_TYPES,
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
-    person_fast_path: bool | str = "auto",
-    group_fast_path: bool | str = "auto",
     person_id_floor: int | None = None,
 ) -> dict[str, DataFrame]:
     """Ingest-command rows (normalize.COMMAND_SCHEMA) → governed tables.
 
     Returns {"events": ..., "persons": ..., "groups": ...}. The prior_*
     frames seed the state folds (streaming incremental processing).
-    `person_fast_path` / `group_fast_path` are forwarded to the state
-    folds (see fold_person_state / fold_group_state docs);
     `person_id_floor` lets a caller seeding a slice of the prior persons
     table pin the allocation base to the global max id.
     """
@@ -87,12 +83,9 @@ def ingest_commands(
         commands,
         team_id,
         prior_persons,
-        fast_path=person_fast_path,
         person_id_floor=person_id_floor,
     )
-    group_results, groups_table = fold_group_state(
-        commands, prior_groups, fast_path=group_fast_path
-    )
+    group_results, groups_table = fold_group_state(commands, prior_groups)
 
     seq = ["request_seq", "item_index"]
 
@@ -153,7 +146,7 @@ def ingest_commands(
         )
         ev = ev.withColumn(f"group{i}", F.coalesce(echo_slot, F.col(f"slot{i}")))
 
-    from hogflare_spark.operators.person_fast import synth_time_expr
+    from hogflare_spark.operators.person_store import synth_time_expr
 
     seq_linear = F.col("request_seq") * F.lit(1_000_000) + F.col("item_index") * F.lit(100)
     events = ev.select(
@@ -214,8 +207,6 @@ def ingest_raw_requests(
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
-    person_fast_path: bool | str = "auto",
-    group_fast_path: bool | str = "auto",
 ) -> dict[str, DataFrame]:
     """Full path: raw HTTP-shaped rows → {events, persons, groups}.
 
@@ -236,8 +227,6 @@ def ingest_raw_requests(
         group_types=group_types,
         prior_persons=prior_persons,
         prior_groups=prior_groups,
-        person_fast_path=person_fast_path,
-        group_fast_path=group_fast_path,
     )
 
 

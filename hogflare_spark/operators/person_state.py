@@ -9,8 +9,9 @@ Spark shape (SURVEY.md §7 M3):
    key; ops for unrelated distinct_ids stay in singleton components, so
    the shuffle is effectively a groupBy(distinct_id) with identity
    clusters coalesced;
-3. `applyInPandas` per component replays the MemoryPersonStore kernel
-   (person_store.py) in (request_seq, item_index, sub) order, emitting
+3. a partition-streaming `mapInPandas` replays the MemoryPersonStore
+   kernel (person_store.py) per component in (request_seq, item_index,
+   sub) order, emitting
    post-update snapshots per event (U12 — the event carries the person
    state as of *after* its own update, lib.rs:462-470) plus final person
    records and id-allocation events;
@@ -192,11 +193,10 @@ def _seed_ops(prior_persons: DataFrame) -> DataFrame:
 def _two_phase_rank(allocs: DataFrame, small_batch: bool = False) -> DataFrame:
     """Global dense allocation rank without a single-reducer stage (U10).
 
-    `small_batch=True` (decided from the same commands-count used by the
-    fold's auto fast-path switch) takes a plain global row_number instead:
-    below ~10^6 allocations one reducer sorting the whole set is cheaper
-    than the range shuffle + sampling pass + offset join, and the output
-    is identical (the key is unique and totally ordered either way).
+    `small_batch=True` (decided from the fold's sizing aggregate) takes a
+    plain global row_number instead: below ~10^6 allocations one reducer
+    sorting the whole set is cheaper than the range shuffle + sampling
+    pass + offset join, and the output is identical (the key is unique and totally ordered either way).
 
     `row_number().over(Window.orderBy(...))` with no partitionBy funnels
     every allocation through one reducer — fine at test scale, fatal on a
@@ -250,32 +250,9 @@ def _two_phase_rank(allocs: DataFrame, small_batch: bool = False) -> DataFrame:
     )
 
 
-# Auto-mode threshold for engaging the JVM expression fold for EVERY
-# eligible component. None = auto only engages it per-component via
-# MEGA_COMPONENT_MIN_OPS below: measured head-to-head (scripts/fold_crossover.py, local[32],
-# 3 keys/op), the Arrow+Python replay wins at every size we can measure —
-# and the round-5 streaming-replay rewrite widened the gap: 9s vs 36s at
-# 2M ops (was 16s vs 31s with the per-group applyInPandas shape) —
-# because the expression path's as-of snapshot assembly pays two extra
-# exchanges and three wide sorts over an ops×keys frame while the replay
-# pays C-speed dict work in one exchange. The JVM path stays available
-# as fast_path=True: since the replay now streams Arrow batches (it no
-# longer buffers a component's full op list in one pandas frame), the
-# JVM path's remaining value is executors without Python runtimes and
-# wholly-spillable execution; auto's mega-component routing keeps it
-# exercised on oversized components.
-FAST_PATH_MIN_COMMANDS: int | None = None
 # Above this, the allocation rank uses the range-partitioned two-phase
 # scheme; below it, a single-reducer sort of #persons rows is cheaper.
 RANK_TWO_PHASE_MIN_COMMANDS = 1_000_000
-# Mega-component escape hatch for auto mode: a component whose op count
-# reaches this is routed to the JVM expression fold even though the
-# Python replay is faster for normal components — the replay buffers a
-# component's ENTIRE op list as one pandas frame (one hot distinct_id
-# with millions of ops = one OOM-able task), while the expression fold
-# streams through spillable sorts. Throughput-vs-robustness crossover,
-# not a measured speed crossover (see FAST_PATH_MIN_COMMANDS above).
-MEGA_COMPONENT_MIN_OPS = 500_000
 # Target op rows per replay task. Each mapInPandas task pays a Python
 # worker round trip (~40-60 ms of Arrow framing + scheduling at local
 # sizes) regardless of row count, while the replay itself costs ~6 µs/op
@@ -286,33 +263,27 @@ MEGA_COMPONENT_MIN_OPS = 500_000
 # ops/25k vastly exceeds the core count and the clamp keeps the fold as
 # wide as the cluster, so this is purely a small-batch tax cut.
 FOLD_OPS_PER_TASK = 25_000
-# Pin the fold output as an eagerly-materialized RDD (localCheckpoint)
-# instead of cache(): snapshots, the allocation rank's sampling pass, and
-# persons assembly all consume it — some from AQE broadcast threads whose
-# plan clones defeat CacheManager sameResult matching, observed re-running
-# the whole decode+replay chain per consumer. Tests that assert on the
-# fold's plan SHAPE (which engine ran) set this to False, since the
-# checkpoint hides the subtree behind a Scan ExistingRDD.
-FOLD_PIN = True
 
 
 def fold_person_state(
     commands: DataFrame,
     team_id: int | None = None,
     prior_persons: DataFrame | None = None,
-    fast_path: bool | str = "auto",
     person_id_floor: int | None = None,
     emit_snapshots: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (snapshots, persons).
 
+    Every component is folded by the partition-streaming replay of the
+    PersonStoreReplay kernel (`_replay_stream` below). The replay keeps
+    one component's state, never its op list: a hot distinct_id with
+    millions of ops streams through one task in sorted Arrow batches.
+
     `emit_snapshots=False` skips the per-op snapshot assembly inside the
-    Python replay (merged-property dict + JSON dump per emitted op) for
-    callers that consume ONLY the persons table — a persons rebuild at
-    100 TB shouldn't serialize one snapshot per event it never reads.
-    The returned snapshots frame is then empty. Python-replay path only;
-    the JVM twin assembles snapshots in codegen where the saving is
-    negligible.
+    replay (merged-property dict + JSON dump per emitted op) for callers
+    that consume ONLY the persons table — a persons rebuild at 100 TB
+    shouldn't serialize one snapshot per event it never reads. The
+    returned snapshots frame is then empty.
 
     snapshots: (request_seq, item_index, person_id, person_created_at,
     person_properties) — join back to events on the seq pair.
@@ -323,64 +294,31 @@ def fold_person_state(
     their distinct_ids contribute identity edges so ops touching any of a
     record's ids land in its component, and their sequential ids survive
     (new allocations continue above the prior max).
-
-    `fast_path`: "auto" (default) uses the Arrow+Python replay unless
-    FAST_PATH_MIN_COMMANDS is configured and exceeded — head-to-head
-    measurement (scripts/fold_crossover.py) shows the replay beats the
-    JVM expression fold at every locally measurable size, so auto
-    defaults to the replay — EXCEPT that individual eligible components
-    whose op count reaches MEGA_COMPONENT_MIN_OPS are routed to the JVM
-    fold for memory robustness (the replay would buffer the whole
-    component as one pandas frame). True forces the JVM path
-    (person_fast.py) — the memory-robust mode for components too large
-    to buffer in pandas and for Python-less executors; pinned by the
-    hf_person_fold_fast driver gate and tests/test_person_fast.py.
-    False forces the Python replay.
     """
     from hogflare_spark.operators.identity import connected_components
 
-    small_batch = False
-    n_commands: int | None = None
-    n_alias_cmds: int | None = None
-    if fast_path == "auto":
-        # ONE aggregate sizes the whole fold: the command count (rank
-        # scheme + fold width) and the alias-op count. The alias count
-        # lets the common no-alias batch skip the CC probe job and the
-        # component left-join below outright (r9; the probe was a
-        # separate isEmpty job per fold). r12: when the decode lane's
-        # all-fast branch produced `commands`, it stashed these two
-        # counts from observe() metrics collected DURING its checkpoint
-        # materialization (normalize.decode_normalize_requests) — the
-        # sizing then costs zero jobs; otherwise one aggregate job rides
-        # the checkpointed/cached command projection as before.
-        sizing = getattr(commands, "_hogflare_sizing", None)
-        if sizing is not None:
-            n_commands, n_alias_cmds = int(sizing[0]), int(sizing[1])
-        else:
-            from hogflare_spark.operators.normalize import (
-                alias_command_condition,
-            )
+    # ONE aggregate sizes the whole fold: the command count (rank scheme
+    # + fold width) and the alias-op count. The alias count lets the
+    # common no-alias batch skip the CC probe job and the component
+    # left-join below outright. When the decode lane's all-fast branch
+    # produced `commands`, it stashed these two counts from observe()
+    # metrics collected DURING its checkpoint materialization
+    # (normalize.decode_normalize_requests) — the sizing then costs zero
+    # jobs; otherwise one aggregate job rides the checkpointed/cached
+    # command projection.
+    sizing = getattr(commands, "_hogflare_sizing", None)
+    if sizing is not None:
+        n_commands, n_alias_cmds = int(sizing[0]), int(sizing[1])
+    else:
+        from hogflare_spark.operators.normalize import alias_command_condition
 
-            agg_row = commands.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(alias_command_condition(), 1)).alias(
-                    "n_alias"
-                ),
-            ).first()
-            n_commands = int(agg_row["n"])
-            n_alias_cmds = int(agg_row["n_alias"])
-        small_batch = n_commands < RANK_TWO_PHASE_MIN_COMMANDS
-        if FAST_PATH_MIN_COMMANDS is not None and n_commands >= FAST_PATH_MIN_COMMANDS:
-            fast_path = True
-        elif n_commands * 2 >= MEGA_COMPONENT_MIN_OPS:
-            # per-component routing: replay for normal components, JVM
-            # fold for oversized ones. One command derives at most two
-            # person ops, so below half the per-component threshold no
-            # component can possibly be mega — skip the flag pass and
-            # its localCheckpoint entirely.
-            fast_path = "mega"
-        else:
-            fast_path = False
+        agg_row = commands.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(alias_command_condition(), 1)).alias("n_alias"),
+        ).first()
+        n_commands = int(agg_row["n"])
+        n_alias_cmds = int(agg_row["n_alias"])
+    small_batch = n_commands < RANK_TWO_PHASE_MIN_COMMANDS
 
     ops = derive_person_ops(commands)
     if prior_persons is not None:
@@ -396,7 +334,6 @@ def fold_person_state(
         # the sizing aggregate above proved there are no alias ops and
         # nothing is seeded: every component is the singleton of its
         # distinct_id — skip the CC machinery AND its left join
-        components = None
         ops_with_comp = ops.withColumn("comp", F.col("distinct_id"))
     else:
         edges = ops.where(F.col("kind") == "alias").select(
@@ -584,115 +521,20 @@ def fold_person_state(
     # constant). One command derives at most two ops, so 2·n_commands
     # bounds the op count without another job.
     n_fold = ops_with_comp.sparkSession.sparkContext.defaultParallelism
-    if n_commands is not None:
-        n_fold = max(
-            1, min(n_fold, -(-2 * n_commands // FOLD_OPS_PER_TASK))
-        )
-    partitioned = ops_with_comp.repartition(n_fold, "comp")
-
-    def _stream_fold(df: DataFrame) -> DataFrame:
-        # partition-local sort puts each component's ops in one
-        # contiguous, replay-ordered run; no extra exchange
-        return df.sortWithinPartitions(*_FOLD_SORT).mapInPandas(
-            _replay_stream, _FOLD_OUT
-        )
-
-    if fast_path == "mega":
-        # Cheap pre-check before the full eligibility flag pass: the
-        # mega routing only fires when SOME component's op count reaches
-        # MEGA_COMPONENT_MIN_OPS. Computed WITHOUT materializing the ops
-        # frame (the old eager localCheckpoint of every op row measured
-        # ~1.5s of the sf1 gate): per-id op counts partial-aggregate to
-        # |ids| rows map-side, join the (tiny) CC labels, and sum per
-        # component — a component's op count is exactly the sum of its
-        # member ids' op counts. The common case (no hot key) then skips
-        # the window flag pass and its full-frame localCheckpoint
-        # entirely; the fold re-reads ops from the cached commands.
-        id_counts = ops.groupBy("distinct_id").agg(F.count(F.lit(1)).alias("c"))
-        if components is None:
-            # no alias ops, no seeds: components ARE the distinct_ids
-            comp_counts = id_counts.withColumnRenamed("distinct_id", "comp")
-        else:
-            comp_counts = (
-                id_counts.join(
-                    components.withColumnRenamed("id", "distinct_id"),
-                    "distinct_id",
-                    "left",
-                )
-                .withColumn("comp", F.coalesce("comp", "distinct_id"))
-                .groupBy("comp")
-                .agg(F.sum("c").alias("c"))
-            )
-        mx = comp_counts.agg(F.max("c").alias("mx")).first()["mx"]
-        if mx is None or mx < MEGA_COMPONENT_MIN_OPS:
-            fast_path = False
-        else:
-            # hot key present: the flag pass below fans this frame out
-            # to several consumers — pin it once
-            partitioned = partitioned.localCheckpoint(eager=True)
-
-    if fast_path:
-        # Alias-free components whose fragments pass the byte-parity
-        # guards fold in pure JVM expressions (person_fast.py); only
-        # components with alias/seed ops — or unsafe fragments — pay the
-        # Python replay. The component flag is a partition-local window
-        # (same hash partitioning, no extra exchange).
-        from hogflare_spark.operators.person_fast import (
-            fast_person_fold,
-            op_fast_eligible,
-        )
-
-        wc = Window.partitionBy("comp")
-        # localCheckpoint (NOT cache): the fast pipeline fans this frame
-        # out to four consumers that self-join (probes = ops × core ×
-        # keys). Self-join deduplication re-labels expression ids, which
-        # defeats CacheManager's sameResult lookup — with .cache() the
-        # decode/normalize/CC sub-DAG silently re-executed per branch
-        # (observed: raw FileScans with pushed eligibility filters in the
-        # executed plan). A localCheckpoint pins the rows to a concrete
-        # RDD-backed node that every branch shares and preserves the
-        # (comp) hash partitioning for the downstream windows. Narrow op
-        # rows — at 100 TB this is the op projection of the batch, the
-        # same data the Python replay buffered per group.
-        eligible = F.min(F.when(op_fast_eligible(), 1).otherwise(0)).over(wc) == 1
-        if fast_path == "mega":
-            # auto mode's robustness routing: only components whose op
-            # count reaches MEGA_COMPONENT_MIN_OPS take the JVM fold;
-            # everything else keeps the measured-faster Python replay.
-            # The count is a partition-local window over the same hash
-            # partitioning — no extra exchange.
-            eligible = eligible & (
-                F.count(F.lit(1)).over(wc) >= F.lit(MEGA_COMPONENT_MIN_OPS)
-            )
-        flagged = partitioned.withColumn("_fast", eligible).localCheckpoint(
-            eager=True
-        )
-        slow_ops = flagged.where(~F.col("_fast")).drop("_fast")
-        fast_ops = flagged.where(F.col("_fast"))
-        # flagged is materialized, so one grouped count is a single
-        # cached-scan job; skipping an empty branch avoids spinning 32
-        # Python workers (slow) or a dozen no-op stages (fast) for zero
-        # rows — the common cases are all-fast (plain capture traffic)
-        # and all-slow (seeded streaming batches).
-        counts = {
-            r["_fast"]: r["count"]
-            for r in flagged.groupBy("_fast").count().collect()
-        }
-        branches = []
-        if counts.get(False, 0):
-            branches.append(_stream_fold(slow_ops))
-        if counts.get(True, 0):
-            branches.append(fast_person_fold(fast_ops, _FOLD_OUT))
-        if not branches:
-            branches = [flagged.sparkSession.createDataFrame([], _FOLD_OUT)]
-        folded = branches[0]
-        for b in branches[1:]:
-            folded = folded.unionByName(b)
-    else:
-        folded = _stream_fold(partitioned)
-    # see FOLD_PIN: physical pin so the replay runs exactly once across
-    # all consumers; O(batch) state rows
-    folded = folded.localCheckpoint(eager=True) if FOLD_PIN else cached(folded)
+    n_fold = max(1, min(n_fold, -(-2 * n_commands // FOLD_OPS_PER_TASK)))
+    # partition-local sort puts each component's ops in one contiguous,
+    # replay-ordered run; no extra exchange
+    folded = (
+        ops_with_comp.repartition(n_fold, "comp")
+        .sortWithinPartitions(*_FOLD_SORT)
+        .mapInPandas(_replay_stream, _FOLD_OUT)
+    )
+    # Pin the fold output as an eagerly-materialized RDD instead of
+    # cache(): snapshots, the allocation rank's sampling pass, and persons
+    # assembly all consume it — some from AQE broadcast threads whose plan
+    # clones defeat CacheManager sameResult matching, observed re-running
+    # the whole decode+replay chain per consumer. O(batch) state rows.
+    folded = folded.localCheckpoint(eager=True)
 
     snapshots = folded.where(F.col("row_type") == "snapshot").select(
         "request_seq", "item_index", "person_id", "person_created_at", "person_properties"

@@ -54,6 +54,24 @@ def synthetic_time(seq: int) -> datetime:
     )
 
 
+def synth_time_expr(seq_linear):
+    """Spark column twin of synthetic_time, piecewise boundary included:
+    milliseconds below SYNTH_COMPRESS_AFTER, microseconds past it (keeps
+    64-bit-scale seq values inside timestamp range and bit-identical with
+    the kernel's datetimes). Events take their `created_at` from it, so
+    event and person timestamps agree."""
+    from pyspark.sql import functions as F
+
+    epoch_ms = int(_SYNTHETIC_EPOCH.timestamp() * 1000)
+    boundary_us = (epoch_ms + SYNTH_COMPRESS_AFTER) * 1000
+    return F.when(
+        seq_linear < F.lit(SYNTH_COMPRESS_AFTER),
+        F.timestamp_millis(seq_linear + F.lit(epoch_ms)),
+    ).otherwise(
+        F.timestamp_micros(seq_linear - F.lit(SYNTH_COMPRESS_AFTER) + F.lit(boundary_us))
+    )
+
+
 def parse_event_time(value: str | None, fallback_seq: int) -> datetime:
     """ISO timestamp (UTC default) else synthetic_time(fallback_seq)."""
     if value:

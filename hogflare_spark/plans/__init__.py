@@ -141,9 +141,8 @@ DEMOTED_AFTER_GRADING_WINDOW = (
     # (data-dependent quota sampling) — move INSIDE the 50-entry window
     # so the driver's hard signal executes them at least once. Four
     # transitively-covered gates cede their slots:
-    #  - hf_person_fold_fast: JVM twin of the graded hf_person_fold_state
-    #    (same oracle, same rows); differential pytest suite keeps the
-    #    two kernels pinned against each other.
+    #  - hf_person_fold_fast: the graded hf_person_fold_state's fold
+    #    with snapshot assembly on (same oracle, same rows).
     #  - llm_frame_sample: sibling of the graded llm_multimodal_features
     #    (same mapInPandas decode lane, same fixtures).
     #  - q_unpivot_priority_metrics: stack() projection; the pivot

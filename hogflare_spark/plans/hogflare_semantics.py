@@ -135,23 +135,18 @@ def hf_person_fold_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("hf_person_fold_fast", oracle=_PERSON_FOLD_ORACLE)
 def hf_person_fold_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same fold with the JVM expression path FORCED for alias-free
-    components (operators/person_fast.py) — the memory-robust mode that
-    keeps the $set/$set_once/$unset state machine in whole-stage codegen
-    (spillable sorts instead of per-component pandas buffers). The
-    driver validates it against the identical oracle as the
-    Python-replay gate; auto mode prefers the replay (measured faster
-    locally, scripts/fold_crossover.py), so this gate is what pins the
-    JVM path at sf scale. Persons-only, like hf_person_fold_state: the
-    fold is invoked directly (snapshot assembly lives in codegen on this
-    path, so only the group-fold/events composition is skipped)."""
+    """The same fold with snapshot assembly on, over a cached command
+    frame: the call ingest_commands makes. hf_person_fold_state skips
+    snapshots, so this gate is the one that grades the replay's snapshot
+    path against the same oracle at sf scale. Persons-only output, like
+    hf_person_fold_state."""
     from hogflare_spark.functions.caching import cached
     from hogflare_spark.operators.normalize import decode_normalize_requests
     from hogflare_spark.operators.person_state import fold_person_state
 
     raw = _capture_requests_from_events(spark, sf_dir)
     commands = cached(decode_normalize_requests(raw))
-    _, persons = fold_person_state(commands, fast_path=True)
+    _, persons = fold_person_state(commands)
     return persons.select(
         F.col("canonical_id").cast("long").alias("user_id"),
         F.element_at("properties", "k").cast("long").alias("k_last"),
@@ -1248,10 +1243,7 @@ def hf_event_group_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("capture").alias("endpoint"),
         body.alias("body"),
     )
-    # group_fast_path=True: this gate pins the JVM LWW fold
-    # (operators/group_fast.py) under the driver oracle at sf scale;
-    # hf_group_fold_state keeps grading the Python replay via auto mode.
-    events = ingest_raw_requests(raw, group_fast_path=True)["events"]
+    events = ingest_raw_requests(raw)["events"]
     return events.select(
         F.col("request_seq").alias("event_id"),
         F.get_json_object("group_properties", "$.segment.k").cast("long").alias(

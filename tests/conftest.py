@@ -40,8 +40,6 @@ _SLOW_TESTS = {
     "test_llm_pipeline.py::test_scale_checks_machinery_on_base_sf",
     "test_llm_pipeline.py::test_stratified_sample_prefilter_exact_vs_plain_window",
     "test_llm_pipeline.py::test_ivf_partitioned_index_prunes_and_matches",
-    "test_group_fast.py::test_fast_group_fold_property_matches_replay",
-    "test_group_fast.py::test_lww_hydration_and_echo_match_kernel",
     "test_streaming.py::test_batch_replay_is_idempotent_both_lanes",
     "test_streaming.py::test_streaming_chaos_batch_splits_match_batch_fold",
     "test_streaming.py::test_hybrid_streaming_chaos_splits_match_batch_fold",
@@ -49,10 +47,10 @@ _SLOW_TESTS = {
     "test_streaming.py::test_alias_delta_batch_replay_is_a_rewrite",
     "test_streaming.py::test_fresh_checkpoint_new_run_is_not_a_replay",
     "test_streaming.py::test_hybrid_streaming_group_delta_lane_converges",
-    "test_mega_component.py::test_hot_key_million_ops_default_settings",
-    "test_mega_component.py::test_person_auto_routes_hot_component_and_matches_replay",
     "test_person_fold_property.py::test_distributed_fold_equals_sequential_replay",
-    "test_person_fold_property.py::test_forced_jvm_fold_equals_sequential_replay",
+    "test_group_fold.py::test_group_fold_property_matches_sequential_lww",
+    "test_hot_key_fold.py::test_hot_key_million_ops_default_settings",
+    "test_hot_key_fold.py::test_hot_group_cell_default_settings",
     "test_llm_round7.py::test_pq_codes_shape_and_subspace_locality",
     "test_llm_round7.py::test_linear_probe_partition_invariant",
     "test_llm_round7.py::test_mixture_materialize_prefilter_path_is_exact",
@@ -67,7 +65,6 @@ _SLOW_TESTS = {
     "test_streaming_model.py::test_incremental_model_compaction_bounds_dirs_and_replays",
     "test_streaming_neardedup.py::test_compaction_bounds_state_dirs",
     "test_streaming_neardedup.py::test_kept_set_is_batch_shape_free",
-    "test_person_fast.py::test_fast_path_key_ordering_matches_dict_semantics[5]",
 }
 
 
@@ -77,16 +74,30 @@ def pytest_configure(config):
     )
 
 
+_SLOW_SKIP_REASON = "slow tier (set HOGFLARE_SLOW_TESTS=1); run each round, see PYTEST artifact"
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("HOGFLARE_SLOW_TESTS"):
         return
-    skip = pytest.mark.skip(
-        reason="slow tier (set HOGFLARE_SLOW_TESTS=1); run each round, see PYTEST artifact"
-    )
+    skip = pytest.mark.skip(reason=_SLOW_SKIP_REASON)
     for item in items:
         nodeid = item.nodeid.rsplit("/", 1)[-1]
         if nodeid in _SLOW_TESTS or item.get_closest_marker("slow"):
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    slow = [
+        r
+        for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple) and r.longrepr[2].endswith(_SLOW_SKIP_REASON)
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow-tier tests skipped; run them with "
+            "HOGFLARE_SLOW_TESTS=1 python -m pytest tests/"
+        )
 
 
 @pytest.fixture(scope="session")

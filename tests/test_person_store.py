@@ -153,3 +153,35 @@ def test_alloc_events_order_and_gaps():
 
 def test_snapshot_fields_none():
     assert snapshot_fields(None) == (None, None, None)
+
+
+def test_synth_time_piecewise_matches_python_kernel(spark):
+    """The compressed synthetic-time tail (sf1+ scale ids) must stay in
+    datetime range, stay strictly monotonic across the boundary, and
+    match the Spark column twin bit-for-bit."""
+    from pyspark.sql import functions as F
+
+    from hogflare_spark.operators.person_store import (
+        SYNTH_COMPRESS_AFTER,
+        synth_time_expr,
+        synthetic_time,
+    )
+
+    seqs = [
+        0,
+        946_684_800_000,
+        SYNTH_COMPRESS_AFTER - 1,
+        SYNTH_COMPRESS_AFTER,
+        SYNTH_COMPRESS_AFTER + 1,
+        9 * 10**14,  # the sf1-probe regime that used to overflow
+        2 * 10**17,  # event ids ~2e11
+    ]
+    py = [synthetic_time(s) for s in seqs]
+    assert all(a < b for a, b in zip(py, py[1:]))  # strictly monotonic
+    rows = (
+        spark.createDataFrame([(s,) for s in seqs], "seq long")
+        .select(synth_time_expr(F.col("seq")).alias("t"))
+        .collect()
+    )
+    jvm = [r["t"].replace(tzinfo=py[0].tzinfo) for r in rows]
+    assert jvm == py
