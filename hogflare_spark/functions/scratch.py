@@ -22,22 +22,26 @@ from __future__ import annotations
 import os
 import tempfile
 
-_FAST_BASE: str | None | bool = False  # False = undecided
+# tmpfs is typically capped at half the RAM; below this much free space
+# the scratch goes to /tmp instead, which survives what tmpfs would not
+_MIN_FREE_BYTES = 2 << 30
 
 
-def _fast_base() -> str | None:
-    global _FAST_BASE
-    if _FAST_BASE is False:
-        base = "/dev/shm"
-        try:
-            probe = tempfile.mkdtemp(prefix="hf_probe_", dir=base)
-            os.rmdir(probe)
-            _FAST_BASE = base
-        except Exception:
-            _FAST_BASE = None  # tempfile default (/tmp)
-    return _FAST_BASE
+def _pick_base() -> str | None:
+    """/dev/shm when it is a writable directory with at least
+    `_MIN_FREE_BYTES` free, else None (tempfile's default, /tmp)."""
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:
+        return None
+    if st.f_bavail * st.f_frsize < _MIN_FREE_BYTES or not os.access("/dev/shm", os.W_OK):
+        return None
+    return "/dev/shm"
+
+
+_BASE = _pick_base()
 
 
 def scratch_dir(prefix: str) -> str:
-    """mkdtemp on tmpfs when available, else the tempfile default."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_fast_base())
+    """mkdtemp on tmpfs when it has room, else the tempfile default."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_BASE)

@@ -10,14 +10,20 @@ delegates maintenance to the platform. Here the engine owns the sink:
   the difference between partition-pruned scans of a day and full-table
   scans; the partition column derives from `created_at` exactly like an
   Iceberg `days(created_at)` transform.
+- The table log: every state table (persons, groups; batch upserts and
+  the stream alike) is a numbered log `_log/<n>.json` whose entries name
+  a base data directory, delta directories, `max_id` and the
+  `{app_id: batch_id}` transactions recorded so far. A commit creates
+  its entry exclusively, which is both the atomic commit and the
+  conflict check (Delta Lake's protocol; the object-store form is one
+  `PUT If-None-Match: *`, CATALOG.md). Readers only follow entries, so
+  they never observe partial writes.
 - `upsert_table`: MERGE-equivalent keyed upsert for the persons/groups
-  dimension tables — new snapshot wins per key, written as a new version
-  behind a _LATEST pointer (same commit protocol as streaming state;
-  readers never observe partial writes). With an Iceberg catalog this
-  whole function is `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`;
-  the version-pointer dance is the filesystem stand-in for Iceberg's
-  atomic snapshot commit, kept because this container ships no Iceberg
-  runtime jars.
+  dimension tables — new snapshot wins per key, committed as a new log
+  version. With an Iceberg catalog this whole function is
+  `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`; the log is the
+  filesystem stand-in for Iceberg's atomic snapshot commit, kept because
+  this container ships no Iceberg runtime jars.
 - `compact_events`: bin-packing compaction — rewrites partitions whose
   file population is dominated by small files into ~target-size files
   (the operational job Iceberg calls rewrite_data_files). Streaming
@@ -27,28 +33,16 @@ delegates maintenance to the platform. Here the engine owns the sink:
 
 from __future__ import annotations
 
+import json
 import os
-import time
-from contextlib import contextmanager
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
-# Test-only hook: called (if set) between writing the pointer tmp file and
-# the pre-swing fence, letting tests deterministically simulate a holder
-# that pauses exactly where the stale-break race bites.
-_TEST_PAUSE = None
-
-
-class CommitConflict(RuntimeError):
-    """Another writer committed since this writer's merge base was read.
-
-    The Iceberg-style optimistic-concurrency signal: the caller must
-    re-read the table and redo its merge (upsert_table does this
-    automatically)."""
 
 
 def append_events(events: DataFrame, events_dir: str) -> None:
@@ -65,8 +59,8 @@ def append_events(events: DataFrame, events_dir: str) -> None:
 
 def read_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """Read the events table in either on-disk layout — flat
-    `event_date=...` from batch appends, `batch=N/event_date=...` from
-    the streaming sink's replay-scoped overwrites — or a mix of both
+    `event_date=...` from batch appends, `batch=<run>_<n>/event_date=...`
+    from the streaming sink's replay-scoped overwrites — or a mix of both
     (a warehouse that predates the streaming layout and was then
     upgraded). Plain `spark.read.parquet(dir)` fails partition discovery
     on the mixed case ("conflicting directory structures"), so each
@@ -96,195 +90,198 @@ def read_events(spark: SparkSession, events_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# versioned table commits (the no-Iceberg atomic-snapshot stand-in)
+# the table log (the no-Iceberg atomic-snapshot stand-in)
 # ---------------------------------------------------------------------------
+#
+# A state table is a numbered log, `<root>/_log/<n>.json` for versions
+# n = 1, 2, ..., plus the data directories its entries name. Entry n is
+# one JSON object:
+#
+#   base             the base data directory (`v=<id>`)
+#   deltas           delta data directories (`d=<id>`) over the base,
+#                    oldest first; the view is last-writer-wins per key
+#   keys             the key columns of that view
+#   max_id           the largest person `id` in the view, when known
+#   txns             {app_id: batch_id}: the last batch of every writer
+#                    application recorded so far (carried forward)
+#   committed_batch  the data directory this commit wrote (a delta-lane
+#                    commit's is its last delta)
+#
+# A commit writes a fresh, uniquely named data directory, then creates
+# entry base+1 exclusively. The exclusive create is both the atomic
+# commit and the conflict check: if the entry exists, another writer
+# committed on the same base and the commit raises CommitConflict. No
+# writer ever writes into a directory another writer or a committed
+# entry names, so there is no lock and no pointer to swing.
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed since this writer's merge base was read.
+
+    The Iceberg-style optimistic-concurrency signal: the caller must
+    re-read the table and redo its merge (upsert_table does this
+    automatically)."""
+
+
+def _log_path(root: str, version: int) -> str:
+    return os.path.join(root, "_log", f"{version}.json")
 
 
 def _latest_version(root: str) -> int | None:
-    pointer = os.path.join(root, "_LATEST")
-    if not os.path.exists(pointer):
+    try:
+        names = os.listdir(os.path.join(root, "_log"))
+    except FileNotFoundError:
         return None
-    with open(pointer) as fh:
-        return int(fh.read().strip())
+    return max(
+        (int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()),
+        default=None,
+    )
+
+
+def read_entry(root: str, version: int | None = None) -> dict | None:
+    """Log entry `version` (default: the latest) with its `version` added;
+    None for a table with no commits."""
+    if version is None:
+        version = _latest_version(root)
+        if version is None:
+            return None
+    try:
+        with open(_log_path(root, version)) as fh:
+            return {**json.load(fh), "version": version}
+    except FileNotFoundError:
+        raise FileNotFoundError(f"version {version} of {root} does not exist") from None
+
+
+def entry_dirs(root: str, entry: dict) -> list[str]:
+    """The entry's data directories in last-writer-wins order."""
+    return [os.path.join(root, d) for d in (entry["base"], *entry["deltas"])]
+
+
+def seed_entry(root: str, app_id: str, batch_id: int) -> tuple[dict | None, bool]:
+    """The entry batch `batch_id` of writer `app_id` builds on, and
+    whether the log already holds that transaction. Not held: the latest
+    entry. Held (a replay of a batch that committed here): the entry just
+    before the one that recorded it, so the replay recomputes exactly
+    what was committed."""
+    entry = read_entry(root)
+    if entry is None or entry["txns"].get(app_id) != batch_id:
+        return entry, False
+    while entry is not None and entry["txns"].get(app_id) == batch_id:
+        entry = read_entry(root, entry["version"] - 1) if entry["version"] > 1 else None
+    return entry, True
+
+
+def table_view(
+    spark: SparkSession, root: str, entry: dict | None, schema=None
+) -> DataFrame | None:
+    """The table as of `entry`: base ∪ deltas, last writer wins per key.
+    A winning tombstone (a delta row with a NULL `uuid`, written by the
+    stream's delta lane when a merge absorbs a canonical_id) retires its
+    key."""
+    if entry is None:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    paths = entry_dirs(root, entry)
+    if not all(os.path.isdir(p) for p in paths):
+        raise FileNotFoundError(f"version {entry['version']} of {root} has expired")
+    if len(paths) == 1:
+        return reader.parquet(paths[0])
+    merged = reader.parquet(paths[0]).withColumn("_rank", F.lit(0))
+    for rank, path in enumerate(paths[1:], start=1):
+        merged = merged.unionByName(reader.parquet(path).withColumn("_rank", F.lit(rank)))
+    w = Window.partitionBy(*entry["keys"]).orderBy(F.desc("_rank"))
+    out = (
+        merged.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn", "_rank")
+    )
+    if "uuid" in out.columns:
+        out = out.where(F.col("uuid").isNotNull())
+    return out
 
 
 def read_table(
     spark: SparkSession, root: str, schema=None, version: int | None = None
 ) -> DataFrame | None:
     """Read the latest committed version, or time-travel to `version`
-    (every committed version stays on disk until expired — the Iceberg
+    (every committed version stays readable until expired — the Iceberg
     snapshot-read equivalent)."""
-    if version is None:
-        version = _latest_version(root)
-    if version is None:
-        return None
-    path = os.path.join(root, f"v={version}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"version {version} of {root} does not exist")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return table_view(spark, root, read_entry(root, version), schema)
 
 
 def expire_versions(root: str, keep_last: int = 2) -> list[int]:
-    """Drop all but the newest `keep_last` versions (snapshot expiration).
-    Never touches the current version; returns expired version numbers."""
-    import shutil
-
+    """Snapshot expiration: delete the data directories that only versions
+    older than the newest `keep_last` name. Log entries stay, so their
+    numbers can never be committed again; reading an expired version
+    raises FileNotFoundError. Never touches the current version; returns
+    the versions this call made unreadable."""
     latest = _latest_version(root)
     if latest is None:
         return []
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(root)
-        if d.startswith("v=") and os.path.isdir(os.path.join(root, d))
-    )
-    to_drop = [v for v in versions[:-keep_last] if v != latest]
-    for v in to_drop:
-        shutil.rmtree(os.path.join(root, f"v={v}"))
-    return to_drop
+    first_kept = latest - max(keep_last, 1) + 1
+    names = {v: set(entry_dirs(root, read_entry(root, v))) for v in range(1, latest + 1)}
+    kept = set().union(*(names[v] for v in range(first_kept, latest + 1)))
+    expired = [
+        v for v in range(1, first_kept) if any(os.path.isdir(p) for p in names[v] - kept)
+    ]
+    for path in set().union(*(names[v] for v in expired)) - kept:
+        shutil.rmtree(path, ignore_errors=True)
+    return expired
 
 
-def _claim_version(root: str, start: int) -> int:
-    """Claim an exclusive version directory via atomic mkdir (POSIX:
-    mkdir fails-if-exists atomically). Two concurrent writers can never
-    claim the same version, so in-flight data files are never shared."""
-    os.makedirs(root, exist_ok=True)
-    v = start
-    while True:
-        try:
-            os.mkdir(os.path.join(root, f"v={v}"))
-            return v
-        except FileExistsError:
-            v += 1
-
-
-@contextmanager
-def _commit_lock(root: str, timeout: float = 60.0, stale_after: float = 30.0):
-    """Short mutual-exclusion window around the pointer swing only (the
-    parquet write happens outside, in the writer's claimed directory).
-    O_CREAT|O_EXCL is the POSIX analogue of an object store's conditional
-    PUT (If-None-Match: *) — see CATALOG.md for the R2/S3 mapping.
-
-    Stale-lock recovery: the critical section is strictly one pointer
-    read + one rename (no directory rewrites happen under the lock — see
-    _commit_version), so a lock file older than `stale_after` can only
-    belong to a writer that died between open and unlink (OOM-kill, node
-    loss). Waiters break such locks instead of wedging every future
-    commit to the table. Breaking is safe against the two races a naive
-    check-then-unlink has:
-
-    - two waiters both passing the age check: the break is an atomic
-      os.rename to a waiter-unique tombstone name, so exactly one breaker
-      wins; the loser's rename raises FileNotFoundError and it re-loops.
-      The slower breaker can never unlink a FRESH lock the faster one's
-      successor just created, because it never calls unlink on the live
-      path at all.
-    - a live-but-paused holder being broken: the holder's release first
-      verifies the path still names ITS lock (os.fstat(fd) inode vs
-      os.stat(path) inode) and leaves a successor's fresh lock alone."""
-    path = os.path.join(root, "_COMMIT.lock")
-    deadline = time.monotonic() + timeout
-    while True:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break  # acquired
-        except FileExistsError:
-            try:
-                age = time.time() - os.path.getmtime(path)
-                if age > stale_after:
-                    tomb = f"{path}.broken.{os.getpid()}.{time.monotonic_ns()}"
-                    try:
-                        os.rename(path, tomb)  # atomic: one breaker wins
-                        os.unlink(tomb)
-                    except FileNotFoundError:
-                        pass  # lost the break race; re-check the live path
-                    continue
-            except FileNotFoundError:
-                continue  # holder released (or another waiter broke it)
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"commit lock on {root} not released")
-            time.sleep(0.02)
-
-    def still_held() -> bool:
-        """Fencing check: does the live lock path still name OUR lock?
-        False once a waiter declared us stale and broke it — the signal
-        that a successor may have committed and we must abort rather
-        than swing the pointer over their commit.
-
-        RESIDUAL WINDOW (r7 ADVICE — irreducible with mtime-based stale
-        breaking): a holder that passes this check and the pointer
-        re-check, then pauses for the handful of instructions before its
-        os.replace, can still swing the pointer over a successor's
-        commit. The fence narrows the race from the whole tmp-file write
-        to those few instructions; closing it outright needs a
-        compare-and-swap the filesystem doesn't offer. Mitigation:
-        `stale_after` (30 s) must stay comfortably above any worst-case
-        scheduler/GC pause so a LIVE holder is never declared stale in
-        the first place. On a real object store this maps to a
-        conditional PUT (If-Match on the pointer etag), which closes the
-        race properly — see CATALOG.md."""
-        try:
-            return os.fstat(fd).st_ino == os.stat(path).st_ino
-        except FileNotFoundError:
-            return False
-
+def _create_exclusive(path: str, text: str) -> None:
+    """Publish `text` at `path` iff nothing is there: the tmp file is
+    hard-linked into place, and link(2) fails with EEXIST exactly like
+    O_CREAT|O_EXCL while also publishing the complete content at once (a
+    reader never sees a created-but-unwritten entry)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
     try:
-        yield still_held
+        os.link(tmp, path)
     finally:
-        try:
-            if os.fstat(fd).st_ino == os.stat(path).st_ino:
-                os.unlink(path)
-            # else: a breaker declared us dead and a successor holds a
-            # fresh lock — removing it would admit a second holder.
-        except FileNotFoundError:
-            pass  # a waiter mistook a long pause for death and broke it
-        finally:
-            os.close(fd)
+        os.unlink(tmp)
 
 
-def _commit_version(df: DataFrame, root: str, base_version: int | None) -> int:
-    """Write df as a new claimed version, then atomically swing _LATEST —
-    iff the table is still at `base_version` (the version the caller's
-    merge was computed against). Otherwise the claimed directory is
-    removed and CommitConflict raised: committing would silently drop the
-    concurrent writer's rows (lost update). Readers only ever follow the
-    pointer, which moves via rename — they never observe partial data."""
-    version = _claim_version(root, (base_version or 0) + 1)
-    df.write.mode("overwrite").parquet(os.path.join(root, f"v={version}"))
-    conflicted = False
-    with _commit_lock(root) as still_held:
-        # Critical section is exactly: one pointer read + one rename.
-        # Nothing slow (no directory rewrites) may run in here — the
-        # stale-lock breaker's "held for milliseconds" premise depends
-        # on it (see _commit_lock).
-        if _latest_version(root) != base_version:
-            conflicted = True
-        else:
-            tmp = os.path.join(root, f"_LATEST.tmp.{version}")
-            with open(tmp, "w") as fh:
-                fh.write(str(version))
-            if _TEST_PAUSE is not None:
-                _TEST_PAUSE()  # test hook: simulate a paused holder here
-            # Fence (ADVICE, lake.py TOCTOU): a holder paused long
-            # enough to be declared stale may have been broken, and a
-            # successor may have committed on the same base. Re-check
-            # BOTH lock ownership and the pointer immediately before
-            # the swing; abort with conflict instead of clobbering.
-            if not still_held() or _latest_version(root) != base_version:
-                conflicted = True
-                os.unlink(tmp)
-            else:
-                os.replace(tmp, os.path.join(root, "_LATEST"))
-    if conflicted:
-        import shutil
-
-        # Cleanup of the orphaned claim directory happens OUTSIDE the
-        # lock: it can take seconds for a large version, and holding the
-        # lock through it would make live holders look stale.
-        shutil.rmtree(os.path.join(root, f"v={version}"), ignore_errors=True)
-        raise CommitConflict(f"{root}: table moved past base version {base_version}")
+def _commit_version(
+    df: DataFrame,
+    root: str,
+    base_version: int | None,
+    keys: list[str] | None = None,
+    delta: bool = False,
+    max_id: int | None = None,
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """Write `df` into a fresh data directory and commit it as version
+    `base_version + 1`: as the new base, or (`delta=True`) as one more
+    delta over `base_version`'s view. `txn` = (app_id, batch_id) records
+    the writer's batch. If the version already exists, another writer
+    won: the data directory is removed and CommitConflict raised, since
+    committing would silently drop that writer's rows (lost update)."""
+    prior = {} if base_version is None else read_entry(root, base_version)
+    name = f"{'d' if delta else 'v'}={uuid.uuid4().hex}"
+    path = os.path.join(root, name)
+    df.write.parquet(path)
+    txns = dict(prior.get("txns", {}))
+    if txn is not None:
+        txns[txn[0]] = txn[1]
+    entry = {
+        "base": prior["base"] if delta else name,
+        "deltas": [*prior["deltas"], name] if delta else [],
+        "keys": keys or prior.get("keys", []),
+        "max_id": max_id,
+        "txns": txns,
+        "committed_batch": name,
+    }
+    version = (base_version or 0) + 1
+    try:
+        _create_exclusive(_log_path(root, version), json.dumps(entry))
+    except FileExistsError:
+        shutil.rmtree(path, ignore_errors=True)
+        raise CommitConflict(
+            f"{root}: table moved past base version {base_version}"
+        ) from None
     return version
 
 
@@ -305,8 +302,8 @@ def upsert_table(
     write amplification; at 100 TB you'd partition the dimension tables by
     a key hash so the anti join co-partitions.
 
-    Concurrency: optimistic, like an Iceberg commit. The merge base's
-    version is validated under the commit lock; a conflicting commit
+    Concurrency: optimistic, like an Iceberg commit. The commit creates
+    the log entry after the merge base exclusively; a conflicting commit
     re-reads the new current table and redoes the merge, so interleaved
     upserts serialize and neither one's rows are lost.
 
@@ -325,10 +322,10 @@ def upsert_table(
             merged = current.join(
                 updates.select(*key_cols).distinct(), key_cols, "left_anti"
             ).unionByName(updates, allowMissingColumns=allow_schema_evolution)
-        # materialize before overwriting the directory the plan reads from
+        # materialized once, before the commit writes it
         merged = merged.localCheckpoint(eager=True)
         try:
-            return _commit_version(merged, root, base)
+            return _commit_version(merged, root, base, keys=key_cols)
         except CommitConflict:
             continue
     raise CommitConflict(f"{root}: upsert lost {max_retries} commit races")
@@ -373,7 +370,7 @@ def repair_partitions(events_dir: str) -> list[str]:
 def _partition_dirs(events_dir: str) -> list[str]:
     """Leaf `event_date=` partition dirs in both layouts: directly under
     the table (batch appends) and nested under the streaming sink's
-    `batch=N/` replay partitions — compaction bin-packs at the leaf in
+    `batch=<run>_<n>/` replay partitions — compaction bin-packs at the leaf in
     either scheme, preserving the layout (a streaming batch partition is
     never merged across batches, so a checkpoint replay's whole-batch
     overwrite stays a correct rewrite even after compaction)."""
@@ -456,8 +453,6 @@ def _swap_partition_dir(pdir: str, staged: str, backup: str) -> None:
     superseded data; the backup-only crash state (no live dir) never
     reaches this function, since repair_partitions() heals it during
     the caller's partition listing before any swap is attempted."""
-    import shutil
-
     if os.path.isdir(backup):
         shutil.rmtree(backup)
     os.replace(pdir, backup)

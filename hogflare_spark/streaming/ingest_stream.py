@@ -9,15 +9,13 @@ src/persons.rs:488-541). The Spark realization is micro-batch:
   identically via format("kafka")).
 - `StreamingIngestJob`: foreachBatch incremental fold. Each micro-batch
   decodes + normalizes its requests, seeds the person/group folds with
-  the prior state version, appends enriched events (partitioned by event
-  date), and writes a new state version. State versions are directories
-  `persons/v=<n>` plus (hybrid mode) delta directories `persons/d=<n>`,
-  with a single `_STATE` JSON pointer committed last, so a crashed batch
-  never corrupts readable state and replays (same batch id) simply
-  rewrite the same version/delta — idempotent with the stream
-  checkpoint. `hybrid=True` routes alias-free micro-batches through a
-  fast lane that seeds only the touched persons and writes O(batch)
-  deltas (see the class docstring).
+  the prior state version, overwrites its own events directory
+  (partitioned by event date) and commits new persons and groups
+  versions to lake's table log — a new base, or (hybrid mode) a delta of
+  the rows the batch touched. Every commit records the transaction
+  (run, batch id), so a batch Spark re-runs after a stop recomputes from
+  the version before its own entry and commits nothing twice (see the
+  class docstring).
 - `stateful_person_snapshots`: a true per-key stateful operator
   (`applyInPandasWithState`, state store-backed) folding $set/$set_once/
   $unset per distinct_id and emitting post-update snapshots — the direct
@@ -37,6 +35,7 @@ sequencing as long as the receiver assigns monotone request_seq.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from collections.abc import Iterator
@@ -54,6 +53,7 @@ from pyspark.sql.types import (
 
 from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
 from hogflare_spark.functions.caching import cached, unpersist_all
+from hogflare_spark.sinks import lake
 
 RAW_STREAM_SCHEMA = StructType(
     [
@@ -78,24 +78,31 @@ def read_request_stream(
 
 
 class StreamingIngestJob:
-    """Incremental ingest: micro-batches fold into versioned state tables
-    plus a date-partitioned events log.
+    """Incremental ingest: micro-batches fold into the persons and groups
+    tables (lake's table log) plus a date-partitioned events log.
 
     ``hybrid=True`` enables the alias-aware routing the reference's DO
     model gets for free (persons.rs:281-326 merges are per-key there):
-    micro-batches that contain NO cross-key identity ops (no `/alias`,
-    no identify-with-$anon_distinct_id) take a fast lane that seeds the
-    fold with only the persons their distinct_ids touch and writes a
-    per-batch DELTA of changed rows — O(batch), not O(all persons) — so
+    once a table has a base, each micro-batch seeds the fold with only
+    the persons its distinct_ids touch (alias endpoints included) and
+    commits a DELTA of changed rows — O(batch), not O(all persons) — so
     steady capture traffic never rewrites or replays the full persons
-    table. Batches that DO carry alias ops (plus every
-    ``max_person_deltas``-th batch, bounding read amplification) take
-    the complete-semantics full fold, which doubles as delta compaction.
-    Groups get the same delta lane unconditionally — group ops are
+    table. Every ``max_person_deltas``-th commit (bounding read
+    amplification) takes the complete-semantics full fold, which doubles
+    as delta compaction. Groups get the same delta lane — group ops are
     always per-(type,key) LWW upserts (groups.rs), there is no group
     analogue of an alias merge to route around. Both lanes produce
     byte-identical state to the one-shot batch fold
     (tests/test_streaming.py hybrid convergence tests).
+
+    Exactly-once: each table commit records the transaction
+    (``run_id``, batch id); ``run_id`` defaults to the checkpoint path,
+    so one checkpoint is one writer. A batch Spark re-runs after a stop
+    (at any point before its commit-log entry) finds its transaction in
+    a table's log, seeds that table from the version just before the
+    entry that recorded it, rewrites its own events directory
+    (`events/batch=<run>_<batch id>`) and commits nothing to that table.
+    A table whose commit the stop cut off gets it now.
 
     At 100 TB the affected-person lookup is a join against a
     distinct_id→canonical_id index (here: explode over the persons scan
@@ -119,313 +126,32 @@ class StreamingIngestJob:
         self.hybrid = hybrid
         self.max_person_deltas = max_person_deltas
         self.events_dir = os.path.join(warehouse_dir, "events")
-        # Identifies one logical stream (one checkpoint dir). Spark batch
-        # ids restart at 0 with a fresh checkpoint, so batch ids alone
-        # cannot distinguish "checkpoint replay of MY batch N" from "a
-        # NEW stream's batch N over an existing warehouse" — the latter
-        # must apply, not roll back. start() defaults this to the
-        # checkpoint path; _commit_id folds it into every on-disk id.
+        # The writer (app) id of every table transaction. Spark batch ids
+        # restart at 0 with a fresh checkpoint, so a NEW stream's batch N
+        # over an existing warehouse must not look like a replay of the
+        # previous stream's batch N; start() defaults this to the
+        # checkpoint path.
         self.run_id = run_id
-        self._epoch: int | None = None
-
-    # ---- run epochs ------------------------------------------------------
-
-    _EPOCH_STRIDE = 1_000_000_000
-
-    def _resolve_epoch(self) -> int:
-        """The warehouse-scoped epoch of this run, claimed ATOMICALLY
-        and PER-RUN via O_EXCL files under `_epochs/<n>` (content: the
-        claiming run_id). A run's epoch is the one it claimed, forever:
-        a checkpoint resume re-reads its own claim file, so interleaved
-        writers can never move a run onto a fresh epoch (the old
-        last-writer `_RUN` scheme did exactly that, making a resumed
-        run's replayed batches miss their `committed_batch` markers and
-        double-apply), and two fresh runs racing resolve via O_EXCL —
-        the loser observes FileExistsError and claims the next number.
-        `_RUN` is still written (non-authoritative) for older tooling;
-        legacy warehouses with only `_RUN` are adopted by materializing
-        a claim file for the recorded (run_id, epoch)."""
-        if self._epoch is not None:
-            return self._epoch
-        os.makedirs(self.warehouse_dir, exist_ok=True)
-        epochs_dir = os.path.join(self.warehouse_dir, "_epochs")
-        os.makedirs(epochs_dir, exist_ok=True)
-        run_key = str(self.run_id)
-
-        def scan() -> dict[int, str]:
-            out = {}
-            for name in os.listdir(epochs_dir):
-                if name.isdigit():
-                    with open(os.path.join(epochs_dir, name)) as fh:
-                        out[int(name)] = fh.read()
-            return out
-
-        def claim(epoch: int) -> bool:
-            try:
-                fd = os.open(
-                    os.path.join(epochs_dir, str(epoch)),
-                    os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-                )
-            except FileExistsError:
-                return False
-            with os.fdopen(fd, "w") as fh:
-                fh.write(run_key)
-            return True
-
-        claimed = scan()
-        mine = [e for e, rid in claimed.items() if rid == run_key]
-        if mine:
-            self._epoch = min(mine)
-            return self._epoch
-
-        legacy_path = os.path.join(self.warehouse_dir, "_RUN")
-        legacy = None
-        if os.path.exists(legacy_path):
-            with open(legacy_path) as fh:
-                legacy = json.load(fh)
-        if (
-            legacy is not None
-            and legacy.get("run_id") == self.run_id
-            and claim(int(legacy["epoch"]))
-        ):
-            # Adopted a pre-claim-dir warehouse where this run was the
-            # last writer: its on-disk commit ids carry this epoch.
-            self._epoch = int(legacy["epoch"])
-            return self._epoch
-
-        floor = max(claimed, default=-1)
-        if legacy is not None:
-            floor = max(floor, int(legacy["epoch"]))
-        if floor < 0:
-            # Pre-_RUN warehouses already hold epoch-0-style ids; a new
-            # run over one must not reuse them.
-            has_state = any(
-                os.path.exists(os.path.join(self._state_root(t), f))
-                for t in ("persons", "groups")
-                for f in ("_STATE", "_LATEST")
-            )
-            floor = 0 if has_state else -1
-        while self._epoch is None:
-            candidate = floor + 1
-            if claim(candidate):
-                self._epoch = candidate
-                break
-            claimed = scan()
-            mine = [e for e, rid in claimed.items() if rid == run_key]
-            if mine:  # a concurrent attempt of THIS run won the race
-                self._epoch = min(mine)
-                break
-            floor = max(max(claimed, default=floor), floor)
-        tmp = legacy_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"run_id": self.run_id, "epoch": self._epoch}, fh)
-        os.replace(tmp, legacy_path)
-        return self._epoch
-
-    def _commit_id(self, batch_id: int) -> int:
-        """Warehouse-unique, replay-stable id for one (run, batch):
-        deterministic within a run (a checkpoint replay regenerates the
-        SAME id and overwrites the same directories — a true rewrite)
-        and disjoint across runs (a fresh-checkpoint stream's batch 0
-        can never be mistaken for, or clobber, another run's batch 0)."""
-        return self._resolve_epoch() * self._EPOCH_STRIDE + int(batch_id)
-
-    # ---- state versioning ------------------------------------------------
-    #
-    # Pointer protocol: `_STATE` is one JSON object
-    # {"base": <version|null>, "deltas": [<batch ids>], "max_id": <long>}
-    # swung atomically via os.replace, so base and delta list can never
-    # be observed out of sync (a two-file scheme could apply pre-
-    # compaction deltas on top of a post-compaction base — lost-update).
-    # `_LATEST` (legacy, base version only) is still written for older
-    # warehouses/readers and used as a fallback when `_STATE` is absent.
 
     def _state_root(self, table: str) -> str:
         return os.path.join(self.warehouse_dir, table)
 
     def _read_pointer(self, table: str) -> dict | None:
-        root = self._state_root(table)
-        state_path = os.path.join(root, "_STATE")
-        if os.path.exists(state_path):
-            with open(state_path) as fh:
-                return json.load(fh)
-        legacy = os.path.join(root, "_LATEST")
-        if os.path.exists(legacy):
-            with open(legacy) as fh:
-                return {"base": int(fh.read().strip()), "deltas": [], "max_id": None}
-        return None
-
-    def _commit_pointer(self, table: str, pointer: dict) -> None:
-        # `committed_by_epoch` (epoch → last commit id) merges from the
-        # LIVE pointer, not the caller's (possibly replay_base-derived)
-        # one: every run's latest committed batch stays remembered even
-        # after other runs' commits, which is what lets a replay that
-        # arrives AFTER an interleaved writer be recognized as already
-        # applied (see process_batch) instead of double-applying. One
-        # entry per run — bounded by run count, not batch count.
-        live = self._read_pointer(table) or {}
-        by_epoch = dict(live.get("committed_by_epoch") or {})
-        cb = pointer.get("committed_batch")
-        if cb is not None:
-            by_epoch[str(int(cb) // self._EPOCH_STRIDE)] = int(cb)
-        pointer = {**pointer, "committed_by_epoch": by_epoch}
-        root = self._state_root(table)
-        os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, "_STATE.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(pointer, fh)
-        os.replace(tmp, os.path.join(root, "_STATE"))
-        if pointer.get("base") is not None:
-            tmp = os.path.join(root, "_LATEST.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(str(pointer["base"]))
-            os.replace(tmp, os.path.join(root, "_LATEST"))
-
-    def _latest_version(self, table: str) -> int | None:
-        pointer = self._read_pointer(table)
-        return None if pointer is None else pointer.get("base")
-
-    def _read_state(self, spark: SparkSession, table: str, schema) -> DataFrame | None:
-        version = self._latest_version(table)
-        if version is None:
-            return None
-        path = os.path.join(self._state_root(table), f"v={version}")
-        return spark.read.schema(schema).parquet(path)
-
-    @staticmethod
-    def _replay_base_of(pointer: dict | None) -> dict | None:
-        """The pointer as stored for crash-replay seeding: one level only
-        (nested replay_base stripped so pointers stay O(1))."""
-        if pointer is None:
-            return None
-        return {k: v for k, v in pointer.items() if k != "replay_base"}
-
-    def _write_state(
-        self,
-        df: DataFrame,
-        table: str,
-        version: int,
-        committed_batch: int | None = None,
-        replay_base: dict | None = None,
-        max_id: int | None = None,
-    ) -> None:
-        root = self._state_root(table)
-        path = os.path.join(root, f"v={version}")
-        df.write.mode("overwrite").parquet(path)
-        self._commit_pointer(
-            table,
-            {
-                "base": int(version),
-                "deltas": [],
-                "max_id": max_id,
-                "committed_batch": committed_batch,
-                "replay_base": replay_base,
-            },
-        )
+        """The table's latest log entry."""
+        return lake.read_entry(self._state_root(table))
 
     def read_persons(self, spark: SparkSession) -> DataFrame | None:
-        """The current persons view: base version ∪ deltas, last writer
-        wins per canonical_id (fast-lane batches never merge persons, so
-        canonical_id is a stable upsert key across deltas)."""
-        return self._table_view(
-            spark, "persons", self._read_pointer("persons"), PERSON_SCHEMA,
-            ["canonical_id"],
-        )
+        """The current persons view: base ∪ deltas, last writer wins per
+        canonical_id (a delta row retires or replaces its canonical_id,
+        so canonical_id is a stable upsert key across deltas)."""
+        root = self._state_root("persons")
+        return lake.table_view(spark, root, lake.read_entry(root), PERSON_SCHEMA)
 
     def read_groups(self, spark: SparkSession) -> DataFrame | None:
-        return self._table_view(
-            spark, "groups", self._read_pointer("groups"), GROUP_SCHEMA,
-            ["group_type", "group_key"],
-        )
-
-    def _table_view(
-        self,
-        spark: SparkSession,
-        table: str,
-        pointer: dict | None,
-        schema,
-        key_cols: list[str],
-    ) -> DataFrame | None:
-        """base version ∪ deltas, last writer wins per key."""
-        if pointer is None:
-            return None
-        root = self._state_root(table)
-        frames = []
-        if pointer.get("base") is not None:
-            base = spark.read.schema(schema).parquet(
-                os.path.join(root, f"v={pointer['base']}")
-            )
-            frames.append(base.withColumn("_delta_rank", F.lit(0)))
-        for rank, delta_id in enumerate(pointer.get("deltas", []), start=1):
-            delta = spark.read.schema(schema).parquet(
-                os.path.join(root, f"d={delta_id}")
-            )
-            frames.append(delta.withColumn("_delta_rank", F.lit(rank)))
-        if not frames:
-            return None
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
-        if len(frames) == 1:
-            return merged.drop("_delta_rank")
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*key_cols).orderBy(F.desc("_delta_rank"))
-        out = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_delta_rank")
-        )
-        if "uuid" in out.columns:
-            # a winning tombstone (uuid NULL, written by the delta lane
-            # when a batch merge absorbs a canonical_id) retires the key
-            out = out.where(F.col("uuid").isNotNull())
-        return out
+        root = self._state_root("groups")
+        return lake.table_view(spark, root, lake.read_entry(root), GROUP_SCHEMA)
 
     # ---- the micro-batch body -------------------------------------------
-
-    def _batch_pointer(self, table: str, batch_id: int) -> tuple[dict, list[int]]:
-        """The table's pointer with checkpoint-replay normalization, so a
-        batch that committed state but crashed before the STREAM
-        checkpoint recorded it replays as a deterministic rewrite rather
-        than double-applying on top of its own output:
-
-        Every commit (both lanes) records which COMMIT ID produced it
-        (`committed_batch` — base VERSION NUMBERS share the id space, so
-        matching on the version alone would misfire on seeded
-        warehouses) plus the exact pre-batch pointer (`replay_base`).
-        Spark's checkpoint contract means only the LATEST batch can ever
-        replay, so one level of replay info suffices. The delta-list
-        rollback below remains as the fallback for pointers written
-        before replay_base existed.
-
-        `batch_id` here is the run-epoched commit id (_commit_id), NOT
-        Spark's raw batch id: a fresh-checkpoint stream restarts raw
-        batch ids at 0, and matching on those would misread a NEW
-        stream's batch 0 over an existing warehouse as a replay of the
-        PREVIOUS stream's batch 0 — rolling the pointer back and
-        silently discarding committed state. Epoched ids are disjoint
-        across runs, so only a genuine same-run replay can ever match.
-        """
-        pointer = self._read_pointer(table) or {"base": None, "deltas": []}
-        if pointer.get("committed_batch") == int(batch_id):
-            pointer = pointer.get("replay_base") or {"base": None, "deltas": []}
-        deltas = list(pointer.get("deltas", []))
-        if int(batch_id) in deltas:
-            deltas = deltas[: deltas.index(int(batch_id))]
-            pointer = {**pointer, "deltas": deltas, "max_id": None}
-        return pointer, deltas
-
-    def _max_person_id(self, spark: SparkSession, pointer: dict) -> int:
-        if pointer.get("max_id") is not None:
-            return int(pointer["max_id"])
-        prior = self._table_view(
-            spark, "persons", pointer, PERSON_SCHEMA, ["canonical_id"]
-        )
-        if prior is None:
-            return 0
-        row = prior.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
-        return int(row["m"] or 0)
 
     @staticmethod
     def _touched_distinct_ids(commands: DataFrame) -> DataFrame:
@@ -466,69 +192,39 @@ class StreamingIngestJob:
             unpersist_all()
 
     def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:
+        from hogflare_spark.operators.group_state import derive_group_ops
         from hogflare_spark.operators.ingest import ingest_commands
         from hogflare_spark.operators.normalize import decode_normalize_requests
 
         spark = batch_df.sparkSession
-        cid = self._commit_id(batch_id)
-
-        # Replay-after-interleave detection: if THIS cid is recorded as
-        # its epoch's last committed batch but some OTHER run has
-        # committed since (committed_batch moved on), the batch's
-        # effects are already folded into state that later writers built
-        # on. Re-applying would double-apply; "rewriting" would clobber
-        # the interleaved commits. The only exactly-once behavior is a
-        # full no-op (the batch's events dir already holds its committed
-        # rows). Checked per table — a crash between the groups and
-        # persons commits legitimately leaves one table applied and the
-        # other not.
-        def _already_applied(table: str) -> bool:
-            live = self._read_pointer(table) or {}
-            by_epoch = live.get("committed_by_epoch") or {}
-            return (
-                by_epoch.get(str(cid // self._EPOCH_STRIDE)) == cid
-                and live.get("committed_batch") != cid
-            )
-
-        p_applied = _already_applied("persons")
-        g_applied = _already_applied("groups")
-        if p_applied and g_applied:
-            return
+        app_id = str(self.run_id)
+        p_root, g_root = self._state_root("persons"), self._state_root("groups")
+        # the version each table builds on, and whether its log already
+        # holds this batch (then the fold is recomputed from the version
+        # before that entry and nothing is committed to the table)
+        p_seed, p_held = lake.seed_entry(p_root, app_id, batch_id)
+        g_seed, g_held = lake.seed_entry(g_root, app_id, batch_id)
 
         commands = cached(decode_normalize_requests(batch_df))
-        p_pointer, p_deltas = self._batch_pointer("persons", cid)
-        g_pointer, g_deltas = self._batch_pointer("groups", cid)
-        # The delta lane now takes EVERY batch once a base exists (up to
-        # the delta-compaction cap) — including alias batches: the seed
-        # below is the prior components the batch's ids touch, and both
+        # The delta lane takes EVERY batch once a base exists (up to the
+        # delta-compaction cap) — including alias batches: the seed below
+        # is the prior components the batch's ids touch, and both
         # endpoints of every alias edge are in the touched set, so a
         # cross-key merge folds correctly against its restricted seed.
         # Records absorbed by a merge get tombstone rows in the delta
-        # (uuid NULL) so the read view drops their stale base rows —
-        # without them, a merged-away canonical_id would resurrect from
-        # the base at read time. Pre-r5 the lane refused alias batches
-        # outright, so a 1%-alias stream paid a full-corpus fold on
-        # every alias-carrying batch (reference semantics pinned by
-        # /root/reference/src/persons.rs:281-326).
+        # (uuid NULL) so the read view drops their stale base rows.
         person_fast = (
             self.hybrid
-            and p_pointer.get("base") is not None
-            and len(p_deltas) < self.max_person_deltas
+            and p_seed is not None
+            and len(p_seed["deltas"]) < self.max_person_deltas
         )
-        # group ops are ALWAYS per-(type,key) — no cross-key merges exist
-        # in the model (groups.rs LWW upserts) — so the delta lane needs
-        # only the bootstrap base and the read-amplification cap.
         group_fast = (
             self.hybrid
-            and g_pointer.get("base") is not None
-            and len(g_deltas) < self.max_person_deltas
+            and g_seed is not None
+            and len(g_seed["deltas"]) < self.max_person_deltas
         )
-        prior_persons = self._table_view(
-            spark, "persons", p_pointer, PERSON_SCHEMA, ["canonical_id"]
-        )
-        prior_groups = self._table_view(
-            spark, "groups", g_pointer, GROUP_SCHEMA, ["group_type", "group_key"]
-        )
+        prior_persons = lake.table_view(spark, p_root, p_seed, PERSON_SCHEMA)
+        prior_groups = lake.table_view(spark, g_root, g_seed, GROUP_SCHEMA)
         seed_persons, floor = prior_persons, None
         if person_fast:
             # seed only the persons whose distinct_ids this batch touches
@@ -547,12 +243,14 @@ class StreamingIngestJob:
             seed_persons = prior_persons.join(
                 F.broadcast(affected_ids), "canonical_id", "semi"
             )
-            floor = self._max_person_id(spark, p_pointer)
-            p_pointer["max_id"] = floor  # pin: commit below reuses it
+            floor = p_seed["max_id"]
+            if floor is None:
+                row = prior_persons.agg(
+                    F.coalesce(F.max("id"), F.lit(0)).alias("m")
+                ).collect()[0]
+                floor = int(row["m"] or 0)
         seed_groups = prior_groups
         if group_fast:
-            from hogflare_spark.operators.group_state import derive_group_ops
-
             touched_keys = (
                 derive_group_ops(commands)
                 .select("group_type", "group_key")
@@ -570,52 +268,31 @@ class StreamingIngestJob:
             person_id_floor=floor,
         )
         events = out["events"].withColumn("event_date", F.to_date("created_at"))
-        # events first: if we crash between events and state, the stream
-        # checkpoint replays this batch id — the batch-scoped OVERWRITE
-        # makes the replay a true rewrite (an append here would duplicate
-        # the batch's rows on every replay; deterministic uuids make the
-        # rewrite byte-identical). `batch` (the run-epoched commit id)
-        # becomes a partition column of the warehouse events table;
-        # lake.read_events drops it and lake.compact_events bin-packs the
-        # event_date leaves under it.
+        # events first, into this batch's own directory: a replay of the
+        # batch OVERWRITES it (an append would duplicate the batch's rows
+        # on every replay; deterministic uuids make the rewrite
+        # byte-identical). `batch` becomes a partition column of the
+        # warehouse events table; lake.read_events drops it and
+        # lake.compact_events bin-packs the event_date leaves under it.
+        run_tag = hashlib.sha1(app_id.encode()).hexdigest()[:12]
         events.write.mode("overwrite").partitionBy("event_date").parquet(
-            os.path.join(self.events_dir, f"batch={cid}")
+            os.path.join(self.events_dir, f"batch={run_tag}_{batch_id}")
         )
-        # state folds must materialize BEFORE the new version overwrites
-        # the directory the fold is lazily reading from
+        # pinned once: the commits and the max-id aggregate below read them
         new_persons = out["persons"].localCheckpoint(eager=True)
         new_groups = out["groups"].localCheckpoint(eager=True)
-        groups_root = self._state_root("groups")
-        if g_applied:
-            pass  # already committed before an interleaved writer — no-op
-        elif group_fast:
-            # new_groups holds ONLY touched ∪ newly-created keys here
-            new_groups.write.mode("overwrite").parquet(
-                os.path.join(groups_root, f"d={cid}")
+        txn = (app_id, int(batch_id))
+        if not g_held:
+            # a delta commit holds ONLY touched ∪ newly-created keys
+            lake._commit_version(
+                new_groups, g_root, g_seed and g_seed["version"],
+                keys=["group_type", "group_key"], delta=group_fast, txn=txn,
             )
-            self._commit_pointer(
-                "groups",
-                {
-                    "base": g_pointer["base"],
-                    "deltas": g_deltas + [cid],
-                    "committed_batch": cid,
-                    "replay_base": self._replay_base_of(g_pointer),
-                },
-            )
-        else:
-            self._write_state(
-                new_groups,
-                "groups",
-                cid,
-                committed_batch=cid,
-                replay_base=self._replay_base_of(g_pointer),
-            )
+        if p_held:
+            return
         row = new_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
-        batch_max = int(row["m"] or 0)
-        persons_root = self._state_root("persons")
-        if p_applied:
-            pass  # already committed before an interleaved writer — no-op
-        elif person_fast:
+        max_id = int(row["m"] or 0)
+        if person_fast:
             # new_persons holds ONLY affected ∪ newly-created rows here.
             # A seeded canonical_id missing from the fold output was
             # absorbed by a batch merge — write a tombstone (uuid NULL)
@@ -631,33 +308,13 @@ class StreamingIngestJob:
                     if f.name != "canonical_id"
                 ],
             )
-            new_persons.unionByName(tombstones).write.mode("overwrite").parquet(
-                os.path.join(persons_root, f"d={cid}")
-            )
-            self._commit_pointer(
-                "persons",
-                {
-                    "base": p_pointer["base"],
-                    "deltas": p_deltas + [cid],
-                    "max_id": max(int(p_pointer["max_id"]), batch_max),
-                    "committed_batch": cid,
-                    "replay_base": self._replay_base_of(p_pointer),
-                },
-            )
-        else:
-            new_persons.write.mode("overwrite").parquet(
-                os.path.join(persons_root, f"v={cid}")
-            )
-            self._commit_pointer(
-                "persons",
-                {
-                    "base": cid,
-                    "deltas": [],
-                    "max_id": batch_max,
-                    "committed_batch": cid,
-                    "replay_base": self._replay_base_of(p_pointer),
-                },
-            )
+            new_persons = new_persons.unionByName(tombstones)
+            max_id = max(floor, max_id)
+        lake._commit_version(
+            new_persons, p_root, p_seed and p_seed["version"],
+            keys=["canonical_id"], delta=person_fast, max_id=max_id, txn=txn,
+        )
+
     def start(
         self,
         raw_stream: DataFrame,
@@ -666,10 +323,9 @@ class StreamingIngestJob:
     ):
         if self.run_id is None:
             # One checkpoint dir == one logical stream: restarting from
-            # the same checkpoint resumes the same run (so replays are
-            # recognized); a fresh checkpoint is a new run (so its batch
-            # ids live in a fresh epoch and apply instead of rolling
-            # back prior state).
+            # the same checkpoint resumes the same writer (so replays are
+            # recognized); a fresh checkpoint is a new writer (so its
+            # batches apply on top of prior state).
             self.run_id = os.path.abspath(checkpoint_dir)
         writer = (
             raw_stream.writeStream.foreachBatch(self.process_batch)
@@ -711,12 +367,13 @@ _STATE_SCHEMA = StructType(
 def _load_person_seed_map(persons_dir: str) -> dict:
     """Worker-side seed index: distinct_id → (props, set_once, version).
 
-    Reads the versioned persons state (same layout StreamingIngestJob
-    writes: `_STATE` JSON pointer or legacy `_LATEST`, `v=<n>` parquet)
-    once per executor via a module-level cache and explodes each
-    record's distinct_ids so absorbed ids resolve too. Property values
-    are stored JSON-encoded in the table (FIXTURES.md §3) and decoded
-    back to plain values here to match the operator's state shape.
+    Reads the persons table's latest log entry (the layout lake and
+    StreamingIngestJob write: base then deltas, last writer wins per
+    canonical_id) once per executor via a module-level cache and explodes
+    each record's distinct_ids so absorbed ids resolve too; a tombstone
+    (NULL distinct_ids) retires its record. Property values are stored
+    JSON-encoded in the table (FIXTURES.md §3) and decoded back to plain
+    values here to match the operator's state shape.
 
     At cluster scale the persons table would be bucketed by
     hash(distinct_id) and each worker would load only its buckets; the
@@ -724,57 +381,41 @@ def _load_person_seed_map(persons_dir: str) -> dict:
     """
     import pyarrow.parquet as pq
 
-    # The cache key includes the POINTER CONTENTS, not just the path: a
-    # long-lived Python worker that served an earlier stream must not
-    # seed a new stream from the table as it stood back then (the batch
-    # job may have committed versions in between). Re-reading the tiny
-    # pointer file per group call is microseconds; only the parquet load
-    # is cached. One entry per dir — superseded snapshots are dropped.
-    base = None
-    state_path = os.path.join(persons_dir, "_STATE")
-    legacy = os.path.join(persons_dir, "_LATEST")
-    deltas: list[int] = []
-    pointer_text = ""
-    if os.path.exists(state_path):
-        with open(state_path) as fh:
-            pointer_text = fh.read()
-        pointer = json.loads(pointer_text)
-        base, deltas = pointer.get("base"), list(pointer.get("deltas", []))
-    elif os.path.exists(legacy):
-        with open(legacy) as fh:
-            pointer_text = fh.read()
-        base = int(pointer_text.strip())
+    # The cache key is the ENTRY, not just the path: a long-lived Python
+    # worker that served an earlier stream must not seed a new stream
+    # from the table as it stood back then (the batch job may have
+    # committed versions in between). Re-reading the latest entry per
+    # group call is microseconds; only the parquet load is cached. One
+    # cache entry per dir — superseded snapshots are dropped.
+    entry = lake.read_entry(persons_dir)
     cache = _load_person_seed_map.__dict__.setdefault("_cache", {})
-    cached = cache.get(persons_dir)
-    if cached is not None and cached[0] == pointer_text:
-        return cached[1]
+    hit = cache.get(persons_dir)
+    if hit is not None and hit[0] == entry:
+        return hit[1]
     index: dict = {}
-    if base is not None:
-        paths = [os.path.join(persons_dir, f"v={base}")]
-        paths += [os.path.join(persons_dir, f"d={d}") for d in deltas]
-        by_canonical: dict = {}
-        for path in paths:  # later deltas overwrite earlier rows (LWW)
-            tbl = pq.read_table(
-                path,
-                columns=[
-                    "canonical_id", "distinct_ids", "properties",
-                    "properties_set_once", "version",
-                ],
-            ).to_pylist()
-            for rec in tbl:
-                by_canonical[rec["canonical_id"]] = rec
-        for rec in by_canonical.values():
-            # pyarrow maps arrive as [(k, v), ...] pairs
-            props_kv = rec["properties"] or []
-            so_kv = rec["properties_set_once"] or []
-            entry = (
-                {k: json.loads(v) for k, v in props_kv},
-                {k: json.loads(v) for k, v in so_kv},
-                int(rec["version"] or 0),
-            )
-            for did in rec["distinct_ids"] or []:
-                index[did] = entry
-    cache[persons_dir] = (pointer_text, index)
+    by_canonical: dict = {}
+    for path in lake.entry_dirs(persons_dir, entry) if entry else []:
+        tbl = pq.read_table(
+            path,
+            columns=[
+                "canonical_id", "distinct_ids", "properties",
+                "properties_set_once", "version",
+            ],
+        ).to_pylist()
+        for rec in tbl:  # later deltas overwrite earlier rows (LWW)
+            by_canonical[rec["canonical_id"]] = rec
+    for rec in by_canonical.values():
+        # pyarrow maps arrive as [(k, v), ...] pairs
+        props_kv = rec["properties"] or []
+        so_kv = rec["properties_set_once"] or []
+        seeded = (
+            {k: json.loads(v) for k, v in props_kv},
+            {k: json.loads(v) for k, v in so_kv},
+            int(rec["version"] or 0),
+        )
+        for did in rec["distinct_ids"] or []:
+            index[did] = seeded
+    cache[persons_dir] = (entry, index)
     return index
 
 
@@ -790,17 +431,16 @@ def stateful_person_snapshots(
     (persons.rs:488-541). Updates within a batch apply in (request_seq,
     item_index) order.
 
-    ``seed_persons_dir``: path to a versioned persons state directory
-    (the batch/hybrid job's output). A key seen for the FIRST time
-    initializes its state from the stored person record — including
-    records reachable through an absorbed distinct_id — so the
-    low-latency lane continues version counters and property bags from
-    the authoritative table instead of restarting at zero. The seed map
-    is cached per (dir, pointer-contents) on each worker: reused workers
-    re-read the tiny pointer file and reload only when the table has
-    advanced, so a NEW stream always seeds from the current snapshot —
-    and within a stream the state store, once a key is live, always
-    wins over the seed.
+    ``seed_persons_dir``: path to a persons table (the batch/hybrid
+    job's output). A key seen for the FIRST time initializes its state
+    from the stored person record — including records reachable through
+    an absorbed distinct_id — so the low-latency lane continues version
+    counters and property bags from the authoritative table instead of
+    restarting at zero. The seed map is cached per (dir, latest log
+    entry) on each worker: reused workers re-read the latest entry and
+    reload only when the table has advanced, so a NEW stream always
+    seeds from the current snapshot — and within a stream the state
+    store, once a key is live, always wins over the seed.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -864,112 +504,6 @@ def stateful_person_snapshots(
         _STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_person_snapshots_tws(
-    commands: DataFrame, seed_persons_dir: str | None = None
-) -> DataFrame:
-    """transformWithStateInPandas twin of stateful_person_snapshots
-    (round-11 spike, r10 verdict #8): the same per-distinct_id fold on
-    the forward-looking arbitrary-state API Spark 4.x positions as the
-    applyInPandasWithState successor — named column-family state
-    (getValueState), timer support, and initial-state hooks that the DO
-    model (persons.rs:488-541) maps onto even more directly.
-
-    Identical semantics by construction: the fold body is the same
-    update algebra, state round-trips through the same _STATE_SCHEMA
-    tuple, and tests/test_round11.py pins this twin row-identical to the
-    applyInPandasWithState lane on multi-batch input (including the
-    versioned-state seeding path). The graded gate keeps the
-    applyInPandasWithState lane; switch by calling this function — the
-    signature is identical.
-
-    ENVIRONMENT-BLOCKED in this container (dated note, round 11 /
-    2026-08-16): the TWS Python state server imports google.protobuf at
-    query start and crashes the driver worker without it
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE); protobuf is not
-    bundled here and cannot be installed. The differential tests gate on
-    importorskip("google.protobuf") and activate automatically once the
-    dependency exists.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _PersonFold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("person", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, pdfs, timer_values):
-            import pandas as pd
-
-            (distinct_id,) = key
-            stored = self._state.get() if self._state.exists() else None
-            if stored is not None:
-                props_json, set_once_json, version = stored
-                props = json.loads(props_json or "{}")
-                set_once = json.loads(set_once_json or "{}")
-                version = int(version or 0)
-            else:
-                props, set_once, version = {}, {}, 0
-                if seed_persons_dir is not None:
-                    seeded = _load_person_seed_map(seed_persons_dir).get(
-                        distinct_id
-                    )
-                    if seeded is not None:
-                        props, set_once, version = (
-                            dict(seeded[0]), dict(seeded[1]), seeded[2]
-                        )
-
-            rows = []
-            for pdf in pdfs:
-                pdf = pdf.sort_values(
-                    ["request_seq", "item_index"], kind="mergesort"
-                )
-                for r in pdf.itertuples(index=False):
-                    update = (
-                        json.loads(r.person_update) if r.person_update else {}
-                    )
-                    version += 1
-                    for k, v in update.get("set", {}).items():
-                        props[k] = v
-                    for k, v in update.get("set_once", {}).items():
-                        if k not in props and k not in set_once:
-                            set_once[k] = v
-                    for k in update.get("unset", []):
-                        props.pop(k, None)
-                        set_once.pop(k, None)
-                    merged = dict(set_once)
-                    merged.update(props)
-                    rows.append(
-                        {
-                            "request_seq": int(r.request_seq),
-                            "item_index": int(r.item_index),
-                            "distinct_id": distinct_id,
-                            "person_version": version,
-                            "person_properties": json.dumps(
-                                merged, separators=(",", ":")
-                            ),
-                        }
-                    )
-            self._state.update(
-                (
-                    json.dumps(props, separators=(",", ":")),
-                    json.dumps(set_once, separators=(",", ":")),
-                    version,
-                )
-            )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SNAPSHOT_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return commands.groupBy("distinct_id").transformWithStateInPandas(
-        _PersonFold(), SNAPSHOT_SCHEMA, "append", "none"
     )
 
 

@@ -3,7 +3,6 @@ bench error-line capping) and the round's new operators."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -177,139 +176,6 @@ def test_native_flag_responses_plan_is_udf_free(spark):
     plan = _plan(batch_flag_responses_native(_persons_df(spark, n=5), _rich_flags()))
     assert "mapInPandas" not in plan and "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
-
-
-# ----------------------------------- transformWithState fold twin (spike)
-
-
-def _write_json_batch(dirpath, fname, rows):
-    import json as _json
-    import os as _os
-
-    _os.makedirs(dirpath, exist_ok=True)
-    with open(_os.path.join(dirpath, fname), "w") as fh:
-        for r in rows:
-            fh.write(_json.dumps(r) + "\n")
-
-
-_CMD_SCHEMA = (
-    "request_seq long, item_index long, distinct_id string, person_update string"
-)
-
-
-def _run_fold_stream(spark, src, ck, fold_fn):
-    out_rows = []
-    q = (
-        spark.readStream.schema(_CMD_SCHEMA).json(src)
-        .transform(fold_fn)
-        .writeStream.foreachBatch(lambda df, _id: out_rows.extend(df.collect()))
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_rows
-
-
-def test_tws_fold_twin_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """The transformWithStateInPandas person fold must be row-identical to
-    the applyInPandasWithState lane across micro-batches (state resume
-    included).
-
-    Skipped where google.protobuf is absent: the TWS state-server wire
-    protocol imports it in the Python driver worker (measured round 11:
-    the query crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    / ImportError google.protobuf), and this container has no protobuf
-    and no way to install one. The twin stays in the tree so the suite
-    activates the moment the environment gains the dependency."""
-    pytest.importorskip("google.protobuf")
-    import json as _json
-
-    from hogflare_spark.streaming.ingest_stream import (
-        stateful_person_snapshots,
-        stateful_person_snapshots_tws,
-    )
-
-    src_a = str(tmp_path / "cmds_a")
-    src_b = str(tmp_path / "cmds_b")
-    batches = [
-        ("c1.json", [
-            {"request_seq": 1, "item_index": 0, "distinct_id": "u1",
-             "person_update": _json.dumps({"set": {"a": 1, "n": "x"}})},
-            {"request_seq": 1, "item_index": 1, "distinct_id": "u1",
-             "person_update": _json.dumps({"set_once": {"a": 9, "b": 2}})},
-            {"request_seq": 2, "item_index": 0, "distinct_id": "u2",
-             "person_update": _json.dumps({"set": {"x": True}})},
-        ]),
-        ("c2.json", [
-            {"request_seq": 3, "item_index": 0, "distinct_id": "u1",
-             "person_update": _json.dumps({"unset": ["a"]})},
-            {"request_seq": 4, "item_index": 0, "distinct_id": "u3",
-             "person_update": _json.dumps({"set_once": {"z": [1, 2]}})},
-        ]),
-    ]
-
-    got = {}
-    for label, src, fn in (
-        ("apply", src_a, stateful_person_snapshots),
-        ("tws", src_b, stateful_person_snapshots_tws),
-    ):
-        rows = []
-        for i, (fname, cmds) in enumerate(batches):
-            _write_json_batch(src, fname, cmds)
-            rows.extend(
-                _run_fold_stream(spark, src, str(tmp_path / f"ck_{label}"), fn)
-            )
-        got[label] = sorted(
-            (r["request_seq"], r["item_index"], r["distinct_id"],
-             r["person_version"], r["person_properties"])
-            for r in rows
-        )
-    assert got["tws"] == got["apply"]
-    assert len(got["tws"]) == 5
-
-
-def test_tws_fold_twin_seeds_from_versioned_state(spark, tmp_path):
-    """The seeding path (first-seen key initialized from the versioned
-    persons table) must behave identically on the TWS lane. (Same
-    protobuf gate as the twin-parity test above.)"""
-    pytest.importorskip("google.protobuf")
-    import json as _json
-
-    from pyspark.sql import Row
-
-    from hogflare_spark.sinks.lake import upsert_table
-    from hogflare_spark.streaming.ingest_stream import (
-        stateful_person_snapshots,
-        stateful_person_snapshots_tws,
-    )
-
-    persons_dir = str(tmp_path / "persons")
-    seed = spark.createDataFrame([
-        Row(canonical_id="p1", distinct_ids=["u1"], id=1,
-            properties={"a": "7"}, properties_set_once={"b": '"keep"'},
-            version=5),
-    ])
-    upsert_table(spark, seed, persons_dir, keys=["canonical_id"])
-
-    cmds = [{"request_seq": 1, "item_index": 0, "distinct_id": "u1",
-             "person_update": _json.dumps({"set": {"c": 3}})}]
-    got = {}
-    for label, fn in (
-        ("apply", stateful_person_snapshots),
-        ("tws", stateful_person_snapshots_tws),
-    ):
-        src = str(tmp_path / f"cmds_{label}")
-        _write_json_batch(src, "c1.json", cmds)
-        rows = _run_fold_stream(
-            spark, src, str(tmp_path / f"ck_{label}"),
-            lambda df, fn=fn: fn(df, seed_persons_dir=persons_dir),
-        )
-        assert len(rows) == 1
-        got[label] = (rows[0]["person_version"], rows[0]["person_properties"])
-    assert got["tws"] == got["apply"]
-    assert got["tws"][0] == 6  # continues the stored version counter
 
 
 # ----------------------------------------------- Misra-Gries heavy hitters

@@ -216,6 +216,7 @@ def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
     O(touched components) delta lane, alias batches included — converges
     to the one-shot batch fold, ids included."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
+    from hogflare_spark.sinks.lake import read_entry
     from hogflare_spark.streaming.ingest_stream import (
         StreamingIngestJob,
         read_request_stream,
@@ -230,17 +231,17 @@ def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
         _write_batch(landing, f"b{bi}.json", HYBRID_OPS[start:end])
         job.run_available_now(read_request_stream(spark, landing), ckpt)
 
-    # the alias micro-batch (batch id 1) is a DELTA now, not a full
-    # rewrite: the pointer keeps base=0 with both later batches stacked
-    # as deltas
-    pointer = json.load(open(os.path.join(warehouse, "persons", "_STATE")))
-    assert pointer["base"] == 0 and pointer["deltas"] == [1, 2], pointer
-    assert os.path.isdir(os.path.join(warehouse, "persons", "d=1"))
-    assert os.path.isdir(os.path.join(warehouse, "persons", "d=2"))
+    # the alias micro-batch (batch id 1) is a DELTA, not a full rewrite:
+    # the latest entry keeps batch 0's base with both later batches
+    # stacked as deltas
+    pointer = job._read_pointer("persons")
+    assert pointer["version"] == 3 and len(pointer["deltas"]) == 2, pointer
+    assert pointer["deltas"][-1] == pointer["committed_batch"]
+    assert pointer["base"] == read_entry(os.path.join(warehouse, "persons"), 1)["base"]
     # the alias delta is O(touched): exactly the merged record plus the
     # tombstone for the absorbed canonical id — u2's record must NOT be
     # replayed into it
-    d1 = spark.read.parquet(os.path.join(warehouse, "persons", "d=1"))
+    d1 = spark.read.parquet(os.path.join(warehouse, "persons", pointer["deltas"][0]))
     d1_rows = {r["canonical_id"]: r for r in d1.collect()}
     assert set(d1_rows) == {"user-1", "anon-1"}, sorted(d1_rows)
     assert d1_rows["anon-1"]["uuid"] is None  # tombstone
@@ -359,9 +360,12 @@ def test_hybrid_streaming_group_delta_lane_converges(spark, tmp_path):
         job.run_available_now(read_request_stream(spark, landing), ckpt)
 
     # batch id 1 wrote a groups DELTA, not a full rewrite
-    pointer = json.load(open(os.path.join(warehouse, "groups", "_STATE")))
-    assert pointer["base"] == 0 and pointer["deltas"] == [1], pointer
-    assert os.path.isdir(os.path.join(warehouse, "groups", "d=1"))
+    pointer = job._read_pointer("groups")
+    assert pointer["version"] == 2, pointer
+    assert pointer["deltas"] == [pointer["committed_batch"]], pointer
+    # the delta holds only the touched keys: t2 (new) and t1 (updated)
+    d1 = spark.read.parquet(os.path.join(warehouse, "groups", pointer["deltas"][0]))
+    assert {r["group_key"] for r in d1.collect()} == {"t1", "t2"}
 
     batch_raw = spark.createDataFrame(
         [Row(request_seq=r["request_seq"], endpoint=r["endpoint"], body=r["body"])
@@ -696,9 +700,10 @@ def test_fresh_checkpoint_new_run_is_not_a_replay(spark, tmp_path):
     """Spark batch ids restart at 0 with a fresh checkpoint dir. A NEW
     stream's batch 0 over an existing warehouse must APPLY on top of the
     committed state — not be misread as a checkpoint replay of the OLD
-    stream's batch 0 (which would roll the pointer back and silently
-    discard state and events). Run-epoched commit ids keep the two id
-    spaces disjoint while same-run replays stay recognizable."""
+    stream's batch 0 (which would recompute from old state and commit
+    nothing). Table transactions are keyed by (run, batch), so the two
+    runs' batch 0s are distinct while same-run replays stay
+    recognizable."""
     from hogflare_spark.sinks.lake import read_events
     from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
 
@@ -751,7 +756,8 @@ def test_alias_delta_batch_replay_is_a_rewrite(spark, tmp_path):
             r["canonical_id"]: (r["version"], sorted(r["distinct_ids"]))
             for r in job.read_persons(spark).collect()
         }
-        d = spark.read.parquet(os.path.join(wh, "persons", "d=1"))
+        entry = job._read_pointer("persons")
+        d = spark.read.parquet(os.path.join(wh, "persons", entry["deltas"][-1]))
         delta = {r["canonical_id"]: r["uuid"] is None for r in d.collect()}
         return persons, delta
 
@@ -770,11 +776,9 @@ def test_alias_delta_batch_replay_is_a_rewrite(spark, tmp_path):
 def test_resume_after_interleaved_writer_is_exactly_once(spark, tmp_path):
     """r6 verdict #3: run A commits batch 0; run B (fresh checkpoint)
     interleaves a write; A resumes from ITS OWN checkpoint and replays
-    batch 0. Under the old last-writer `_RUN` scheme A's resume derived
-    a FRESH epoch, so the replay missed its committed-batch marker and
-    double-applied (duplicate events, state applied twice). The O_EXCL
-    per-run epoch claim keeps A's epoch stable: the replay must be a
-    pure rewrite."""
+    batch 0. The replay finds (run-a, 0) in both tables' logs behind B's
+    commits: it must be a pure rewrite — no state applied twice, no
+    duplicate events, and B's commits untouched."""
     from hogflare_spark.sinks.lake import read_events
     from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
 
@@ -788,56 +792,203 @@ def test_resume_after_interleaved_writer_is_exactly_once(spark, tmp_path):
         }[did]
 
     a = StreamingIngestJob(wh, run_id="run-a")
-    epoch_a = a._resolve_epoch()
     a.process_batch(_raw_df(spark, BATCH1), 0)
 
     b = StreamingIngestJob(wh, run_id="run-b")
-    assert b._resolve_epoch() != epoch_a  # distinct runs, distinct epochs
     b.process_batch(
         _raw_df(spark, [_capture(10, "anon-1", {"$set": {"plan": "pro"}})]), 0
     )
     v_after_b = version_of(b, "anon-1")
     n_events = read_events(spark, b.events_dir).count()
 
-    # A resumes from its own checkpoint AFTER B wrote: same epoch back,
-    # and the at-least-once replay of its batch 0 is a rewrite.
+    # A resumes from its own checkpoint AFTER B wrote: the
+    # at-least-once replay of its batch 0 is a rewrite.
     a2 = StreamingIngestJob(wh, run_id="run-a")
-    assert a2._resolve_epoch() == epoch_a, "resume must reuse the claimed epoch"
     a2.process_batch(_raw_df(spark, BATCH1), 0)
     assert version_of(a2, "anon-1") == v_after_b, "replay double-applied state"
     assert read_events(spark, a2.events_dir).count() == n_events, (
         "replay duplicated events"
     )
 
-    # and B's own resume is likewise stable
-    b2 = StreamingIngestJob(wh, run_id="run-b")
-    assert b2._resolve_epoch() == b._resolve_epoch()
 
 
-def test_epoch_claims_are_per_run_and_monotonic(tmp_path):
-    """Sequential fresh runs claim strictly increasing epochs; a resume
-    always resolves to the run's original claim regardless of how many
-    writers interleaved; legacy `_RUN`-only warehouses are adopted at
-    their recorded epoch."""
-    import json as _json
+# ---- a real hybrid stream stopped at each commit boundary, then restarted
 
-    from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
+_RESTART_GROUP_TYPES = ("company", "team", None, None, None)
 
-    wh = str(tmp_path / "wh")
-    epochs = {}
-    for rid in ("r1", "r2", "r3"):
-        epochs[rid] = StreamingIngestJob(wh, run_id=rid)._resolve_epoch()
-    assert len(set(epochs.values())) == 3
-    assert epochs["r1"] < epochs["r2"] < epochs["r3"]
-    for rid, e in epochs.items():
-        assert StreamingIngestJob(wh, run_id=rid)._resolve_epoch() == e
 
-    # legacy warehouse: only a _RUN record from the old scheme
-    wh2 = str(tmp_path / "wh2")
-    os.makedirs(wh2)
-    with open(os.path.join(wh2, "_RUN"), "w") as fh:
-        _json.dump({"run_id": "old", "epoch": 5}, fh)
-    assert StreamingIngestJob(wh2, run_id="old")._resolve_epoch() == 5
-    assert StreamingIngestJob(wh2, run_id="new")._resolve_epoch() == 6
-    # ...and the adopted legacy run keeps 5 even after "new" wrote _RUN
-    assert StreamingIngestJob(wh2, run_id="old")._resolve_epoch() == 5
+def _capture_in(seq: int, distinct_id: str, company: str, props: dict) -> dict:
+    return _capture(seq, distinct_id, {**props, "$groups": {"company": company}})
+
+
+# both lanes, alias and auto-alias merges, `$groups` captures and group
+# upserts; the last batch is the one each test stops
+RESTART_BATCHES = [
+    [
+        _capture(1, "anon-1", {"$set": {"plan": "free"}}),
+        _capture_in(2, "u2", "acme", {"$set": {"team": "red"}}),
+        _group_upsert(3, "company", "acme", {"size": 1}),
+    ],
+    [
+        _alias(4, "user-1", "anon-1"),
+        _capture(5, "user-1", {"$set": {"plan": "pro"}}),
+        _group_upsert(6, "company", "acme", {"size": 2}),
+    ],
+    [
+        _capture(7, "anon-1", {"$set": {"n": 1}}),
+        _identify(8, "person-3", {"$set": {"email": "p3@example.com"}}, anon="u2"),
+        _capture_in(9, "person-3", "beta", {"$set_once": {"src": "ad"}}),
+        _group_upsert(10, "company", "beta", {"tier": "gold"}),
+        _capture(11, "fresh", {"$set": {"k": 1}}),
+    ],
+]
+
+
+def _state(persons, groups):
+    return (
+        {
+            r["canonical_id"]: (
+                sorted(r["distinct_ids"]), r["properties"],
+                r["properties_set_once"], r["version"], r["id"],
+            )
+            for r in persons.collect()
+        },
+        {
+            (r["group_type"], r["group_key"]): (r["properties"], r["version"])
+            for r in groups.collect()
+        },
+    )
+
+
+_PERSON_ID_COLUMNS = ["request_seq", "item_index", "person_id"]
+
+
+def _event_rows(df, columns):
+    return sorted(tuple(str(v) for v in r) for r in df.select(*columns).collect())
+
+
+def _stream_restart_batches(spark, root, stop=None):
+    """Stream RESTART_BATCHES through a hybrid job; `stop(run)` runs the
+    last batch and stops it, then a fresh job restarts on the same
+    checkpoint. Returns the job that ran last."""
+    from hogflare_spark.streaming.ingest_stream import (
+        StreamingIngestJob,
+        read_request_stream,
+    )
+
+    landing, ckpt = str(root / "landing"), str(root / "ck")
+
+    def job():
+        return StreamingIngestJob(
+            str(root / "wh"), group_types=_RESTART_GROUP_TYPES, hybrid=True
+        )
+
+    def run(j):
+        return lambda: j.run_available_now(read_request_stream(spark, landing), ckpt)
+
+    first = job()
+    for i, rows in enumerate(RESTART_BATCHES):
+        _write_batch(landing, f"b{i}.json", rows)
+        if i < len(RESTART_BATCHES) - 1 or stop is None:
+            run(first)()
+    if stop is None:
+        return first
+    stop(run(first))
+    # a restart is a new process: a new job object on the same checkpoint
+    restarted = job()
+    run(restarted)()
+    assert os.path.exists(os.path.join(ckpt, "commits", str(len(RESTART_BATCHES) - 1)))
+    return restarted
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_events(spark, tmp_path_factory):
+    """Event person_id columns of the same stream run without a stop. A
+    streamed event keeps the person_id of the person it hydrated against
+    when its batch ran; the one-shot batch fold differs for persons a
+    LATER batch absorbs (u2 here), so this column is compared with the
+    uninterrupted stream rather than the batch fold."""
+    job = _stream_restart_batches(spark, tmp_path_factory.mktemp("uninterrupted"))
+    return _event_rows(spark.read.parquet(job.events_dir), _PERSON_ID_COLUMNS)
+
+
+def _stop_and_restart(spark, tmp_path, stop, uninterrupted_events) -> None:
+    """Stop the last of RESTART_BATCHES with `stop`, restart, and compare
+    persons, groups and event rows with the one-shot batch fold."""
+    from hogflare_spark.operators.ingest import ingest_raw_requests
+    from hogflare_spark.schemas import EVENT_STABLE_COLUMNS
+
+    restarted = _stream_restart_batches(spark, tmp_path, stop)
+
+    rows = [r for batch in RESTART_BATCHES for r in batch]
+    want = ingest_raw_requests(_raw_df(spark, rows), group_types=_RESTART_GROUP_TYPES)
+    assert _state(restarted.read_persons(spark), restarted.read_groups(spark)) == (
+        _state(want["persons"], want["groups"])
+    )
+    got_events = spark.read.parquet(restarted.events_dir)
+    columns = [c for c in EVENT_STABLE_COLUMNS if c != "person_id"]
+    assert _event_rows(got_events, columns) == _event_rows(want["events"], columns)
+    assert _event_rows(got_events, _PERSON_ID_COLUMNS) == uninterrupted_events
+
+
+def _stop_at_commit(monkeypatch, n: int):
+    """A stop that lets the last batch run until its `n`-th table commit
+    (1 = groups, 2 = persons) and kills it there."""
+    from hogflare_spark.sinks import lake
+
+    def stop(run):
+        commit = lake._commit_version
+        calls = []
+
+        def dies(*args, **kwargs):
+            calls.append(args[1])
+            if len(calls) == n:
+                raise RuntimeError("stopped at a commit boundary")
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(lake, "_commit_version", dies)
+        with pytest.raises(Exception, match="stopped at a commit boundary"):
+            run()
+        monkeypatch.setattr(lake, "_commit_version", commit)
+        assert [os.path.basename(c) for c in calls] == ["groups", "persons"][:n]
+
+    return stop
+
+
+def test_restart_after_events_write_matches_batch_fold(
+    spark, tmp_path, monkeypatch, uninterrupted_events
+):
+    """Boundary (a): the batch wrote its events, then stopped before any
+    table commit; the restart re-runs it and commits both tables once."""
+    _stop_and_restart(
+        spark, tmp_path, _stop_at_commit(monkeypatch, 1), uninterrupted_events
+    )
+
+
+def test_restart_between_group_and_person_commits_matches_batch_fold(
+    spark, tmp_path, monkeypatch, uninterrupted_events
+):
+    """Boundary (b): groups committed, persons did not; the restart finds
+    the batch in the groups log (seeds groups from the version before it,
+    commits nothing there) and commits persons once."""
+    _stop_and_restart(
+        spark, tmp_path, _stop_at_commit(monkeypatch, 2), uninterrupted_events
+    )
+
+
+def test_restart_before_spark_commit_log_matches_batch_fold(
+    spark, tmp_path, uninterrupted_events
+):
+    """Boundary (c): foreachBatch returned but Spark's commit-log entry
+    was never written (simulated by deleting it); the restart re-runs the
+    batch, which finds itself in both logs and commits nothing."""
+
+    def stop(run):
+        run()
+        commits = os.path.join(str(tmp_path / "ck"), "commits")
+        last = str(len(RESTART_BATCHES) - 1)
+        for name in (last, f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+
+    _stop_and_restart(spark, tmp_path, stop, uninterrupted_events)
