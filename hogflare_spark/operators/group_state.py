@@ -75,7 +75,8 @@ _FOLD_OUT = StructType(
 
 
 def derive_group_ops(commands: DataFrame) -> DataFrame:
-    """Command rows → group-op rows via one mapInPandas projection."""
+    """Command rows → group-op rows via one mapInPandas projection over
+    the commands that carry `$groups`, `$group_set` or a groupidentify."""
 
     def _run(batches):
         import pandas as pd
@@ -139,9 +140,19 @@ def derive_group_ops(commands: DataFrame) -> DataFrame:
                         )
             yield pd.DataFrame(rows, columns=[f.name for f in _GROUP_OPS.fields])
 
-    return commands.select(
-        "request_seq", "item_index", "timestamp", "groups", "group_updates", "group_identify"
-    ).mapInPandas(_run, _GROUP_OPS)
+    # group-free commands (most capture traffic) never enter Python
+    return (
+        commands.where(
+            F.col("groups").isNotNull()
+            | F.col("group_updates").isNotNull()
+            | F.col("group_identify").isNotNull()
+        )
+        .select(
+            "request_seq", "item_index", "timestamp",
+            "groups", "group_updates", "group_identify",
+        )
+        .mapInPandas(_run, _GROUP_OPS)
+    )
 
 
 def _parse_ts(value: str | None, fallback_seq: int) -> datetime:
@@ -199,31 +210,9 @@ def fold_group_state(
     Every cell is folded by the partition-streaming LWW replay
     (`_replay_stream` below), which keeps one cell's record, never its op
     list: a hot (group_type, group_key) cell streams through one task.
+    A group-free batch derives zero ops and folds to empty results and an
+    empty table.
     """
-    if prior_groups is None:
-        # Group-free traffic short-circuit (pure capture streams are the
-        # common case): one JVM-only scan of the cached commands frame
-        # decides whether ANY row can derive a group op — if none can,
-        # skip the Python derive pass, the shuffle, and the fold
-        # entirely. Cheaper than deriving-then-counting: the check never
-        # leaves whole-stage codegen.
-        has_groups = (
-            commands.where(
-                F.col("groups").isNotNull()
-                | F.col("group_updates").isNotNull()
-                | F.col("group_identify").isNotNull()
-            )
-            .limit(1)
-            .count()
-        )
-        if not has_groups:
-            empty = commands.sparkSession.createDataFrame([], _FOLD_OUT)
-            results = empty.select(
-                "request_seq", "item_index", "group_type", "group_key",
-                "props", "present", "echo",
-            )
-            return results, _groups_table_of(empty)
-
     ops = derive_group_ops(commands)
     if prior_groups is not None:
         ops = ops.unionByName(_seed_group_ops(prior_groups))
@@ -348,14 +337,11 @@ def fold_group_state(
     results = folded.where(F.col("row_type") == "result").select(
         "request_seq", "item_index", "group_type", "group_key", "props", "present", "echo"
     )
-    return results, _groups_table_of(folded)
-
-
-def _groups_table_of(folded: DataFrame) -> DataFrame:
-    return folded.where(F.col("row_type") == "group").select(
+    groups = folded.where(F.col("row_type") == "group").select(
         "group_type",
         "group_key",
         "created_at",
         "version",
         F.from_json("props", "map<string,string>").alias("properties"),
     )
+    return results, groups

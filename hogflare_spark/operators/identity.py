@@ -30,23 +30,16 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Edges (undirected) → (id, component); component = min id (lexicographic).
 
     Singleton nodes should be passed as self-loops (src == dst) if they must
-    appear in the output.
+    appear in the output. An empty edge set yields an empty result.
 
-    Laziness/`max_iter` caveats (r8 ADVICE): below CC_DRIVER_MAX_EDGES
-    the operator collects the edges at CALL time (one limit().collect()
-    job) and runs a driver union-find — it is partially eager, and the
-    union-find always returns the CONVERGED fixpoint, ignoring
-    `max_iter`. The distributed loop, by contrast, can stop early after
-    `max_iter` rounds with unconverged labels on graphs whose component
-    diameter exceeds ~2^max_iter. Callers that rely on a truncated
-    (unconverged) result — none in this repo; every in-repo caller wants
-    the fixpoint — should pass `max_iter < _DRIVER_PATH_MIN_ITERS`,
-    which skips the fast path entirely.
+    Partially eager: the edges are collected at CALL time (one
+    limit().collect() job); up to CC_DRIVER_MAX_EDGES of them run a
+    driver union-find, and a larger set runs the distributed fixpoint
+    loop. Both return the converged labels.
     """
     # Spark 4.1's LogicalRDD.fromDataset can crash rewriting constraint
     # attributes when a checkpointed frame is referenced twice in the next
@@ -58,7 +51,7 @@ def connected_components(
     _cp_old = spark.conf.get(_cp_key, "true")
     spark.conf.set(_cp_key, "false")
     try:
-        return _cc_loop(edges, src, dst, max_iter)
+        return _cc_loop(edges, src, dst)
     finally:
         spark.conf.set(_cp_key, _cp_old)
 
@@ -72,13 +65,10 @@ def connected_components(
 # is the right plan at ANY corpus scale (it is the edge count, not the
 # corpus size, that gates it); above it, the iterative loop takes over.
 CC_DRIVER_MAX_EDGES = 100_000
-# The driver union-find always converges; a caller passing a SMALLER
-# max_iter than this is explicitly asking for a truncated fixpoint, so
-# the fast path steps aside and the round-bounded distributed loop runs.
-# log2(diameter) <= 7 covers any graph the fast path could hold
-# (diameter <= #edges <= 1e5 needs ~17 pointer-jump rounds worst-case;
-# 7 is the threshold below which intent is clearly "truncate").
-_DRIVER_PATH_MIN_ITERS = 7
+# Round bound of the distributed loop: pointer jumping halves label
+# chains each round, so 25 rounds cover any component diameter below
+# ~2^25; the loop stops earlier once no label changes.
+_CC_MAX_ROUNDS = 25
 
 
 def _cc_driver(rows, spark, schema) -> DataFrame:
@@ -118,24 +108,14 @@ def _cc_driver(rows, spark, schema) -> DataFrame:
     return one_slice_df(spark, out, schema)
 
 
-def _cc_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
+def _cc_loop(edges: DataFrame, src: str, dst: str) -> DataFrame:
     from pyspark.sql.types import StructField, StructType
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    if e.isEmpty():
-        # no edges at all (common: ingest batches without alias ops) — skip
-        # the symmetrize/dedup shuffle AND the fixpoint loop entirely; the
-        # empty check itself is one short-circuiting scan of the (cached)
-        # command projection
-        return e.select(F.col("src").alias("id"), F.col("dst").alias("comp"))
-    head = (
-        e.limit(CC_DRIVER_MAX_EDGES + 1).collect()
-        if max_iter >= _DRIVER_PATH_MIN_ITERS
-        else None
-    )
-    if head is not None and len(head) <= CC_DRIVER_MAX_EDGES:
+    head = e.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+    if len(head) <= CC_DRIVER_MAX_EDGES:
         id_type = e.schema["src"].dataType
         schema = StructType(
             [StructField("id", id_type), StructField("comp", id_type)]
@@ -154,7 +134,7 @@ def _cc_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # neighbor min: for each node, min of its own label and neighbors'
         msgs = (
             sym.join(labels, sym.dst == labels.id)

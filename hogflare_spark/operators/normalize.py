@@ -533,19 +533,6 @@ COMMAND_SCHEMA = StructType(
 )
 
 
-def alias_command_condition():
-    """Command rows that contribute identity edges (an explicit alias, or
-    an identify with an anonymous id on a non-skipped person). Shared by
-    the fold's sizing aggregate (person_state.fold_person_state) and the
-    decode lane's fused sizing metrics so the two counts can never
-    drift."""
-    from pyspark.sql import functions as F
-
-    return F.col("alias").isNotNull() | (
-        (F.col("skip_person") == "0") & F.col("anon_distinct_id").isNotNull()
-    )
-
-
 def _dumps(v) -> str | None:
     return None if v is None else json.dumps(v, separators=(",", ":"))
 
@@ -627,62 +614,6 @@ def command_error_row(request_seq, item_index, ex: Exception) -> dict:
     row["item_index"] = item_index
     row["error"] = f"{type(ex).__name__}: {ex}"
     return row
-
-
-def normalize_items(decoded: DataFrame) -> DataFrame:
-    """Decoded item rows → ingest-command rows (COMMAND_SCHEMA).
-
-    Expects columns: request_seq, item_index, endpoint, body_json, and
-    optionally envelope_api_key / envelope_sent_at / header_api_key /
-    header_sent_at / geo_json (enrichment bag) / ip.
-    """
-    opt_cols = (
-        "envelope_api_key",
-        "envelope_sent_at",
-        "header_api_key",
-        "header_sent_at",
-        "geo_json",
-        "ip",
-    )
-    present = {c for c in decoded.columns if c in opt_cols}
-
-    def _opt(r: dict, name: str):
-        return r.get(name) if name in present else None
-
-    def _run(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                r = row._asdict()
-                try:
-                    item = fj_loads(r["body_json"])
-                    out_rows.append(
-                        command_row(
-                            r["endpoint"],
-                            item,
-                            r["request_seq"],
-                            r["item_index"],
-                            envelope_api_key=_opt(r, "envelope_api_key"),
-                            envelope_sent_at=_opt(r, "envelope_sent_at"),
-                            header_api_key=_opt(r, "header_api_key"),
-                            header_sent_at=_opt(r, "header_sent_at"),
-                            geo_json=_opt(r, "geo_json"),
-                            ip=_opt(r, "ip"),
-                        )
-                    )
-                except Exception as ex:  # noqa: BLE001
-                    out_rows.append(
-                        command_error_row(r.get("request_seq"), r.get("item_index"), ex)
-                    )
-            yield pd.DataFrame(out_rows, columns=[f.name for f in COMMAND_SCHEMA.fields])
-
-    from pyspark.sql import functions as F
-
-    return decoded.mapInPandas(_run, COMMAND_SCHEMA).where(F.col("error").isNull()).drop(
-        "error"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -996,9 +927,9 @@ def decode_normalize_requests(
        codegen applies, and the Python-worker cost that multiplies by
        10^11 rows at 100 TB disappears for the majority of traffic.
     2. **Python tier**: everything else (form/base64/gzip/batch/browser/
-       session/exotic JSON) through the Arrow-batched kernel below — same
-       semantics as `payload.decode_requests` |> `normalize_items`, fused
-       into ONE Arrow pass.
+       session/exotic JSON) through the Arrow-batched kernel below —
+       `payload.decode_request_row` then `command_row` per item, in ONE
+       Arrow pass.
 
     The split is two filters over the same scan (columnar parquet read of
     the body column twice in the worst case — still far cheaper than one
@@ -1108,42 +1039,22 @@ def decode_normalize_requests(
             keep = ["__fast", "__raw_request_seq"] + [
                 c for c in raw_cols if c != "request_seq"
             ]
-            # r12: ride the fold's sizing metrics (command count + alias
-            # command count) AND the empty-slow-branch probe on the
-            # checkpoint's own materialization job via observe() —
-            # removes one flag-scan job here and, when the slow branch
-            # is empty (the canonical all-fast case), the fold's whole
-            # sizing aggregate job (person_state reads the stashed
-            # counts instead of re-scanning the checkpoint).
+            # the empty-slow-branch probe rides the checkpoint's own
+            # materialization job via observe()
             from pyspark.sql import Observation
 
             obs = Observation()
-            fast = F.col("__fast")
             combined = (
                 staged_wide(flagged, keep)
-                .observe(
-                    obs,
-                    F.count(F.when(fast, 1)).alias("n_fast"),
-                    F.count(F.when(~fast, 1)).alias("n_slow"),
-                    F.count(
-                        F.when(fast & alias_command_condition(), 1)
-                    ).alias("n_alias_fast"),
-                )
+                .observe(obs, F.count(F.when(~F.col("__fast"), 1)).alias("n_slow"))
                 .localCheckpoint(eager=True)
             )
-            metrics = obs.get
             cmd_cols = [f.name for f in COMMAND_SCHEMA.fields if f.name != "error"]
             fast_df = combined.where(F.col("__fast")).select(*cmd_cols)
             # canonical traffic commonly leaves the slow branch EMPTY;
             # skipping it avoids spinning up a pool of Python workers
             # for zero rows
-            if not metrics["n_slow"]:
-                # all commands came from the fast projection, so the
-                # observed counts ARE the fold's sizing aggregate
-                fast_df._hogflare_sizing = (
-                    int(metrics["n_fast"]),
-                    int(metrics["n_alias_fast"]),
-                )
+            if not obs.get["n_slow"]:
                 return fast_df
             slow_raw = combined.where(~F.col("__fast")).select(
                 F.col("__raw_request_seq").alias("request_seq"),

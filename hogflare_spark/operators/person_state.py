@@ -5,25 +5,28 @@ Spark shape (SURVEY.md §7 M3):
 
 1. derive person ops (alias / update / ensure) from the command rows —
    pure expressions, one narrow projection;
-2. connected components over alias edges (identity.py) → co-partitioning
-   key; ops for unrelated distinct_ids stay in singleton components, so
-   the shuffle is effectively a groupBy(distinct_id) with identity
-   clusters coalesced;
+2. connected components over alias edges (identity.py; a batch without
+   alias ops hands it an empty edge set and gets no labels back) →
+   co-partitioning key; ops for unrelated distinct_ids stay in singleton
+   components, so the shuffle is effectively a groupBy(distinct_id) with
+   identity clusters coalesced;
 3. a partition-streaming `mapInPandas` replays the MemoryPersonStore
    kernel (person_store.py) per component in (request_seq, item_index,
-   sub) order, emitting
+   sub) order across `defaultParallelism` partitions, emitting
    post-update snapshots per event (U12 — the event carries the person
    state as of *after* its own update, lib.rs:462-470) plus final person
    records and id-allocation events;
-4. global sequential person ids materialize post-hoc as a rank over
-   allocation order (U10 — a distributed engine must not serialize on a
+4. global sequential person ids materialize post-hoc as one row_number
+   over allocation order (U10 — the replay never serializes on a
    counter; SURVEY.md §7.4.3 documents the parity condition).
 
 At 100 TB: stage 1 is map-only; stage 2 shuffles only alias edges
 (~#persons, not #events); stage 3 is one shuffle of person-op rows keyed
 by component — the same data movement a shuffled streaming state op would
-do; stage 4 is a window over #persons rows. Event rows themselves never
-shuffle — snapshots join back to events on (request_seq, item_index).
+do; stage 4 is a single-reducer window over the batch's new-person
+allocations (one row per new person, never per event). Event rows
+themselves never shuffle — snapshots join back to events on
+(request_seq, item_index).
 """
 
 from __future__ import annotations
@@ -43,7 +46,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from hogflare_spark.functions.caching import cached
 from hogflare_spark.operators.person_store import (
     PersonStoreReplay,
     snapshot_fields,
@@ -190,81 +192,6 @@ def _seed_ops(prior_persons: DataFrame) -> DataFrame:
     )
 
 
-def _two_phase_rank(allocs: DataFrame, small_batch: bool = False) -> DataFrame:
-    """Global dense allocation rank without a single-reducer stage (U10).
-
-    `small_batch=True` (decided from the fold's sizing aggregate) takes a
-    plain global row_number instead: below ~10^6 allocations one reducer
-    sorting the whole set is cheaper than the range shuffle + sampling
-    pass + offset join, and the output is identical (the key is unique and totally ordered either way).
-
-    `row_number().over(Window.orderBy(...))` with no partitionBy funnels
-    every allocation through one reducer — fine at test scale, fatal on a
-    100 TB backfill allocating hundreds of millions of persons. Instead:
-
-    1. range-partition + sort on the key, so partition i holds keys
-       strictly below partition i+1 and rows are ordered within each;
-    2. read the partition-local row index straight out of
-       `monotonically_increasing_id()` (documented layout: partition id in
-       the upper 31 bits, per-partition row counter in the lower 33) — no
-       window function, so no second exchange after the range shuffle;
-    3. add the cumulative row-count of all lower partitions — a running
-       sum over one row per partition, bounded by cluster width
-       (#shuffle partitions), not data size.
-
-    Keys are unique (alloc_uuid is a fresh UUID), so ranks are total and
-    deterministic regardless of where the range boundaries land. The tiny
-    (#allocs-row) indexed frame is cached so the counts pass and the
-    final join don't each redo the range shuffle and its sampling job.
-    """
-    n = allocs.sparkSession.sparkContext.defaultParallelism
-    keys = ["alloc_a", "alloc_b", "alloc_uuid"]
-    if small_batch:
-        w = Window.orderBy(*keys)
-        return allocs.select(
-            "alloc_uuid", F.row_number().over(w).cast("long").alias("rank")
-        )
-    local = (
-        allocs.repartitionByRange(n, *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("mid", F.monotonically_increasing_id())
-        .select(
-            "alloc_uuid",
-            F.shiftrightunsigned("mid", 33).alias("pid"),
-            (F.col("mid").bitwiseAND(F.lit((1 << 33) - 1))).alias("local_idx"),
-        )
-    )
-    local = cached(local)
-    counts = local.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    offsets = counts.select(
-        "pid",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("offset"),
-    )
-    return local.join(F.broadcast(offsets), "pid").select(
-        "alloc_uuid", (F.col("local_idx") + F.col("offset") + F.lit(1)).alias("rank")
-    )
-
-
-# Above this, the allocation rank uses the range-partitioned two-phase
-# scheme; below it, a single-reducer sort of #persons rows is cheaper.
-RANK_TWO_PHASE_MIN_COMMANDS = 1_000_000
-# Target op rows per replay task. Each mapInPandas task pays a Python
-# worker round trip (~40-60 ms of Arrow framing + scheduling at local
-# sizes) regardless of row count, while the replay itself costs ~6 µs/op
-# — so below ~25k ops/task the boundary overhead outweighs the extra
-# parallelism (measured at sf0.1: the same no-op kernel costs 1.09 s at
-# 32 partitions vs 0.56 s at 8). The fold therefore sizes its width to
-# ceil(ops / this) CLAMPED to the cluster's parallelism — at real scale
-# ops/25k vastly exceeds the core count and the clamp keeps the fold as
-# wide as the cluster, so this is purely a small-batch tax cut.
-FOLD_OPS_PER_TASK = 25_000
-
-
 def fold_person_state(
     commands: DataFrame,
     team_id: int | None = None,
@@ -278,6 +205,9 @@ def fold_person_state(
     PersonStoreReplay kernel (`_replay_stream` below). The replay keeps
     one component's state, never its op list: a hot distinct_id with
     millions of ops streams through one task in sorted Arrow batches.
+    Connected components always runs (an empty edge set costs its one
+    edge collect), the replay is `defaultParallelism` wide, and new ids
+    come from one row_number.
 
     `emit_snapshots=False` skips the per-op snapshot assembly inside the
     replay (merged-property dict + JSON dump per emitted op) for callers
@@ -297,29 +227,6 @@ def fold_person_state(
     """
     from hogflare_spark.operators.identity import connected_components
 
-    # ONE aggregate sizes the whole fold: the command count (rank scheme
-    # + fold width) and the alias-op count. The alias count lets the
-    # common no-alias batch skip the CC probe job and the component
-    # left-join below outright. When the decode lane's all-fast branch
-    # produced `commands`, it stashed these two counts from observe()
-    # metrics collected DURING its checkpoint materialization
-    # (normalize.decode_normalize_requests) — the sizing then costs zero
-    # jobs; otherwise one aggregate job rides the checkpointed/cached
-    # command projection.
-    sizing = getattr(commands, "_hogflare_sizing", None)
-    if sizing is not None:
-        n_commands, n_alias_cmds = int(sizing[0]), int(sizing[1])
-    else:
-        from hogflare_spark.operators.normalize import alias_command_condition
-
-        agg_row = commands.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(alias_command_condition(), 1)).alias("n_alias"),
-        ).first()
-        n_commands = int(agg_row["n"])
-        n_alias_cmds = int(agg_row["n_alias"])
-    small_batch = n_commands < RANK_TWO_PHASE_MIN_COMMANDS
-
     ops = derive_person_ops(commands)
     if prior_persons is not None:
         ops = ops.unionByName(_seed_ops(prior_persons))
@@ -330,29 +237,23 @@ def fold_person_state(
     # of ~#ops (the event stream), which is the difference between a
     # constant-size fixpoint loop and one shuffling the whole stream per
     # round at 100 TB.
-    if n_alias_cmds == 0 and prior_persons is None:
-        # the sizing aggregate above proved there are no alias ops and
-        # nothing is seeded: every component is the singleton of its
-        # distinct_id — skip the CC machinery AND its left join
-        ops_with_comp = ops.withColumn("comp", F.col("distinct_id"))
-    else:
-        edges = ops.where(F.col("kind") == "alias").select(
-            F.col("distinct_id").alias("src"), F.col("alias_id").alias("dst")
-        )
-        if prior_persons is not None:
-            # a prior record's distinct_ids are identity edges: new ops
-            # touching any of them must land in the record's component
-            edges = edges.union(
-                prior_persons.select(
-                    F.col("canonical_id").alias("src"),
-                    F.explode("distinct_ids").alias("dst"),
-                )
+    edges = ops.where(F.col("kind") == "alias").select(
+        F.col("distinct_id").alias("src"), F.col("alias_id").alias("dst")
+    )
+    if prior_persons is not None:
+        # a prior record's distinct_ids are identity edges: new ops
+        # touching any of them must land in the record's component
+        edges = edges.union(
+            prior_persons.select(
+                F.col("canonical_id").alias("src"),
+                F.explode("distinct_ids").alias("dst"),
             )
-        components = connected_components(edges)
+        )
+    components = connected_components(edges)
 
-        ops_with_comp = ops.join(
-            components.withColumnRenamed("id", "distinct_id"), "distinct_id", "left"
-        ).withColumn("comp", F.coalesce("comp", "distinct_id"))
+    ops_with_comp = ops.join(
+        components.withColumnRenamed("id", "distinct_id"), "distinct_id", "left"
+    ).withColumn("comp", F.coalesce("comp", "distinct_id"))
 
     def _row(row_type: str, **kw) -> dict:
         base = {f.name: None for f in _FOLD_OUT.fields}
@@ -515,13 +416,8 @@ def fold_person_state(
     # Explicit hash-partition on the fold key: the groupBy's own shuffle
     # would be AQE-coalesced by *bytes* (a few MB of narrow op rows → 1-4
     # partitions), serializing the CPU-bound Python replay. A pinned
-    # partition count keeps the fold as wide as the cluster — but no wider
-    # than FOLD_OPS_PER_TASK-sized tasks justify (each Python worker round
-    # trip has a fixed cost that dominates under ~25k ops/task; see the
-    # constant). One command derives at most two ops, so 2·n_commands
-    # bounds the op count without another job.
+    # partition count keeps the fold as wide as the cluster.
     n_fold = ops_with_comp.sparkSession.sparkContext.defaultParallelism
-    n_fold = max(1, min(n_fold, -(-2 * n_commands // FOLD_OPS_PER_TASK)))
     # partition-local sort puts each component's ops in one contiguous,
     # replay-ordered run; no extra exchange
     folded = (
@@ -530,18 +426,26 @@ def fold_person_state(
         .mapInPandas(_replay_stream, _FOLD_OUT)
     )
     # Pin the fold output as an eagerly-materialized RDD instead of
-    # cache(): snapshots, the allocation rank's sampling pass, and persons
-    # assembly all consume it — some from AQE broadcast threads whose plan
-    # clones defeat CacheManager sameResult matching, observed re-running
-    # the whole decode+replay chain per consumer. O(batch) state rows.
+    # cache(): snapshots, the allocation rank and persons assembly all
+    # consume it — some from AQE broadcast threads whose plan clones
+    # defeat CacheManager sameResult matching, observed re-running the
+    # whole decode+replay chain per consumer. O(batch) state rows.
     folded = folded.localCheckpoint(eager=True)
 
     snapshots = folded.where(F.col("row_type") == "snapshot").select(
         "request_seq", "item_index", "person_id", "person_created_at", "person_properties"
     )
 
-    allocs = folded.where(F.col("row_type") == "alloc").select(
-        F.col("uuid").alias("alloc_uuid"), "alloc_a", "alloc_b"
+    # Global dense allocation rank (U10): one row_number over the unique
+    # allocation key (alloc_uuid is a fresh UUID), so the rank is total
+    # and deterministic. The window has no partitionBy: every allocation
+    # passes through one reducer — #new persons rows, not #events.
+    id_rank = folded.where(F.col("row_type") == "alloc").select(
+        F.col("uuid").alias("alloc_uuid"),
+        F.row_number()
+        .over(Window.orderBy("alloc_a", "alloc_b", "uuid"))
+        .cast("long")
+        .alias("new_id"),
     )
     # new allocations continue above the prior max id (seeded records keep
     # their stored id via prior_id). `person_id_floor` overrides the
@@ -551,30 +455,17 @@ def fold_person_state(
     # restricted seed would re-issue ids already held by unseeded rows.
     if person_id_floor is not None:
         # a known floor is a literal — no join needed
-        id_rank = _two_phase_rank(allocs, small_batch).select(
-            "alloc_uuid",
-            (F.col("rank") + F.lit(int(person_id_floor)).cast("long")).alias(
-                "new_id"
-            ),
+        id_rank = id_rank.withColumn(
+            "new_id", F.col("new_id") + F.lit(int(person_id_floor)).cast("long")
         )
     elif prior_persons is not None:
         max_prior = prior_persons.agg(
             F.coalesce(F.max("id"), F.lit(0)).cast("long").alias("_max_prior")
         )
-        id_rank = (
-            _two_phase_rank(allocs, small_batch)
-            .crossJoin(F.broadcast(max_prior))
-            .select(
-                "alloc_uuid",
-                (F.col("rank") + F.col("_max_prior")).alias("new_id"),
-            )
+        id_rank = id_rank.crossJoin(F.broadcast(max_prior)).select(
+            "alloc_uuid", (F.col("new_id") + F.col("_max_prior")).alias("new_id")
         )
-    else:
-        # fresh fold: ids start at 1 — the former broadcast-crossJoin of
-        # a literal 0 cost one AQE broadcast job per fold for nothing
-        id_rank = _two_phase_rank(allocs, small_batch).select(
-            "alloc_uuid", F.col("rank").alias("new_id")
-        )
+    # else a fresh fold: ids start at 1
     persons = (
         folded.where(F.col("row_type") == "person")
         .join(id_rank, F.col("uuid") == F.col("alloc_uuid"), "left")

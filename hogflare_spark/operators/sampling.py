@@ -175,13 +175,13 @@ def _distributed_prefix_sum(
     """Adds `cumsum` = running total of `value_col` over the global
     `order_cols` order WITHOUT a single-reducer window.
 
-    The generalization of person_state._two_phase_rank from counts to
-    sums: (1) range-partition + sort on the order key, so partition i
-    holds keys strictly below partition i+1; (2) partition-local running
-    sums via a window partitioned by the physical partition id (no
-    cross-partition exchange — the range shuffle already placed the
-    rows); (3) add the total of all lower partitions, a running sum over
-    one row per partition (bounded by cluster width). A bare
+    A two-phase running sum: (1) range-partition + sort on the order
+    key, so partition i holds keys strictly below partition i+1; (2)
+    partition-local running sums via a window partitioned by the
+    physical partition id (no cross-partition exchange — the range
+    shuffle already placed the rows); (3) add the total of all lower
+    partitions, a running sum over one row per partition (bounded by
+    cluster width). A bare
     `Window.orderBy(...)` cumsum funnels every row through one reducer —
     fine at test scale, fatal for a 100 TB corpus.
     """

@@ -322,8 +322,6 @@ def upsert_table(
             merged = current.join(
                 updates.select(*key_cols).distinct(), key_cols, "left_anti"
             ).unionByName(updates, allowMissingColumns=allow_schema_evolution)
-        # materialized once, before the commit writes it
-        merged = merged.localCheckpoint(eager=True)
         try:
             return _commit_version(merged, root, base, keys=key_cols)
         except CommitConflict:

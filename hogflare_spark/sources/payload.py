@@ -42,13 +42,6 @@ from hogflare_spark.functions.fastjson import loads as fj_loads
 import urllib.parse
 import zlib
 
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    StringType,
-    StructField,
-    StructType,
-)
-
 # ---------------------------------------------------------------------------
 # pure-Python decode core (unit-testable against the reference matrix)
 # ---------------------------------------------------------------------------
@@ -294,68 +287,3 @@ def decode_request_row(
     else:
         items = parse_payload(raw_bytes, content_type, content_encoding)
     return items, env_api, env_sent
-
-
-def decode_requests(raw: DataFrame, body_col: str = "body") -> DataFrame:
-    """Decode raw HTTP-shaped rows into per-item rows.
-
-    Input columns: `request_seq`, `endpoint`, `body` (binary or string),
-    optional `content_type`, `content_encoding`. Output: one row per item
-    with `item_index`, `body_json`, `envelope_api_key`, `envelope_sent_at`,
-    preserving all other columns. Malformed rows are dropped (the reference
-    returns 4xx for them — they never reach the pipeline).
-
-    Runs the decode cascade + item explode as one Arrow-batched
-    `mapInPandas` pass; at 100 TB this stage is an embarrassingly parallel
-    map over the raw landing files — no shuffle, no state, and it runs once
-    per payload at ingest.
-    """
-    from pyspark.sql.types import LongType
-
-    keep = [c for c in raw.columns if c != body_col]
-    in_schema = raw.schema
-    out_fields = [in_schema[c] for c in keep]
-    out_fields.append(StructField("envelope_api_key", StringType(), True))
-    out_fields.append(StructField("envelope_sent_at", StringType(), True))
-    out_fields.append(StructField("item_index", LongType(), True))
-    out_fields.append(StructField("body_json", StringType(), True))
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_schema.fields]
-
-    has_ct = "content_type" in raw.columns
-    has_ce = "content_encoding" in raw.columns
-
-    def _run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                r = row._asdict()
-                b = r[body_col]
-                ep = r["endpoint"]
-                ct = r["content_type"] if has_ct else None
-                ce = r["content_encoding"] if has_ce else None
-                try:
-                    raw_bytes = b if isinstance(b, (bytes, bytearray)) else str(b).encode()
-                    items, env_api, env_sent = decode_request_row(ep, raw_bytes, ct, ce)
-                except Exception:  # noqa: BLE001 — reference 4xxes malformed rows
-                    continue
-                base = {c: r[c] for c in keep}
-                base["envelope_api_key"] = env_api
-                base["envelope_sent_at"] = env_sent
-                for idx, item in enumerate(items):
-                    out = dict(base)
-                    out["item_index"] = idx
-                    out["body_json"] = json.dumps(item, separators=(",", ":"))
-                    out_rows.append(out)
-            yield pd.DataFrame(out_rows, columns=out_cols)
-
-    # the decode cascade is the one Python pass over the whole stream;
-    # fan_out parallelizes it when the source arrives as few splits
-    # (no-op on well-partitioned inputs)
-    from hogflare_spark.operators.partitioning import fan_out
-
-    if raw.isStreaming:
-        return raw.mapInPandas(_run, out_schema)
-    return fan_out(raw).mapInPandas(_run, out_schema)

@@ -278,9 +278,11 @@ class StreamingIngestJob:
         events.write.mode("overwrite").partitionBy("event_date").parquet(
             os.path.join(self.events_dir, f"batch={run_tag}_{batch_id}")
         )
-        # pinned once: the commits and the max-id aggregate below read them
+        # pinned once: the persons commit, the max-id aggregate and the
+        # tombstone anti-join below read it; the groups are a filter of
+        # the group fold's pinned output, read only by their commit
         new_persons = out["persons"].localCheckpoint(eager=True)
-        new_groups = out["groups"].localCheckpoint(eager=True)
+        new_groups = out["groups"]
         txn = (app_id, int(batch_id))
         if not g_held:
             # a delta commit holds ONLY touched ∪ newly-created keys

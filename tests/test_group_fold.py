@@ -118,6 +118,12 @@ GROUP_CASES = {
         _gi("org", "e", {"ok": 1}),
         _cap("u", groups={"org": "a"}),
     ],
+    # nothing derives a group op: no hydration rows, empty groups table
+    "group_free": [
+        _cap("u1"),
+        _cap("u2", gset={"org": {"plan": "free"}}),
+        _cap("u3", groups={"org": 5}),  # non-string key: no lookup
+    ],
 }
 
 

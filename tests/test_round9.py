@@ -126,30 +126,6 @@ def test_arrow_kernel_ops_reject_non_integer_ids(spark):
             op()
 
 
-def test_cc_driver_fast_path_skipped_for_truncating_max_iter(spark):
-    """The driver union-find always converges; max_iter below the
-    threshold must route to the round-bounded distributed loop so a
-    caller asking for a truncated fixpoint gets one."""
-    from hogflare_spark.operators.identity import connected_components
-
-    # a 10-node path graph: diameter 9, 1 round of min-prop + jump
-    # cannot reach the global min from the far end
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "src long, dst long"
-    )
-    converged = {
-        r["id"]: r["comp"] for r in connected_components(edges).collect()
-    }
-    assert set(converged.values()) == {0}
-    truncated = {
-        r["id"]: r["comp"]
-        for r in connected_components(edges, max_iter=1).collect()
-    }
-    assert any(v != 0 for v in truncated.values()), (
-        "max_iter=1 should be honored (fast path must step aside)"
-    )
-
-
 def test_linear_probe_releases_cache_on_empty_input(spark):
     """The empty-input early return must release the per-fit cached
     frame like every other exit path (inline release() contract)."""
