@@ -7,6 +7,13 @@ re-expressed over tables: `batch_flag_responses` evaluates every person
 in the persons table at once — the thing the per-request reference cannot
 do — while `decide_response`/`flags_response` keep request-shape parity
 for a thin serving layer.
+
+`batch_flag_responses_native` is what a /decide server holds: the same
+bodies, evaluated once per persons snapshot and pinned, so a request is a
+filter over the pinned table. The reference evaluates per request over
+per-key state; here a body changes only when the persons table or the
+flag config does, so a server rebuilds the table after each persons
+commit and each config change.
 """
 
 from __future__ import annotations
@@ -331,11 +338,30 @@ def batch_flag_responses_native(
     version: int = 2,
 ) -> DataFrame:
     """persons table → the SAME /flags-shaped JSON body as
-    batch_flag_responses, built entirely from compiled Column expressions
-    (flags/compiler.py) + string assembly — zero Python in the hot path,
-    one whole-stage-codegen'd projection per row. The per-row kernel twin
-    stays as the differential oracle (tests/test_round11.py pins the two
-    bit-identical).
+    batch_flag_responses, as a `(canonical_id, response)` table pinned
+    with an eager local checkpoint: every person's flags are evaluated
+    once, here, and a /decide request filters the pinned rows
+    (`where(canonical_id isin ...)`) without re-planning or re-running the
+    flag projection.
+
+    The table is a snapshot of `persons` at the time of the call. A
+    server rebuilds it after every persons commit; until then it serves
+    the flags of the version it was built from. The pin is not tracked by
+    functions.caching, so `unpersist_all()` does not drop it; it lives as
+    long as the returned frame."""
+    return _response_plan(persons, flags, version).localCheckpoint(eager=True)
+
+
+def _response_plan(
+    persons: DataFrame,
+    flags: list[FlagDefinition],
+    version: int = 2,
+) -> DataFrame:
+    """The lazy plan batch_flag_responses_native pins: built entirely
+    from compiled Column expressions (flags/compiler.py) + string
+    assembly — zero Python in the hot path, one whole-stage-codegen'd
+    projection per row. The per-row kernel twin stays as the differential
+    oracle (tests/test_round11.py pins the two bit-identical).
 
     The body is assembled by string concatenation rather than to_json()
     because json.dumps(sort_keys=True) semantics — key-sorted maps whose

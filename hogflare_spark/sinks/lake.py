@@ -12,8 +12,9 @@ delegates maintenance to the platform. Here the engine owns the sink:
   Iceberg `days(created_at)` transform.
 - The table log: every state table (persons, groups; batch upserts and
   the stream alike) is a numbered log `_log/<n>.json` whose entries name
-  a base data directory, delta directories, `max_id` and the
-  `{app_id: batch_id}` transactions recorded so far. A commit creates
+  a base data directory, delta directories, `max_id`, the
+  `{app_id: batch_id}` transactions recorded so far and the schema the
+  directories were written with. A commit creates
   its entry exclusively, which is both the atomic commit and the
   conflict check (Delta Lake's protocol; the object-store form is one
   `PUT If-None-Match: *`, CATALOG.md). Readers only follow entries, so
@@ -40,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -106,6 +108,11 @@ def read_events(spark: SparkSession, events_dir: str) -> DataFrame:
 #                    application recorded so far (carried forward)
 #   committed_batch  the data directory this commit wrote (a delta-lane
 #                    commit's is its last delta)
+#   schema           the written frame's schema (StructType JSON, every
+#                    field nullable, as parquet inference would return
+#                    it); readers read every directory of the entry with
+#                    it, so a read infers nothing (Delta's
+#                    metaData.schemaString)
 #
 # A commit writes a fresh, uniquely named data directory, then creates
 # entry base+1 exclusively. The exclusive create is both the atomic
@@ -177,10 +184,13 @@ def table_view(
     """The table as of `entry`: base ∪ deltas, last writer wins per key.
     A winning tombstone (a delta row with a NULL `uuid`, written by the
     stream's delta lane when a merge absorbs a canonical_id) retires its
-    key."""
+    key. Read with `schema`, or else with the schema the entry records,
+    so building the view runs no Spark job."""
     if entry is None:
         return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read.schema(
+        StructType.fromJson(entry["schema"]) if schema is None else schema
+    )
     paths = entry_dirs(root, entry)
     if not all(os.path.isdir(p) for p in paths):
         raise FileNotFoundError(f"version {entry['version']} of {root} has expired")
@@ -229,6 +239,24 @@ def expire_versions(root: str, keep_last: int = 2) -> list[int]:
     return expired
 
 
+def _nullable(t):
+    """A Spark type's JSON form with every struct field, array element and
+    map value nullable: the schema Spark writes to parquet and inference
+    reads back (Scala's `DataType.asNullable`)."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _nullable(t["keyType"]), "valueType": _nullable(t["valueType"])}
+    return t
+
+
 def _create_exclusive(path: str, text: str) -> None:
     """Publish `text` at `path` iff nothing is there: the tmp file is
     hard-linked into place, and link(2) fails with EEXIST exactly like
@@ -255,7 +283,8 @@ def _commit_version(
 ) -> int:
     """Write `df` into a fresh data directory and commit it as version
     `base_version + 1`: as the new base, or (`delta=True`) as one more
-    delta over `base_version`'s view. `txn` = (app_id, batch_id) records
+    delta over `base_version`'s view. The entry records `df`'s schema,
+    which readers of that version use. `txn` = (app_id, batch_id) records
     the writer's batch. If the version already exists, another writer
     won: the data directory is removed and CommitConflict raised, since
     committing would silently drop that writer's rows (lost update)."""
@@ -273,6 +302,7 @@ def _commit_version(
         "max_id": max_id,
         "txns": txns,
         "committed_batch": name,
+        "schema": _nullable(df.schema.jsonValue()),
     }
     version = (base_version or 0) + 1
     try:

@@ -31,12 +31,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # inference (a footer read + a dozen py4j round-trips, ~0.14 s at this
 # box's ~2.5 ms/round-trip) on EVERY call, and the bench builds each
 # query 4 times over the same static tables — several seconds of pure
-# driver overhead per run. A DataFrame is an immutable lazy plan: the
-# memoized object re-reads the parquet files at every execution, so this
-# caches no data and no results — only the unresolved scan plan. Keyed
-# on applicationId so a new session never sees stale py4j handles; the
-# events normalization below is part of the memoized value (it is pure
-# plan too).
+# driver overhead per run. The memo caches no data and no results, but
+# it does freeze the table's schema and file listing: the scan plan
+# lists the table's files at the first `load_table` of a session, and
+# every later execution reads exactly those files again. Until a new
+# session, a file added under `sf_dir` after that first call is not read,
+# and a removed one fails the read. Keyed on applicationId so a new
+# session never sees stale py4j handles; the events normalization below
+# is part of the memoized value (it is pure plan too).
 _SCAN_MEMO: dict = {}
 
 

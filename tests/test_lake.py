@@ -295,3 +295,118 @@ def test_streaming_batch_layout_compaction_and_mixed_read(spark, tmp_path):
         leaf = os.path.join(events_dir, f"batch={b}", "event_date=2025-03-01")
         files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
         assert len(files) == 1, "batch leaf not bin-packed to one file"
+
+
+# ------------------------------------------------ the schema in the log entry
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-lake-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _person_frame(spark, ids):
+    from datetime import datetime, timezone
+
+    from hogflare_spark.schemas import PERSON_SCHEMA
+
+    created = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    return spark.createDataFrame(
+        [
+            (f"c{i}", i, 1, f"u{i}", created, 1, [f"d{i}", f"e{i}"],
+             {"plan": '"pro"'}, {"region": '"eu"'})
+            for i in ids
+        ],
+        PERSON_SCHEMA,
+    )
+
+
+def test_read_table_schema_equals_parquet_inference(spark, tmp_path):
+    """The schema a log entry records reads back exactly as parquet
+    inference of the data directory would: persons (maps, arrays,
+    timestamps, non-nullable fields), groups, and a table widened by
+    schema evolution."""
+    from datetime import datetime, timezone
+
+    from hogflare_spark.schemas import GROUP_SCHEMA
+    from hogflare_spark.sinks.lake import entry_dirs, read_entry, read_table, upsert_table
+
+    def assert_round_trip(root):
+        entry = read_entry(root)
+        inferred = spark.read.parquet(entry_dirs(root, entry)[0]).schema
+        assert read_table(spark, root).schema == inferred
+
+    persons = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(3)), persons, ["canonical_id"])
+    assert_round_trip(persons)
+
+    groups = str(tmp_path / "groups")
+    created = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    upsert_table(
+        spark,
+        spark.createDataFrame([("org", "k1", created, 1, {"n": "1"})], GROUP_SCHEMA),
+        groups,
+        ["group_type", "group_key"],
+    )
+    assert_round_trip(groups)
+
+    dim = str(tmp_path / "dim")
+    upsert_table(spark, spark.range(0, 3).select("id", F.lit("a").alias("val")), dim, ["id"])
+    widened = spark.range(2, 5).select("id", F.lit("b").alias("val"), F.lit(9).alias("extra"))
+    upsert_table(spark, widened, dim, ["id"], allow_schema_evolution=True)
+    assert read_table(spark, dim).columns == ["id", "val", "extra"]
+    assert_round_trip(dim)
+
+
+def test_read_table_runs_no_spark_job(spark, tmp_path):
+    """Building the view of a base-only table and of a base + 2 deltas
+    table runs no Spark job: the reader takes the recorded schema instead
+    of inferring one per data directory."""
+    from hogflare_spark.sinks.lake import _commit_version, read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(4)), root, ["canonical_id"])
+    view, jobs = _jobs_run(spark, lambda: read_table(spark, root))
+    assert jobs == 0
+    assert view.count() == 4
+
+    for version, ids in ((1, [1, 5]), (2, [2, 6])):
+        _commit_version(
+            _person_frame(spark, ids), root, version, keys=["canonical_id"], delta=True
+        )
+    view, jobs = _jobs_run(spark, lambda: read_table(spark, root))
+    assert jobs == 0
+    assert sorted(r["canonical_id"] for r in view.collect()) == [
+        "c0", "c1", "c2", "c3", "c5", "c6"
+    ]
+
+
+def test_delta_tombstone_retires_key_through_recorded_schema(spark, tmp_path):
+    """A delta row with a NULL `uuid` retires its key when the view is read
+    with the schema the log records. The base is written from a frame
+    whose `uuid` is non-nullable; the entry records it nullable, so the
+    view's `uuid IS NOT NULL` filter is never folded away."""
+    from hogflare_spark.schemas import PERSON_SCHEMA
+    from hogflare_spark.sinks.lake import _commit_version, read_entry, read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    assert all(f["nullable"] for f in read_entry(root)["schema"]["fields"])
+
+    tombstone = _person_frame(spark, [1]).select(
+        "canonical_id",
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in PERSON_SCHEMA.fields if f.name != "canonical_id"],
+    )
+    _commit_version(tombstone, root, 1, keys=["canonical_id"], delta=True)
+    got = sorted(r["canonical_id"] for r in read_table(spark, root).collect())
+    assert got == ["c0", "c2"]

@@ -170,12 +170,51 @@ def test_native_flag_responses_bit_identical_gate_config(spark):
 
 def test_native_flag_responses_plan_is_udf_free(spark):
     """The native path must be one codegen'd projection — no Python
-    evaluation nodes in the physical plan."""
-    from hogflare_spark.flags.response import batch_flag_responses_native
+    evaluation nodes in the physical plan. Checked on the plan the public
+    function pins: the pinned frame's own plan is an RDD scan."""
+    from hogflare_spark.flags.response import _response_plan
 
-    plan = _plan(batch_flag_responses_native(_persons_df(spark, n=5), _rich_flags()))
+    plan = _plan(_response_plan(_persons_df(spark, n=5), _rich_flags()))
+    assert "errorsWhileComputingFlags" in plan  # the body projection is this plan
     assert "mapInPandas" not in plan and "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_native_flag_responses_decide_lookup_is_one_job(spark):
+    """The /decide call shape over the pinned response table: a
+    canonical_id filter + collect runs exactly one Spark job, scans the
+    pin (no compiled-flag projection in its plan), and still equals the
+    kernel after unpersist_all() — the pin is not an operator cache."""
+    import uuid
+
+    from hogflare_spark.flags.response import (
+        batch_flag_responses,
+        batch_flag_responses_native,
+    )
+    from hogflare_spark.functions.caching import unpersist_all
+
+    persons, flags = _persons_df(spark), _rich_flags()
+    responses = batch_flag_responses_native(persons, flags)
+    unpersist_all()
+    ids = ["user-000", "user-007", "user-040", "no-such-user"]
+    lookup = responses.where(F.col("canonical_id").isin(ids))
+    plan = _plan(lookup)
+    assert "errorsWhileComputingFlags" not in plan and "ExistingRDD" in plan
+
+    sc = spark.sparkContext
+    group = f"test-decide-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        got = {r["canonical_id"]: r["response"] for r in lookup.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    want = {r["canonical_id"]: r["response"]
+            for r in batch_flag_responses(persons, flags)
+            .where(F.col("canonical_id").isin(ids)).collect()}
+    assert set(got) == {"user-000", "user-007", "user-040"}
+    assert got == want
 
 
 # ----------------------------------------------- Misra-Gries heavy hitters
