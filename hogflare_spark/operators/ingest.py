@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hogflare_spark.schemas import EVENT_COLUMNS
 from hogflare_spark.functions.caching import cached
 
 DEFAULT_GROUP_TYPES: tuple[str | None, ...] = (None, None, None, None, None)
@@ -228,8 +227,3 @@ def ingest_raw_requests(
         prior_persons=prior_persons,
         prior_groups=prior_groups,
     )
-
-
-def events_only(events: DataFrame) -> DataFrame:
-    """An events frame restricted to the 21-column sink contract."""
-    return events.select(*EVENT_COLUMNS)

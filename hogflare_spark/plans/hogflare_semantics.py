@@ -385,9 +385,10 @@ def _drain_chunks_long_lived(
     `processAllAvailable` also waits for the watermark-advance no-data
     batch, so the emitted set matches the restart pattern exactly.
     Restart-from-checkpoint recovery itself stays pinned by
-    tests/test_streaming.py::test_streaming_sessions_gap_boundary_and_merge
-    and ::test_stateful_person_snapshots_operator, which still start a
-    fresh query per batch over a shared checkpoint.
+    tests/test_streaming.py::test_streaming_sessions_gap_boundary_and_merge,
+    which still starts a fresh query per batch over a shared checkpoint,
+    and by the hybrid ingest stream's ::test_restart_* tests, which stop
+    a stream at each commit boundary and restart it on its checkpoint.
 
     Chunk atomicity: each chunk is staged as a single parquet file and
     `os.rename`d into the landing dir. A multi-file append (the restart
@@ -1432,8 +1433,8 @@ def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     every row of the user_id % 13 == 0 subjects via the pruned-probe +
     leaf-partition-rewrite path, read back and aggregate — the oracle
     excludes the same subjects from the raw events table, so an
-    under-delete, over-delete, or partition lost in the swap breaks
-    parity."""
+    under-delete, over-delete, or partition lost in the rewrite commit
+    breaks parity."""
     import shutil
     import tempfile
 

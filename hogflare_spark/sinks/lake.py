@@ -1,43 +1,45 @@
-"""Lake sinks: the events table contract and state-table maintenance.
+"""Lake sinks: the events table and the state tables, one commit log.
 
 The reference lands events as Iceberg/Parquet on R2 via Cloudflare
-Pipelines (/root/reference/src/pipeline.rs:57-143, README.md:8-10) and
+Pipelines (reference `src/pipeline.rs:57-143`, `README.md:8-10`) and
 delegates maintenance to the platform. Here the engine owns the sink:
 
-- `append_events`: date-partitioned append of the 21-column event frame,
-  clustered within partitions by (team_id, distinct_id) so per-person
-  scans and downstream joins hit few row groups. At 100 TB this layout is
-  the difference between partition-pruned scans of a day and full-table
-  scans; the partition column derives from `created_at` exactly like an
-  Iceberg `days(created_at)` transform.
-- The table log: every state table (persons, groups; batch upserts and
+- The table log: every table (events, persons, groups; batch writers and
   the stream alike) is a numbered log `_log/<n>.json` whose entries name
-  a base data directory, delta directories, `max_id`, the
-  `{app_id: batch_id}` transactions recorded so far and the schema the
-  directories were written with. A commit creates
-  its entry exclusively, which is both the atomic commit and the
-  conflict check (Delta Lake's protocol; the object-store form is one
+  the table's data directories, the `{app_id: batch_id}` transactions
+  recorded so far and the schema the directories were written with. A
+  commit writes a fresh, uniquely named data directory, then creates its
+  entry exclusively, which is both the atomic commit and the conflict
+  check (Delta Lake's protocol; the object-store form is one
   `PUT If-None-Match: *`, CATALOG.md). Readers only follow entries, so
   they never observe partial writes.
+- `append_events`: date-partitioned append of the 21-column event frame,
+  clustered within partitions by (team_id, distinct_id) so per-person
+  scans and downstream joins hit few row groups. The partition column
+  derives from `created_at` exactly like an Iceberg `days(created_at)`
+  transform. An events entry lists the table's leaf partition
+  directories (`w=<id>/event_date=<day>`); an append adds its own.
+- `compact_events` / `delete_person_rows`: rewrite the leaves they touch
+  into a fresh data directory and commit an entry that swaps the old
+  leaves for the new ones (Iceberg's rewrite_data_files and a
+  copy-on-write DELETE), then delete the replaced leaves.
 - `upsert_table`: MERGE-equivalent keyed upsert for the persons/groups
   dimension tables — new snapshot wins per key, committed as a new log
   version. With an Iceberg catalog this whole function is
   `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`; the log is the
   filesystem stand-in for Iceberg's atomic snapshot commit, kept because
   this container ships no Iceberg runtime jars.
-- `compact_events`: bin-packing compaction — rewrites partitions whose
-  file population is dominated by small files into ~target-size files
-  (the operational job Iceberg calls rewrite_data_files). Streaming
-  appends produce a file per micro-batch per partition; compaction keeps
-  scan task counts bounded.
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import json
 import os
 import shutil
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,57 +49,14 @@ from pyspark.sql.window import Window
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-def append_events(events: DataFrame, events_dir: str) -> None:
-    """Date-partitioned, cluster-sorted append of event rows."""
-    (
-        events.withColumn("event_date", F.to_date("created_at"))
-        .repartition("event_date")
-        .sortWithinPartitions("team_id", "distinct_id", "created_at")
-        .write.mode("append")
-        .partitionBy("event_date")
-        .parquet(events_dir)
-    )
-
-
-def read_events(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Read the events table in either on-disk layout — flat
-    `event_date=...` from batch appends, `batch=<run>_<n>/event_date=...`
-    from the streaming sink's replay-scoped overwrites — or a mix of both
-    (a warehouse that predates the streaming layout and was then
-    upgraded). Plain `spark.read.parquet(dir)` fails partition discovery
-    on the mixed case ("conflicting directory structures"), so each
-    scheme is discovered with an explicit basePath and unioned; the
-    `batch` bookkeeping partition is dropped so every layout presents
-    the same schema."""
-    entries = os.listdir(events_dir) if os.path.isdir(events_dir) else []
-    batch_dirs = sorted(
-        os.path.join(events_dir, d)
-        for d in entries
-        if d.startswith("batch=") and os.path.isdir(os.path.join(events_dir, d))
-    )
-    flat_dirs = sorted(
-        os.path.join(events_dir, d)
-        for d in entries
-        if d.startswith("event_date=") and os.path.isdir(os.path.join(events_dir, d))
-    )
-    if not batch_dirs:
-        return spark.read.parquet(events_dir)
-    batched = (
-        spark.read.option("basePath", events_dir).parquet(*batch_dirs).drop("batch")
-    )
-    if not flat_dirs:
-        return batched
-    flat = spark.read.option("basePath", events_dir).parquet(*flat_dirs)
-    return flat.unionByName(batched)
-
-
 # ---------------------------------------------------------------------------
 # the table log (the no-Iceberg atomic-snapshot stand-in)
 # ---------------------------------------------------------------------------
 #
-# A state table is a numbered log, `<root>/_log/<n>.json` for versions
-# n = 1, 2, ..., plus the data directories its entries name. Entry n is
-# one JSON object:
+# A table is a numbered log, `<root>/_log/<n>.json` for versions
+# n = 1, 2, ..., plus the data directories its entries name. A state
+# table's entry n is one JSON object (the events table's is described
+# with its functions below):
 #
 #   base             the base data directory (`v=<id>`)
 #   deltas           delta data directories (`d=<id>`) over the base,
@@ -360,132 +319,175 @@ def upsert_table(
 
 
 # ---------------------------------------------------------------------------
-# compaction
+# the events table
 # ---------------------------------------------------------------------------
+#
+# The events table is the same log over leaf partition directories. Its
+# entry n is one JSON object:
+#
+#   leaves  the leaf directories that make up the table,
+#           `w=<id>/event_date=<day>` relative to the root
+#   txns    {app_id: batch_id}, carried forward as for the state tables
+#   schema  the written frame's schema, `event_date` included
+#
+# Every write goes into a fresh data directory `w=<id>` and is committed
+# as entry latest+1: an append adds its leaves; a rewrite (compaction,
+# deletion) also removes the leaves it replaced, and deletes them once
+# its entry is committed. A writer that loses the race for an entry
+# re-bases on the newest entry without rewriting its data, so appends
+# never conflict, and a rewrite conflicts only when a concurrent entry
+# already removed one of its leaves. `w` is not an event column and
+# `_log` is hidden from partition discovery, so a plain
+# `spark.read.parquet(root)` reads exactly the committed rows as long as
+# no failed writer left an uncommitted data directory behind. A
+# transaction's append (the stream's) names its data directory after the
+# transaction and clears it first, so a replay of a batch whose entry
+# never committed overwrites what the stopped write left rather than
+# adding a second copy. `read_events` reads only what the latest entry
+# names.
 
 
-def repair_partitions(events_dir: str) -> list[str]:
-    """Restore partitions orphaned by a crash inside _swap_partition_dir's
-    two-rename window: if a `.old_<base>` backup exists with NO live
-    `<base>` sibling, the crash happened between the two os.replace calls
-    and the backup IS the data — rename it back. Runs automatically at
-    the top of every partition listing so the documented crash window
-    heals on the next compaction/deletion pass instead of requiring a
-    manual rename. A backup WITH a live sibling is superseded data and is
-    left for _swap_partition_dir's own pre-clear. Returns repaired dirs."""
-    repaired: list[str] = []
-    if not os.path.isdir(events_dir):
-        return repaired
-
-    def _heal(parent: str) -> None:
-        for d in sorted(os.listdir(parent)):
-            if not d.startswith(".old_"):
-                continue
-            backup = os.path.join(parent, d)
-            live = os.path.join(parent, d[len(".old_"):])
-            if os.path.isdir(backup) and not os.path.exists(live):
-                os.replace(backup, live)
-                repaired.append(live)
-
-    _heal(events_dir)
-    for d in sorted(os.listdir(events_dir)):
-        p = os.path.join(events_dir, d)
-        if d.startswith("batch=") and os.path.isdir(p):
-            _heal(p)
-    return repaired
+def _events_dir_name(txn: tuple[str, int] | None = None) -> str:
+    """A fresh data directory name, or the one fixed by `txn`."""
+    if txn is None:
+        return f"w={uuid.uuid4().hex}"
+    return f"w={hashlib.sha1(txn[0].encode()).hexdigest()[:12]}_{txn[1]}"
 
 
-def _partition_dirs(events_dir: str) -> list[str]:
-    """Leaf `event_date=` partition dirs in both layouts: directly under
-    the table (batch appends) and nested under the streaming sink's
-    `batch=<run>_<n>/` replay partitions — compaction bin-packs at the leaf in
-    either scheme, preserving the layout (a streaming batch partition is
-    never merged across batches, so a checkpoint replay's whole-batch
-    overwrite stays a correct rewrite even after compaction)."""
-    if not os.path.isdir(events_dir):
-        return []
-    repair_partitions(events_dir)
-    out: list[str] = []
-    for d in sorted(os.listdir(events_dir)):
-        p = os.path.join(events_dir, d)
-        if not os.path.isdir(p):
+def _write_leaves(df: DataFrame, events_dir: str, name: str) -> None:
+    """Write `df` (with its `event_date`) into data directory `name`,
+    cluster-sorted within each date. Sorting on `event_date` first is the
+    order the partitioned writer needs, so it adds no sort of its own."""
+    (
+        df.sortWithinPartitions("event_date", "team_id", "distinct_id", "created_at")
+        .write.mode("append")
+        .partitionBy("event_date")
+        .parquet(os.path.join(events_dir, name))
+    )
+
+
+def _read_leaves(
+    spark: SparkSession, events_dir: str, schema: dict, leaves: list[str]
+) -> DataFrame:
+    """The rows of `leaves`, read with the recorded `schema`, with
+    `event_date` as the partition column."""
+    schema = StructType.fromJson(schema)
+    if not leaves:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", events_dir)
+        .parquet(*(os.path.join(events_dir, leaf) for leaf in leaves))
+        .drop("w")
+    )
+
+
+def _commit_events(
+    events_dir: str,
+    name: str,
+    schema: dict,
+    removed: Sequence[str] = (),
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """Commit the leaves data directory `name` holds, in place of the
+    `removed` leaves, as entry latest+1, recording `txn` = (app_id,
+    batch_id) if given; then delete the removed leaves. Returns the
+    version. A lost entry race re-bases on the newest entry; if that
+    entry no longer names every removed leaf, a concurrent rewrite
+    replaced one, so the data directory is removed and CommitConflict
+    raised."""
+    path = os.path.join(events_dir, name)
+    added = sorted(
+        f"{name}/{d}" for d in os.listdir(path) if d.startswith("event_date=")
+    ) if os.path.isdir(path) else []
+    if not added:
+        shutil.rmtree(path, ignore_errors=True)
+    while True:
+        prior = read_entry(events_dir) or {"version": 0, "leaves": [], "txns": {}}
+        if not set(removed) <= set(prior["leaves"]):
+            shutil.rmtree(path, ignore_errors=True)
+            raise CommitConflict(f"{events_dir}: a concurrent commit replaced a leaf")
+        txns = dict(prior["txns"])
+        if txn is not None:
+            txns[txn[0]] = txn[1]
+        entry = {
+            "leaves": [leaf for leaf in prior["leaves"] if leaf not in removed] + added,
+            "txns": txns,
+            "schema": schema,
+        }
+        version = prior["version"] + 1
+        try:
+            _create_exclusive(_log_path(events_dir, version), json.dumps(entry))
+            break
+        except FileExistsError:
             continue
-        if d.startswith("event_date="):
-            out.append(p)
-        elif d.startswith("batch="):
-            out.extend(
-                os.path.join(p, leaf)
-                for leaf in sorted(os.listdir(p))
-                if leaf.startswith("event_date=")
-                and os.path.isdir(os.path.join(p, leaf))
-            )
-    return out
+    for leaf in removed:
+        shutil.rmtree(os.path.join(events_dir, leaf))
+    # a concurrent rewrite of other leaves of the same data directory may
+    # empty and remove it first; this entry is committed either way
+    for data in {leaf.split("/")[0] for leaf in removed}:
+        data = os.path.join(events_dir, data)
+        with contextlib.suppress(FileNotFoundError):
+            if not any(d.startswith("event_date=") for d in os.listdir(data)):
+                shutil.rmtree(data)
+    return version
+
+
+def append_events(
+    events: DataFrame, events_dir: str, txn: tuple[str, int] | None = None
+) -> int:
+    """Date-partitioned, cluster-sorted append of event rows, committed
+    as one entry of the events log that records `txn` = (app_id,
+    batch_id) if given. Returns the committed version. A transaction's
+    data directory is cleared first unless the latest entry names it
+    (then that transaction committed and CommitConflict is raised)."""
+    df = events.withColumn("event_date", F.to_date("created_at"))
+    name = _events_dir_name(txn)
+    entry = read_entry(events_dir)
+    if entry and any(leaf.startswith(f"{name}/") for leaf in entry["leaves"]):
+        raise CommitConflict(f"{events_dir}: {name} is already committed")
+    shutil.rmtree(os.path.join(events_dir, name), ignore_errors=True)
+    _write_leaves(df.repartition("event_date"), events_dir, name)
+    return _commit_events(events_dir, name, _nullable(df.schema.jsonValue()), txn=txn)
+
+
+def read_events(spark: SparkSession, events_dir: str) -> DataFrame | None:
+    """The events table as of its latest entry: only the leaves it names,
+    read with the schema it records. None for a table with no commits."""
+    entry = read_entry(events_dir)
+    if entry is None:
+        return None
+    return _read_leaves(spark, events_dir, entry["schema"], entry["leaves"])
+
+
+# ---------------------------------------------------------------------------
+# compaction and deletion
+# ---------------------------------------------------------------------------
 
 
 def compaction_candidates(
     events_dir: str,
     small_file_bytes: int = 8 * 1024 * 1024,
     min_small_files: int = 2,
-) -> list[str]:
-    """Partitions with >= min_small_files files under small_file_bytes."""
-    out = []
-    for pdir in _partition_dirs(events_dir):
-        parquets = [
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        ]
-        small = [p for p in parquets if os.path.getsize(p) < small_file_bytes]
-        if len(small) >= min_small_files:
-            out.append(pdir)
-    return out
-
-
-def _staged_paths(pdir: str) -> tuple[str, str]:
-    """(staged, backup) sibling names for an atomic partition-dir swap.
-    Both start with '.' so Spark's partition discovery skips them
-    mid-swap — a `<pdir>.delete` suffix sibling WOULD still carry the
-    `event_date=` prefix and a concurrent reader could double-read it
-    or mis-parse the partition value.
-
-    Why '.', not '_': measured on Spark 4.1 (tests/test_round10.py), a
-    LEADING-DOT dir is skipped by partition inference even when its
-    name contains '=', while a leading-underscore dir that contains '='
-    (e.g. '_old_event_date=2025-03-01') FAILS the whole read with
-    CONFLICTING_PARTITION_COLUMN_NAMES — the underscore convention only
-    protects plain files and '='-free dir names."""
-    parent, base = os.path.split(pdir.rstrip("/"))
-    return (
-        os.path.join(parent, ".staged_" + base),
-        os.path.join(parent, ".old_" + base),
-    )
-
-
-def _swap_partition_dir(pdir: str, staged: str, backup: str) -> None:
-    """Two-rename swap: live -> backup, staged -> live, drop backup.
-
-    Crash windows: before the first os.replace nothing changed (staged
-    is invisible to readers); between the two replaces ONLY the backup
-    exists — no live dir — which is recoverable by renaming
-    `.old_<base>` back to the partition name (the backup is never
-    deleted until the new dir is in place; repair_partitions() performs
-    that rename automatically at the top of every partition listing);
-    after the second replace the new data is live and the backup drop
-    is best-effort cleanup.
-
-    A PRE-EXISTING backup dir is cleared first: os.replace cannot
-    rename onto a non-empty directory, so a backup orphaned by a crash
-    AFTER its swap completed (live dir present, rmtree never ran) would
-    wedge every later rewrite of the same partition. Clearing is safe
-    precisely because the live dir exists here — the backup is
-    superseded data; the backup-only crash state (no live dir) never
-    reaches this function, since repair_partitions() heals it during
-    the caller's partition listing before any swap is attempted."""
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
-    os.replace(pdir, backup)
-    os.replace(staged, pdir)
-    shutil.rmtree(backup)
+) -> dict[str, list[str]]:
+    """The `event_date=<day>` partitions with >= min_small_files files
+    under small_file_bytes across all their committed leaves, each mapped
+    to the leaves (relative to the root) that hold those small files."""
+    entry = read_entry(events_dir)
+    small: dict[str, dict[str, int]] = {}
+    for leaf in entry["leaves"] if entry else []:
+        n = sum(
+            1
+            for f in os.scandir(os.path.join(events_dir, leaf))
+            if f.name.endswith(".parquet") and f.stat().st_size < small_file_bytes
+        )
+        if n:
+            small.setdefault(leaf.split("/")[1], {})[leaf] = n
+    return {
+        part: sorted(counts)
+        for part, counts in sorted(small.items())
+        if sum(counts.values()) >= min_small_files
+    }
 
 
 def compact_events(
@@ -495,9 +497,11 @@ def compact_events(
     small_file_bytes: int = 8 * 1024 * 1024,
     min_small_files: int = 2,
 ) -> list[str]:
-    """Rewrite small-file partitions into ~target-size files, preserving the
-    cluster sort. Per-partition rewrite keeps the blast radius of a failed
-    compaction to one partition. Returns the rewritten partition dirs.
+    """Bin-pack the small files of every candidate date, across appends,
+    into ~target-size files preserving the cluster sort: all dates go into
+    one fresh data directory, committed as one entry that swaps the old
+    leaves out, so a failure before that entry changes nothing. Returns
+    the replaced leaf directories, which are gone when it returns.
 
     Layout note: the preserved sort is lexicographic (team, id, time) —
     perfect pruning on the leading column, none on the others. For
@@ -511,25 +515,27 @@ def compact_events(
     path filters almost exclusively by the leading partition/cluster
     columns — z-order is the documented option for dashboard-style
     mixed-dim tables, the Iceberg Z-ORDER rewrite equivalent."""
-    rewritten = []
-    for pdir in compaction_candidates(events_dir, small_file_bytes, min_small_files):
-        df = spark.read.parquet(pdir)
+    candidates = compaction_candidates(events_dir, small_file_bytes, min_small_files)
+    if not candidates:
+        return []
+    schema = read_entry(events_dir)["schema"]
+    name = _events_dir_name()
+    for leaves in candidates.values():
         total = sum(
-            os.path.getsize(os.path.join(pdir, f))
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
+            f.stat().st_size
+            for leaf in leaves
+            for f in os.scandir(os.path.join(events_dir, leaf))
+            if f.name.endswith(".parquet")
         )
         n_files = max(1, round(total / target_file_bytes))
-        staged, backup = _staged_paths(pdir)
-        (
-            df.repartition(n_files)
-            .sortWithinPartitions("team_id", "distinct_id", "created_at")
-            .write.mode("overwrite")
-            .parquet(staged)
+        _write_leaves(
+            _read_leaves(spark, events_dir, schema, leaves).repartition(n_files),
+            events_dir,
+            name,
         )
-        _swap_partition_dir(pdir, staged, backup)
-        rewritten.append(pdir)
-    return rewritten
+    removed = sorted(leaf for leaves in candidates.values() for leaf in leaves)
+    _commit_events(events_dir, name, schema, removed)
+    return [os.path.join(events_dir, leaf) for leaf in removed]
 
 
 def delete_person_rows(
@@ -544,38 +550,34 @@ def delete_person_rows(
     99.99% of the lake.
 
     Two phases:
-      1. probe — ONE scan of the table filtered to the subject ids,
-         projecting `input_file_name()`: the id predicate pushes into
-         the parquet reader, and because partitions are cluster-sorted
-         with the id in the sort key, row-group min/max stats skip
-         most files without reading data. The distinct file list (and
-         the exact delete count) come back as a tiny driver result.
-      2. rewrite — for each affected LEAF dir only: filtered rewrite
-         into a staged `.`-prefixed sibling (invisible to concurrent
-         readers) preserving the cluster sort, then the same two-rename
-         swap as compact_events. A crash never leaves a MIX of old and
-         new rows; the one window between the two renames leaves only
-         the `.old_<date>` backup (no live dir), healed automatically
-         by repair_partitions() on the next listing pass — see
-         _swap_partition_dir. Untouched partitions keep their bytes.
+      1. probe — ONE scan of the committed leaves filtered to the subject
+         ids, projecting `input_file_name()`: the id predicate pushes
+         into the parquet reader, and because partitions are
+         cluster-sorted with the id in the sort key, row-group min/max
+         stats skip most files without reading data. The distinct file
+         list (and the exact delete count) come back as a tiny driver
+         result.
+      2. rewrite — the affected leaves only, filtered, into one fresh
+         data directory preserving the cluster sort, committed as one
+         entry that swaps them out; the replaced leaves are deleted
+         once it is committed, so no subject row is left on disk when
+         this returns. A failure before the entry changes nothing.
+         Untouched leaves keep their bytes.
 
     Callers deleting a PERSON (not a raw id) should first expand to
     all of the person's distinct_ids via the persons table
     (`array_contains(distinct_ids, ...)` — the S13 debug-lookup path).
-    Returns (rewritten partition dirs, rows deleted).
+    Returns (replaced leaf directories, rows deleted).
     """
     from urllib.parse import urlparse
 
-    # heal any crash-orphaned partition FIRST: rows hidden behind a
-    # backup-only dir would otherwise be invisible to the probe scan and
-    # the deletion would silently miss them
-    repair_partitions(events_dir)
+    entry = read_entry(events_dir)
     ids = list(distinct_ids)
-    if not ids:
+    if not ids or entry is None:
         return [], 0
     pred = F.col(id_col).isin(ids)
     hits = (
-        read_events(spark, events_dir)
+        _read_leaves(spark, events_dir, entry["schema"], entry["leaves"])
         .where(pred)
         .select(F.input_file_name().alias("f"))
         .groupBy("f")
@@ -584,17 +586,14 @@ def delete_person_rows(
     )
     if not hits:
         return [], 0
-    rows_deleted = sum(r["n"] for r in hits)
-    pdirs = sorted({os.path.dirname(urlparse(r["f"]).path) for r in hits})
+    # a file's leaf is its last two directories: w=<id>/event_date=<day>
+    leaves = sorted({"/".join(urlparse(r["f"]).path.split("/")[-3:-1]) for r in hits})
     keep = ~F.coalesce(pred, F.lit(False))  # null ids are never subjects
-    for pdir in pdirs:
-        staged, backup = _staged_paths(pdir)
-        (
-            spark.read.parquet(pdir)
-            .where(keep)
-            .sortWithinPartitions("team_id", "distinct_id", "created_at")
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        _swap_partition_dir(pdir, staged, backup)
-    return pdirs, int(rows_deleted)
+    name = _events_dir_name()
+    _write_leaves(
+        _read_leaves(spark, events_dir, entry["schema"], leaves).where(keep),
+        events_dir,
+        name,
+    )
+    _commit_events(events_dir, name, entry["schema"], leaves)
+    return [os.path.join(events_dir, leaf) for leaf in leaves], sum(r["n"] for r in hits)

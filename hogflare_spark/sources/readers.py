@@ -89,11 +89,3 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view so `spark.sql` works —
-    the query-layer equivalent of the reference's "query with DuckDB"
-    recipe (/root/reference/README.md:237-256), served natively."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

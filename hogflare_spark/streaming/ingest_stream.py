@@ -9,20 +9,12 @@ src/persons.rs:488-541). The Spark realization is micro-batch:
   identically via format("kafka")).
 - `StreamingIngestJob`: foreachBatch incremental fold. Each micro-batch
   decodes + normalizes its requests, seeds the person/group folds with
-  the prior state version, overwrites its own events directory
-  (partitioned by event date) and commits new persons and groups
-  versions to lake's table log — a new base, or (hybrid mode) a delta of
-  the rows the batch touched. Every commit records the transaction
-  (run, batch id), so a batch Spark re-runs after a stop recomputes from
-  the version before its own entry and commits nothing twice (see the
-  class docstring).
-- `stateful_person_snapshots`: a true per-key stateful operator
-  (`applyInPandasWithState`, state store-backed) folding $set/$set_once/
-  $unset per distinct_id and emitting post-update snapshots — the direct
-  analogue of the reference's per-key DO serialization. Cross-key alias
-  merges are NOT expressible inside a keyed state op (they need cross-
-  partition coordination); the foreachBatch path above is the complete-
-  semantics mode, this operator is the low-latency alias-free mode.
+  the prior state version, and commits its events, groups and persons
+  to lake's table log: an events append, and for each state table a new
+  base or (hybrid mode) a delta of the rows the batch touched. Every
+  commit records the transaction (run, batch id), so a batch Spark
+  re-runs after a stop recomputes from the version before its own entry
+  and commits nothing twice (see the class docstring).
 - `windowed_event_counts`: event-time tumbling-window aggregation with a
   watermark — the late-data policy the reference never had (SURVEY.md
   §2.6 "Streaming" row documents the divergence).
@@ -35,11 +27,7 @@ sequencing as long as the receiver assigns monotone request_seq.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-from collections.abc import Iterator
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +36,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
@@ -78,8 +65,8 @@ def read_request_stream(
 
 
 class StreamingIngestJob:
-    """Incremental ingest: micro-batches fold into the persons and groups
-    tables (lake's table log) plus a date-partitioned events log.
+    """Incremental ingest: micro-batches append to the events table and
+    fold into the persons and groups tables, all on lake's table log.
 
     ``hybrid=True`` enables the alias-aware routing the reference's DO
     model gets for free (persons.rs:281-326 merges are per-key there):
@@ -97,12 +84,14 @@ class StreamingIngestJob:
 
     Exactly-once: each table commit records the transaction
     (``run_id``, batch id); ``run_id`` defaults to the checkpoint path,
-    so one checkpoint is one writer. A batch Spark re-runs after a stop
-    (at any point before its commit-log entry) finds its transaction in
-    a table's log, seeds that table from the version just before the
-    entry that recorded it, rewrites its own events directory
-    (`events/batch=<run>_<batch id>`) and commits nothing to that table.
-    A table whose commit the stop cut off gets it now.
+    so one checkpoint is one writer. A batch commits events, then
+    groups, then persons. A batch Spark re-runs after a stop (at any
+    point before its commit-log entry) finds its transaction in a
+    table's log, seeds that table from the version just before the entry
+    that recorded it and commits nothing to that table (for events: it
+    appends nothing). A table whose commit the stop cut off gets it now;
+    the events append writes into a data directory named after the
+    transaction, so it overwrites what the stopped write left there.
 
     At 100 TB the affected-person lookup is a join against a
     distinct_id→canonical_id index (here: explode over the persons scan
@@ -201,9 +190,11 @@ class StreamingIngestJob:
         p_root, g_root = self._state_root("persons"), self._state_root("groups")
         # the version each table builds on, and whether its log already
         # holds this batch (then the fold is recomputed from the version
-        # before that entry and nothing is committed to the table)
+        # before that entry and nothing is committed to the table; the
+        # events log is only asked whether it holds the batch's append)
         p_seed, p_held = lake.seed_entry(p_root, app_id, batch_id)
         g_seed, g_held = lake.seed_entry(g_root, app_id, batch_id)
+        e_held = lake.seed_entry(self.events_dir, app_id, batch_id)[1]
 
         commands = cached(decode_normalize_requests(batch_df))
         # The delta lane takes EVERY batch once a base exists (up to the
@@ -267,23 +258,14 @@ class StreamingIngestJob:
             prior_groups=seed_groups,
             person_id_floor=floor,
         )
-        events = out["events"].withColumn("event_date", F.to_date("created_at"))
-        # events first, into this batch's own directory: a replay of the
-        # batch OVERWRITES it (an append would duplicate the batch's rows
-        # on every replay; deterministic uuids make the rewrite
-        # byte-identical). `batch` becomes a partition column of the
-        # warehouse events table; lake.read_events drops it and
-        # lake.compact_events bin-packs the event_date leaves under it.
-        run_tag = hashlib.sha1(app_id.encode()).hexdigest()[:12]
-        events.write.mode("overwrite").partitionBy("event_date").parquet(
-            os.path.join(self.events_dir, f"batch={run_tag}_{batch_id}")
-        )
+        txn = (app_id, int(batch_id))
+        if not e_held:
+            lake.append_events(out["events"], self.events_dir, txn)
         # pinned once: the persons commit, the max-id aggregate and the
         # tombstone anti-join below read it; the groups are a filter of
         # the group fold's pinned output, read only by their commit
         new_persons = out["persons"].localCheckpoint(eager=True)
         new_groups = out["groups"]
-        txn = (app_id, int(batch_id))
         if not g_held:
             # a delta commit holds ONLY touched ∪ newly-created keys
             lake._commit_version(
@@ -341,172 +323,6 @@ class StreamingIngestJob:
     def run_available_now(self, raw_stream: DataFrame, checkpoint_dir: str) -> None:
         q = self.start(raw_stream, checkpoint_dir, available_now=True)
         q.awaitTermination()
-
-
-# ---------------------------------------------------------------------------
-# per-key stateful operator (alias-free low-latency mode)
-# ---------------------------------------------------------------------------
-
-SNAPSHOT_SCHEMA = StructType(
-    [
-        StructField("request_seq", LongType(), False),
-        StructField("item_index", LongType(), False),
-        StructField("distinct_id", StringType(), False),
-        StructField("person_version", LongType(), False),
-        StructField("person_properties", StringType(), True),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("properties", StringType(), True),
-        StructField("properties_set_once", StringType(), True),
-        StructField("version", LongType(), True),
-    ]
-)
-
-
-def _load_person_seed_map(persons_dir: str) -> dict:
-    """Worker-side seed index: distinct_id → (props, set_once, version).
-
-    Reads the persons table's latest log entry (the layout lake and
-    StreamingIngestJob write: base then deltas, last writer wins per
-    canonical_id) once per executor via a module-level cache and explodes
-    each record's distinct_ids so absorbed ids resolve too; a tombstone
-    (NULL distinct_ids) retires its record. Property values are stored
-    JSON-encoded in the table (FIXTURES.md §3) and decoded back to plain
-    values here to match the operator's state shape.
-
-    At cluster scale the persons table would be bucketed by
-    hash(distinct_id) and each worker would load only its buckets; the
-    full-table load is the single-node realization of the same seed.
-    """
-    import pyarrow.parquet as pq
-
-    # The cache key is the ENTRY, not just the path: a long-lived Python
-    # worker that served an earlier stream must not seed a new stream
-    # from the table as it stood back then (the batch job may have
-    # committed versions in between). Re-reading the latest entry per
-    # group call is microseconds; only the parquet load is cached. One
-    # cache entry per dir — superseded snapshots are dropped.
-    entry = lake.read_entry(persons_dir)
-    cache = _load_person_seed_map.__dict__.setdefault("_cache", {})
-    hit = cache.get(persons_dir)
-    if hit is not None and hit[0] == entry:
-        return hit[1]
-    index: dict = {}
-    by_canonical: dict = {}
-    for path in lake.entry_dirs(persons_dir, entry) if entry else []:
-        tbl = pq.read_table(
-            path,
-            columns=[
-                "canonical_id", "distinct_ids", "properties",
-                "properties_set_once", "version",
-            ],
-        ).to_pylist()
-        for rec in tbl:  # later deltas overwrite earlier rows (LWW)
-            by_canonical[rec["canonical_id"]] = rec
-    for rec in by_canonical.values():
-        # pyarrow maps arrive as [(k, v), ...] pairs
-        props_kv = rec["properties"] or []
-        so_kv = rec["properties_set_once"] or []
-        seeded = (
-            {k: json.loads(v) for k, v in props_kv},
-            {k: json.loads(v) for k, v in so_kv},
-            int(rec["version"] or 0),
-        )
-        for did in rec["distinct_ids"] or []:
-            index[did] = seeded
-    cache[persons_dir] = (entry, index)
-    return index
-
-
-def stateful_person_snapshots(
-    commands: DataFrame, seed_persons_dir: str | None = None
-) -> DataFrame:
-    """Streaming per-distinct_id $set/$set_once/$unset fold emitting
-    post-update snapshots (U5+U12 for the alias-free stream).
-
-    Input: streaming frame with (request_seq, item_index, distinct_id,
-    person_update JSON). State lives in the Spark state store keyed by
-    distinct_id — per-key serial processing, the reference's DO model
-    (persons.rs:488-541). Updates within a batch apply in (request_seq,
-    item_index) order.
-
-    ``seed_persons_dir``: path to a persons table (the batch/hybrid
-    job's output). A key seen for the FIRST time initializes its state
-    from the stored person record — including records reachable through
-    an absorbed distinct_id — so the low-latency lane continues version
-    counters and property bags from the authoritative table instead of
-    restarting at zero. The seed map is cached per (dir, latest log
-    entry) on each worker: reused workers re-read the latest entry and
-    reload only when the table has advanced, so a NEW stream always
-    seeds from the current snapshot — and within a stream the state
-    store, once a key is live, always wins over the seed.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fold(key: tuple, pdfs: Iterator[Any], state: GroupState) -> Iterator[Any]:
-        import pandas as pd
-
-        (distinct_id,) = key
-        if state.exists:
-            props_json, set_once_json, version = state.get
-            props = json.loads(props_json or "{}")
-            set_once = json.loads(set_once_json or "{}")
-            version = int(version or 0)
-        else:
-            props, set_once, version = {}, {}, 0
-            if seed_persons_dir is not None:
-                seeded = _load_person_seed_map(seed_persons_dir).get(distinct_id)
-                if seeded is not None:
-                    props, set_once, version = (
-                        dict(seeded[0]), dict(seeded[1]), seeded[2]
-                    )
-
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["request_seq", "item_index"], kind="mergesort")
-            for r in pdf.itertuples(index=False):
-                update = json.loads(r.person_update) if r.person_update else {}
-                version += 1
-                for k, v in update.get("set", {}).items():
-                    props[k] = v
-                for k, v in update.get("set_once", {}).items():
-                    if k not in props and k not in set_once:
-                        set_once[k] = v
-                for k in update.get("unset", []):
-                    props.pop(k, None)
-                    set_once.pop(k, None)
-                merged = dict(set_once)
-                merged.update(props)
-                rows.append(
-                    {
-                        "request_seq": int(r.request_seq),
-                        "item_index": int(r.item_index),
-                        "distinct_id": distinct_id,
-                        "person_version": version,
-                        "person_properties": json.dumps(
-                            merged, separators=(",", ":")
-                        ),
-                    }
-                )
-        state.update(
-            (
-                json.dumps(props, separators=(",", ":")),
-                json.dumps(set_once, separators=(",", ":")),
-                version,
-            )
-        )
-        yield pd.DataFrame(rows, columns=[f.name for f in SNAPSHOT_SCHEMA.fields])
-
-    return commands.groupBy("distinct_id").applyInPandasWithState(
-        fold,
-        SNAPSHOT_SCHEMA,
-        _STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -58,7 +58,6 @@ _SLOW_TESTS = {
     "test_llm_round7.py::test_bpe_segment_corpus_matches_train_then_apply",
     "test_llm_round7.py::test_kmeans_separates_planted_blobs",
     "test_llm_round7.py::test_bpe_checkpoint_cadence_preserves_merges_and_segmentation",
-    "test_lake.py::test_streaming_batch_layout_compaction_and_mixed_read",
     "test_lake.py::test_concurrent_upserts_interleaved_threads",
     "test_round9.py::test_streaming_ivf_compact_preserves_queries_and_fences_replays",
     "test_streaming_model.py::test_incremental_model_compaction_bounds_dirs_and_replays",

@@ -26,7 +26,7 @@ def _events(spark, rows):
 
 
 def test_append_events_partition_layout(spark, tmp_path):
-    from hogflare_spark.sinks.lake import append_events, read_events
+    from hogflare_spark.sinks.lake import append_events, read_entry, read_events
 
     events_dir = str(tmp_path / "events")
     df = _events(
@@ -34,19 +34,133 @@ def test_append_events_partition_layout(spark, tmp_path):
         [("a", "2025-03-01T10:00:00Z"), ("b", "2025-03-01T11:00:00Z"),
          ("a", "2025-03-02T09:00:00Z")],
     )
-    append_events(df, events_dir)
+    assert append_events(df, events_dir) == 1
 
-    dirs = sorted(d for d in os.listdir(events_dir) if d.startswith("event_date="))
-    assert dirs == ["event_date=2025-03-01", "event_date=2025-03-02"]
+    # one data dir per commit, `w=<id>`, holding the date leaves the
+    # entry names
+    (data,) = [d for d in os.listdir(events_dir) if d != "_log"]
+    assert data.startswith("w=")
+    assert read_entry(events_dir)["leaves"] == [
+        f"{data}/event_date=2025-03-01", f"{data}/event_date=2025-03-02"
+    ]
 
     back = read_events(spark, events_dir)
     assert back.count() == 3
+    assert "w" not in back.columns and "event_date" in back.columns
+    # a plain read of the root reads exactly the committed rows
+    assert spark.read.parquet(events_dir).count() == 3
     # partition pruning: a date filter must prune to one partition
     plan = (
         back.where(F.col("event_date") == "2025-03-01")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "2025-03-01" in plan
+
+
+def test_append_events_cluster_sorts_each_date(spark, tmp_path):
+    """Every written file is sorted by (team_id, distinct_id, created_at):
+    the partitioned writer must not replace the cluster sort with its own
+    sort on event_date."""
+    import pyarrow.parquet as pq
+
+    from hogflare_spark.sinks.lake import append_events, read_entry
+
+    events_dir = str(tmp_path / "events")
+    rows = [(f"d{(7 * i) % 10}", f"2025-03-0{1 + i % 2}T1{i % 10}:00:00Z") for i in range(20)]
+    append_events(_events(spark, rows), events_dir)
+    for leaf in read_entry(events_dir)["leaves"]:
+        path = os.path.join(events_dir, leaf)
+        for f in os.listdir(path):
+            if f.endswith(".parquet"):
+                got = [
+                    (r["team_id"], r["distinct_id"], r["created_at"])
+                    for r in pq.read_table(os.path.join(path, f)).to_pylist()
+                ]
+                assert got == sorted(got), f"{leaf}/{f} is not cluster-sorted"
+
+
+def _race_first_entry(monkeypatch, rival):
+    """Run `rival()` (another writer's whole commit) just before the next
+    log entry is created, so that entry loses the race."""
+    from hogflare_spark.sinks import lake
+
+    create = lake._create_exclusive
+
+    def racing(path, text):
+        monkeypatch.setattr(lake, "_create_exclusive", create)
+        rival()
+        return create(path, text)
+
+    monkeypatch.setattr(lake, "_create_exclusive", racing)
+
+
+def test_events_append_rebases_on_a_lost_entry_race(spark, tmp_path, monkeypatch):
+    """Two appends race for entry 2: the loser re-bases on the winner's
+    entry and commits as entry 3 without rewriting its data."""
+    from hogflare_spark.sinks.lake import append_events, read_entry, read_events
+
+    events_dir = str(tmp_path / "events")
+    append_events(_events(spark, [("a", "2025-03-01T10:00:00Z")]), events_dir)
+    _race_first_entry(monkeypatch, lambda: append_events(
+        _events(spark, [("b", "2025-03-02T10:00:00Z")]), events_dir))
+    assert append_events(_events(spark, [("c", "2025-03-01T11:00:00Z")]), events_dir) == 3
+    assert len(read_entry(events_dir)["leaves"]) == 3
+    assert len([d for d in os.listdir(events_dir) if d.startswith("w=")]) == 3
+    assert sorted(r["distinct_id"] for r in read_events(spark, events_dir).collect()) == [
+        "a", "b", "c"
+    ]
+
+
+def test_events_txn_append_overwrites_only_an_uncommitted_dir(spark, tmp_path, monkeypatch):
+    """A transaction's append writes into the data dir its txn names: a
+    retry after a write whose entry never committed replaces that
+    write's rows (a plain read sees one copy), and an append into a dir
+    the latest entry names raises CommitConflict, committed rows intact."""
+    from hogflare_spark.sinks import lake
+
+    events_dir = str(tmp_path / "events")
+
+    def plain():
+        return sorted(r["distinct_id"] for r in spark.read.parquet(events_dir).collect())
+
+    def dies(path, text):
+        raise OSError("stopped before the entry")
+
+    monkeypatch.setattr(lake, "_create_exclusive", dies)
+    with pytest.raises(OSError, match="stopped before the entry"):
+        lake.append_events(_events(spark, [("a", "2025-03-01T10:00:00Z")]), events_dir, ("app", 0))
+    monkeypatch.undo()
+    assert plain() == ["a"]
+    lake.append_events(_events(spark, [("b", "2025-03-01T10:00:00Z")]), events_dir, ("app", 0))
+    assert plain() == ["b"]
+    with pytest.raises(lake.CommitConflict):
+        lake.append_events(_events(spark, [("c", "2025-03-02T10:00:00Z")]), events_dir, ("app", 0))
+    assert plain() == ["b"]
+    assert lake.read_entry(events_dir)["txns"] == {"app": 0}
+
+
+def test_events_rewrite_conflicts_when_its_leaf_was_replaced(spark, tmp_path, monkeypatch):
+    """A compaction whose leaves a concurrent deletion already replaced
+    must not commit: it raises CommitConflict, removes its data dir, and
+    the deletion's result stands."""
+    from hogflare_spark.sinks.lake import (
+        CommitConflict,
+        append_events,
+        compact_events,
+        delete_person_rows,
+        read_entry,
+        read_events,
+    )
+
+    events_dir = str(tmp_path / "events")
+    for d in ("a", "b"):
+        append_events(_events(spark, [(d, "2025-03-01T10:00:00Z")]), events_dir)
+    _race_first_entry(monkeypatch, lambda: delete_person_rows(spark, events_dir, ["a"]))
+    with pytest.raises(CommitConflict):
+        compact_events(spark, events_dir)
+    (leaf,) = read_entry(events_dir)["leaves"]
+    assert [d for d in os.listdir(events_dir) if d.startswith("w=")] == [leaf.split("/")[0]]
+    assert [r["distinct_id"] for r in read_events(spark, events_dir).collect()] == ["b"]
 
 
 def test_upsert_table_merge_semantics(spark, tmp_path):
@@ -168,27 +282,31 @@ def test_compaction_rewrites_small_files(spark, tmp_path):
         append_events,
         compact_events,
         compaction_candidates,
+        read_entry,
         read_events,
     )
 
     events_dir = str(tmp_path / "events")
-    # five appends → five file sets in the same date partition
+    # five appends → five leaves of the same date partition
     for i in range(5):
         append_events(
             _events(spark, [(f"d{i}", "2025-03-01T10:00:00Z")]), events_dir
         )
-    pdir = os.path.join(events_dir, "event_date=2025-03-01")
-    before = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-    assert len(before) >= 5
-    assert compaction_candidates(events_dir) == [pdir]
+    leaves = read_entry(events_dir)["leaves"]
+    assert len(leaves) == 5
+    assert compaction_candidates(events_dir) == {"event_date=2025-03-01": sorted(leaves)}
 
     rewritten = compact_events(spark, events_dir)
-    assert rewritten == [pdir]
-    after = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
+    assert rewritten == [os.path.join(events_dir, leaf) for leaf in sorted(leaves)]
+    assert not any(os.path.exists(p) for p in rewritten)
+    (leaf,) = read_entry(events_dir)["leaves"]
+    after = [f for f in os.listdir(os.path.join(events_dir, leaf)) if f.endswith(".parquet")]
     assert len(after) == 1
     assert read_events(spark, events_dir).count() == 5
+    assert spark.read.parquet(events_dir).count() == 5
     # stable after compaction: no more candidates
-    assert compaction_candidates(events_dir, min_small_files=2) != [pdir] or True
+    assert compaction_candidates(events_dir, min_small_files=2) == {}
+    assert compact_events(spark, events_dir) == []
     assert read_events(spark, events_dir).where(F.col("distinct_id") == "d3").count() == 1
 
 
@@ -255,46 +373,54 @@ def test_upsert_table_schema_evolution(spark, tmp_path):
     assert out[5]["val"] == "b" and out[5]["extra"] == 9
 
 
-def test_streaming_batch_layout_compaction_and_mixed_read(spark, tmp_path):
-    """The streaming sink's batch=N/event_date=D layout must stay
-    readable alongside a pre-existing flat event_date=D layout (upgrade
-    path), and compaction must bin-pack the leaves under batch=N."""
+def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
+    """Compaction bin-packs each date's small files across appends into
+    one leaf; a date with a single small file is left alone, and the
+    leaves it does not rewrite keep their bytes and mtimes."""
     from hogflare_spark.sinks.lake import (
         append_events,
         compact_events,
         compaction_candidates,
+        read_entry,
         read_events,
     )
 
     events_dir = str(tmp_path / "events")
-    rows = [(f"d{i}", "2025-03-01T10:00:00Z") for i in range(10)]
-    # old flat layout from a batch append
-    append_events(_events(spark, rows), events_dir)
-    # streaming layout: two replay-scoped batch partitions, small files
-    for b in (0, 1):
-        (
-            _events(spark, rows)
-            .withColumn("event_date", F.to_date("created_at"))
-            .repartition(3)
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(os.path.join(events_dir, f"batch={b}"))
+    for i in range(3):
+        append_events(
+            _events(spark, [(f"d{i}_{j}", f"2025-03-0{1 + j % 2}T10:00:00Z") for j in range(10)]),
+            events_dir,
         )
-    mixed = read_events(spark, events_dir)
-    assert "batch" not in mixed.columns
-    assert mixed.count() == 30
-    cands = compaction_candidates(
-        events_dir, small_file_bytes=10 * 1024 * 1024, min_small_files=2
+    append_events(_events(spark, [("solo", "2025-03-05T10:00:00Z")]), events_dir)
+    (solo,) = [leaf for leaf in read_entry(events_dir)["leaves"] if leaf.endswith("03-05")]
+    solo_files = sorted(
+        (f.name, f.stat().st_size, f.stat().st_mtime_ns)
+        for f in os.scandir(os.path.join(events_dir, solo))
     )
-    assert any(os.sep + "batch=" in c for c in cands), (
-        "compaction must discover event_date leaves nested under batch=N"
-    )
+
+    cands = compaction_candidates(events_dir, small_file_bytes=10 * 1024 * 1024)
+    assert sorted(cands) == ["event_date=2025-03-01", "event_date=2025-03-02"]
+    assert all(len(leaves) == 3 for leaves in cands.values())
     compact_events(spark, events_dir, small_file_bytes=10 * 1024 * 1024)
-    assert read_events(spark, events_dir).count() == 30
-    for b in (0, 1):
-        leaf = os.path.join(events_dir, f"batch={b}", "event_date=2025-03-01")
-        files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-        assert len(files) == 1, "batch leaf not bin-packed to one file"
+
+    leaves = read_entry(events_dir)["leaves"]
+    assert len(leaves) == 3 and solo in leaves
+    for leaf in leaves:
+        files = [f for f in os.listdir(os.path.join(events_dir, leaf)) if f.endswith(".parquet")]
+        assert len(files) == 1, f"{leaf} not bin-packed to one file"
+    assert sorted(
+        (f.name, f.stat().st_size, f.stat().st_mtime_ns)
+        for f in os.scandir(os.path.join(events_dir, solo))
+    ) == solo_files
+    # every data dir on disk is a committed one: the replaced leaves are gone
+    on_disk = {
+        f"{d}/{leaf}"
+        for d in os.listdir(events_dir) if d != "_log"
+        for leaf in os.listdir(os.path.join(events_dir, d)) if leaf.startswith("event_date=")
+    }
+    assert on_disk == set(leaves)
+    assert read_events(spark, events_dir).count() == 31
+    assert spark.read.parquet(events_dir).count() == 31
 
 
 # ------------------------------------------------ the schema in the log entry

@@ -1,6 +1,6 @@
 """Round-10 gates: BM25 batch plan-shape invariance vs |queries|
 (r9 verdict #8), the approx n-gram census (r9 verdict #6 — the Expand
-must disappear), and the lake staging-name fix (ADVICE r9)."""
+must disappear), and the events table's commit boundaries."""
 
 from __future__ import annotations
 
@@ -180,40 +180,70 @@ def test_topk_ngrams_approx_check_green_and_topk_exact(spark):
     ]
 
 
-# ------------------------------------------------------- lake staging fix
+# ------------------------------------------------- events commit boundaries
 
 
-def test_lake_staging_names_invisible_to_partition_globs(tmp_path):
-    """ADVICE r9: staged/backup dirs must NOT carry the `event_date=`
-    prefix, or a concurrent read_events glob can double-read mid-swap.
-    The helper must emit LEADING-DOT siblings in the partition's parent
-    dir — measured on Spark 4.1: a '.'-dir is skipped by partition
-    inference even with '=' in its name, while a '_'-dir containing '='
-    fails the whole read with CONFLICTING_PARTITION_COLUMN_NAMES (see
-    test_swap_survives_orphaned_backup, which reads THROUGH a stale
-    sibling)."""
-    from hogflare_spark.sinks.lake import _staged_paths
+def _lake_events(spark, pairs):
+    from pyspark.sql import Row
 
-    pdir = str(tmp_path / "events" / "event_date=2024-01-15")
-    staged, backup = _staged_paths(pdir)
-    assert os.path.dirname(staged) == os.path.dirname(pdir)
-    assert os.path.basename(staged).startswith(".")
-    assert os.path.basename(backup).startswith(".")
-    assert not os.path.basename(staged).startswith("event_date=")
-    assert not os.path.basename(backup).startswith("event_date=")
-    # distinct names so a staged dir can never collide with its backup
-    assert staged != backup
+    return spark.createDataFrame(
+        [Row(uuid=f"u{i}", team_id=1, distinct_id=d, event="ev", created_at=ts)
+         for i, (d, ts) in enumerate(pairs)]
+    ).withColumn("created_at", F.to_timestamp("created_at"))
+
+
+def _lake_rows(spark, events_dir):
+    from hogflare_spark.sinks.lake import read_events
+
+    return sorted(
+        (r["uuid"], r["distinct_id"], str(r["event_date"]))
+        for r in read_events(spark, events_dir).collect()
+    )
+
+
+def _stop_before_entry(monkeypatch):
+    """Make the next log entry fail, as if the writer died between its
+    data write and its entry."""
+    from hogflare_spark.sinks import lake
+
+    def dies(path, text):
+        raise OSError("stopped before the entry")
+
+    monkeypatch.setattr(lake, "_create_exclusive", dies)
+
+
+def test_uncommitted_events_dir_is_never_read(spark, tmp_path, monkeypatch):
+    """An append that wrote its data dir but died before its entry leaves
+    rows on disk that no entry names: read_events never reads them, and
+    the next append commits on top of them."""
+    from hogflare_spark.sinks.lake import append_events, read_entry
+
+    events_dir = str(tmp_path / "lake")
+    append_events(_lake_events(spark, [("alice", "2025-03-01T10:00:00Z")]), events_dir)
+    want = _lake_rows(spark, events_dir)
+
+    _stop_before_entry(monkeypatch)
+    with pytest.raises(OSError, match="stopped before the entry"):
+        append_events(_lake_events(spark, [("bob", "2025-03-01T11:00:00Z")]), events_dir)
+    monkeypatch.undo()
+    assert len([d for d in os.listdir(events_dir) if d.startswith("w=")]) == 2
+    assert _lake_rows(spark, events_dir) == want
+
+    append_events(_lake_events(spark, [("carol", "2025-03-02T10:00:00Z")]), events_dir)
+    assert read_entry(events_dir)["version"] == 2
+    assert [r[1] for r in _lake_rows(spark, events_dir)] == ["alice", "carol"]
 
 
 def test_delete_person_rows_leaves_no_staging_debris(spark, tmp_path):
-    """End-to-end: delete a subject, then assert the lake contains ONLY
-    `event_date=` leaf dirs (no staged/backup remnants) and the rows
-    are gone while other subjects' rows survive."""
+    """End-to-end: delete a subject, then assert the lake holds ONLY the
+    leaves the latest entry names (the replaced leaves are gone) and the
+    rows are gone while other subjects' rows survive."""
     from pyspark.sql import Row
 
     from hogflare_spark.sinks.lake import (
         append_events,
         delete_person_rows,
+        read_entry,
         read_events,
     )
 
@@ -235,9 +265,13 @@ def test_delete_person_rows_leaves_no_staging_debris(spark, tmp_path):
     append_events(df, events_dir)
     pdirs, n_deleted = delete_person_rows(spark, events_dir, ["alice"])
     assert len(pdirs) == 2 and n_deleted == 2
-    for _root, dirs, _files in os.walk(events_dir):
-        for d in dirs:
-            assert not d.startswith(".staged_") and not d.startswith(".old_"), d
+    # on disk: the log and the leaves the latest entry names, nothing else
+    on_disk = {
+        f"{d}/{leaf}"
+        for d in os.listdir(events_dir) if d != "_log"
+        for leaf in os.listdir(os.path.join(events_dir, d)) if leaf.startswith("event_date=")
+    }
+    assert on_disk == set(read_entry(events_dir)["leaves"])
     remaining = read_events(spark, events_dir)
     assert remaining.where(F.col("distinct_id") == "alice").count() == 0
     assert remaining.count() == 2
@@ -432,40 +466,31 @@ def test_next_event_examples_bounded_context(spark):
     assert all("view" in r["context"] for r in only_purchase)
 
 
-def test_swap_survives_orphaned_backup(spark, tmp_path):
-    """A backup dir orphaned by a crash AFTER its swap completed must
-    not wedge the next rewrite of the same partition (os.replace cannot
-    rename onto a non-empty dir)."""
-    import shutil
-
-    from pyspark.sql import Row
-
-    from hogflare_spark.sinks.lake import (
-        _staged_paths,
-        append_events,
-        delete_person_rows,
-        read_events,
-    )
+def test_compaction_crash_before_entry_leaves_events_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after writing its data dir but before its
+    entry changes nothing a reader sees; the retry compacts to the same
+    rows and removes what it replaced."""
+    from hogflare_spark.sinks.lake import append_events, compact_events, read_entry
 
     events_dir = str(tmp_path / "lake")
-    df = spark.createDataFrame(
-        [
-            Row(uuid="u0", team_id=1, distinct_id="alice", event="ev",
-                created_at="2025-03-01T10:00:00Z"),
-            Row(uuid="u1", team_id=1, distinct_id="bob", event="ev",
-                created_at="2025-03-01T11:00:00Z"),
-        ]
-    ).withColumn("created_at", F.to_timestamp("created_at"))
-    append_events(df, events_dir)
-    pdir = os.path.join(events_dir, "event_date=2025-03-01")
-    _, backup = _staged_paths(pdir)
-    # simulate the orphan: a stale non-empty backup next to a live dir
-    shutil.copytree(pdir, backup)
-    pdirs, n = delete_person_rows(spark, events_dir, ["alice"])
-    assert pdirs == [pdir] and n == 1
-    assert not os.path.isdir(backup)
-    back = read_events(spark, events_dir)
-    assert back.count() == 1 and back.first()["distinct_id"] == "bob"
+    for i, d in enumerate(["alice", "bob", "carol"]):
+        append_events(_lake_events(spark, [(d, f"2025-03-01T1{i}:00:00Z")]), events_dir)
+    want, leaves = _lake_rows(spark, events_dir), read_entry(events_dir)["leaves"]
+
+    _stop_before_entry(monkeypatch)
+    with pytest.raises(OSError, match="stopped before the entry"):
+        compact_events(spark, events_dir)
+    monkeypatch.undo()
+    assert read_entry(events_dir)["leaves"] == leaves
+    assert _lake_rows(spark, events_dir) == want
+
+    replaced = compact_events(spark, events_dir)
+    assert sorted(replaced) == sorted(os.path.join(events_dir, p) for p in leaves)
+    assert not any(os.path.exists(p) for p in replaced)
+    assert len(read_entry(events_dir)["leaves"]) == 1
+    assert _lake_rows(spark, events_dir) == want
 
 
 # ------------------------------------------------- exact k-selection
@@ -516,90 +541,36 @@ def test_exact_quantile_values_rank_convention(spark):
         assert v == vals[k - 1]
 
 
-def test_swap_crash_window_recovery(spark, tmp_path, monkeypatch):
-    """Simulate a crash BETWEEN the two renames: the live dir is gone,
-    only '.old_<base>' remains — then verify the documented recovery
-    (rename the backup back) restores the table byte-identically."""
-    import os as _os
+def test_delete_crash_before_entry_leaves_events_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """A GDPR deletion that dies after writing its rewrite but before its
+    entry leaves the table as it was (the subject's rows still readable,
+    nothing lost); the retry deletes the same rows and count as a
+    deletion that never failed."""
+    from hogflare_spark.sinks.lake import append_events, delete_person_rows, read_entry
 
-    from pyspark.sql import Row
+    pairs = [
+        ("alice", "2025-03-01T10:00:00Z"),
+        ("bob", "2025-03-01T11:00:00Z"),
+        ("alice", "2025-03-02T09:00:00Z"),
+        ("carol", "2025-03-03T10:00:00Z"),
+    ]
+    clean, events_dir = str(tmp_path / "clean"), str(tmp_path / "lake")
+    for root in (clean, events_dir):
+        append_events(_lake_events(spark, pairs), root)
+    want = delete_person_rows(spark, clean, ["alice"])[1], _lake_rows(spark, clean)
+    before, leaves = _lake_rows(spark, events_dir), read_entry(events_dir)["leaves"]
 
-    from hogflare_spark.sinks.lake import (
-        _staged_paths,
-        append_events,
-        delete_person_rows,
-        read_events,
-    )
-
-    events_dir = str(tmp_path / "lake")
-    df = spark.createDataFrame(
-        [
-            Row(uuid="u0", team_id=1, distinct_id="alice", event="ev",
-                created_at="2025-03-01T10:00:00Z"),
-            Row(uuid="u1", team_id=1, distinct_id="bob", event="ev",
-                created_at="2025-03-01T11:00:00Z"),
-        ]
-    ).withColumn("created_at", F.to_timestamp("created_at"))
-    append_events(df, events_dir)
-    pdir = os.path.join(events_dir, "event_date=2025-03-01")
-    staged, backup = _staged_paths(pdir)
-
-    real_replace = _os.replace
-    calls = {"n": 0}
-
-    def crashing_replace(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:  # after live->backup, before staged->live
-            raise OSError("simulated crash between the two renames")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr("hogflare_spark.sinks.lake.os.replace", crashing_replace)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="simulated crash"):
+    _stop_before_entry(monkeypatch)
+    with pytest.raises(OSError, match="stopped before the entry"):
         delete_person_rows(spark, events_dir, ["alice"])
     monkeypatch.undo()
+    assert read_entry(events_dir)["leaves"] == leaves
+    assert _lake_rows(spark, events_dir) == before
 
-    # the documented crash state: backup only, no live dir
-    assert os.path.isdir(backup) and not os.path.isdir(pdir)
-    import shutil
-
-    shutil.rmtree(staged, ignore_errors=True)
-    # the retried delete heals the orphan automatically (its probe calls
-    # repair_partitions first), sees the hidden rows, and succeeds — no
-    # manual rename required
     pdirs, n = delete_person_rows(spark, events_dir, ["alice"])
-    assert pdirs == [pdir] and n == 1
-    assert read_events(spark, events_dir).count() == 1
-    assert not os.path.isdir(backup)
-
-
-def test_repair_partitions_heals_orphan_and_keeps_superseded(tmp_path):
-    """repair_partitions restores a backup-only orphan (both layouts) and
-    leaves a backup that HAS a live sibling alone."""
-    import os as _os
-
-    from hogflare_spark.sinks.lake import repair_partitions
-
-    lake = tmp_path / "lake"
-    # orphan at table level: backup only
-    (lake / ".old_event_date=2025-03-01").mkdir(parents=True)
-    # orphan under a streaming batch dir
-    (lake / "batch=3" / ".old_event_date=2025-03-02").mkdir(parents=True)
-    # superseded backup: live sibling present — must be left in place
-    (lake / ".old_event_date=2025-03-03").mkdir()
-    (lake / "event_date=2025-03-03").mkdir()
-
-    repaired = repair_partitions(str(lake))
-    assert sorted(_os.path.basename(p) for p in repaired) == [
-        "event_date=2025-03-01",
-        "event_date=2025-03-02",
-    ]
-    assert (lake / "event_date=2025-03-01").is_dir()
-    assert (lake / "batch=3" / "event_date=2025-03-02").is_dir()
-    assert not (lake / ".old_event_date=2025-03-01").exists()
-    # superseded pair untouched
-    assert (lake / ".old_event_date=2025-03-03").is_dir()
-    assert (lake / "event_date=2025-03-03").is_dir()
-    # idempotent
-    assert repair_partitions(str(lake)) == []
+    assert (n, _lake_rows(spark, events_dir)) == want == (2, [
+        ("u1", "bob", "2025-03-01"), ("u3", "carol", "2025-03-03")
+    ])
+    assert not any(os.path.exists(p) for p in pdirs)

@@ -513,7 +513,12 @@ def test_delete_person_rows_rewrites_only_affected_partitions(spark, tmp_path):
     import os
     from datetime import datetime
 
-    from hogflare_spark.sinks.lake import append_events, delete_person_rows, read_events
+    from hogflare_spark.sinks.lake import (
+        append_events,
+        delete_person_rows,
+        read_entry,
+        read_events,
+    )
 
     rows = []
     for day, uids in ((1, [1, 2, 3]), (2, [4, 5]), (3, [1, 6])):
@@ -525,20 +530,26 @@ def test_delete_person_rows_rewrites_only_affected_partitions(spark, tmp_path):
     lake = str(tmp_path / "lake")
     append_events(spark.createDataFrame(rows), lake)
 
-    def snap(day):
-        d = os.path.join(lake, f"event_date=2025-03-0{day}")
+    def leaf(day):
+        (path,) = [os.path.join(lake, p) for p in read_entry(lake)["leaves"]
+                   if p.endswith(f"event_date=2025-03-0{day}")]
+        return path
+
+    def snap(d):
         return sorted(
             (f, os.path.getsize(os.path.join(d, f)),
              os.path.getmtime(os.path.join(d, f)))
             for f in os.listdir(d) if f.endswith(".parquet"))
 
-    before_d2 = snap(2)
+    d2 = leaf(2)
+    before_d2 = snap(d2)
+    replaced = [leaf(1), leaf(3)]
     dirs, n = delete_person_rows(spark, lake, ["1"])
     assert n == 2  # day 1 and day 3
-    assert sorted(os.path.basename(d) for d in dirs) == [
-        "event_date=2025-03-01", "event_date=2025-03-03"]
-    # day 2 untouched: identical files, sizes, mtimes
-    assert snap(2) == before_d2
+    assert sorted(dirs) == sorted(replaced)
+    assert not any(os.path.exists(d) for d in dirs)  # no subject row on disk
+    # day 2 untouched: same leaf, identical files, sizes, mtimes
+    assert leaf(2) == d2 and snap(d2) == before_d2
     back = read_events(spark, lake)
     assert sorted(r["distinct_id"] for r in back.collect()) == [
         "2", "3", "4", "5", "6"]

@@ -1,5 +1,5 @@
 """Structured Streaming tests: incremental foreachBatch ingest equals the
-batch fold over the same input; per-key stateful operator; watermarked
+batch fold over the same input, across replays and restarts; watermarked
 windowed aggregation."""
 
 from __future__ import annotations
@@ -411,123 +411,6 @@ def test_streaming_sequential_ids_continue_across_batches(spark, tmp_path):
     assert ids2["c"] == max(ids1.values()) + 1
 
 
-def test_stateful_person_snapshots_operator(spark, tmp_path):
-    from hogflare_spark.streaming.ingest_stream import stateful_person_snapshots
-
-    src = str(tmp_path / "cmds")
-    out_rows = []
-
-    cmds = [
-        {"request_seq": 1, "item_index": 0, "distinct_id": "u1",
-         "person_update": json.dumps({"set": {"a": 1}})},
-        {"request_seq": 2, "item_index": 0, "distinct_id": "u1",
-         "person_update": json.dumps({"set_once": {"a": 9, "b": 2}})},
-        {"request_seq": 3, "item_index": 0, "distinct_id": "u2",
-         "person_update": json.dumps({"set": {"x": True}})},
-    ]
-    _write_batch(src, "c1.json", cmds)
-
-    schema = "request_seq long, item_index long, distinct_id string, person_update string"
-    stream = spark.readStream.schema(schema).json(src)
-    snaps = stateful_person_snapshots(stream)
-
-    q = (
-        snaps.writeStream.foreachBatch(
-            lambda df, _id: out_rows.extend(df.collect())
-        )
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    by_seq = {r["request_seq"]: r for r in out_rows}
-    assert len(by_seq) == 3
-    # post-update snapshots: set wins over set_once; set_once a ignored
-    assert json.loads(by_seq[1]["person_properties"]) == {"a": 1}
-    assert json.loads(by_seq[2]["person_properties"]) == {"a": 1, "b": 2}
-    assert by_seq[2]["person_version"] == 2
-    assert json.loads(by_seq[3]["person_properties"]) == {"x": True}
-
-    # second micro-batch resumes state from the store
-    _write_batch(src, "c2.json", [
-        {"request_seq": 4, "item_index": 0, "distinct_id": "u1",
-         "person_update": json.dumps({"unset": ["a"]})},
-    ])
-    q = (
-        spark.readStream.schema(schema).json(src)
-        .transform(stateful_person_snapshots)
-        .writeStream.foreachBatch(lambda df, _id: out_rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    by_seq = {r["request_seq"]: r for r in out_rows}
-    assert json.loads(by_seq[4]["person_properties"]) == {"b": 2}
-    assert by_seq[4]["person_version"] == 3
-
-
-def test_stateful_person_snapshots_seeded_from_versioned_state(spark, tmp_path):
-    """VERDICT r3 item 4 (second half): the low-latency state-store lane
-    seeds first-seen keys from the versioned persons table, continuing
-    version counters and property bags — including keys reachable only
-    through an absorbed (merged) distinct_id."""
-    from hogflare_spark.streaming.ingest_stream import (
-        StreamingIngestJob,
-        read_request_stream,
-        stateful_person_snapshots,
-    )
-
-    # authoritative table: u1 has 2 updates; anon-1 merged into user-1
-    landing = str(tmp_path / "slanding")
-    warehouse = str(tmp_path / "swh")
-    job = StreamingIngestJob(warehouse)
-    _write_batch(landing, "b0.json", [
-        _capture(1, "u1", {"$set": {"a": 1}}),
-        _capture(2, "u1", {"$set_once": {"first": "x"}}),
-        _capture(3, "anon-1", {"$set": {"plan": "free"}}),
-        _alias(4, "user-1", "anon-1"),
-    ])
-    job.run_available_now(read_request_stream(spark, landing), str(tmp_path / "sck"))
-    persons_dir = os.path.join(warehouse, "persons")
-
-    src = str(tmp_path / "scmds")
-    _write_batch(src, "c1.json", [
-        {"request_seq": 10, "item_index": 0, "distinct_id": "u1",
-         "person_update": json.dumps({"set": {"a": 2}})},
-        # first touch through the ABSORBED id: must seed user-1's record
-        {"request_seq": 11, "item_index": 0, "distinct_id": "anon-1",
-         "person_update": json.dumps({"set_once": {"plan": "paid"}})},
-        {"request_seq": 12, "item_index": 0, "distinct_id": "fresh",
-         "person_update": json.dumps({"set": {"n": 1}})},
-    ])
-    schema = "request_seq long, item_index long, distinct_id string, person_update string"
-    out_rows = []
-    q = (
-        spark.readStream.schema(schema).json(src)
-        .transform(lambda df: stateful_person_snapshots(df, seed_persons_dir=persons_dir))
-        .writeStream.foreachBatch(lambda df, _id: out_rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "sck2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    by_seq = {r["request_seq"]: r for r in out_rows}
-    # u1: seeded with {a:1}, set_once {first:x}, version 2 → update makes 3
-    assert json.loads(by_seq[10]["person_properties"]) == {"a": 2, "first": "x"}
-    assert by_seq[10]["person_version"] == 3
-    # anon-1 resolves to the MERGED record: plan already set → set_once noop
-    assert json.loads(by_seq[11]["person_properties"]) == {"plan": "free"}
-    assert by_seq[11]["person_version"] >= 2
-    # unknown key starts fresh at version 1
-    assert json.loads(by_seq[12]["person_properties"]) == {"n": 1}
-    assert by_seq[12]["person_version"] == 1
-
-
 def test_windowed_event_counts_watermark(spark, tmp_path):
     from hogflare_spark.streaming.ingest_stream import windowed_event_counts
 
@@ -908,15 +791,20 @@ def uninterrupted_events(spark, tmp_path_factory):
     when its batch ran; the one-shot batch fold differs for persons a
     LATER batch absorbs (u2 here), so this column is compared with the
     uninterrupted stream rather than the batch fold."""
+    from hogflare_spark.sinks.lake import read_events
+
     job = _stream_restart_batches(spark, tmp_path_factory.mktemp("uninterrupted"))
-    return _event_rows(spark.read.parquet(job.events_dir), _PERSON_ID_COLUMNS)
+    return _event_rows(read_events(spark, job.events_dir), _PERSON_ID_COLUMNS)
 
 
 def _stop_and_restart(spark, tmp_path, stop, uninterrupted_events) -> None:
     """Stop the last of RESTART_BATCHES with `stop`, restart, and compare
-    persons, groups and event rows with the one-shot batch fold."""
+    persons, groups and event rows (as the events log names them) with
+    the one-shot batch fold; a plain read of the events root must return
+    the same rows, with no copy of a replayed batch."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.schemas import EVENT_STABLE_COLUMNS
+    from hogflare_spark.sinks.lake import read_events
 
     restarted = _stream_restart_batches(spark, tmp_path, stop)
 
@@ -925,32 +813,37 @@ def _stop_and_restart(spark, tmp_path, stop, uninterrupted_events) -> None:
     assert _state(restarted.read_persons(spark), restarted.read_groups(spark)) == (
         _state(want["persons"], want["groups"])
     )
-    got_events = spark.read.parquet(restarted.events_dir)
+    got_events = read_events(spark, restarted.events_dir)
     columns = [c for c in EVENT_STABLE_COLUMNS if c != "person_id"]
     assert _event_rows(got_events, columns) == _event_rows(want["events"], columns)
     assert _event_rows(got_events, _PERSON_ID_COLUMNS) == uninterrupted_events
+    plain = spark.read.parquet(restarted.events_dir)
+    assert _event_rows(plain, EVENT_STABLE_COLUMNS) == (
+        _event_rows(got_events, EVENT_STABLE_COLUMNS)
+    )
 
 
 def _stop_at_commit(monkeypatch, n: int):
-    """A stop that lets the last batch run until its `n`-th table commit
-    (1 = groups, 2 = persons) and kills it there."""
+    """A stop that lets the last batch run until its `n`-th log entry
+    (1 = events, 2 = groups, 3 = persons) and kills it there, after that
+    table's data directory is written."""
     from hogflare_spark.sinks import lake
 
     def stop(run):
-        commit = lake._commit_version
+        create = lake._create_exclusive
         calls = []
 
-        def dies(*args, **kwargs):
-            calls.append(args[1])
+        def dies(path, text):
+            calls.append(os.path.basename(os.path.dirname(os.path.dirname(path))))
             if len(calls) == n:
                 raise RuntimeError("stopped at a commit boundary")
-            return commit(*args, **kwargs)
+            return create(path, text)
 
-        monkeypatch.setattr(lake, "_commit_version", dies)
+        monkeypatch.setattr(lake, "_create_exclusive", dies)
         with pytest.raises(Exception, match="stopped at a commit boundary"):
             run()
-        monkeypatch.setattr(lake, "_commit_version", commit)
-        assert [os.path.basename(c) for c in calls] == ["groups", "persons"][:n]
+        monkeypatch.setattr(lake, "_create_exclusive", create)
+        assert calls == ["events", "groups", "persons"][:n]
 
     return stop
 
@@ -958,30 +851,42 @@ def _stop_at_commit(monkeypatch, n: int):
 def test_restart_after_events_write_matches_batch_fold(
     spark, tmp_path, monkeypatch, uninterrupted_events
 ):
-    """Boundary (a): the batch wrote its events, then stopped before any
-    table commit; the restart re-runs it and commits both tables once."""
+    """Boundary (a): the batch wrote its events data, then stopped before
+    the events entry; the restart re-runs it, overwrites the stopped
+    write's data directory and commits each table once."""
     _stop_and_restart(
         spark, tmp_path, _stop_at_commit(monkeypatch, 1), uninterrupted_events
+    )
+
+
+def test_restart_after_events_commit_matches_batch_fold(
+    spark, tmp_path, monkeypatch, uninterrupted_events
+):
+    """Boundary (b): the events entry committed, the groups entry did
+    not; the restart finds the batch in the events log, appends nothing
+    there and commits both state tables once."""
+    _stop_and_restart(
+        spark, tmp_path, _stop_at_commit(monkeypatch, 2), uninterrupted_events
     )
 
 
 def test_restart_between_group_and_person_commits_matches_batch_fold(
     spark, tmp_path, monkeypatch, uninterrupted_events
 ):
-    """Boundary (b): groups committed, persons did not; the restart finds
-    the batch in the groups log (seeds groups from the version before it,
-    commits nothing there) and commits persons once."""
+    """Boundary (c): events and groups committed, persons did not; the
+    restart finds the batch in both of those logs (seeds groups from the
+    version before it, commits nothing there) and commits persons once."""
     _stop_and_restart(
-        spark, tmp_path, _stop_at_commit(monkeypatch, 2), uninterrupted_events
+        spark, tmp_path, _stop_at_commit(monkeypatch, 3), uninterrupted_events
     )
 
 
 def test_restart_before_spark_commit_log_matches_batch_fold(
     spark, tmp_path, uninterrupted_events
 ):
-    """Boundary (c): foreachBatch returned but Spark's commit-log entry
+    """Boundary (d): foreachBatch returned but Spark's commit-log entry
     was never written (simulated by deleting it); the restart re-runs the
-    batch, which finds itself in both logs and commits nothing."""
+    batch, which finds itself in all three logs and commits nothing."""
 
     def stop(run):
         run()
