@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from hogflare_spark.operators.person_store import synthetic_time
+from hogflare_spark.operators.person_store import parse_event_time
 
 _GROUP_OPS = StructType(
     [
@@ -153,20 +153,6 @@ def derive_group_ops(commands: DataFrame) -> DataFrame:
         )
         .mapInPandas(_run, _GROUP_OPS)
     )
-
-
-def _parse_ts(value: str | None, fallback_seq: int) -> datetime:
-    if value:
-        try:
-            ts = datetime.fromisoformat(value.replace("Z", "+00:00"))
-            if ts.tzinfo is None:
-                from datetime import timezone
-
-                ts = ts.replace(tzinfo=timezone.utc)
-            return ts
-        except ValueError:
-            pass
-    return synthetic_time(fallback_seq)
 
 
 def _seed_group_ops(prior_groups: DataFrame) -> DataFrame:
@@ -289,7 +275,7 @@ def fold_group_state(
                 if row.kind in ("update", "gi_update"):
                     if record is None:
                         record = {
-                            "created_at": _parse_ts(row.timestamp, seq_linear),
+                            "created_at": parse_event_time(row.timestamp, seq_linear),
                             "version": 0,
                             "props": {},
                         }

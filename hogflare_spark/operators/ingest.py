@@ -88,16 +88,21 @@ def ingest_commands(
 
     seq = ["request_seq", "item_index"]
 
-    # ---- group_properties: JSON object of present groups per event --------
-    gprops = (
+    # ---- group hydration: one aggregation of the present groups per event:
+    # the group_properties JSON object, and the groupidentify echo slots
+    # (collect_list skips the NULL structs of non-echo rows)
+    hydrated = (
         group_results.where(F.col("present"))
         .groupBy(*seq)
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col("group_type").alias("k"), F.col("props").alias("v")))
-            ).alias("entries")
+            ).alias("entries"),
+            F.map_from_entries(
+                F.collect_list(F.when(F.col("echo"), F.struct("group_type", "group_key")))
+            ).alias("echo_map"),
         )
-        .select(*seq, _assemble_json_object(F.col("entries")).alias("group_properties"))
+        .select(*seq, _assemble_json_object(F.col("entries")).alias("group_properties"), "echo_map")
     )
 
     # ---- group slots ------------------------------------------------------
@@ -126,18 +131,7 @@ def ingest_commands(
         *slot_cols,
     )
 
-    gi_echo = (
-        group_results.where(F.col("echo") & F.col("present"))
-        .select(*seq, "group_type", "group_key")
-        .groupBy(*seq)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("group_type", "group_key"))
-            ).alias("echo_map")
-        )
-    )
-
-    ev = base.join(gprops, seq, "left").join(gi_echo, seq, "left").join(snapshots, seq, "left")
+    ev = base.join(hydrated, seq, "left").join(snapshots, seq, "left")
 
     for i, gtype in enumerate(group_types):
         echo_slot = (
@@ -176,10 +170,9 @@ def ingest_commands(
         F.when(F.col("skip_person") == "1", F.lit(None).cast("timestamp"))
         .otherwise(F.col("person_created_at"))
         .alias("person_created_at"),
-        # identify events carry the request properties as person_properties
-        # before state merge... no: with_person overwrites only when Some
-        # (pipeline.rs:373-387); from_identify seeds person_properties with
-        # the request props (pipeline.rs:211-234), so coalesce(snapshot, request)
+        # with_person overwrites person_properties only when Some
+        # (pipeline.rs:373-387) and from_identify seeds them with the
+        # request props (pipeline.rs:211-234), so coalesce(snapshot, request)
         F.when(F.col("skip_person") == "1", F.lit(None).cast("string"))
         .otherwise(F.coalesce(F.col("person_properties"), F.col("person_properties_request")))
         .alias("person_properties"),

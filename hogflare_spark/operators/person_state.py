@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from datetime import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
@@ -49,7 +48,6 @@ from pyspark.sql.types import (
 from hogflare_spark.operators.person_store import (
     PersonStoreReplay,
     snapshot_fields,
-    synthetic_time,
 )
 
 _FOLD_OUT = StructType(
@@ -79,12 +77,6 @@ _FOLD_OUT = StructType(
 # within a run in request order (ties only among seed rows, which load
 # disjoint records — order-insensitive)
 _FOLD_SORT = ["comp", "request_seq", "item_index", "sub"]
-
-
-def _parse_ts(value: str | None, fallback_seq: int) -> datetime:
-    from hogflare_spark.operators.person_store import parse_event_time
-
-    return parse_event_time(value, fallback_seq)
 
 
 def derive_person_ops(commands: DataFrame) -> DataFrame:
@@ -450,8 +442,8 @@ def fold_person_state(
     # new allocations continue above the prior max id (seeded records keep
     # their stored id via prior_id). `person_id_floor` overrides the
     # derived max for callers that seed only a SLICE of the prior table
-    # (the hybrid streaming fast lane passes the affected persons plus
-    # the global max id it tracks in its state pointer) — without it a
+    # (the stream passes the affected persons plus the global max id its
+    # log entry records) — without it a
     # restricted seed would re-issue ids already held by unseeded rows.
     if person_id_floor is not None:
         # a known floor is a literal — no join needed

@@ -170,10 +170,10 @@ def hf_streaming_person_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/persons.rs:488-541). Splits are request_seq-range
     thirds, so the global replay order is preserved.
 
-    hybrid=True: the capture stream is alias-free, so after the first
-    (bootstrap) micro-batch the remaining batches take the DELTA fast
-    lane — seed only touched persons, commit O(batch) deltas — and the
-    gate proves that lane converges to the one-shot fold too.
+    After the first (bootstrap) micro-batch, each batch seeds only the
+    persons it touches and commits an O(batch) delta through
+    `lake.upsert_table`, so the gate proves the delta commits converge
+    to the one-shot fold too.
     """
     import shutil
     import tempfile
@@ -200,7 +200,7 @@ def hf_streaming_person_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(work, "landing")
     ckpt = os.path.join(work, "ckpt")
     warehouse = os.path.join(work, "warehouse")
-    job = StreamingIngestJob(warehouse, hybrid=True)
+    job = StreamingIngestJob(warehouse)
     try:
         for chunk in chunks:
             # append new files into the landing dir, then drain: the stream
@@ -312,7 +312,7 @@ def hf_flags_on_streaming_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(work, "landing")
     ckpt = os.path.join(work, "ckpt")
     warehouse = os.path.join(work, "warehouse")
-    job = StreamingIngestJob(warehouse, hybrid=True)
+    job = StreamingIngestJob(warehouse)
     try:
         for chunk in chunks:
             chunk.write.mode("append").json(landing)
@@ -387,7 +387,7 @@ def _drain_chunks_long_lived(
     Restart-from-checkpoint recovery itself stays pinned by
     tests/test_streaming.py::test_streaming_sessions_gap_boundary_and_merge,
     which still starts a fresh query per batch over a shared checkpoint,
-    and by the hybrid ingest stream's ::test_restart_* tests, which stop
+    and by the ingest stream's ::test_restart_* tests, which stop
     a stream at each commit boundary and restart it on its checkpoint.
 
     Chunk atomicity: each chunk is staged as a single parquet file and

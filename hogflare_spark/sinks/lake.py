@@ -23,12 +23,14 @@ delegates maintenance to the platform. Here the engine owns the sink:
   into a fresh data directory and commit an entry that swaps the old
   leaves for the new ones (Iceberg's rewrite_data_files and a
   copy-on-write DELETE), then delete the replaced leaves.
-- `upsert_table`: MERGE-equivalent keyed upsert for the persons/groups
-  dimension tables — new snapshot wins per key, committed as a new log
-  version. With an Iceberg catalog this whole function is
+- `upsert_table`: the one writer of the persons/groups tables, batch
+  and stream alike. Every commit writes its rows as a keyed delta over
+  its base entry (merge-on-read, last writer wins per key); once an
+  entry holds COMPACT_AFTER_DELTAS deltas, the next commit writes the
+  merged view as a new base instead. With an Iceberg catalog this is
   `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`; the log is the
   filesystem stand-in for Iceberg's atomic snapshot commit, kept because
-  this container ships no Iceberg runtime jars.
+  no Iceberg runtime jars are available to the engine.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +50,11 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+# a state table's entry holds at most this many deltas over its base; the
+# upsert that finds that many writes the merged view as a new base
+COMPACT_AFTER_DELTAS = 16
+# how many lost commit races an unpinned upsert redoes before it gives up
+UPSERT_RETRIES = 10
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +73,7 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 #   max_id           the largest person `id` in the view, when known
 #   txns             {app_id: batch_id}: the last batch of every writer
 #                    application recorded so far (carried forward)
-#   committed_batch  the data directory this commit wrote (a delta-lane
+#   committed_batch  the data directory this commit wrote (a delta
 #                    commit's is its last delta)
 #   schema           the written frame's schema (StructType JSON, every
 #                    field nullable, as parquet inference would return
@@ -85,8 +93,8 @@ class CommitConflict(RuntimeError):
     """Another writer committed since this writer's merge base was read.
 
     The Iceberg-style optimistic-concurrency signal: the caller must
-    re-read the table and redo its merge (upsert_table does this
-    automatically)."""
+    re-read the table and redo its merge (an unpinned upsert_table does
+    this itself)."""
 
 
 def _log_path(root: str, version: int) -> str:
@@ -142,9 +150,9 @@ def table_view(
 ) -> DataFrame | None:
     """The table as of `entry`: base ∪ deltas, last writer wins per key.
     A winning tombstone (a delta row with a NULL `uuid`, written by the
-    stream's delta lane when a merge absorbs a canonical_id) retires its
-    key. Read with `schema`, or else with the schema the entry records,
-    so building the view runs no Spark job."""
+    stream when a merge absorbs a canonical_id) retires its key. Read
+    with `schema`, or else with the schema the entry records, so
+    building the view runs no Spark job."""
     if entry is None:
         return None
     reader = spark.read.schema(
@@ -274,48 +282,68 @@ def _commit_version(
     return version
 
 
+def _columns(schema: dict) -> dict:
+    """A schema JSON's column name → type, nullability normalized."""
+    return {f["name"]: f["type"] for f in _nullable(schema)["fields"]}
+
+
 def upsert_table(
     spark: SparkSession,
     updates: DataFrame,
     root: str,
     key_cols: list[str],
-    schema=None,
-    max_retries: int = 10,
-    allow_schema_evolution: bool = False,
+    base: dict | None | Literal["latest"] = "latest",
+    txn: tuple[str, int] | None = None,
+    max_id: int | None = None,
 ) -> int:
-    """MERGE-equivalent: rows from `updates` replace current rows with the
-    same key; unmatched current rows survive. Returns the new version.
+    """MERGE-equivalent: rows from `updates` replace the table's rows with
+    the same key (a row with a NULL `uuid` is a tombstone that retires
+    its key); other rows survive. Returns the new version, whose entry
+    records `txn` and `max_id`.
 
-    Plan shape: one left-anti join (current minus updated keys) + union —
-    both sides shuffle on the key, which is exactly Iceberg's merge-on-read
-    write amplification; at 100 TB you'd partition the dimension tables by
-    a key hash so the anti join co-partitions.
+    The commit builds on `base` (a log entry, None for the empty table,
+    or "latest"): `updates` become the base of an empty table, else one
+    more delta over `base`. Once `base` holds COMPACT_AFTER_DELTAS
+    deltas, the commit writes the merged view as the new base instead:
+    the view minus the updated keys (a left-anti join) plus the updates,
+    tombstones dropped. With an Iceberg catalog this is `MERGE INTO t
+    USING s ON ... WHEN MATCHED UPDATE *` plus its rewrite_data_files.
+    `updates` must have the columns and types `base` records, in any
+    order; a mismatch raises ValueError before anything is written.
 
-    Concurrency: optimistic, like an Iceberg commit. The commit creates
-    the log entry after the merge base exclusively; a conflicting commit
-    re-reads the new current table and redoes the merge, so interleaved
-    upserts serialize and neither one's rows are lost.
-
-    `allow_schema_evolution=True` permits add-column evolution in either
-    direction (Iceberg's by-name ADD COLUMN, CATALOG.md §4): surviving
-    current rows take NULL for columns only the updates carry, and vice
-    versa. Left off by default so an accidental column mismatch fails
-    loudly instead of silently widening the table.
+    Concurrency: optimistic, like an Iceberg commit. A writer pinned to
+    an entry (the stream, whose fold was seeded from it) gets
+    CommitConflict when another writer committed first; an unpinned
+    upsert re-reads the latest entry and commits again, up to
+    UPSERT_RETRIES times, so interleaved upserts lose no rows.
     """
-    for _ in range(max_retries):
-        base = _latest_version(root)
-        current = None if base is None else read_table(spark, root, schema, base)
-        if current is None:
-            merged = updates
-        else:
-            merged = current.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_anti"
-            ).unionByName(updates, allowMissingColumns=allow_schema_evolution)
+    pinned = base != "latest"
+    for _ in range(1 if pinned else UPSERT_RETRIES):
+        entry = base if pinned else read_entry(root)
+        df, delta = updates, False
+        if entry is not None:
+            columns = _columns(entry["schema"])
+            if _columns(updates.schema.jsonValue()) != columns:
+                raise ValueError(
+                    f"{root}: upsert columns {updates.columns} do not match "
+                    f"the table's {list(columns)} (or their types differ)"
+                )
+            df = updates.select(*columns)
+            delta = len(entry["deltas"]) < COMPACT_AFTER_DELTAS
+            if not delta:
+                df = table_view(spark, root, entry).join(
+                    df.select(*key_cols).distinct(), key_cols, "left_anti"
+                ).unionByName(df)
+                if "uuid" in columns:
+                    df = df.where(F.col("uuid").isNotNull())
         try:
-            return _commit_version(merged, root, base, keys=key_cols)
+            return _commit_version(
+                df, root, entry and entry["version"], key_cols, delta, max_id, txn
+            )
         except CommitConflict:
-            continue
-    raise CommitConflict(f"{root}: upsert lost {max_retries} commit races")
+            if pinned:
+                raise
+    raise CommitConflict(f"{root}: upsert lost {UPSERT_RETRIES} commit races")
 
 
 # ---------------------------------------------------------------------------

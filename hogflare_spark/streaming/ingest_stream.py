@@ -9,12 +9,13 @@ src/persons.rs:488-541). The Spark realization is micro-batch:
   identically via format("kafka")).
 - `StreamingIngestJob`: foreachBatch incremental fold. Each micro-batch
   decodes + normalizes its requests, seeds the person/group folds with
-  the prior state version, and commits its events, groups and persons
-  to lake's table log: an events append, and for each state table a new
-  base or (hybrid mode) a delta of the rows the batch touched. Every
-  commit records the transaction (run, batch id), so a batch Spark
-  re-runs after a stop recomputes from the version before its own entry
-  and commits nothing twice (see the class docstring).
+  the prior rows its ids touch, and commits its events, groups and
+  persons to lake's table log: an events append, and for each state
+  table a `lake.upsert_table` of the rows the batch touched (a delta, or
+  a compaction once the table holds enough deltas). Every commit records
+  the transaction (run, batch id), so a batch Spark re-runs after a stop
+  recomputes from the version before its own entry and commits nothing
+  twice (see the class docstring).
 - `windowed_event_counts`: event-time tumbling-window aggregation with a
   watermark — the late-data policy the reference never had (SURVEY.md
   §2.6 "Streaming" row documents the divergence).
@@ -68,19 +69,19 @@ class StreamingIngestJob:
     """Incremental ingest: micro-batches append to the events table and
     fold into the persons and groups tables, all on lake's table log.
 
-    ``hybrid=True`` enables the alias-aware routing the reference's DO
-    model gets for free (persons.rs:281-326 merges are per-key there):
-    once a table has a base, each micro-batch seeds the fold with only
-    the persons its distinct_ids touch (alias endpoints included) and
-    commits a DELTA of changed rows — O(batch), not O(all persons) — so
-    steady capture traffic never rewrites or replays the full persons
-    table. Every ``max_person_deltas``-th commit (bounding read
-    amplification) takes the complete-semantics full fold, which doubles
-    as delta compaction. Groups get the same delta lane — group ops are
-    always per-(type,key) LWW upserts (groups.rs), there is no group
-    analogue of an alias merge to route around. Both lanes produce
-    byte-identical state to the one-shot batch fold
-    (tests/test_streaming.py hybrid convergence tests).
+    The folds are seeded the way the reference's DO model routes a
+    request to its per-key state (persons.rs:281-326 merges are per-key
+    there): once a table has a base, each micro-batch seeds the person
+    fold with only the persons its distinct_ids touch (alias endpoints
+    included) and the group fold with only the groups it touches, and
+    commits the fold output as one `lake.upsert_table` delta over the
+    entry it seeded from: O(batch), not O(all persons). Persons a batch
+    merge absorbs get tombstone rows. The upsert that finds
+    ``lake.COMPACT_AFTER_DELTAS`` deltas compacts the table by a view
+    merge in Spark, so no batch replays the whole persons table through
+    Python. The state equals the one-shot batch fold's
+    (tests/test_streaming.py convergence tests). ``hybrid`` is kept only
+    as a keyword whose one legal value is True.
 
     Exactly-once: each table commit records the transaction
     (``run_id``, batch id); ``run_id`` defaults to the checkpoint path,
@@ -105,15 +106,14 @@ class StreamingIngestJob:
         warehouse_dir: str,
         team_id: int | None = None,
         group_types: tuple[str | None, ...] = (None, None, None, None, None),
-        hybrid: bool = False,
-        max_person_deltas: int = 16,
+        hybrid: bool = True,
         run_id: str | None = None,
     ):
+        if not hybrid:
+            raise ValueError("StreamingIngestJob has one lane: hybrid must be True")
         self.warehouse_dir = warehouse_dir
         self.team_id = team_id
         self.group_types = group_types
-        self.hybrid = hybrid
-        self.max_person_deltas = max_person_deltas
         self.events_dir = os.path.join(warehouse_dir, "events")
         # The writer (app) id of every table transaction. Spark batch ids
         # restart at 0 with a fresh checkpoint, so a NEW stream's batch N
@@ -197,30 +197,14 @@ class StreamingIngestJob:
         e_held = lake.seed_entry(self.events_dir, app_id, batch_id)[1]
 
         commands = cached(decode_normalize_requests(batch_df))
-        # The delta lane takes EVERY batch once a base exists (up to the
-        # delta-compaction cap) — including alias batches: the seed below
-        # is the prior components the batch's ids touch, and both
-        # endpoints of every alias edge are in the touched set, so a
-        # cross-key merge folds correctly against its restricted seed.
-        # Records absorbed by a merge get tombstone rows in the delta
-        # (uuid NULL) so the read view drops their stale base rows.
-        person_fast = (
-            self.hybrid
-            and p_seed is not None
-            and len(p_seed["deltas"]) < self.max_person_deltas
-        )
-        group_fast = (
-            self.hybrid
-            and g_seed is not None
-            and len(g_seed["deltas"]) < self.max_person_deltas
-        )
-        prior_persons = lake.table_view(spark, p_root, p_seed, PERSON_SCHEMA)
-        prior_groups = lake.table_view(spark, g_root, g_seed, GROUP_SCHEMA)
-        seed_persons, floor = prior_persons, None
-        if person_fast:
-            # seed only the persons whose distinct_ids this batch touches
-            # (alias endpoints included); untouched rows stay in
-            # base/deltas and are never replayed.
+        # Every batch after the bootstrap seeds only the prior components
+        # its ids touch: both endpoints of every alias edge are in the
+        # touched set, so a cross-key merge folds correctly against the
+        # restricted seed; untouched rows stay in base/deltas and are
+        # never replayed.
+        seed_persons = seed_groups = affected_ids = floor = None
+        if p_seed is not None:
+            prior_persons = lake.table_view(spark, p_root, p_seed, PERSON_SCHEMA)
             touched = self._touched_distinct_ids(commands)
             affected_ids = (
                 prior_persons.select(
@@ -240,14 +224,13 @@ class StreamingIngestJob:
                     F.coalesce(F.max("id"), F.lit(0)).alias("m")
                 ).collect()[0]
                 floor = int(row["m"] or 0)
-        seed_groups = prior_groups
-        if group_fast:
+        if g_seed is not None:
             touched_keys = (
                 derive_group_ops(commands)
                 .select("group_type", "group_key")
                 .distinct()
             )
-            seed_groups = prior_groups.join(
+            seed_groups = lake.table_view(spark, g_root, g_seed, GROUP_SCHEMA).join(
                 F.broadcast(touched_keys), ["group_type", "group_key"], "semi"
             )
         out = ingest_commands(
@@ -263,22 +246,21 @@ class StreamingIngestJob:
             lake.append_events(out["events"], self.events_dir, txn)
         # pinned once: the persons commit, the max-id aggregate and the
         # tombstone anti-join below read it; the groups are a filter of
-        # the group fold's pinned output, read only by their commit
+        # the group fold's pinned output
         new_persons = out["persons"].localCheckpoint(eager=True)
-        new_groups = out["groups"]
         if not g_held:
-            # a delta commit holds ONLY touched ∪ newly-created keys
-            lake._commit_version(
-                new_groups, g_root, g_seed and g_seed["version"],
-                keys=["group_type", "group_key"], delta=group_fast, txn=txn,
+            # touched ∪ newly-created keys only
+            lake.upsert_table(
+                spark, out["groups"], g_root, ["group_type", "group_key"],
+                base=g_seed, txn=txn,
             )
         if p_held:
             return
         row = new_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
         max_id = int(row["m"] or 0)
-        if person_fast:
-            # new_persons holds ONLY affected ∪ newly-created rows here.
-            # A seeded canonical_id missing from the fold output was
+        if affected_ids is not None:
+            # new_persons holds ONLY affected ∪ newly-created rows. A
+            # seeded canonical_id missing from the fold output was
             # absorbed by a batch merge — write a tombstone (uuid NULL)
             # so the LWW read view retires its stale base/delta row.
             gone = affected_ids.join(
@@ -294,9 +276,9 @@ class StreamingIngestJob:
             )
             new_persons = new_persons.unionByName(tombstones)
             max_id = max(floor, max_id)
-        lake._commit_version(
-            new_persons, p_root, p_seed and p_seed["version"],
-            keys=["canonical_id"], delta=person_fast, max_id=max_id, txn=txn,
+        lake.upsert_table(
+            spark, new_persons, p_root, ["canonical_id"],
+            base=p_seed, txn=txn, max_id=max_id,
         )
 
     def start(

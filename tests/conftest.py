@@ -40,13 +40,12 @@ _SLOW_TESTS = {
     "test_llm_pipeline.py::test_scale_checks_machinery_on_base_sf",
     "test_llm_pipeline.py::test_stratified_sample_prefilter_exact_vs_plain_window",
     "test_llm_pipeline.py::test_ivf_partitioned_index_prunes_and_matches",
-    "test_streaming.py::test_batch_replay_is_idempotent_both_lanes",
+    "test_streaming.py::test_batch_replay_is_idempotent",
     "test_streaming.py::test_streaming_chaos_batch_splits_match_batch_fold",
-    "test_streaming.py::test_hybrid_streaming_chaos_splits_match_batch_fold",
-    "test_streaming.py::test_hybrid_streaming_fast_lane_converges_to_batch_fold",
+    "test_streaming.py::test_streaming_alias_deltas_converge_to_batch_fold",
     "test_streaming.py::test_alias_delta_batch_replay_is_a_rewrite",
     "test_streaming.py::test_fresh_checkpoint_new_run_is_not_a_replay",
-    "test_streaming.py::test_hybrid_streaming_group_delta_lane_converges",
+    "test_streaming.py::test_streaming_group_deltas_converge",
     "test_person_fold_property.py::test_distributed_fold_equals_sequential_replay",
     "test_group_fold.py::test_group_fold_property_matches_sequential_lww",
     "test_hot_key_fold.py::test_hot_key_million_ops_default_settings",

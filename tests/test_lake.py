@@ -164,7 +164,7 @@ def test_events_rewrite_conflicts_when_its_leaf_was_replaced(spark, tmp_path, mo
 
 
 def test_upsert_table_merge_semantics(spark, tmp_path):
-    from hogflare_spark.sinks.lake import read_table, upsert_table
+    from hogflare_spark.sinks.lake import read_entry, read_table, upsert_table
 
     root = str(tmp_path / "persons")
     v1 = spark.createDataFrame(
@@ -179,11 +179,85 @@ def test_upsert_table_merge_semantics(spark, tmp_path):
 
     got = {r["key"]: r["val"] for r in read_table(spark, root).collect()}
     assert got == {"a": 1, "b": 20, "c": 3}
+    # the second upsert wrote only its own rows, as a delta over the base
+    entry = read_entry(root)
+    assert entry["deltas"] == [entry["committed_batch"]]
+    assert entry["base"] == read_entry(root, 1)["base"]
+    assert spark.read.parquet(os.path.join(root, entry["deltas"][0])).count() == 2
+
+
+def _ids(df):
+    return sorted(r["canonical_id"] for r in df.collect())
+
+
+def test_upsert_compacts_after_deltas(spark, tmp_path, monkeypatch):
+    """The upsert that finds COMPACT_AFTER_DELTAS deltas writes the merged
+    view as a new base: tombstones dropped, the view unchanged, its txn
+    and max_id recorded."""
+    from hogflare_spark.schemas import PERSON_SCHEMA
+    from hogflare_spark.sinks import lake
+
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 2)
+    root = str(tmp_path / "persons")
+    lake.upsert_table(spark, _person_frame(spark, range(4)), root, ["canonical_id"])
+    tombstone = _person_frame(spark, [1]).select(
+        "canonical_id",
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in PERSON_SCHEMA.fields if f.name != "canonical_id"],
+    )
+    lake.upsert_table(spark, tombstone, root, ["canonical_id"])
+    lake.upsert_table(spark, _person_frame(spark, [2, 7]), root, ["canonical_id"])
+    assert len(lake.read_entry(root)["deltas"]) == 2
+    lake.upsert_table(
+        spark, _person_frame(spark, [8]), root, ["canonical_id"], txn=("app", 5), max_id=8
+    )
+    entry = lake.read_entry(root)
+    assert entry["version"] == 4 and entry["deltas"] == []
+    assert entry["base"] == entry["committed_batch"]
+    assert entry["txns"] == {"app": 5} and entry["max_id"] == 8
+    base = spark.read.parquet(os.path.join(root, entry["base"]))
+    assert _ids(base) == _ids(lake.read_table(spark, root)) == ["c0", "c2", "c3", "c7", "c8"]
+
+
+@pytest.mark.parametrize("deltas", [0, 2], ids=["delta", "compaction"])
+def test_upsert_stopped_before_its_entry_changes_nothing(spark, tmp_path, monkeypatch, deltas):
+    """An upsert killed between its data write and its log entry leaves
+    the table as it was, with no entry added; running it again commits
+    it once. `deltas` deltas precede it (2 = the threshold, so the
+    stopped upsert is a compaction)."""
+    from hogflare_spark.sinks import lake
+
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 2)
+    root = str(tmp_path / "persons")
+    lake.upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    for i in range(deltas):
+        lake.upsert_table(spark, _person_frame(spark, [10 + i]), root, ["canonical_id"])
+    before = _ids(lake.read_table(spark, root))
+    latest = lake.read_entry(root)
+
+    def dies(path, text):
+        raise RuntimeError("stopped before the entry")
+
+    create = lake._create_exclusive
+    monkeypatch.setattr(lake, "_create_exclusive", dies)
+    update = _person_frame(spark, [1, 20])
+    with pytest.raises(RuntimeError, match="stopped before the entry"):
+        lake.upsert_table(spark, update, root, ["canonical_id"])
+    monkeypatch.setattr(lake, "_create_exclusive", create)
+    assert lake.read_entry(root) == latest
+    assert _ids(lake.read_table(spark, root)) == before
+
+    lake.upsert_table(spark, update, root, ["canonical_id"])
+    entry = lake.read_entry(root)
+    assert entry["version"] == latest["version"] + 1
+    assert len(entry["deltas"]) == (0 if deltas == 2 else deltas + 1)
+    assert _ids(lake.read_table(spark, root)) == sorted({*before, "c20"})
 
 
 def test_upsert_conflict_detected_and_retried(spark, tmp_path):
     """Lost-update protection: a commit whose merge base moved must raise
-    CommitConflict (and upsert_table's retry must then merge correctly)."""
+    CommitConflict (and an unpinned upsert_table's retry must then merge
+    correctly)."""
     from hogflare_spark.sinks.lake import (
         CommitConflict,
         _commit_version,
@@ -345,32 +419,29 @@ def test_bucketed_join_plans_with_zero_exchanges(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS pe_bucketed_t")
 
 
-def test_upsert_table_schema_evolution(spark, tmp_path):
-    """Add-column evolution (Iceberg by-name ADD COLUMN): an upsert whose
-    rows carry a NEW column widens the table, surviving rows reading NULL
-    for it; without the opt-in flag the mismatch fails loudly."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from hogflare_spark.sinks.lake import read_table, upsert_table
+def test_mismatched_upsert_raises_and_commits_nothing(spark, tmp_path):
+    """An upsert whose columns or types differ from the schema its base
+    entry records raises before it writes anything: no entry, no data
+    directory, the table unchanged."""
+    from hogflare_spark.sinks.lake import read_entry, read_table, upsert_table
 
     root = str(tmp_path / "dim")
-    v0 = spark.range(0, 4).select(F.col("id"), F.lit("a").alias("val"))
-    upsert_table(spark, v0, root, ["id"])
-
-    widened = spark.range(2, 6).select(
-        F.col("id"), F.lit("b").alias("val"), F.lit(9).alias("extra")
-    )
-    # default: loud failure, no partial commit
-    with _pytest.raises(Exception):
-        upsert_table(spark, widened, root, ["id"])
+    upsert_table(spark, spark.range(0, 4).select("id", F.lit("a").alias("val")), root, ["id"])
+    entry, listing = read_entry(root), sorted(os.listdir(root))
+    mismatched = [
+        spark.range(2, 6).select("id", F.lit("b").alias("val"), F.lit(9).alias("extra")),
+        spark.range(2, 6).select("id"),
+        spark.range(2, 6).select("id", F.lit(1).alias("val")),
+    ]
+    for updates in mismatched:
+        with pytest.raises(ValueError, match="do not match"):
+            upsert_table(spark, updates, root, ["id"])
+    assert read_entry(root) == entry and sorted(os.listdir(root)) == listing
     assert read_table(spark, root).columns == ["id", "val"]
-
-    upsert_table(spark, widened, root, ["id"], allow_schema_evolution=True)
-    out = {r["id"]: r for r in read_table(spark, root).collect()}
-    assert set(out) == {0, 1, 2, 3, 4, 5}
-    assert out[0]["val"] == "a" and out[0]["extra"] is None
-    assert out[5]["val"] == "b" and out[5]["extra"] == 9
+    # the same columns in another order are the same schema
+    upsert_table(spark, spark.range(5, 6).select(F.lit("c").alias("val"), "id"), root, ["id"])
+    assert read_table(spark, root).columns == ["id", "val"]
+    assert read_table(spark, root).count() == 5
 
 
 def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
@@ -459,8 +530,7 @@ def _person_frame(spark, ids):
 def test_read_table_schema_equals_parquet_inference(spark, tmp_path):
     """The schema a log entry records reads back exactly as parquet
     inference of the data directory would: persons (maps, arrays,
-    timestamps, non-nullable fields), groups, and a table widened by
-    schema evolution."""
+    timestamps, non-nullable fields) and groups."""
     from datetime import datetime, timezone
 
     from hogflare_spark.schemas import GROUP_SCHEMA
@@ -484,13 +554,6 @@ def test_read_table_schema_equals_parquet_inference(spark, tmp_path):
         ["group_type", "group_key"],
     )
     assert_round_trip(groups)
-
-    dim = str(tmp_path / "dim")
-    upsert_table(spark, spark.range(0, 3).select("id", F.lit("a").alias("val")), dim, ["id"])
-    widened = spark.range(2, 5).select("id", F.lit("b").alias("val"), F.lit(9).alias("extra"))
-    upsert_table(spark, widened, dim, ["id"], allow_schema_evolution=True)
-    assert read_table(spark, dim).columns == ["id", "val", "extra"]
-    assert_round_trip(dim)
 
 
 def test_read_table_runs_no_spark_job(spark, tmp_path):

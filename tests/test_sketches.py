@@ -31,23 +31,30 @@ def test_approx_distinct_within_rsd(spark):
         assert r["approx_within_5pct"], f"{k}: HLL++ estimate off by >5%"
 
 
-def test_time_travel_and_expiration(spark, tmp_path):
-    from hogflare_spark.sinks.lake import expire_versions, read_table, upsert_table
+def test_time_travel_and_expiration(spark, tmp_path, monkeypatch):
+    from hogflare_spark.sinks import lake
+    from hogflare_spark.sinks.lake import expire_versions, read_entry, read_table, upsert_table
 
+    # the third upsert compacts, so versions 1 and 2 share a base that
+    # only they name
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 1)
     root = str(tmp_path / "dim")
     upsert_table(spark, spark.createDataFrame([Row(key="a", val=1)]), root, ["key"])
     upsert_table(spark, spark.createDataFrame([Row(key="a", val=2)]), root, ["key"])
     upsert_table(spark, spark.createDataFrame([Row(key="a", val=3)]), root, ["key"])
+    assert read_entry(root)["deltas"] == []
 
     assert read_table(spark, root).collect()[0]["val"] == 3
     assert read_table(spark, root, version=1).collect()[0]["val"] == 1
     assert read_table(spark, root, version=2).collect()[0]["val"] == 2
 
-    dropped = expire_versions(root, keep_last=2)
-    assert dropped == [1]
+    assert expire_versions(root, keep_last=2) == []  # version 2 still names the base
+    dropped = expire_versions(root, keep_last=1)
+    assert dropped == [1, 2]
     assert read_table(spark, root).collect()[0]["val"] == 3
-    try:
-        read_table(spark, root, version=1)
-        raise AssertionError("expired version must not be readable")
-    except FileNotFoundError:
-        pass
+    for version in dropped:
+        try:
+            read_table(spark, root, version=version)
+            raise AssertionError("expired version must not be readable")
+        except FileNotFoundError:
+            pass

@@ -144,7 +144,7 @@ CHAOS_SPLITS = [
 def test_streaming_chaos_batch_splits_match_batch_fold(spark, tmp_path):
     """VERDICT r1 item 10: whatever micro-batch boundaries the stream
     commits under, the final persons table equals the one-shot batch fold
-    over the same ordered ops."""
+    over the same ordered ops; every post-bootstrap batch is a delta."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.streaming.ingest_stream import (
         StreamingIngestJob,
@@ -192,13 +192,15 @@ def test_streaming_chaos_batch_splits_match_batch_fold(spark, tmp_path):
         p2 = got["person-2"]
         assert "anon-2" in p2["distinct_ids"] and "email" not in p2["properties"]
         assert json.loads(p2["properties_set_once"]["src"]) == "ad"
+        # the bootstrap wrote the base, every later batch one delta
+        assert len(job._read_pointer("persons")["deltas"]) == len(split) - 1, split
 
 
-HYBRID_OPS = [
+DELTA_OPS = [
     _capture(1, "anon-1", {"$set": {"plan": "free"}}),
     _capture(2, "u2", {"$set": {"t": "x"}}),
     _alias(3, "user-1", "anon-1"),  # cross-key merge → touched-component
-    # delta: both edge endpoints are in the touched set, so the lane
+    # delta: both edge endpoints are in the touched set, so the batch
     # seeds anon-1's record, merges it into user-1, and writes a
     # tombstone retiring the absorbed canonical id
     _capture(4, "anon-1", {"$set": {"plan": "pro"}}),  # touches the merged
@@ -210,11 +212,11 @@ HYBRID_OPS = [
 ]
 
 
-def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
+def test_streaming_alias_deltas_converge_to_batch_fold(spark, tmp_path):
     """VERDICT r3 item 4 (+ r4 item 7): a mixed stream (captures + late
-    alias) through the hybrid job — EVERY post-bootstrap batch takes the
-    O(touched components) delta lane, alias batches included — converges
-    to the one-shot batch fold, ids included."""
+    alias) — EVERY post-bootstrap batch commits an O(touched components)
+    delta, alias batches included — converges to the one-shot batch
+    fold, ids included."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.sinks.lake import read_entry
     from hogflare_spark.streaming.ingest_stream import (
@@ -225,14 +227,13 @@ def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
     landing = str(tmp_path / "landing")
     warehouse = str(tmp_path / "wh")
     ckpt = str(tmp_path / "ck")
-    job = StreamingIngestJob(warehouse, hybrid=True)
+    job = StreamingIngestJob(warehouse)
 
     for bi, (start, end) in enumerate([(0, 2), (2, 3), (3, 6)]):
-        _write_batch(landing, f"b{bi}.json", HYBRID_OPS[start:end])
+        _write_batch(landing, f"b{bi}.json", DELTA_OPS[start:end])
         job.run_available_now(read_request_stream(spark, landing), ckpt)
 
-    # the alias micro-batch (batch id 1) is a DELTA, not a full rewrite:
-    # the latest entry keeps batch 0's base with both later batches
+    # the alias micro-batch (batch id 1) is a DELTA: the latest entry keeps batch 0's base with both later batches
     # stacked as deltas
     pointer = job._read_pointer("persons")
     assert pointer["version"] == 3 and len(pointer["deltas"]) == 2, pointer
@@ -249,7 +250,7 @@ def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
 
     batch_raw = spark.createDataFrame(
         [Row(request_seq=r["request_seq"], endpoint=r["endpoint"], body=r["body"])
-         for r in HYBRID_OPS]
+         for r in DELTA_OPS]
     )
     want = {
         r["canonical_id"]: r
@@ -270,55 +271,7 @@ def test_hybrid_streaming_fast_lane_converges_to_batch_fold(spark, tmp_path):
     assert set(merged["distinct_ids"]) == {"user-1", "anon-1"}
     assert "t" not in got["u2"]["properties"]
     events = spark.read.parquet(os.path.join(warehouse, "events"))
-    assert events.count() == len(HYBRID_OPS)
-
-
-def test_hybrid_streaming_chaos_splits_match_batch_fold(spark, tmp_path):
-    """The chaos scenario through the hybrid job: whatever the batch
-    boundaries, and whichever lane each batch takes, the result equals
-    the batch fold (same contract the full-lane chaos test pins)."""
-    from hogflare_spark.operators.ingest import ingest_raw_requests
-    from hogflare_spark.streaming.ingest_stream import (
-        StreamingIngestJob,
-        read_request_stream,
-    )
-
-    batch_raw = spark.createDataFrame(
-        [Row(request_seq=r["request_seq"], endpoint=r["endpoint"], body=r["body"])
-         for r in CHAOS_OPS]
-    )
-    want = {
-        r["canonical_id"]: r
-        for r in ingest_raw_requests(batch_raw)["persons"].collect()
-    }
-
-    for si, split in enumerate([[1] * 9, [3, 1, 1, 4]]):
-        landing = str(tmp_path / f"hlanding{si}")
-        ckpt = str(tmp_path / f"hckpt{si}")
-        warehouse = str(tmp_path / f"hwh{si}")
-        job = StreamingIngestJob(warehouse, hybrid=True)
-        start = 0
-        for bi, size in enumerate(split):
-            _write_batch(landing, f"b{bi}.json", CHAOS_OPS[start:start + size])
-            start += size
-            job.run_available_now(read_request_stream(spark, landing), ckpt)
-
-        got = {r["canonical_id"]: r for r in job.read_persons(spark).collect()}
-        assert set(got) == set(want), split
-        for cid, w in want.items():
-            g = got[cid]
-            assert sorted(g["distinct_ids"]) == sorted(w["distinct_ids"]), (split, cid)
-            assert g["properties"] == w["properties"], (split, cid)
-            assert g["properties_set_once"] == w["properties_set_once"], (split, cid)
-            assert g["version"] == w["version"], (split, cid)
-        # the one-op-per-batch split must actually have exercised the
-        # delta lane (trailing captures after the last cross-key op)
-        if split == [1] * 9:
-            deltas = [
-                d for d in os.listdir(os.path.join(warehouse, "persons"))
-                if d.startswith("d=")
-            ]
-            assert deltas, "fast lane never engaged"
+    assert events.count() == len(DELTA_OPS)
 
 
 def _group_upsert(seq: int, gtype: str, gkey: str, props: dict | None) -> dict:
@@ -331,10 +284,9 @@ def _group_upsert(seq: int, gtype: str, gkey: str, props: dict | None) -> dict:
     }
 
 
-def test_hybrid_streaming_group_delta_lane_converges(spark, tmp_path):
-    """Group state through the hybrid job's delta lane (groups never have
-    cross-key ops, so every post-bootstrap batch is a delta) equals the
-    one-shot batch fold."""
+def test_streaming_group_deltas_converge(spark, tmp_path):
+    """Group state committed as deltas (every post-bootstrap batch) equals
+    the one-shot batch fold."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.streaming.ingest_stream import (
         StreamingIngestJob,
@@ -344,7 +296,7 @@ def test_hybrid_streaming_group_delta_lane_converges(spark, tmp_path):
     ops = [
         _group_upsert(1, "team", "t1", {"m": 1}),
         _capture(2, "u1", {"$set": {"a": 1}}),
-        # batch 2 (delta lane): new group key + LWW update of t1
+        # batch 2 (a delta): new group key + LWW update of t1
         _group_upsert(3, "team", "t2", {"m": 7}),
         _group_upsert(4, "team", "t1", {"m": 5, "x": "y"}),
         _capture(5, "u1", {"$set": {"a": 2}}),
@@ -352,9 +304,7 @@ def test_hybrid_streaming_group_delta_lane_converges(spark, tmp_path):
     landing = str(tmp_path / "glanding")
     warehouse = str(tmp_path / "gwh")
     ckpt = str(tmp_path / "gck")
-    job = StreamingIngestJob(
-        warehouse, group_types=("company", "team", None, None, None), hybrid=True
-    )
+    job = StreamingIngestJob(warehouse, group_types=("company", "team", None, None, None))
     for bi, (start, end) in enumerate([(0, 2), (2, 5)]):
         _write_batch(landing, f"b{bi}.json", ops[start:end])
         job.run_available_now(read_request_stream(spark, landing), ckpt)
@@ -522,12 +472,12 @@ def _raw_df(spark, rows):
     )
 
 
-def test_batch_replay_is_idempotent_both_lanes(spark, tmp_path):
+def test_batch_replay_is_idempotent(spark, tmp_path):
     """A foreachBatch body can re-run with the same batch id after a
     crash between the state commit and the stream checkpoint. Replays
     must be REWRITES, not re-applications: person/group version counters
     must not double, ids must not advance, and warehouse events must not
-    duplicate — for the full lane AND the hybrid delta lane."""
+    duplicate — for an alias batch and an alias-free one."""
     from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
 
     def snap(job):
@@ -537,46 +487,35 @@ def test_batch_replay_is_idempotent_both_lanes(spark, tmp_path):
         }
         groups = {
             (r["group_type"], r["group_key"]): r["version"]
-            for r in (job.read_groups(spark) or spark.createDataFrame([], "group_type string, group_key string, version long")).collect()
+            for r in job.read_groups(spark).collect()
         }
-        ev_dir = job.events_dir
-        n_events = (
-            spark.read.parquet(ev_dir).count() if os.path.isdir(ev_dir) else 0
-        )
-        return persons, groups, n_events
+        return persons, groups, spark.read.parquet(job.events_dir).count()
 
-    # ---- full lane (non-hybrid job) -----------------------------------
-    job = StreamingIngestJob(str(tmp_path / "wh_full"))
+    job = StreamingIngestJob(str(tmp_path / "wh"))
     job.process_batch(_raw_df(spark, BATCH1), 0)
-    job.process_batch(_raw_df(spark, BATCH2), 1)
+    alias_batch = BATCH2 + [_group_upsert(9, "company", "acme", {"size": 2})]
+    job.process_batch(_raw_df(spark, alias_batch), 1)
     want = snap(job)
-    job.process_batch(_raw_df(spark, BATCH2), 1)  # checkpoint replay
+    job.process_batch(_raw_df(spark, alias_batch), 1)  # checkpoint replay
     assert snap(job) == want
-    # and a replay of a replay
-    job.process_batch(_raw_df(spark, BATCH2), 1)
+    job.process_batch(_raw_df(spark, alias_batch), 1)  # replay of a replay
     assert snap(job) == want
 
-    # ---- hybrid job: batch 1 (alias) takes the full lane, batch 2
-    # (alias-free) the delta lane; replay each ----------------------------
-    hj = StreamingIngestJob(str(tmp_path / "wh_hybrid"), hybrid=True)
-    hj.process_batch(_raw_df(spark, BATCH1), 0)
-    hj.process_batch(_raw_df(spark, BATCH2), 1)  # alias -> full lane
-    delta_batch = [
+    capture_batch = [
         _capture(6, "user-1", {"$set": {"plan": "max"}}),
         _capture(7, "anon-2", {"$set": {"color": "blue"}}),
     ]
-    hj.process_batch(_raw_df(spark, delta_batch), 2)  # delta lane
-    want_h = snap(hj)
-    hj.process_batch(_raw_df(spark, delta_batch), 2)  # replay delta
-    assert snap(hj) == want_h
-    hj.process_batch(_raw_df(spark, delta_batch), 2)  # replay of a replay
-    assert snap(hj) == want_h
+    job.process_batch(_raw_df(spark, capture_batch), 2)
+    want = snap(job)
+    job.process_batch(_raw_df(spark, capture_batch), 2)
+    assert snap(job) == want
     # a later batch after the replays converges normally
-    hj.process_batch(_raw_df(spark, [_capture(8, "user-1", {"$set": {"z": 1}})]), 3)
-    final = snap(hj)
-    assert final[0]["user-1"][0] == want_h[0]["user-1"][0] + 1  # one more version
-    hj.process_batch(_raw_df(spark, [_capture(8, "user-1", {"$set": {"z": 1}})]), 3)
-    assert snap(hj) == final  # and batch 3's replay is a rewrite too
+    later = [_capture(8, "user-1", {"$set": {"z": 1}})]
+    job.process_batch(_raw_df(spark, later), 3)
+    final = snap(job)
+    assert final[0]["user-1"][0] == want[0]["user-1"][0] + 1  # one more version
+    job.process_batch(_raw_df(spark, later), 3)
+    assert snap(job) == final  # and batch 3's replay is a rewrite too
 
 
 def test_fresh_checkpoint_new_run_is_not_a_replay(spark, tmp_path):
@@ -626,7 +565,7 @@ def test_alias_delta_batch_replay_is_a_rewrite(spark, tmp_path):
     from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
 
     wh = str(tmp_path / "wh")
-    job = StreamingIngestJob(wh, hybrid=True, run_id="r")
+    job = StreamingIngestJob(wh, run_id="r")
     job.process_batch(_raw_df(spark, BATCH1), 0)  # bootstrap: anon-1, anon-2
 
     alias_batch = [
@@ -695,7 +634,136 @@ def test_resume_after_interleaved_writer_is_exactly_once(spark, tmp_path):
 
 
 
-# ---- a real hybrid stream stopped at each commit boundary, then restarted
+def test_hybrid_keyword_accepts_only_true():
+    from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
+
+    StreamingIngestJob("unused", hybrid=True)
+    with pytest.raises(ValueError):
+        StreamingIngestJob("unused", hybrid=False)
+
+
+# batch 3 is the compacting one (COMPACT_AFTER_DELTAS lowered to 2);
+# merges land on both sides of it
+COMPACTION_BATCHES = [
+    [
+        _capture(1, "anon-1", {"$set": {"plan": "free"}}),
+        _capture(2, "u2", {"$set": {"t": "x"}}),
+        _capture(3, "anon-3", {"$set": {"a": 1}}),
+        _group_upsert(4, "company", "acme", {"size": 1}),
+    ],
+    [
+        _alias(5, "user-1", "anon-1"),
+        _capture(6, "user-1", {"$set": {"plan": "pro"}}),
+    ],
+    [
+        _capture(7, "u2", {"$set": {"t": "y"}}),
+        _group_upsert(8, "company", "acme", {"size": 2}),
+    ],
+    [
+        _capture(9, "anon-1", {"$set": {"n": 1}}),
+        _capture(10, "fresh", {"$set": {"k": 1}}),
+        _group_upsert(11, "company", "beta", {"tier": "gold"}),
+    ],
+    [
+        _alias(12, "user-1", "anon-3"),
+        _capture(13, "anon-3", {"$set": {"z": 2}}),
+        _identify(14, "person-4", {"$set": {"e": "x"}}, anon="u2"),
+    ],
+]
+
+
+def _replay_persons(rows):
+    """canonical_id → (distinct_ids, properties, set_once, version) after
+    replaying the person ops of capture/alias/identify rows through one
+    PersonStoreReplay
+    (the reference's per-key store, in arrival order)."""
+    from hogflare_spark.operators.person_store import PersonStoreReplay
+
+    store = PersonStoreReplay("replay", None)
+    for row in rows:
+        if row["endpoint"] == "groups":  # no person op
+            continue
+        body, seq = json.loads(row["body"]), (row["request_seq"], 0, 1)
+        op_time = (None, row["request_seq"] * 1_000_000 + 1)
+        if row["endpoint"] == "alias":
+            store.apply_alias(body["distinct_id"], body["alias"], op_time, seq)
+            continue
+        if row["endpoint"] == "identify":
+            store.apply_alias(body["distinct_id"], body["$anon_distinct_id"], op_time,
+                              (row["request_seq"], 0, 0))
+        props = body.get("properties", {})
+        if {"$set", "$set_once", "$unset"} & props.keys():
+            store.apply_update({
+                "distinct_id": body["distinct_id"],
+                "set": props.get("$set", {}),
+                "set_once": props.get("$set_once", {}),
+                "unset": props.get("$unset", []),
+            }, op_time, seq)
+        else:
+            store.ensure_person(body["distinct_id"], op_time, seq)
+    return {
+        cid: (sorted(r.distinct_ids),
+              {k: json.dumps(v, separators=(",", ":")) for k, v in r.properties.items()},
+              {k: json.dumps(v, separators=(",", ":"))
+               for k, v in r.properties_set_once.items()},
+              r.version)
+        for cid, r in store.records.items()
+    }
+
+
+def test_stream_across_a_compaction_matches_batch_fold(spark, tmp_path, monkeypatch):
+    """A stream whose persons and groups tables compact mid-way, with
+    alias merges before and after the compaction, ends with the state of
+    the one-shot batch fold and of a sequential PersonStoreReplay. The
+    compacting entry is a base with no deltas that records its txn and
+    max_id, and a replay of the compacting batch is a rewrite."""
+    from hogflare_spark.operators.ingest import ingest_raw_requests
+    from hogflare_spark.sinks import lake
+    from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
+
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 2)
+    group_types = ("company", None, None, None, None)
+    job = StreamingIngestJob(str(tmp_path / "wh"), group_types=group_types, run_id="r")
+
+    def entries():
+        return job._read_pointer("persons"), job._read_pointer("groups")
+
+    for batch_id, rows in enumerate(COMPACTION_BATCHES[:4]):
+        job.process_batch(_raw_df(spark, rows), batch_id)
+    persons_entry, groups_entry = entries()
+    for entry in (persons_entry, groups_entry):
+        assert entry["version"] == 4 and entry["deltas"] == [], entry
+        assert entry["base"] == entry["committed_batch"]
+        assert entry["txns"] == {"r": 3}
+    ids = [r["id"] for r in job.read_persons(spark).collect()]
+    assert persons_entry["max_id"] == max(ids)
+    # the compaction dropped the tombstone of the merged-away anon-1
+    base = spark.read.parquet(os.path.join(job.warehouse_dir, "persons", persons_entry["base"]))
+    assert base.where(F.col("uuid").isNull()).count() == 0
+    assert "anon-1" not in {r["canonical_id"] for r in base.collect()}
+
+    state = _state(job.read_persons(spark), job.read_groups(spark))
+    job.process_batch(_raw_df(spark, COMPACTION_BATCHES[3]), 3)  # checkpoint replay
+    assert entries() == (persons_entry, groups_entry)
+    assert _state(job.read_persons(spark), job.read_groups(spark)) == state
+
+    job.process_batch(_raw_df(spark, COMPACTION_BATCHES[4]), 4)
+    assert [len(e["deltas"]) for e in entries()] == [1, 1]
+
+    rows = [r for batch in COMPACTION_BATCHES for r in batch]
+    want = ingest_raw_requests(_raw_df(spark, rows), group_types=group_types)
+    persons = job.read_persons(spark)
+    assert _state(persons, job.read_groups(spark)) == _state(want["persons"], want["groups"])
+    got = {
+        r["canonical_id"]: (sorted(r["distinct_ids"]), r["properties"],
+                            r["properties_set_once"], r["version"])
+        for r in persons.collect()
+    }
+    assert got == _replay_persons(rows)
+    assert sorted(got["user-1"][0]) == ["anon-1", "anon-3", "user-1"]
+
+
+# ---- a real stream stopped at each commit boundary, then restarted
 
 _RESTART_GROUP_TYPES = ("company", "team", None, None, None)
 
@@ -704,8 +772,8 @@ def _capture_in(seq: int, distinct_id: str, company: str, props: dict) -> dict:
     return _capture(seq, distinct_id, {**props, "$groups": {"company": company}})
 
 
-# both lanes, alias and auto-alias merges, `$groups` captures and group
-# upserts; the last batch is the one each test stops
+# alias and auto-alias merges, `$groups` captures and group upserts; the
+# last batch is the one each test stops
 RESTART_BATCHES = [
     [
         _capture(1, "anon-1", {"$set": {"plan": "free"}}),
@@ -751,7 +819,7 @@ def _event_rows(df, columns):
 
 
 def _stream_restart_batches(spark, root, stop=None):
-    """Stream RESTART_BATCHES through a hybrid job; `stop(run)` runs the
+    """Stream RESTART_BATCHES through a job; `stop(run)` runs the
     last batch and stops it, then a fresh job restarts on the same
     checkpoint. Returns the job that ran last."""
     from hogflare_spark.streaming.ingest_stream import (
@@ -762,9 +830,7 @@ def _stream_restart_batches(spark, root, stop=None):
     landing, ckpt = str(root / "landing"), str(root / "ck")
 
     def job():
-        return StreamingIngestJob(
-            str(root / "wh"), group_types=_RESTART_GROUP_TYPES, hybrid=True
-        )
+        return StreamingIngestJob(str(root / "wh"), group_types=_RESTART_GROUP_TYPES)
 
     def run(j):
         return lambda: j.run_available_now(read_request_stream(spark, landing), ckpt)
@@ -897,3 +963,22 @@ def test_restart_before_spark_commit_log_matches_batch_fold(
                 os.remove(os.path.join(commits, name))
 
     _stop_and_restart(spark, tmp_path, stop, uninterrupted_events)
+
+
+def test_restart_after_compaction_write_matches_batch_fold(
+    spark, tmp_path, monkeypatch, uninterrupted_events
+):
+    """Boundary (c) when the stopped batch is the compacting one: with
+    COMPACT_AFTER_DELTAS at 1 the last batch compacts both state tables,
+    and it stops after writing the persons base, before its entry. The
+    restart seeds groups from the entry before the compacted one, commits
+    nothing there, and compacts persons once."""
+    from hogflare_spark.sinks import lake
+
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 1)
+    _stop_and_restart(
+        spark, tmp_path, _stop_at_commit(monkeypatch, 3), uninterrupted_events
+    )
+    for table in ("persons", "groups"):
+        entry = lake.read_entry(str(tmp_path / "wh" / table))
+        assert entry["version"] == 3 and entry["deltas"] == [], (table, entry)
