@@ -16,9 +16,11 @@ delegates maintenance to the platform. Here the engine owns the sink:
 - `append_events`: date-partitioned append of the 21-column event frame,
   clustered within partitions by (team_id, distinct_id) so per-person
   scans and downstream joins hit few row groups. The partition column
-  derives from `created_at` exactly like an Iceberg `days(created_at)`
-  transform. An events entry lists the table's leaf partition
-  directories (`w=<id>/event_date=<day>`); an append adds its own.
+  is the day of the event's own `timestamp`, exactly like an Iceberg
+  `days(timestamp)` transform: events without a timestamp land in the
+  null partition (`event_date=__HIVE_DEFAULT_PARTITION__`). An events
+  entry lists the table's leaf partition directories
+  (`w=<id>/event_date=<day>`); an append adds its own.
 - `compact_events` / `delete_person_rows`: rewrite the leaves they touch
   into a fresh data directory and commit an entry that swaps the old
   leaves for the new ones (Iceberg's rewrite_data_files and a
@@ -385,7 +387,11 @@ def _events_dir_name(txn: tuple[str, int] | None = None) -> str:
 def _write_leaves(df: DataFrame, events_dir: str, name: str) -> None:
     """Write `df` (with its `event_date`) into data directory `name`,
     cluster-sorted within each date. Sorting on `event_date` first is the
-    order the partitioned writer needs, so it adds no sort of its own."""
+    order the partitioned writer needs, so it adds no sort of its own.
+    Every task writes one file per date among its rows."""
+    # Leaves are costly: without Hadoop's native library its local
+    # filesystem starts a `chmod` child process for every directory and
+    # file it creates, so a write's cost grows with the leaves it touches.
     (
         df.sortWithinPartitions("event_date", "team_id", "distinct_id", "created_at")
         .write.mode("append")
@@ -464,18 +470,21 @@ def _commit_events(
 def append_events(
     events: DataFrame, events_dir: str, txn: tuple[str, int] | None = None
 ) -> int:
-    """Date-partitioned, cluster-sorted append of event rows, committed
-    as one entry of the events log that records `txn` = (app_id,
-    batch_id) if given. Returns the committed version. A transaction's
-    data directory is cleared first unless the latest entry names it
-    (then that transaction committed and CommitConflict is raised)."""
-    df = events.withColumn("event_date", F.to_date("created_at"))
+    """Append of event rows partitioned by the day of their `timestamp`
+    (rows without one go to the null partition), cluster-sorted, and
+    committed as one entry of the events log that records `txn` =
+    (app_id, batch_id) if given. Each task writes its own rows, so an
+    append adds one leaf per event day it holds. Returns the committed
+    version. A transaction's data directory is cleared first unless the
+    latest entry names it (then that transaction committed and
+    CommitConflict is raised)."""
+    df = events.withColumn("event_date", F.to_date("timestamp"))
     name = _events_dir_name(txn)
     entry = read_entry(events_dir)
     if entry and any(leaf.startswith(f"{name}/") for leaf in entry["leaves"]):
         raise CommitConflict(f"{events_dir}: {name} is already committed")
     shutil.rmtree(os.path.join(events_dir, name), ignore_errors=True)
-    _write_leaves(df.repartition("event_date"), events_dir, name)
+    _write_leaves(df, events_dir, name)
     return _commit_events(events_dir, name, _nullable(df.schema.jsonValue()), txn=txn)
 
 

@@ -11,18 +11,19 @@ from pyspark.sql import functions as F
 
 
 def _events(spark, rows):
+    """Event rows from (distinct_id, created_at[, timestamp]) tuples: the
+    event `timestamp` is `created_at` unless given, and may be None."""
     return spark.createDataFrame(
         [
-            Row(
-                uuid=f"u{i}",
-                team_id=1,
-                distinct_id=d,
-                event="ev",
-                created_at=ts,
-            )
-            for i, (d, ts) in enumerate(rows)
-        ]
-    ).withColumn("created_at", F.to_timestamp("created_at"))
+            (f"u{i}", 1, r[0], "ev", r[1], r[2] if len(r) > 2 else r[1])
+            for i, r in enumerate(rows)
+        ],
+        "uuid string, team_id long, distinct_id string, event string, "
+        "created_at string, timestamp string",
+    ).withColumns({
+        "created_at": F.to_timestamp("created_at"),
+        "timestamp": F.to_timestamp("timestamp"),
+    })
 
 
 def test_append_events_partition_layout(spark, tmp_path):
@@ -55,6 +56,38 @@ def test_append_events_partition_layout(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "2025-03-01" in plan
+
+
+def test_append_events_partitions_by_event_timestamp_day(spark, tmp_path):
+    """The partition is the day of the event's `timestamp`, not of
+    `created_at`: rows of one event day written months apart share one
+    leaf, and rows without a timestamp share the null leaf, where they
+    read back with a NULL `event_date`. A date filter still prunes to
+    one leaf."""
+    from hogflare_spark.sinks.lake import append_events, read_entry, read_events
+
+    events_dir = str(tmp_path / "events")
+    rows = [
+        ("a", "2025-01-05T10:00:00Z", "2025-03-01T09:00:00Z"),
+        ("b", "2025-03-01T10:00:00Z", "2025-03-01T10:00:00Z"),
+        ("c", "2025-06-20T10:00:00Z", "2025-03-01T23:59:59Z"),
+        ("d", "2025-02-11T10:00:00Z", None),
+        ("e", "2025-09-30T10:00:00Z", None),
+    ]
+    append_events(_events(spark, rows).repartition(3), events_dir)
+    assert [leaf.split("/")[1] for leaf in read_entry(events_dir)["leaves"]] == [
+        "event_date=2025-03-01", "event_date=__HIVE_DEFAULT_PARTITION__"
+    ]
+    back = read_events(spark, events_dir)
+    assert sorted(
+        (r["distinct_id"], r["event_date"] and str(r["event_date"])) for r in back.collect()
+    ) == [("a", "2025-03-01"), ("b", "2025-03-01"), ("c", "2025-03-01"), ("d", None), ("e", None)]
+    day = back.where(F.col("event_date") == "2025-03-01")
+    assert len(day.collect()) == 3
+    leaves = day._jdf.queryExecution().executedPlan().collectLeaves()
+    (scan,) = [leaves.apply(i) for i in range(leaves.size())]
+    assert scan.getClass().getSimpleName() == "FileSourceScanExec"
+    assert scan.metrics().apply("numPartitions").value() == 1
 
 
 def test_append_events_cluster_sorts_each_date(spark, tmp_path):
@@ -446,8 +479,9 @@ def test_mismatched_upsert_raises_and_commits_nothing(spark, tmp_path):
 
 def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
     """Compaction bin-packs each date's small files across appends into
-    one leaf; a date with a single small file is left alone, and the
-    leaves it does not rewrite keep their bytes and mtimes."""
+    one leaf, the null date of timestamp-less events included; a date
+    with a single small file is left alone, and the leaves it does not
+    rewrite keep their bytes and mtimes."""
     from hogflare_spark.sinks.lake import (
         append_events,
         compact_events,
@@ -459,7 +493,11 @@ def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
     events_dir = str(tmp_path / "events")
     for i in range(3):
         append_events(
-            _events(spark, [(f"d{i}_{j}", f"2025-03-0{1 + j % 2}T10:00:00Z") for j in range(10)]),
+            _events(
+                spark,
+                [(f"d{i}_{j}", f"2025-03-0{1 + j % 2}T10:00:00Z") for j in range(10)]
+                + [(f"n{i}", "2025-03-01T10:00:00Z", None)],
+            ),
             events_dir,
         )
     append_events(_events(spark, [("solo", "2025-03-05T10:00:00Z")]), events_dir)
@@ -470,12 +508,14 @@ def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
     )
 
     cands = compaction_candidates(events_dir, small_file_bytes=10 * 1024 * 1024)
-    assert sorted(cands) == ["event_date=2025-03-01", "event_date=2025-03-02"]
+    assert sorted(cands) == [
+        "event_date=2025-03-01", "event_date=2025-03-02", "event_date=__HIVE_DEFAULT_PARTITION__"
+    ]
     assert all(len(leaves) == 3 for leaves in cands.values())
     compact_events(spark, events_dir, small_file_bytes=10 * 1024 * 1024)
 
     leaves = read_entry(events_dir)["leaves"]
-    assert len(leaves) == 3 and solo in leaves
+    assert len(leaves) == 4 and solo in leaves
     for leaf in leaves:
         files = [f for f in os.listdir(os.path.join(events_dir, leaf)) if f.endswith(".parquet")]
         assert len(files) == 1, f"{leaf} not bin-packed to one file"
@@ -490,8 +530,12 @@ def test_compaction_groups_small_files_by_date_across_appends(spark, tmp_path):
         for leaf in os.listdir(os.path.join(events_dir, d)) if leaf.startswith("event_date=")
     }
     assert on_disk == set(leaves)
-    assert read_events(spark, events_dir).count() == 31
-    assert spark.read.parquet(events_dir).count() == 31
+    back = read_events(spark, events_dir)
+    assert back.count() == 34
+    assert sorted(r["distinct_id"] for r in back.where(F.col("event_date").isNull()).collect()) == [
+        "n0", "n1", "n2"
+    ]
+    assert spark.read.parquet(events_dir).count() == 34
 
 
 # ------------------------------------------------ the schema in the log entry

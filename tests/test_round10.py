@@ -187,9 +187,12 @@ def _lake_events(spark, pairs):
     from pyspark.sql import Row
 
     return spark.createDataFrame(
-        [Row(uuid=f"u{i}", team_id=1, distinct_id=d, event="ev", created_at=ts)
+        [Row(uuid=f"u{i}", team_id=1, distinct_id=d, event="ev", created_at=ts, timestamp=ts)
          for i, (d, ts) in enumerate(pairs)]
-    ).withColumn("created_at", F.to_timestamp("created_at"))
+    ).withColumns({
+        "created_at": F.to_timestamp("created_at"),
+        "timestamp": F.to_timestamp("timestamp"),
+    })
 
 
 def _lake_rows(spark, events_dir):
@@ -249,7 +252,7 @@ def test_delete_person_rows_leaves_no_staging_debris(spark, tmp_path):
 
     events_dir = str(tmp_path / "lake")
     rows = [
-        Row(uuid=f"u{i}", team_id=1, distinct_id=d, event="ev", created_at=ts)
+        Row(uuid=f"u{i}", team_id=1, distinct_id=d, event="ev", created_at=ts, timestamp=ts)
         for i, (d, ts) in enumerate(
             [
                 ("alice", "2025-03-01T10:00:00Z"),
@@ -259,9 +262,10 @@ def test_delete_person_rows_leaves_no_staging_debris(spark, tmp_path):
             ]
         )
     ]
-    df = spark.createDataFrame(rows).withColumn(
-        "created_at", F.to_timestamp("created_at")
-    )
+    df = spark.createDataFrame(rows).withColumns({
+        "created_at": F.to_timestamp("created_at"),
+        "timestamp": F.to_timestamp("timestamp"),
+    })
     append_events(df, events_dir)
     pdirs, n_deleted = delete_person_rows(spark, events_dir, ["alice"])
     assert len(pdirs) == 2 and n_deleted == 2

@@ -509,7 +509,9 @@ def test_streaming_ivf_compact_preserves_queries_and_fences_replays(spark, tmp_p
 def test_delete_person_rows_rewrites_only_affected_partitions(spark, tmp_path):
     """The subject's rows vanish; partitions without subject rows are
     not rewritten (bytes and mtimes untouched); the delete count and
-    rewritten-dir list are exact; a no-match delete is a no-op."""
+    rewritten-dir list are exact; a no-match delete is a no-op. Events
+    without a timestamp sit in the null partition, which a subject
+    found only there is deleted from alone."""
     import os
     from datetime import datetime
 
@@ -526,13 +528,19 @@ def test_delete_person_rows_rewrites_only_affected_partitions(spark, tmp_path):
             rows.append(Row(
                 uuid=f"e{day}-{i}", event="ev", distinct_id=str(u),
                 team_id="t", created_at=datetime(2025, 3, day, 10, i),
-                properties="{}"))
+                properties="{}", timestamp=datetime(2025, 3, day, 10, i)))
+    for i, u in enumerate([7, 8]):
+        rows.append(Row(
+            uuid=f"n-{i}", event="ev", distinct_id=str(u), team_id="t",
+            created_at=datetime(2025, 3, 1, 12, i), properties="{}",
+            timestamp=None))
     lake = str(tmp_path / "lake")
     append_events(spark.createDataFrame(rows), lake)
 
     def leaf(day):
+        suffix = "__HIVE_DEFAULT_PARTITION__" if day is None else f"2025-03-0{day}"
         (path,) = [os.path.join(lake, p) for p in read_entry(lake)["leaves"]
-                   if p.endswith(f"event_date=2025-03-0{day}")]
+                   if p.endswith(f"event_date={suffix}")]
         return path
 
     def snap(d):
@@ -550,9 +558,17 @@ def test_delete_person_rows_rewrites_only_affected_partitions(spark, tmp_path):
     assert not any(os.path.exists(d) for d in dirs)  # no subject row on disk
     # day 2 untouched: same leaf, identical files, sizes, mtimes
     assert leaf(2) == d2 and snap(d2) == before_d2
+    # a subject with only timestamp-less events: only the null leaf is
+    # rewritten, and its other subject survives there
+    kept = {day: (leaf(day), snap(leaf(day))) for day in (1, 2, 3)}
+    null_leaf = leaf(None)
+    assert delete_person_rows(spark, lake, ["7"]) == ([null_leaf], 1)
+    assert not os.path.exists(null_leaf) and leaf(None) != null_leaf
+    assert {day: (leaf(day), snap(leaf(day))) for day in (1, 2, 3)} == kept
     back = read_events(spark, lake)
     assert sorted(r["distinct_id"] for r in back.collect()) == [
-        "2", "3", "4", "5", "6"]
+        "2", "3", "4", "5", "6", "8"]
+    assert [r["distinct_id"] for r in back.where(F.col("event_date").isNull()).collect()] == ["8"]
     # no-match: no rewrites at all
     assert delete_person_rows(spark, lake, ["99"]) == ([], 0)
 
