@@ -14,10 +14,11 @@ Reference semantics (/root/reference/src/groups.rs:16-41, src/lib.rs):
 - hydration emits `{group_type: {props}}` only for groups whose record
   exists; empty result → NULL (lib.rs:1393-1411)
 
-Spark shape: one narrow projection explodes commands into group ops, one
-shuffle keyed by (group_type, group_key), a partition-streaming
-`mapInPandas` replays the LWW fold per key in (request_seq, item_index,
-sub) order — per-key serial
+Spark shape: one narrow Catalyst projection (`from_json` + explode, no
+Python worker) turns commands into group ops, one shuffle keyed by
+(group_type, group_key), a partition-streaming `mapInPandas` replays the
+LWW fold per key in (request_seq, item_index, sub) order — the fold's
+only Python stage; per-key serial
 processing, exactly the reference's Durable-Object-per-group model
 (groups.rs:183-235). Hydration results join back to events on the seq
 pair. At 100 TB the op stream is a small projection of events and the
@@ -45,19 +46,6 @@ from pyspark.sql.types import (
 
 from hogflare_spark.operators.person_store import parse_event_time
 
-_GROUP_OPS = StructType(
-    [
-        StructField("request_seq", LongType(), False),
-        StructField("item_index", LongType(), False),
-        StructField("sub", LongType(), False),
-        StructField("kind", StringType(), False),  # update | lookup | gi_update | gi_lookup
-        StructField("group_type", StringType(), False),
-        StructField("group_key", StringType(), False),
-        StructField("props", StringType(), True),  # JSON
-        StructField("timestamp", StringType(), True),
-    ]
-)
-
 _FOLD_OUT = StructType(
     [
         StructField("row_type", StringType(), False),  # result | group
@@ -74,85 +62,65 @@ _FOLD_OUT = StructType(
 )
 
 
-def derive_group_ops(commands: DataFrame) -> DataFrame:
-    """Command rows → group-op rows via one mapInPandas projection over
-    the commands that carry `$groups`, `$group_set` or a groupidentify."""
+# a GroupUpdate as the commands carry it: `properties` read as its raw
+# JSON text (Spark's JSON reader copies a non-string value verbatim into
+# a string field), JSON null → NULL
+_UPDATE = "struct<group_type:string,group_key:string,properties:string>"
 
-    def _run(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                seq, item = int(r.request_seq), int(r.item_index)
-                ts = r.timestamp
-                if r.group_identify:
-                    gi = fj_loads(r.group_identify)
-                    rows.append(
-                        {
-                            "request_seq": seq,
-                            "item_index": item,
-                            "sub": 0,
-                            "kind": "gi_update" if gi["properties"] is not None else "gi_lookup",
-                            "group_type": gi["group_type"],
-                            "group_key": gi["group_key"],
-                            "props": json.dumps(gi["properties"], separators=(",", ":"))
-                            if gi["properties"] is not None
-                            else None,
-                            "timestamp": ts,
-                        }
-                    )
-                    continue
-                sub = 0
-                if r.group_updates:
-                    for upd in fj_loads(r.group_updates):
-                        rows.append(
-                            {
-                                "request_seq": seq,
-                                "item_index": item,
-                                "sub": sub,
-                                "kind": "update",
-                                "group_type": upd["group_type"],
-                                "group_key": upd["group_key"],
-                                "props": json.dumps(
-                                    upd["properties"], separators=(",", ":")
-                                ),
-                                "timestamp": ts,
-                            }
-                        )
-                        sub += 1
-                if r.groups:
-                    groups = fj_loads(r.groups)
-                    for j, (gtype, gkey) in enumerate(groups.items()):
-                        if not isinstance(gkey, str):
-                            continue
-                        rows.append(
-                            {
-                                "request_seq": seq,
-                                "item_index": item,
-                                "sub": 1000 + j,
-                                "kind": "lookup",
-                                "group_type": gtype,
-                                "group_key": gkey,
-                                "props": None,
-                                "timestamp": ts,
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in _GROUP_OPS.fields])
-
-    # group-free commands (most capture traffic) never enter Python
-    return (
-        commands.where(
-            F.col("groups").isNotNull()
-            | F.col("group_updates").isNotNull()
-            | F.col("group_identify").isNotNull()
-        )
-        .select(
-            "request_seq", "item_index", "timestamp",
-            "groups", "group_updates", "group_identify",
-        )
-        .mapInPandas(_run, _GROUP_OPS)
+def _op(sub, kind, group_type, group_key, props):
+    return F.struct(
+        sub.cast("long").alias("sub"),
+        kind.alias("kind"),
+        group_type.alias("group_type"),
+        group_key.alias("group_key"),
+        props.alias("props"),
     )
+
+
+def derive_group_ops(commands: DataFrame) -> DataFrame:
+    """Command rows → group-op rows (request_seq, item_index, sub, kind,
+    group_type, group_key, props, timestamp), as Catalyst expressions:
+    one projection parses `group_identify`, `group_updates` and `groups`
+    with `from_json`, builds each command's op array and explodes it. No
+    Python worker runs.
+
+    - A groupidentify is one op, sub 0: `gi_update` when its
+      `properties` is an object (even `{}`), `gi_lookup` when it is JSON
+      null. It is the command's only op.
+    - Otherwise each `$group_set` update is an `update` op, sub = its
+      position, then each `$groups` entry is a `lookup` op, sub = 1000 +
+      its position. `groups` holds only string keys
+      (`normalize.extract_groups`, the JVM tier's strict-map check).
+
+    `props` is the raw JSON text of the properties object. It is
+    JSON-equal to Python's `json.dumps` of it but not byte-equal
+    (non-ASCII stays UTF-8, doubles print Java-style); the fold parses
+    it (`tests/test_group_fold.py` pins the parity)."""
+    gi = F.from_json("group_identify", _UPDATE)
+    gi_ops = F.array(
+        _op(
+            F.lit(0),
+            F.when(gi["properties"].isNull(), "gi_lookup").otherwise("gi_update"),
+            gi["group_type"], gi["group_key"], gi["properties"],
+        )
+    )
+    updates = F.transform(
+        F.from_json(F.coalesce("group_updates", F.lit("[]")), f"array<{_UPDATE}>"),
+        lambda u, i: _op(i, F.lit("update"), u["group_type"], u["group_key"], u["properties"]),
+    )
+    lookups = F.transform(
+        F.map_entries(F.from_json(F.coalesce("groups", F.lit("{}")), "map<string,string>")),
+        lambda e, j: _op(
+            F.lit(1000) + j, F.lit("lookup"), e["key"], e["value"], F.lit(None).cast("string")
+        ),
+    )
+    ops = F.when(gi.isNotNull(), gi_ops).otherwise(F.concat(updates, lookups))
+    return commands.where(
+        F.col("groups").isNotNull()
+        | F.col("group_updates").isNotNull()
+        | F.col("group_identify").isNotNull()
+    ).select("request_seq", "item_index", F.inline(ops), "timestamp")
 
 
 def _seed_group_ops(prior_groups: DataFrame) -> DataFrame:

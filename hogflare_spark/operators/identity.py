@@ -103,8 +103,8 @@ def _cc_driver(rows, spark, schema) -> DataFrame:
     from hogflare_spark.operators.partitioning import one_slice_df
 
     # driver-sized by this branch's contract (the small-edge-set lane);
-    # one slice avoids a Python round-trip per core in the consumer's
-    # broadcast/left-join build (r13, guide §1.2)
+    # a JVM local relation, so the consumer's broadcast/left-join build
+    # of the labels runs no Python task
     return one_slice_df(spark, out, schema)
 
 

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hogflare_spark.functions.caching import cached
-
 DEFAULT_GROUP_TYPES: tuple[str | None, ...] = (None, None, None, None, None)
 
 
@@ -58,6 +56,25 @@ def _assemble_json_object(entries):
     )
 
 
+def pin_commands(commands: DataFrame) -> DataFrame:
+    """Materialize the decoded commands once: one eager
+    `localCheckpoint`, read back at `defaultParallelism` partitions.
+
+    Every consumer of a pass (the CC edge collect, the person and group
+    folds, the events projection) reads the commands, so the pin is the
+    one job that runs decode's Python tier, in one wave. The decode
+    output is the union of its JVM-tier and Python-tier frames, twice
+    the session's width; coalescing the pinned blocks brings every
+    downstream stage back to that width. A stage reading in-memory
+    blocks is cheap, so the coalesce happens after the checkpoint, not
+    before it: coalescing the union would run two Python-tier
+    partitions in some tasks and none in others."""
+    n = commands.sparkSession.sparkContext.defaultParallelism
+    pinned = commands.localCheckpoint(eager=True).coalesce(n)
+    pinned._hogflare_pinned = True
+    return pinned
+
+
 def ingest_commands(
     commands: DataFrame,
     team_id: int | None = None,
@@ -72,11 +89,15 @@ def ingest_commands(
     frames seed the state folds (streaming incremental processing).
     `person_id_floor` lets a caller seeding a slice of the prior persons
     table pin the allocation base to the global max id.
+
+    The commands are pinned once (`pin_commands`) unless the caller
+    passes a frame `pin_commands` returned.
     """
     from hogflare_spark.operators.group_state import fold_group_state
     from hogflare_spark.operators.person_state import fold_person_state
 
-    commands = cached(commands)
+    if not getattr(commands, "_hogflare_pinned", False):
+        commands = pin_commands(commands)
 
     snapshots, persons = fold_person_state(
         commands,

@@ -62,20 +62,32 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
 
 
 def one_slice_df(spark, rows, schema) -> DataFrame:
-    """createDataFrame for DRIVER-SIZED row lists without the default
-    defaultParallelism Python-RDD slices.
+    """DRIVER-SIZED row list → a one-partition frame backed by a JVM-side
+    local relation, so no job that reads it starts a Python worker.
 
-    A handful of rows parallelized into N slices costs one Python-worker
-    round-trip PER SLICE in every job that reads the frame — a broadcast
-    build's executeCollect, a final orderBy's range-sampling pass —
-    measured ~0.5 s of pure handshake per reading job at local[32]
-    (r13, guide §1.2/§4). One slice = one round-trip. Only for frames
-    that are model-sized by contract (collected query tables, distance
-    tables, trainer outputs): a single partition is then the right shape
-    at any scale factor."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
+    The rows go to the JVM once, as an Arrow table (`createDataFrame` of
+    a `pyarrow.Table` builds a `LocalRelation`). A plain
+    `createDataFrame(rows)` is a Python RDD instead: every job that reads
+    it — a broadcast build's collect, a join's scan, an orderBy's
+    range-sampling pass — runs a Python task per slice, about 100 ms
+    each before it touches a row. One partition keeps a reading job at
+    one task. Only for frames that are model-sized by contract
+    (collected query tables, distance tables, trainer outputs, the
+    driver CC labels): a single partition is then the right shape at any
+    scale factor."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    if not isinstance(schema, StructType):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def input_bytes(df: DataFrame, uncompressed: bool = False) -> int:

@@ -135,17 +135,17 @@ def hf_person_fold_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("hf_person_fold_fast", oracle=_PERSON_FOLD_ORACLE)
 def hf_person_fold_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same fold with snapshot assembly on, over a cached command
+    """The same fold with snapshot assembly on, over the pinned command
     frame: the call ingest_commands makes. hf_person_fold_state skips
     snapshots, so this gate is the one that grades the replay's snapshot
     path against the same oracle at sf scale. Persons-only output, like
     hf_person_fold_state."""
-    from hogflare_spark.functions.caching import cached
+    from hogflare_spark.operators.ingest import pin_commands
     from hogflare_spark.operators.normalize import decode_normalize_requests
     from hogflare_spark.operators.person_state import fold_person_state
 
     raw = _capture_requests_from_events(spark, sf_dir)
-    commands = cached(decode_normalize_requests(raw))
+    commands = pin_commands(decode_normalize_requests(raw))
     _, persons = fold_person_state(commands)
     return persons.select(
         F.col("canonical_id").cast("long").alias("user_id"),

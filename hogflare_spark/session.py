@@ -18,6 +18,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 500
 
 
 def get_spark(
@@ -58,6 +59,15 @@ def get_spark(
         # harmless (openCostInBytes still batches tiny files).
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.ui.enabled", "false")
+        # Hold every generated class of an ingest pass. A warm
+        # capture_batch pass of the 16k-request perfbench log generates
+        # 107 distinct classes and an identity pass at most 115 (CodegenMetrics,
+        # scripts/pass_profile.py); at the default 100 entries the LRU
+        # cache evicted part of each pass, so every warm pass recompiled
+        # 40-52 classes (100-300 ms of Janino on the driver, and C2 JIT
+        # work on the new classes). A pass stays below the constant with
+        # room for the flag and plan queries sharing the session.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():

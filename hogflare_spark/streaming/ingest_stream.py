@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
-from hogflare_spark.functions.caching import cached, unpersist_all
+from hogflare_spark.functions.caching import unpersist_all
 from hogflare_spark.sinks import lake
 
 RAW_STREAM_SCHEMA = StructType(
@@ -169,12 +169,13 @@ class StreamingIngestJob:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # release every operator cache this batch registered (commands,
-        # fold pins, id-allocation intermediates) on BOTH paths — a
-        # long-lived stream must not accumulate JVM cache blocks across
-        # micro-batches, and (r7 ADVICE) an exception mid-batch (write
-        # failure, CommitConflict) must not leak that batch's caches
-        # until the next successful batch happens to drain them.
+        # release every operator cache this batch registered (`cached`;
+        # the commands and fold pins are local checkpoints the JVM frees
+        # with their frames) on BOTH paths — a long-lived stream must
+        # not accumulate JVM cache blocks across micro-batches, and (r7
+        # ADVICE) an exception mid-batch (write failure, CommitConflict)
+        # must not leak that batch's caches until the next successful
+        # batch happens to drain them.
         try:
             self._process_batch_inner(batch_df, batch_id)
         finally:
@@ -182,7 +183,7 @@ class StreamingIngestJob:
 
     def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:
         from hogflare_spark.operators.group_state import derive_group_ops
-        from hogflare_spark.operators.ingest import ingest_commands
+        from hogflare_spark.operators.ingest import ingest_commands, pin_commands
         from hogflare_spark.operators.normalize import decode_normalize_requests
 
         spark = batch_df.sparkSession
@@ -196,7 +197,9 @@ class StreamingIngestJob:
         g_seed, g_held = lake.seed_entry(g_root, app_id, batch_id)
         e_held = lake.seed_entry(self.events_dir, app_id, batch_id)[1]
 
-        commands = cached(decode_normalize_requests(batch_df))
+        # one eager pin: the touched-id and touched-group-key scans below
+        # and ingest_commands all read it
+        commands = pin_commands(decode_normalize_requests(batch_df))
         # Every batch after the bootstrap seeds only the prior components
         # its ids touch: both endpoints of every alias edge are in the
         # touched set, so a cross-key merge folds correctly against the

@@ -183,3 +183,218 @@ def test_group_fold_property_matches_sequential_lww(spark, ops):
             gset = {o["gtype"]: o["gset"]} if o["gset"] is not None else None
             requests.append(_cap("u", groups={o["gtype"]: o["gkey"]}, gset=gset))
     assert _spark_fold(spark, requests) == _sequential_lww(requests), f"ops={ops}"
+
+
+# ---------------------------------------------------------------------------
+# derive_group_ops: the Catalyst derivation against the Python one it
+# replaced (kept here as the reference)
+# ---------------------------------------------------------------------------
+
+
+def _reference_group_ops(commands):
+    """The former `derive_group_ops`: one mapInPandas projection over the
+    commands that carry `$groups`, `$group_set` or a groupidentify."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from hogflare_spark.functions.fastjson import loads as fj_loads
+
+    schema = StructType(
+        [
+            StructField("request_seq", LongType(), False),
+            StructField("item_index", LongType(), False),
+            StructField("sub", LongType(), False),
+            StructField("kind", StringType(), False),
+            StructField("group_type", StringType(), False),
+            StructField("group_key", StringType(), False),
+            StructField("props", StringType(), True),
+            StructField("timestamp", StringType(), True),
+        ]
+    )
+
+    def _run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                seq, item = int(r.request_seq), int(r.item_index)
+                ts = r.timestamp
+                if r.group_identify:
+                    gi = fj_loads(r.group_identify)
+                    rows.append(
+                        {
+                            "request_seq": seq,
+                            "item_index": item,
+                            "sub": 0,
+                            "kind": "gi_update" if gi["properties"] is not None else "gi_lookup",
+                            "group_type": gi["group_type"],
+                            "group_key": gi["group_key"],
+                            "props": json.dumps(gi["properties"], separators=(",", ":"))
+                            if gi["properties"] is not None
+                            else None,
+                            "timestamp": ts,
+                        }
+                    )
+                    continue
+                sub = 0
+                if r.group_updates:
+                    for upd in fj_loads(r.group_updates):
+                        rows.append(
+                            {
+                                "request_seq": seq,
+                                "item_index": item,
+                                "sub": sub,
+                                "kind": "update",
+                                "group_type": upd["group_type"],
+                                "group_key": upd["group_key"],
+                                "props": json.dumps(upd["properties"], separators=(",", ":")),
+                                "timestamp": ts,
+                            }
+                        )
+                        sub += 1
+                if r.groups:
+                    groups = fj_loads(r.groups)
+                    for j, (gtype, gkey) in enumerate(groups.items()):
+                        if not isinstance(gkey, str):
+                            continue
+                        rows.append(
+                            {
+                                "request_seq": seq,
+                                "item_index": item,
+                                "sub": 1000 + j,
+                                "kind": "lookup",
+                                "group_type": gtype,
+                                "group_key": gkey,
+                                "props": None,
+                                "timestamp": ts,
+                            }
+                        )
+            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+
+    return (
+        commands.where(
+            F.col("groups").isNotNull()
+            | F.col("group_updates").isNotNull()
+            | F.col("group_identify").isNotNull()
+        )
+        .select("request_seq", "item_index", "timestamp", "groups", "group_updates", "group_identify")
+        .mapInPandas(_run, schema)
+    )
+
+
+_ODD_PROPS = {
+    "name": "Zoë ☃ \U0001f600",
+    "quoted": 'a"b\\c\n\t\u0001',
+    "rate": 1.5,
+    "tiny": -2.5e-10,
+    "huge": 1e300,
+    "exp": 12345678.5,
+    "big": 123456789012345678901234567890,
+    "neg_big": -98765432109876543210,
+    "nested": {"a": [1, {"b": None}], "é": True},
+}
+
+
+def _command_rows():
+    """(request_seq, item_index, timestamp, groups, group_updates,
+    group_identify) rows as the decoder writes them (json.dumps text)."""
+
+    def upd(gtype, gkey, props):
+        return {"group_type": gtype, "group_key": gkey, "properties": props}
+
+    groups3 = {"company": "c1", "team": "t ☃", "org": "o\"1"}
+    return [
+        # multi-entry $groups: sub = 1000 + position
+        (0, 0, "2024-01-01T00:00:00Z", _dumps(groups3), None, None),
+        # multi-entry $group_set updates, then the lookups
+        (1, 0, None, _dumps(groups3),
+         _dumps([upd("company", "c1", {"a": 1}), upd("team", "t ☃", _ODD_PROPS),
+                 upd("org", 'o"1', {"n": {"m": [1, 2]}})]), None),
+        (1, 1, None, None, _dumps([upd("company", "c2", {"x": "y"})]), None),
+        # groupidentify: JSON-null, empty and nested properties
+        (2, 0, None, None, None, _dumps(upd("org", "acme", None))),
+        (3, 0, None, None, None, _dumps(upd("org", "acme", {}))),
+        (4, 0, "2024-02-02", None, None, _dumps(upd("org", "acme", _ODD_PROPS))),
+        # a groupidentify wins over the same row's groups and updates
+        (5, 0, None, _dumps({"company": "c9"}),
+         _dumps([upd("company", "c9", {"z": 1})]), _dumps(upd("team", "t1", {"k": 2}))),
+        # group-free rows and an empty groups object derive nothing
+        (6, 0, None, None, None, None),
+        (7, 0, None, "{}", None, None),
+    ]
+
+
+def _canonical_props(df):
+    from pyspark.sql import functions as F
+
+    canon = F.udf(lambda s: None if s is None else json.dumps(json.loads(s)), "string")
+    return df.withColumn("props", canon("props"))
+
+
+def test_derive_group_ops_matches_python_reference(spark):
+    """Row for row equal to the Python derivation: the same (seq, sub,
+    kind, type, key, timestamp) rows, and props JSON-equal (the Catalyst
+    text keeps non-ASCII as UTF-8 and prints doubles Java-style)."""
+    from hogflare_spark.operators.group_state import derive_group_ops
+
+    commands = spark.createDataFrame(
+        _command_rows(),
+        "request_seq long, item_index long, timestamp string, groups string, "
+        "group_updates string, group_identify string",
+    )
+    got = derive_group_ops(commands)
+    want = _reference_group_ops(commands)
+    assert got.columns == want.columns
+    got_c, want_c = _canonical_props(got), _canonical_props(want)
+    assert got_c.exceptAll(want_c).count() == 0
+    assert want_c.exceptAll(got_c).count() == 0
+    assert got.count() == 14
+    subs = sorted((r["request_seq"], r["sub"], r["kind"]) for r in got.collect())
+    assert [s for s in subs if s[0] == 0] == [(0, 1000, "lookup"), (0, 1001, "lookup"),
+                                              (0, 1002, "lookup")]
+    assert [s for s in subs if s[0] in (2, 3, 5)] == [
+        (2, 0, "gi_lookup"), (3, 0, "gi_update"), (5, 0, "gi_update")]
+
+
+def test_derive_group_ops_matches_python_reference_on_decoded_commands(spark):
+    """The same parity over decoder output: JVM-tier captures (Jackson
+    text) and Python-tier batch/groupidentify requests."""
+    from hogflare_spark.operators.group_state import derive_group_ops
+
+    requests = [
+        _cap("u1", groups={"company": "c1", "team": "t1"},
+             gset={"company": {"plan": "pro"}, "team": {"seats": 3}}),
+        _cap("u2", groups={"org": "o1", "company": "c1"}),
+        _gi("org", "o1", _ODD_PROPS),
+        _gi("org", "o2", None),
+        _gi("org", "o3", {}),
+        ("batch", {"batch": [
+            {"event": "e", "distinct_id": "u3", "properties": {
+                "$groups": {"company": "c2", "org": "o1"},
+                "$group_set": {"org": _ODD_PROPS}}},
+            {"type": "groupidentify", "group_type": "team", "group_key": "t2",
+             "properties": {"k": "ü"}},
+        ]}),
+    ]
+    raw = spark.createDataFrame(
+        [Row(request_seq=i, endpoint=e, body=json.dumps(b)) for i, (e, b) in enumerate(requests)]
+    )
+    commands = decode_normalize_requests(raw).localCheckpoint(eager=True)
+    got, want = _canonical_props(derive_group_ops(commands)), _canonical_props(
+        _reference_group_ops(commands))
+    assert want.count() == 13
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_derive_group_ops_runs_no_python(spark):
+    from hogflare_spark.operators.group_state import derive_group_ops
+
+    commands = spark.createDataFrame(
+        _command_rows(),
+        "request_seq long, item_index long, timestamp string, groups string, "
+        "group_updates string, group_identify string",
+    )
+    plan = derive_group_ops(commands)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan

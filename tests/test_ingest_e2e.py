@@ -242,3 +242,64 @@ def test_geo_enrichment_end_to_end(spark):
     props2 = json.loads(events[2]["properties"])
     assert props2["$ip"] == "10.0.0.1"  # payload $ip beats connecting-ip
     assert "$geoip_country_code" not in props2  # no geo bag on this row
+
+
+def test_decode_python_tier_runs_in_one_stage(spark, tmp_path, monkeypatch):
+    """ingest_commands pins the decoded commands once, eagerly: every
+    partition of decode's Python-tier kernel runs in the same Spark stage,
+    once, instead of inside the consumers' jobs (a lazily cached union
+    ran it across the CC edge collect's scale-up jobs)."""
+    import glob
+    import os
+
+    from hogflare_spark.operators.ingest import ingest_commands
+    from hogflare_spark.operators.normalize import decode_normalize_requests
+
+    rows = []
+    for i in range(64):
+        if i % 2:  # JVM tier: plain single-object capture
+            rows.append((i, "capture", json.dumps(
+                {"event": "ev", "distinct_id": f"u{i}", "properties": {"$groups": {"org": "o"}}})))
+        else:  # Python tier: a batch with an alias
+            rows.append((i, "batch", json.dumps({"batch": [
+                {"event": "ev", "distinct_id": f"u{i}"},
+                {"type": "alias", "distinct_id": f"u{i}", "alias": f"a{i}"}]})))
+    # four request partitions: the decoded union is 4 JVM-tier then 4
+    # Python-tier partitions, and a limit's scale-up jobs (1, 4, then 3
+    # partitions) split the Python tier across two of them
+    raw = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "request_seq long, endpoint string, body string"
+    )
+
+    seen = tmp_path / "kernel"
+    seen.mkdir()
+    df_class = type(spark.range(1))
+    orig = df_class.mapInPandas
+
+    def recording(self, func, schema, *args, **kwargs):
+        if not func.__qualname__.startswith("decode_normalize_requests"):
+            return orig(self, func, schema, *args, **kwargs)
+        out_dir = str(seen)
+
+        def run(batches):
+            import os as _os
+            import uuid
+
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            name = f"{ctx.stageId()}_{ctx.partitionId()}_{uuid.uuid4().hex}"
+            open(_os.path.join(out_dir, name), "w").close()
+            yield from func(batches)
+
+        return orig(self, run, schema, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "mapInPandas", recording)
+    commands = decode_normalize_requests(raw)
+    out = ingest_commands(commands, group_types=("org", None, None, None, None))
+    assert out["events"].count() == 96
+    runs = [os.path.basename(p).split("_")[:2] for p in glob.glob(str(seen / "*"))]
+    stages = {s for s, _ in runs}
+    partitions = [p for _, p in runs]
+    assert len(stages) == 1, f"decode's Python tier ran in stages {sorted(stages)}"
+    assert len(partitions) == len(set(partitions)) > 1

@@ -92,3 +92,31 @@ def test_pq_adc_query_pred_matches_explicit_queries(spark):
     assert sorted(map(tuple, a), key=lambda t: (t[0], t[2])) == sorted(
         map(tuple, b), key=lambda t: (t[0], t[2])
     )
+
+
+def _reads_python(df) -> bool:
+    """True when computing `df` runs Python: a Python RDD in its lineage
+    or a scan of an RDD the Python side built."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    return "PythonRDD" in lineage or "ExistingRDD" in plan
+
+
+def test_one_slice_df_is_a_jvm_local_relation(spark):
+    """A scan of one_slice_df (and of the driver CC labels built with it)
+    starts no Python worker: the rows live in a JVM local relation."""
+    from hogflare_spark.operators.identity import connected_components
+    from hogflare_spark.operators.partitioning import one_slice_df
+
+    df = one_slice_df(spark, [(1, [[1, 2], [3]]), (2, None)], "qid long, t array<array<long>>")
+    assert not _reads_python(df)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == [(1, [[1, 2], [3]]), (2, None)]
+    empty = one_slice_df(spark, [], "id string, comp string")
+    assert not _reads_python(empty) and empty.count() == 0
+
+    edges = spark.createDataFrame([("a", "b"), ("c", "b"), ("x", "y")], "src string, dst string")
+    labels = connected_components(edges)
+    assert not _reads_python(labels)
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
