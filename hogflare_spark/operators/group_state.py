@@ -91,7 +91,7 @@ def derive_group_ops(commands: DataFrame) -> DataFrame:
     - Otherwise each `$group_set` update is an `update` op, sub = its
       position, then each `$groups` entry is a `lookup` op, sub = 1000 +
       its position. `groups` holds only string keys
-      (`normalize.extract_groups`, the JVM tier's strict-map check).
+      (`normalize.extract_groups`).
 
     `props` is the raw JSON text of the properties object. It is
     JSON-equal to Python's `json.dumps` of it but not byte-equal

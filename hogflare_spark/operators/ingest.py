@@ -62,13 +62,15 @@ def pin_commands(commands: DataFrame) -> DataFrame:
 
     Every consumer of a pass (the CC edge collect, the person and group
     folds, the events projection) reads the commands, so the pin is the
-    one job that runs decode's Python tier, in one wave. The decode
-    output is the union of its JVM-tier and Python-tier frames, twice
-    the session's width; coalescing the pinned blocks brings every
-    downstream stage back to that width. A stage reading in-memory
+    one job that runs decode's kernel, in one wave. The decode keeps its
+    input's partitioning, one partition per file or split: `fan_out`
+    widens a small file input, but a stream micro-batch reports no input
+    files and arrives with one partition per landed file, which can be
+    more than the session's width. Coalescing the pinned blocks brings
+    every downstream stage to that width. A stage reading in-memory
     blocks is cheap, so the coalesce happens after the checkpoint, not
-    before it: coalescing the union would run two Python-tier
-    partitions in some tasks and none in others."""
+    before it: coalescing the decode would run several kernel partitions
+    in some tasks and none in others."""
     n = commands.sparkSession.sparkContext.defaultParallelism
     pinned = commands.localCheckpoint(eager=True).coalesce(n)
     pinned._hogflare_pinned = True
@@ -216,7 +218,6 @@ def ingest_raw_requests(
     raw: DataFrame,
     team_id: int | None = None,
     group_types: tuple[str | None, ...] = DEFAULT_GROUP_TYPES,
-    body_col: str = "body",
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
@@ -232,8 +233,8 @@ def ingest_raw_requests(
     if signing_secret is not None:
         from hogflare_spark.sources.signature import verify_signature_gate
 
-        raw, _ = verify_signature_gate(raw, signing_secret, body_col=body_col)
-    commands = decode_normalize_requests(raw, body_col=body_col)
+        raw, _ = verify_signature_gate(raw, signing_secret)
+    commands = decode_normalize_requests(raw)
     return ingest_commands(
         commands,
         team_id=team_id,

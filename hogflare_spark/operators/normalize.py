@@ -14,7 +14,7 @@ compute them:
 - update extraction: /root/reference/src/persons.rs:360-456
 - group extraction: /root/reference/src/lib.rs:1360-1376
 
-Runs as one Arrow-batched `mapInPandas` pass at the ingest edge (the
+Runs as one Arrow-batched `mapInArrow` pass at the ingest edge (the
 reference does this work row-at-a-time in its HTTP layer); it is an
 embarrassingly parallel map — no shuffle, no state — so it scales linearly
 with input splits. Everything downstream operates on typed columns.
@@ -616,348 +616,39 @@ def command_error_row(request_seq, item_index, ex: Exception) -> dict:
     return row
 
 
-# ---------------------------------------------------------------------------
-# JVM fast path: plain single-object capture JSON, no Python boundary
-# ---------------------------------------------------------------------------
-
-# printable ASCII minus backslash (\x5C): no escape sequences, no unicode —
-# Jackson's compact re-serialization is then byte-identical to Python's
-# json.dumps(..., separators=(",",":"), ensure_ascii=True)
-_FAST_SAFE_BODY_RE = r"^[\x20-\x5B\x5D-\x7E]*$"
-# any digit followed by '.', 'e' or 'E': floats / exponents re-serialize
-# differently in Java (1.23456785E7) than Python (12345678.5) — fall back.
-# Over-matches inside string values (e.g. ISO timestamps); that only costs
-# the fast path, never correctness.
-_FAST_FLOATY_RE = r"[0-9][.eE]"
-# $unset as a strict all-string JSON array (Jackson-compact form)
-_FAST_UNSET_RE = r'^\[\]$|^\["[^"]*"(,"[^"]*")*\]$'
-# $groups as a strict string→string JSON object (Jackson-compact form)
-_FAST_GROUPS_RE = r'^\{\}$|^\{"[^"]*":"[^"]*"(,"[^"]*":"[^"]*")*\}$'
-# group-type keys must survive a get_json_object bracket path + inline JSON
-_FAST_KEY_RE = r"^[0-9A-Za-z_.:@ -]*$"
-
-_FAST_KNOWN_CAPTURE = ("api_key", "event", "distinct_id", "properties", "timestamp", "context")
-
-# group_set_updates (lib.rs:430-450) as a SQL lambda over the $group_set
-# keys: type present in $groups + non-empty object props → one update entry
-_FAST_GROUP_UPDATES_EXPR = """
-CASE WHEN __gset IS NULL THEN NULL ELSE (
-  SELECT CASE WHEN size(e) > 0
-              THEN concat('[', array_join(e, ','), ']') END
-  FROM (SELECT filter(
-    transform(json_object_keys(__gset), k ->
-      CASE WHEN get_json_object(__groups, concat('$[''', k, ''']')) IS NOT NULL
-            AND get_json_object(__gset, concat('$[''', k, ''']')) LIKE '{%'
-            AND get_json_object(__gset, concat('$[''', k, ''']')) != '{}'
-      THEN concat('{"group_type":"', k,
-                  '","group_key":"',
-                  get_json_object(__groups, concat('$[''', k, ''']')),
-                  '","properties":',
-                  get_json_object(__gset, concat('$[''', k, ''']')), '}')
-      END),
-    x -> x IS NOT NULL) AS e)
-) END
-"""
+def fast_capture_path(raw: DataFrame, *_):
+    """Eligibility for a JVM decode tier that no longer exists: no row takes
+    it, so perfbench's traced `normalize.jvm_tier_ratio` reads 0.0. Kept
+    only because perfbench's tracer calls it; drop both together."""
+    return (F.lit(False),)
 
 
-# fast_capture_path output memo: building the ~200-node eligibility /
-# command Column trees costs ~0.2 s of pure py4j round trips per call
-# (measured r9), paid once per decode. The trees are UNRESOLVED
-# expressions — they depend only on body_col and on WHICH optional
-# columns exist (through opt()), never on the specific frame — so they
-# are reusable across frames. Keyed additionally on applicationId so a
-# restarted session (new JVM state) never sees stale py4j handles.
-_FCP_MEMO: dict = {}
+def decode_normalize_requests(raw: DataFrame) -> DataFrame:
+    """Fused decode + normalize: raw request rows → COMMAND_SCHEMA rows
+    (without `error`).
 
-
-def fast_capture_path(raw: DataFrame, body_col: str = "body"):
-    opt_cols = (
-        "content_type",
-        "content_encoding",
-        "header_api_key",
-        "header_sent_at",
-        "geo_json",
-        "ip",
-    )
-    key = (
-        raw.sparkSession.sparkContext.applicationId,
-        body_col,
-        tuple(c for c in opt_cols if c in raw.columns),
-    )
-    hit = _FCP_MEMO.get(key)
-    if hit is None:
-        hit = _FCP_MEMO[key] = _fast_capture_path(raw, body_col)
-    return hit
-
-
-def _fast_capture_path(raw: DataFrame, body_col: str = "body"):
-    """(eligibility Column over `raw`, fast COMMAND-frame builder).
-
-    The JVM expression twin of `command_row` for the dominant wire shape:
-    an uncompressed single-object JSON `/capture` body (the overwhelming
-    majority of real SDK traffic — reference extractors.rs:508-540 object
-    branch + pipeline.rs:186-209). Rows that pass eligibility produce
-    byte-identical COMMAND_SCHEMA rows to the Python kernel without
-    crossing the Python boundary; everything else falls back.
-
-    Eligibility is deliberately conservative — each guard exists because
-    the fallback differs:
-    - ASCII-printable, backslash-free body: Python escapes non-ASCII
-      (ensure_ascii) where Jackson doesn't;
-    - no digit followed by [.eE]: Java doubles re-serialize in E-notation;
-    - `try_parse_json` non-null: rejects invalid JSON AND duplicate keys
-      at any depth (Python keeps the last duplicate, Jackson the first);
-    - top-level keys ⊆ the capture struct: serde(flatten) `extra` capture
-      stays empty, so no unknown-field stash is needed;
-    - distinct_id/event JSON strings (variant check — get_json_object
-      can't distinguish `"5"` from `5`), timestamp/api_key string-or-
-      absent, properties/context object-or-absent (context also array);
-    - $unset a strict string array; $groups a strict string map.
+    One path for every request: `fan_out` (batch input only), then one
+    `mapInArrow` of the kernel below — `payload.decode_request_row`, then
+    `command_row` per item — then a filter on `error IS NULL`. A request
+    the reference 4xxes gives no row; an item that fails to normalize
+    gives an error row, which the filter drops.
     """
-    cols = raw.columns
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def opt(name):
-        return F.col(name) if name in cols else F.lit(None).cast("string")
-
-    body = F.col(body_col).cast("string")
-    vb = F.try_parse_json(body)
-
-    def vjson(path):
-        # raw JSON text of a subtree INCLUDING string quotes — type probe
-        # only (variant re-serialization reorders object keys)
-        return F.to_json(F.try_variant_get(vb, path, "variant"))
-
-    did_v = vjson("$.distinct_id")
-    event_v = vjson("$.event")
-    ts_v = vjson("$.timestamp")
-    api_v = vjson("$.api_key")
-    ctx_v = vjson("$.context")
-    props_v = vjson("$.properties")
-    groups_v = vjson("$['properties']['$groups']")
-
-    # Single-parse nested-path extracts: GetJsonObject re-parses its
-    # input per evaluation and interpreted Filter does no subexpression
-    # elimination, so chaining get_json_object(get_json_object(body,…))
-    # doubles the parse count per probe. One bracket path = one parse.
-    unset_raw = F.get_json_object(body, "$['properties']['$unset']")
-    groups_raw = F.get_json_object(body, "$['properties']['$groups']")
-    gset_raw = F.get_json_object(body, "$['properties']['$group_set']")
-    keys = F.json_object_keys(body)
-    # keys flattened to ONE parse + string compares (the array equality
-    # form re-evaluated json_object_keys per comparison). A key name
-    # containing a comma could only produce a false join-collision in
-    # combination with a body the canonical regex already rejects.
-    keys_join = F.array_join(keys, ",")
-
-    ctype = F.lower(F.coalesce(opt("content_type"), F.lit("")))
-    # guards shared by both eligibility lanes (cheap: column null checks,
-    # substring scans, three regex passes, ONE variant parse)
-    common = (
-        (F.col("endpoint") == "capture")
-        & opt("content_encoding").isNull()
-        & ~ctype.contains("form")
-        & opt("header_sent_at").isNull()
-        & opt("geo_json").isNull()
-        & opt("ip").isNull()
-        & body.isNotNull()
-        & body.rlike(_FAST_SAFE_BODY_RE)
-        & ~body.rlike(_FAST_FLOATY_RE)
-        & ~body.startswith("data=")
-        & vb.isNotNull()
-        # no keys-non-null guard needed: a non-object body nulls the
-        # keys probes of BOTH lanes, and null & / | propagation already
-        # lands the row on the slow path via the final coalesce(False)
-    )
-    # strict shapes for the three special properties keys, checked only
-    # when the key's text appears anywhere in the body (SAFE bodies have
-    # no escapes, so the substring can only be a real key — possibly
-    # nested, in which case the top-level extract is null and the lane
-    # conservatively fails over to the deep probes)
-    special_ok = (
-        F.when(
-            body.contains('"$unset"'), unset_raw.rlike(_FAST_UNSET_RE)
-        ).otherwise(F.lit(True))
-        & F.when(
-            body.contains('"$groups"'),
-            groups_raw.rlike(_FAST_GROUPS_RE)
-            & F.coalesce(
-                F.forall(F.json_object_keys(groups_raw), lambda k: k.rlike(_FAST_KEY_RE)),
-                F.lit(True),
-            ),
-        ).otherwise(F.lit(True))
-        & F.when(
-            body.contains('"$group_set"'),
-            F.coalesce(
-                F.forall(F.json_object_keys(gset_raw), lambda k: k.rlike(_FAST_KEY_RE)),
-                F.lit(True),  # non-object $group_set → no updates either way
-            ),
-        ).otherwise(F.lit(True))
-    )
-    # CANONICAL LANE — the machine-generated SDK shape, which dominates
-    # real capture traffic: exactly {"event":"…","distinct_id":"…"
-    # [,"properties":{…}]} in that key order. One anchored regex proves
-    # the key order and that event/distinct_id are strings (SAFE bodies
-    # cannot hide quotes in values); exact-key-set equality on
-    # json_object_keys (doc order preserved) closes the regex's one hole
-    # (a trailing top-level key whose value ends in "}}"). Rows in this
-    # lane skip the SEVEN variant-serialization probes of the deep lane —
-    # at 10^11 rows the per-row probe count IS the ingest cost.
-    lane = (
-        body.rlike(
-            r'^\{"event":"[^"]*","distinct_id":"[^"]*"(,"properties":\{.*\})?\}$'
-        )
-        & keys_join.isin("event,distinct_id,properties", "event,distinct_id")
-        & special_ok
-    )
-    # DEEP LANE — any other key order/optional-field combination, via the
-    # full variant type probes.
-    deep = (
-        F.forall(keys, lambda k: k.isin(*_FAST_KNOWN_CAPTURE))
-        & did_v.isNotNull()
-        & did_v.startswith('"')
-        & event_v.isNotNull()
-        & event_v.startswith('"')
-        & (ts_v.isNull() | ts_v.startswith('"'))
-        & (api_v.isNull() | api_v.startswith('"'))
-        & (ctx_v.isNull() | ctx_v.startswith("{") | ctx_v.startswith("["))
-        & (props_v.isNull() | props_v.startswith("{"))
-        & (unset_raw.isNull() | unset_raw.rlike(_FAST_UNSET_RE))
-        & (groups_v.isNull() | (groups_v.startswith("{") & groups_raw.rlike(_FAST_GROUPS_RE)))
-        & (
-            gset_raw.isNull()
-            | F.coalesce(
-                F.forall(F.json_object_keys(gset_raw), lambda k: k.rlike(_FAST_KEY_RE)),
-                F.lit(True),
-            )
-        )
-        & F.coalesce(
-            F.forall(F.json_object_keys(groups_raw), lambda k: k.rlike(_FAST_KEY_RE)),
-            F.lit(True),
-        )
-    )
-    eligible = common & (lane | deep)
-
-    def _staged(fast_raw: DataFrame, keep: list[str]) -> DataFrame:
-        # TWO Jackson parses per row via json_tuple (one per nesting
-        # level) instead of ~15 independent get_json_object probes —
-        # JsonTuple streams the document once and emits every requested
-        # field, with the same extraction semantics as get_json_object
-        # (strings unquoted, objects/arrays as raw compact text, missing
-        # → null). The remaining json_object_keys calls parse only the
-        # small $set/$set_once fragments. `keep` columns pass through
-        # untouched (the under-parallel lane carries the raw row + flag
-        # alongside the command projection so ONE checkpoint pass serves
-        # both branches); they must not collide with COMMAND_SCHEMA
-        # names.
-        jt1 = fast_raw.select(
-            "*",
-            F.json_tuple(
-                body, "event", "distinct_id", "timestamp", "api_key",
-                "context", "properties",
-            ).alias("__ev", "__did", "__ts", "__api", "__ctx", "__props"),
-        )
-        jt2 = jt1.select(
-            "*",
-            F.json_tuple(
-                F.col("__props"), "$set", "$set_once", "$unset", "$groups",
-                "$group_set",
-            ).alias("__set", "__so", "__unset", "__fgroups", "__fgset"),
-        )
-        set_raw = F.col("__set")
-        so_raw = F.col("__so")
-        # _obj() twin: object passthrough, anything else (incl. absent) → {}
-        s_out = F.when(F.json_object_keys(set_raw).isNotNull(), set_raw).otherwise(F.lit("{}"))
-        so_out = F.when(F.json_object_keys(so_raw).isNotNull(), so_raw).otherwise(F.lit("{}"))
-        unset_out = F.coalesce(F.col("__unset"), F.lit("[]"))
-        did = F.col("__did")
-        person_update = F.when(
-            (s_out != "{}") | (so_out != "{}") | (unset_out != "[]"),
-            F.concat(
-                F.lit('{"distinct_id":"'), did,
-                F.lit('","set":'), s_out,
-                F.lit(',"set_once":'), so_out,
-                F.lit(',"unset":'), unset_out,
-                F.lit("}"),
-            ),
-        )
-
-        staged = jt2.select(
-            *keep,
-            F.col("request_seq").cast("long").alias("request_seq"),
-            F.lit(0).cast("long").alias("item_index"),
-            F.col("__ev").alias("event"),
-            did.alias("distinct_id"),
-            F.col("__ts").alias("timestamp"),
-            F.col("__props").alias("properties"),
-            F.col("__ctx").alias("context"),
-            F.lit(None).cast("string").alias("person_properties_request"),
-            F.coalesce(F.col("__api"), opt("header_api_key")).alias("api_key"),
-            F.lit(None).cast("string").alias("extra"),
-            person_update.alias("person_update"),
-            F.lit(None).cast("string").alias("alias"),
-            F.lit(None).cast("string").alias("anon_distinct_id"),
-            F.col("__fgroups").alias("groups"),
-            F.col("__fgroups").alias("__groups"),
-            F.col("__fgset").alias("__gset"),
-            F.lit(None).cast("string").alias("group_identify"),
-            F.lit("0").alias("skip_person"),
-        )
-        return staged.withColumn(
-            "group_updates", F.expr(_FAST_GROUP_UPDATES_EXPR)
-        ).select(
-            *keep, *[f.name for f in COMMAND_SCHEMA.fields if f.name != "error"]
-        )
-
-    def build(fast_raw: DataFrame) -> DataFrame:
-        return _staged(fast_raw, [])
-
-    return eligible, build, _staged
-
-
-def decode_normalize_requests(
-    raw: DataFrame, body_col: str = "body", fast_path: bool = True
-) -> DataFrame:
-    """Fused decode + normalize: raw request rows → COMMAND_SCHEMA rows.
-
-    Two-tier execution:
-
-    1. **JVM tier** (`fast_capture_path`): plain single-object capture
-       JSON — the hot shape — handled entirely by Catalyst expressions
-       (`get_json_object` projections). No Python boundary, whole-stage
-       codegen applies, and the Python-worker cost that multiplies by
-       10^11 rows at 100 TB disappears for the majority of traffic.
-    2. **Python tier**: everything else (form/base64/gzip/batch/browser/
-       session/exotic JSON) through the Arrow-batched kernel below —
-       `payload.decode_request_row` then `command_row` per item, in ONE
-       Arrow pass.
-
-    The split is two filters over the same scan (columnar parquet read of
-    the body column twice in the worst case — still far cheaper than one
-    Python pass over everything). For under-parallel batch inputs (one
-    small parquet file = one scan partition) the split instead runs over
-    an eagerly checkpointed fan-out with eligibility evaluated ONCE as a
-    projected flag — see the inline comment. `fast_path=False` forces
-    everything through the Python kernel; tests/test_payload_decode.py
-    asserts the two tiers produce identical rows on eligible bodies.
-    """
+    from hogflare_spark.operators.partitioning import fan_out
     from hogflare_spark.sources.payload import decode_request_row
 
     opt_cols = ("content_type", "content_encoding", "header_api_key",
                 "header_sent_at", "geo_json", "ip")
-    present = {c for c in raw.columns if c in opt_cols}
-
-    def _opt(r: dict, name: str):
-        return r.get(name) if name in present else None
+    present = [c for c in opt_cols if c in raw.columns]
+    out_schema = to_arrow_schema(COMMAND_SCHEMA)
 
     def _run(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        cols = [f.name for f in COMMAND_SCHEMA.fields]
-        for pdf in batches:
+        for batch in batches:
             out_rows = []
-            for row in pdf.itertuples(index=False):
-                r = row._asdict()
-                b = r[body_col]
+            for r in batch.to_pylist():
+                b = r["body"]
                 try:
                     raw_bytes = (
                         b if isinstance(b, (bytes, bytearray)) else str(b).encode()
@@ -965,8 +656,8 @@ def decode_normalize_requests(
                     items, env_api, env_sent = decode_request_row(
                         r["endpoint"],
                         raw_bytes,
-                        _opt(r, "content_type"),
-                        _opt(r, "content_encoding"),
+                        r.get("content_type"),
+                        r.get("content_encoding"),
                     )
                 except Exception:  # noqa: BLE001 — reference 4xxes malformed rows
                     continue
@@ -980,105 +671,18 @@ def decode_normalize_requests(
                                 idx,
                                 envelope_api_key=env_api,
                                 envelope_sent_at=env_sent,
-                                header_api_key=_opt(r, "header_api_key"),
-                                header_sent_at=_opt(r, "header_sent_at"),
-                                geo_json=_opt(r, "geo_json"),
-                                ip=_opt(r, "ip"),
+                                header_api_key=r.get("header_api_key"),
+                                header_sent_at=r.get("header_sent_at"),
+                                geo_json=r.get("geo_json"),
+                                ip=r.get("ip"),
                             )
                         )
                     except Exception as ex:  # noqa: BLE001
-                        out_rows.append(
-                            command_error_row(r.get("request_seq"), idx, ex)
-                        )
-            yield pd.DataFrame(out_rows, columns=cols)
+                        out_rows.append(command_error_row(r["request_seq"], idx, ex))
+            yield pa.RecordBatch.from_pylist(out_rows, schema=out_schema)
 
-    from pyspark.sql import functions as F
-
-    if not raw.isStreaming and fast_path:
-        # Small-input lane: fan out BEFORE the fast/slow split (a single
-        # small parquet file arrives as ONE scan partition, serializing
-        # the whole decode on one core), evaluate eligibility ONCE as a
-        # projected flag, and pin the result with an eager
-        # localCheckpoint. The checkpoint is load-bearing twice over:
-        # (1) PushDownPredicate otherwise moves each branch's eligibility
-        # filter back through the exchange into the one-partition scan
-        # (observed plan: Filter(eligible)/Filter(NOT eligible) both
-        # under the RoundRobinPartitioning, the ~60-node interpreted
-        # predicate running single-threaded twice); (2) filtering on the
-        # materialized flag makes the branch filters trivial boolean
-        # scans instead of two more predicate evaluations. Engages only
-        # for under-parallel inputs — at real scale the scan has
-        # thousands of splits, fan_out is a no-op, and the filters
-        # SHOULD push into the scans. Engagement is decided by FILE
-        # count (is_small_file_input), not by whether fan_out actually
-        # shuffled: a caller that pre-fanned its SCAN (so its heavy body
-        # projection evaluates above its own exchange — the r9 decode
-        # fix) arrives already wide, and the lane's other wins (one
-        # eligibility evaluation, empty-slow-branch skip, one
-        # materialization shared by every consumer) still apply.
-        from hogflare_spark.operators.partitioning import (
-            fan_out,
-            is_small_file_input,
-        )
-
-        if is_small_file_input(raw):
-            fanned = fan_out(raw)
-            eligible, build, staged_wide = fast_capture_path(fanned, body_col)
-            # r8: the command projection rides in the SAME pass as the
-            # flag — one checkpoint materializes flag + decoded command
-            # columns + the raw row, so the former separate fast-build
-            # pass over the checkpointed rows disappears. The command
-            # expressions are null-safe on ineligible bodies; those
-            # columns are only read through the __fast filter. The raw
-            # request_seq is carried under a reserved name (the command
-            # projection owns the `request_seq` slot).
-            raw_cols = list(fanned.columns)
-            flagged = fanned.withColumn(
-                "__fast", F.coalesce(eligible, F.lit(False))
-            ).withColumn("__raw_request_seq", F.col("request_seq"))
-            keep = ["__fast", "__raw_request_seq"] + [
-                c for c in raw_cols if c != "request_seq"
-            ]
-            # the empty-slow-branch probe rides the checkpoint's own
-            # materialization job via observe()
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            combined = (
-                staged_wide(flagged, keep)
-                .observe(obs, F.count(F.when(~F.col("__fast"), 1)).alias("n_slow"))
-                .localCheckpoint(eager=True)
-            )
-            cmd_cols = [f.name for f in COMMAND_SCHEMA.fields if f.name != "error"]
-            fast_df = combined.where(F.col("__fast")).select(*cmd_cols)
-            # canonical traffic commonly leaves the slow branch EMPTY;
-            # skipping it avoids spinning up a pool of Python workers
-            # for zero rows
-            if not obs.get["n_slow"]:
-                return fast_df
-            slow_raw = combined.where(~F.col("__fast")).select(
-                F.col("__raw_request_seq").alias("request_seq"),
-                *[c for c in raw_cols if c != "request_seq"],
-            )
-            mapped = slow_raw.mapInPandas(_run, COMMAND_SCHEMA)
-            slow_df = mapped.where(F.col("error").isNull()).drop("error")
-            return fast_df.unionByName(slow_df)
-
-    if fast_path:
-        eligible, build, _ = fast_capture_path(raw, body_col)
-        is_fast = F.coalesce(eligible, F.lit(False))
-        fast_df = build(raw.where(is_fast))
-        slow_raw = raw.where(~is_fast)
-    else:
-        fast_df = None
-        slow_raw = raw
-
-    if not slow_raw.isStreaming:
-        from hogflare_spark.operators.partitioning import fan_out
-
-        slow_raw = fan_out(slow_raw)
-    mapped = slow_raw.mapInPandas(_run, COMMAND_SCHEMA)
-    slow_df = mapped.where(F.col("error").isNull()).drop("error")
-    return slow_df if fast_df is None else fast_df.unionByName(slow_df)
-
-
+    req = raw.select("request_seq", "endpoint", "body", *present)
+    if not req.isStreaming:
+        req = fan_out(req)
+    mapped = req.mapInArrow(_run, COMMAND_SCHEMA)
+    return mapped.where(F.col("error").isNull()).drop("error")

@@ -107,11 +107,7 @@ def signature_ok_expr(
 
 
 def verify_signature_gate(
-    raw: DataFrame,
-    secret: str | None,
-    body_col: str = "body",
-    sig_posthog_col: str = "sig_posthog",
-    sig_hub_col: str = "sig_hub",
+    raw: DataFrame, secret: str | None
 ) -> tuple[DataFrame, DataFrame]:
     """(accepted, rejected) split of raw request rows.
 
@@ -124,8 +120,6 @@ def verify_signature_gate(
     def opt(name: str) -> Column:
         return F.col(name) if name in cols else F.lit(None).cast("string")
 
-    ok = signature_ok_expr(
-        F.col(body_col), secret, opt(sig_posthog_col), opt(sig_hub_col)
-    )
+    ok = signature_ok_expr(F.col("body"), secret, opt("sig_posthog"), opt("sig_hub"))
     ok = F.coalesce(ok, F.lit(False))
     return raw.where(ok), raw.where(~ok)

@@ -8,8 +8,8 @@ for the last one:
   by the innermost engine function that was running when it started
   (this script wraps the functions below and sets the job description;
   the engine sets none);
-- every `mapInPandas` kernel: its tasks, the jobs they ran in and the
-  worker CPU while it ran (recorded inside the worker);
+- every `mapInPandas` / `mapInArrow` kernel: its tasks, the jobs they
+  ran in and the worker CPU while it ran (recorded inside the worker);
 - Janino compiles (`CodegenMetrics`) during the pass;
 - the CPU of this run's own process tree, read from /proc: driver
   Python, JVM executor threads, JVM C2 and C1 compiler threads, other
@@ -154,39 +154,43 @@ class _Labeller:
 
 
 def _time_kernels(df_class, out_dir: str):
-    """Wrap `mapInPandas` so that each kernel task writes its worker CPU,
-    stage and partition to `out_dir`."""
-    orig = df_class.mapInPandas
+    """Wrap `mapInPandas` and `mapInArrow` so that each kernel task writes
+    its worker CPU, stage and partition to `out_dir`."""
+    origs = {attr: getattr(df_class, attr) for attr in ("mapInPandas", "mapInArrow")}
 
-    @functools.wraps(orig)
-    def timed(self, func, schema, *args, **kwargs):
-        name = func.__qualname__
-        module = func.__module__
+    def wrap(orig):
+        @functools.wraps(orig)
+        def timed(self, func, schema, *args, **kwargs):
+            name = func.__qualname__
+            module = func.__module__
 
-        def run(batches):
-            import json as _json
-            import os as _os
-            import time as _time
+            def run(batches):
+                import json as _json
+                import os as _os
+                import time as _time
 
-            from pyspark import TaskContext
+                from pyspark import TaskContext
 
-            t0 = _time.process_time()
-            try:
-                yield from func(batches)
-            finally:
-                ctx = TaskContext.get()
-                rec = {"kernel": f"{module}.{name}", "stage": ctx.stageId(),
-                       "partition": ctx.partitionId(), "attempt": ctx.attemptNumber(),
-                       "cpu_s": _time.process_time() - t0}
-                path = _os.path.join(out_dir, f"{rec['stage']}-{rec['partition']}-"
-                                     f"{rec['attempt']}-{_os.getpid()}-{_time.time_ns()}.json")
-                with open(path, "w") as fh:
-                    _json.dump(rec, fh)
+                t0 = _time.process_time()
+                try:
+                    yield from func(batches)
+                finally:
+                    ctx = TaskContext.get()
+                    rec = {"kernel": f"{module}.{name}", "stage": ctx.stageId(),
+                           "partition": ctx.partitionId(), "attempt": ctx.attemptNumber(),
+                           "cpu_s": _time.process_time() - t0}
+                    path = _os.path.join(out_dir, f"{rec['stage']}-{rec['partition']}-"
+                                         f"{rec['attempt']}-{_os.getpid()}-{_time.time_ns()}.json")
+                    with open(path, "w") as fh:
+                        _json.dump(rec, fh)
 
-        return orig(self, run, schema, *args, **kwargs)
+            return orig(self, run, schema, *args, **kwargs)
 
-    df_class.mapInPandas = timed
-    return lambda: setattr(df_class, "mapInPandas", orig)
+        return timed
+
+    for attr, orig in origs.items():
+        setattr(df_class, attr, wrap(orig))
+    return lambda: [setattr(df_class, attr, orig) for attr, orig in origs.items()]
 
 
 def _some(opt):
@@ -308,7 +312,7 @@ def main() -> None:
         for j in jobs:
             print(f"    {j['job']:5d} {j['label']:28s} {j['wall_ms']!s:>7} {j['tasks']:7d} "
                   f"{j['exec_run_ms']:7d} {j['exec_cpu_ms']:7d}")
-        print("  mapInPandas kernels (tasks, worker cpu s, jobs):")
+        print("  Python kernels (tasks, worker cpu s, jobs):")
         for name, k in sorted(kernels.items()):
             print(f"    {name}: {k['tasks']} tasks, {k['cpu_s']:.3f} s, "
                   f"jobs {sorted(k['jobs'], key=str)}")

@@ -358,8 +358,8 @@ def test_derive_group_ops_matches_python_reference(spark):
 
 
 def test_derive_group_ops_matches_python_reference_on_decoded_commands(spark):
-    """The same parity over decoder output: JVM-tier captures (Jackson
-    text) and Python-tier batch/groupidentify requests."""
+    """The same parity over decoder output: capture, batch and
+    groupidentify requests."""
     from hogflare_spark.operators.group_state import derive_group_ops
 
     requests = [

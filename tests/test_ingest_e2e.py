@@ -246,7 +246,7 @@ def test_geo_enrichment_end_to_end(spark):
 
 def test_decode_python_tier_runs_in_one_stage(spark, tmp_path, monkeypatch):
     """ingest_commands pins the decoded commands once, eagerly: every
-    partition of decode's Python-tier kernel runs in the same Spark stage,
+    partition of decode's kernel runs in the same Spark stage,
     once, instead of inside the consumers' jobs (a lazily cached union
     ran it across the CC edge collect's scale-up jobs)."""
     import glob
@@ -257,16 +257,15 @@ def test_decode_python_tier_runs_in_one_stage(spark, tmp_path, monkeypatch):
 
     rows = []
     for i in range(64):
-        if i % 2:  # JVM tier: plain single-object capture
+        if i % 2:  # plain single-object capture
             rows.append((i, "capture", json.dumps(
                 {"event": "ev", "distinct_id": f"u{i}", "properties": {"$groups": {"org": "o"}}})))
-        else:  # Python tier: a batch with an alias
+        else:  # a batch with an alias
             rows.append((i, "batch", json.dumps({"batch": [
                 {"event": "ev", "distinct_id": f"u{i}"},
                 {"type": "alias", "distinct_id": f"u{i}", "alias": f"a{i}"}]})))
-    # four request partitions: the decoded union is 4 JVM-tier then 4
-    # Python-tier partitions, and a limit's scale-up jobs (1, 4, then 3
-    # partitions) split the Python tier across two of them
+    # four request partitions, so a lazy decode would run across a
+    # limit's scale-up jobs (1, 4, then 3 partitions)
     raw = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 4), "request_seq long, endpoint string, body string"
     )
@@ -274,7 +273,7 @@ def test_decode_python_tier_runs_in_one_stage(spark, tmp_path, monkeypatch):
     seen = tmp_path / "kernel"
     seen.mkdir()
     df_class = type(spark.range(1))
-    orig = df_class.mapInPandas
+    orig = df_class.mapInArrow
 
     def recording(self, func, schema, *args, **kwargs):
         if not func.__qualname__.startswith("decode_normalize_requests"):
@@ -294,12 +293,12 @@ def test_decode_python_tier_runs_in_one_stage(spark, tmp_path, monkeypatch):
 
         return orig(self, run, schema, *args, **kwargs)
 
-    monkeypatch.setattr(df_class, "mapInPandas", recording)
+    monkeypatch.setattr(df_class, "mapInArrow", recording)
     commands = decode_normalize_requests(raw)
     out = ingest_commands(commands, group_types=("org", None, None, None, None))
     assert out["events"].count() == 96
     runs = [os.path.basename(p).split("_")[:2] for p in glob.glob(str(seen / "*"))]
     stages = {s for s, _ in runs}
     partitions = [p for _, p in runs]
-    assert len(stages) == 1, f"decode's Python tier ran in stages {sorted(stages)}"
+    assert len(stages) == 1, f"decode's kernel ran in stages {sorted(stages)}"
     assert len(partitions) == len(set(partitions)) > 1

@@ -56,11 +56,9 @@ def test_bpe_train_on_sample_matches_manual_subset(spark):
 
 
 def test_fan_out_lane_survives_malformed_and_compressed_bodies(spark, tmp_path):
-    """r8 ADVICE: the fused flag+command checkpoint in the under-parallel
-    fan_out lane evaluates every fast-path expression on INELIGIBLE rows
-    too — malformed JSON, compressed envelopes, non-JSON garbage. Pin
-    that the combined checkpoint materializes without error and the lane
-    stays row-identical to the all-Python path."""
+    """A one-file input takes the fan_out lane; malformed JSON, non-JSON
+    garbage and an empty body decode there without error (they give no
+    row), and the compressed envelope decodes beside the plain body."""
     import base64
     import json
     import zlib
@@ -76,7 +74,7 @@ def test_fan_out_lane_survives_malformed_and_compressed_bodies(spark, tmp_path):
         }
     )
     bodies = [
-        '{"event":"ok","distinct_id":"u1","properties":{"k":5}}',  # eligible
+        '{"event":"ok","distinct_id":"u1","properties":{"k":5}}',  # plain
         "{not json at all",  # malformed
         "\x00\x1f\x8b garbage bytes",  # binary-ish garbage
         gz_env,  # compressed data envelope
@@ -90,15 +88,7 @@ def test_fan_out_lane_survives_malformed_and_compressed_bodies(spark, tmp_path):
     raw = spark.read.parquet(p)
     assert fan_out(raw) is not raw, "test precondition: fan_out lane must engage"
 
-    fast = decode_normalize_requests(raw, fast_path=True)
-    slow = decode_normalize_requests(raw, fast_path=False)
-    cols = sorted(fast.columns)
-    key = lambda df: sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-    got = key(fast)
-    assert got == key(slow)
-    # the decodable bodies both came through: the eligible row via the
-    # fast branch, the compressed envelope via the Python branch
-    events = {r["event"] for r in fast.collect()}
+    events = {r["event"] for r in decode_normalize_requests(raw).collect()}
     assert events == {"ok", "gz"}
 
 
