@@ -3,10 +3,12 @@
 Mirrors the reference's /decide and /flags response construction
 (/root/reference/src/lib.rs:1053-1147, src/feature_flags.rs:156-201,
 404-451) and evaluate_feature_flags context assembly (lib.rs:1284-1345),
-re-expressed over tables: `batch_flag_responses` evaluates every person
-in the persons table at once — the thing the per-request reference cannot
-do — while `decide_response`/`flags_response` keep request-shape parity
-for a thin serving layer.
+re-expressed over tables: `batch_flag_responses_native` evaluates every
+person in the persons table at once — the thing the per-request
+reference cannot do — while `decide_response`/`flags_response` keep
+request-shape parity for a thin serving layer. Its parity reference, the
+per-row kernel over the same table, lives with the tests
+(`tests/flag_reference.py`).
 
 `batch_flag_responses_native` is what a /decide server holds: the same
 bodies, evaluated once per persons snapshot and pinned, so a request is a
@@ -24,7 +26,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hogflare_spark.flags.kernel import FlagContext, FlagResult, evaluate_flags
+from hogflare_spark.flags.kernel import FlagContext, FlagResult
 from hogflare_spark.flags.model import FlagDefinition
 
 
@@ -165,68 +167,6 @@ def assemble_context(
 
 
 # ---------------------------------------------------------------------------
-# batch serving: evaluate the flag config for every person in the table
-# ---------------------------------------------------------------------------
-
-
-def batch_flag_responses(
-    persons: DataFrame,
-    flags: list[FlagDefinition],
-    version: int = 2,
-) -> DataFrame:
-    """persons table → one /flags-shaped JSON response per canonical_id.
-
-    Arrow-batched mapInPandas over the persons table (narrow, no shuffle);
-    each row replays the exact kernel the serving path uses. requestId /
-    evaluatedAt are deterministic (derived from canonical_id / 0) so the
-    output is oracle-comparable.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    flag_dicts = [f.__dict__ for f in flags]  # plain data for pickling
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hogflare_spark.flags.model import FlagDefinition as FD
-
-        defs = []
-        for d in flag_dicts:
-            fd = FD.__new__(FD)
-            fd.__dict__.update(d)
-            defs.append(fd)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                merged = {k: json.loads(v) for k, v in (r.properties or {}).items()}
-                for k, v in (r.properties_set_once or {}).items():
-                    if k not in merged:
-                        merged[k] = json.loads(v)
-                ctx = FlagContext(
-                    distinct_id=r.canonical_id,
-                    person_properties=merged,
-                    groups={},
-                    group_properties={},
-                )
-                results = evaluate_flags(defs, ctx)
-                body = flags_response(
-                    results,
-                    version=version,
-                    request_id=f"req-{r.canonical_id}",
-                    evaluated_at_ms=0,
-                )
-                rows.append(
-                    {
-                        "canonical_id": r.canonical_id,
-                        "response": json.dumps(body, sort_keys=True, separators=(",", ":")),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["canonical_id", "response"])
-
-    return persons.mapInPandas(run, "canonical_id string, response string")
-
-
-# ---------------------------------------------------------------------------
 # native batch serving: the same /flags body as pure Column expressions
 # ---------------------------------------------------------------------------
 
@@ -337,8 +277,8 @@ def batch_flag_responses_native(
     flags: list[FlagDefinition],
     version: int = 2,
 ) -> DataFrame:
-    """persons table → the SAME /flags-shaped JSON body as
-    batch_flag_responses, as a `(canonical_id, response)` table pinned
+    """persons table → the /flags-shaped JSON body `flags_response` gives
+    for each person, as a `(canonical_id, response)` table pinned
     with an eager local checkpoint: every person's flags are evaluated
     once, here, and a /decide request filters the pinned rows
     (`where(canonical_id isin ...)`) without re-planning or re-running the
@@ -360,8 +300,9 @@ def _response_plan(
     """The lazy plan batch_flag_responses_native pins: built entirely
     from compiled Column expressions (flags/compiler.py) + string
     assembly — zero Python in the hot path, one whole-stage-codegen'd
-    projection per row. The per-row kernel twin stays as the differential
-    oracle (tests/test_round11.py pins the two bit-identical).
+    projection per row. The per-row kernel twin
+    (`tests/flag_reference.py`) stays as the differential oracle
+    (tests/test_round11.py pins the two bit-identical).
 
     The body is assembled by string concatenation rather than to_json()
     because json.dumps(sort_keys=True) semantics — key-sorted maps whose

@@ -15,21 +15,19 @@ Reference semantics (/root/reference/src/groups.rs:16-41, src/lib.rs):
   exists; empty result → NULL (lib.rs:1393-1411)
 
 Spark shape: one narrow Catalyst projection (`from_json` + explode, no
-Python worker) turns commands into group ops, one shuffle keyed by
-(group_type, group_key), a partition-streaming `mapInPandas` replays the
-LWW fold per key in (request_seq, item_index, sub) order — the fold's
-only Python stage; per-key serial
-processing, exactly the reference's Durable-Object-per-group model
-(groups.rs:183-235). Hydration results join back to events on the seq
-pair. At 100 TB the op stream is a small projection of events and the
+Python worker) turns commands into group ops; the sorted replay
+(`partitioning.replay_sorted`: one shuffle keyed by (group_type,
+group_key), one `mapInArrow` stage) runs the LWW fold per key in
+(request_seq, item_index, sub) order — the fold's only Python stage;
+per-key serial processing, exactly the reference's
+Durable-Object-per-group model (groups.rs:183-235). Hydration results
+join back to events on the seq pair. At 100 TB the op stream is a small projection of events and the
 state per key is one property bag.
 """
 
 from __future__ import annotations
 
 import json
-
-from hogflare_spark.functions.fastjson import loads as fj_loads
 from datetime import datetime
 from typing import Any
 
@@ -44,6 +42,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hogflare_spark.functions.fastjson import loads as fj_loads
+from hogflare_spark.operators.partitioning import (
+    arrow_columns,
+    arrow_rows,
+    replay_sorted,
+)
 from hogflare_spark.operators.person_store import parse_event_time
 
 _FOLD_OUT = StructType(
@@ -61,6 +65,14 @@ _FOLD_OUT = StructType(
     ]
 )
 
+
+# replay order within a (group_type, group_key) cell's run: request order
+_FOLD_ORDER = ["request_seq", "item_index", "sub"]
+# the op columns the replay kernel reads, in its unpacking order
+_OP_COLS = [
+    "request_seq", "item_index", "sub", "kind", "group_type", "group_key", "props",
+    "timestamp",
+]
 
 # a GroupUpdate as the commands carry it: `properties` read as its raw
 # JSON text (Spark's JSON reader copies a non-string value verbatim into
@@ -161,132 +173,78 @@ def fold_group_state(
     `prior_groups` (streaming incremental folds): GROUP_SCHEMA frame seeded
     into the replay before this batch's ops.
 
-    Every cell is folded by the partition-streaming LWW replay
-    (`_replay_stream` below), which keeps one cell's record, never its op
-    list: a hot (group_type, group_key) cell streams through one task.
-    A group-free batch derives zero ops and folds to empty results and an
+    Every cell is folded by the sorted LWW replay (`_replay_stream`
+    below), which keeps one cell's record, never its op list: a hot
+    (group_type, group_key) cell streams through one task. A group-free
+    batch derives zero ops and folds to empty results and an
     empty table.
     """
     ops = derive_group_ops(commands)
     if prior_groups is not None:
         ops = ops.unionByName(_seed_group_ops(prior_groups))
 
-    _COLS = [f.name for f in _FOLD_OUT.fields]
-    # replay order within a partition: (type, key) cell runs contiguous,
-    # ops within a run in request order
-    _SORT = ["group_type", "group_key", "request_seq", "item_index", "sub"]
+    def _group_row(key: tuple, rec: dict) -> tuple:
+        # a finished cell's final record, in _FOLD_OUT order; table
+        # values are JSON-encoded for lossless nesting
+        props = {k: json.dumps(v, separators=(",", ":")) for k, v in rec["props"].items()}
+        return (
+            "group", None, None, *key, json.dumps(props, separators=(",", ":")),
+            True, False, rec["created_at"], rec["version"],
+        )
 
     def _replay_stream(batches: Any) -> Any:
-        """Partition-streaming LWW replay: rows arrive sorted by _SORT
-        (enforced by the sortWithinPartitions below), so each
-        (group_type, group_key) cell is a contiguous run; one kernel
-        instance walks the partition, cutting records at cell boundaries
-        (state persists across Arrow batches). Replaces the per-cell
-        groupBy().applyInPandas, whose per-group Arrow/pandas machinery
-        cost ~5x the fold itself on many-small-cells traffic (measured
-        in person_state; same operator shape)."""
-        import pandas as pd
-
-        state: dict[str, Any] = {"cur": None, "record": None}
-
-        def _flush(out: list) -> None:
-            rec = state["record"]
-            if rec is not None:
-                gt, gk = state["cur"]
-                out.append(
-                    {
-                        "row_type": "group",
-                        "request_seq": None,
-                        "item_index": None,
-                        "group_type": gt,
-                        "group_key": gk,
-                        "props": json.dumps(
-                            {
-                                k: json.dumps(v, separators=(",", ":"))
-                                for k, v in rec["props"].items()
-                            },
-                            separators=(",", ":"),
-                        ),
-                        "present": True,
-                        "echo": False,
-                        "created_at": rec["created_at"],
-                        "version": rec["version"],
-                    }
-                )
-            state["record"] = None
-
-        for pdf in batches:
-            out: list = []
-            for row in pdf.itertuples(index=False):
-                key = (row.group_type, row.group_key)
-                if key != state["cur"]:
-                    _flush(out)
-                    state["cur"] = key
-                record = state["record"]
-                seq_linear = (
-                    int(row.request_seq) * 1_000_000
-                    + int(row.item_index) * 100
-                    + min(int(row.sub), 99)
-                )
-                if row.kind == "seed":
-                    payload = fj_loads(row.props)
-                    state["record"] = {
+        """The replay_sorted kernel: rows arrive as each (group_type,
+        group_key) cell's contiguous run in (request_seq, item_index,
+        sub) order, and one kernel instance walks the partition, cutting
+        records at cell boundaries."""
+        cur: tuple | None = None
+        record: dict | None = None
+        for batch in batches:
+            rows: list[tuple] = []
+            for rseq, item, sub, kind, gt, gk, props, ts in zip(
+                *arrow_columns(batch, _OP_COLS)
+            ):
+                key = (gt, gk)
+                if key != cur:
+                    if record is not None:
+                        rows.append(_group_row(cur, record))
+                    cur, record = key, None
+                if kind == "seed":
+                    payload = fj_loads(props)
+                    record = {
                         "created_at": datetime.fromisoformat(payload["created_at"]),
                         "version": int(payload["version"]),
-                        # table values are JSON-encoded for lossless
-                        # nesting
-                        "props": {
-                            k: fj_loads(v) for k, v in payload["properties"].items()
-                        },
+                        "props": {k: fj_loads(v) for k, v in payload["properties"].items()},
                     }
                     continue
-                if row.kind in ("update", "gi_update"):
+                if kind in ("update", "gi_update"):
                     if record is None:
+                        seq_linear = rseq * 1_000_000 + item * 100 + min(sub, 99)
                         record = {
-                            "created_at": parse_event_time(row.timestamp, seq_linear),
+                            "created_at": parse_event_time(ts, seq_linear),
                             "version": 0,
                             "props": {},
                         }
-                        state["record"] = record
                     record["version"] += 1
-                    record["props"].update(fj_loads(row.props))
-                if row.kind in ("lookup", "gi_lookup", "gi_update"):
-                    record = state["record"]
-                    out.append(
-                        {
-                            "row_type": "result",
-                            "request_seq": int(row.request_seq),
-                            "item_index": int(row.item_index),
-                            "group_type": row.group_type,
-                            "group_key": row.group_key,
-                            "props": json.dumps(record["props"], separators=(",", ":"))
+                    record["props"].update(fj_loads(props))
+                if kind in ("lookup", "gi_lookup", "gi_update"):
+                    rows.append(
+                        (
+                            "result", rseq, item, gt, gk,
+                            json.dumps(record["props"], separators=(",", ":"))
                             if record is not None
                             else None,
-                            "present": record is not None,
-                            "echo": row.kind.startswith("gi_"),
-                            "created_at": None,
-                            "version": None,
-                        }
+                            record is not None, kind.startswith("gi_"), None, None,
+                        )
                     )
-            if out:
-                yield pd.DataFrame(out, columns=_COLS, dtype=object)
-        out = []
-        _flush(out)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS, dtype=object)
+            if rows:
+                yield arrow_rows(rows, _FOLD_OUT)
+        if record is not None:
+            yield arrow_rows([_group_row(cur, record)], _FOLD_OUT)
 
-    # pinned-width shuffle for the CPU-bound Python replay — see the
-    # matching note in person_state.fold_person_state (AQE would coalesce
-    # this to 1-4 partitions by bytes)
-    n_fold = ops.sparkSession.sparkContext.defaultParallelism
-    folded = (
-        ops.repartition(n_fold, "group_type", "group_key")
-        .sortWithinPartitions(*_SORT)
-        .mapInPandas(_replay_stream, _FOLD_OUT)
+    folded = replay_sorted(
+        ops, ["group_type", "group_key"], _FOLD_ORDER, _replay_stream, _FOLD_OUT
     )
-    # physical pin (see person_state.fold_person_state): the replay runs
-    # exactly once across the results and groups-table consumers
-    folded = folded.localCheckpoint(eager=True)
 
     results = folded.where(F.col("row_type") == "result").select(
         "request_seq", "item_index", "group_type", "group_key", "props", "present", "echo"

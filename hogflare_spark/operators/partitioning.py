@@ -12,6 +12,8 @@ inputs) and disappears in the regime where it would hurt (large ones).
 
 from __future__ import annotations
 
+from datetime import timezone
+
 from pyspark.sql import DataFrame
 
 
@@ -59,6 +61,67 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
         return df
     spark = df.sparkSession
     return df.repartition(target or spark.sparkContext.defaultParallelism)
+
+
+def replay_sorted(ops: DataFrame, keys, order, kernel, schema) -> DataFrame:
+    """Per-key serial replay: every row of one `keys` value reaches one
+    `kernel` call as a contiguous run, ordered by `order`, and the
+    kernel's output is materialized once.
+
+    The kernel is a `mapInArrow` function (Arrow record batches in and
+    out) that walks its partition in sort order and cuts its state at
+    key boundaries. State persists across Arrow batches, so a hot key
+    whose run spans many batches streams through one task without being
+    buffered. This is the person and group folds' one Python stage; it
+    replaces groupBy().applyInPandas, whose per-group Arrow-batch and
+    pandas-frame machinery measured ~5x the cost of the replay itself on
+    many-small-keys traffic (a no-op applyInPandas over 100k ops / 1.5k
+    components took 1.9 s where the sorted partition stream took 0.4 s).
+
+    - Width: an explicit hash repartition to `defaultParallelism` on
+      `keys`. A groupBy's own shuffle would be AQE-coalesced by bytes (a
+      few MB of narrow op rows → 1-4 partitions), serializing the
+      CPU-bound replay; a pinned count keeps it as wide as the cluster.
+    - Order: a partition-local sort on (*keys, *order) makes each key's
+      rows one contiguous, replay-ordered run with no second exchange.
+    - Pin: an eagerly materialized local checkpoint instead of cache().
+      Every fold output has several consumers, some planned from AQE
+      broadcast threads whose plan clones defeat CacheManager sameResult
+      matching; they were observed re-running the whole decode + replay
+      chain per consumer. The pin holds O(batch) state rows."""
+    width = ops.sparkSession.sparkContext.defaultParallelism
+    return (
+        ops.repartition(width, *keys)
+        .sortWithinPartitions(*keys, *order)
+        .mapInArrow(kernel, schema)
+        .localCheckpoint(eager=True)
+    )
+
+
+def arrow_columns(batch, names) -> list[list]:
+    """The named columns of an Arrow record batch as Python lists, for a
+    kernel to zip. They go through numpy: pyarrow 16's `to_pylist` builds
+    a Scalar object per value, 14x slower on a 10k-row fold batch. An
+    integer column must hold no nulls, which numpy would turn to NaN."""
+    return [batch.column(n).to_numpy(zero_copy_only=False).tolist() for n in names]
+
+
+def arrow_rows(rows: list[tuple], schema):
+    """A non-empty list of row tuples in the field order of `schema` (a
+    Spark StructType) → one Arrow record batch, built from per-column
+    lists. Timestamps are converted to UTC first: pyarrow 16 stores the
+    wall-clock time of a fixed-offset datetime in a UTC timestamp column
+    as if it were UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = {}
+    for field, col in zip(arrow_schema, zip(*rows)):
+        if pa.types.is_timestamp(field.type):
+            col = [None if v is None else v.astimezone(timezone.utc) for v in col]
+        cols[field.name] = list(col)
+    return pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
 
 
 def one_slice_df(spark, rows, schema) -> DataFrame:

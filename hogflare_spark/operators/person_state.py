@@ -10,12 +10,12 @@ Spark shape (SURVEY.md §7 M3):
    co-partitioning key; ops for unrelated distinct_ids stay in singleton
    components, so the shuffle is effectively a groupBy(distinct_id) with
    identity clusters coalesced;
-3. a partition-streaming `mapInPandas` replays the MemoryPersonStore
-   kernel (person_store.py) per component in (request_seq, item_index,
-   sub) order across `defaultParallelism` partitions, emitting
-   post-update snapshots per event (U12 — the event carries the person
-   state as of *after* its own update, lib.rs:462-470) plus final person
-   records and id-allocation events;
+3. the sorted replay (`partitioning.replay_sorted`, one `mapInArrow`
+   stage keyed by component) runs the PersonStoreReplay kernel
+   (person_store.py) over each component in (request_seq, item_index,
+   sub) order, emitting post-update snapshots per event (U12 — the
+   event carries the person state as of *after* its own update,
+   lib.rs:462-470) plus final person records and id-allocation events;
 4. global sequential person ids materialize post-hoc as one row_number
    over allocation order (U10 — the replay never serializes on a
    counter; SURVEY.md §7.4.3 documents the parity condition).
@@ -45,6 +45,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hogflare_spark.operators.partitioning import (
+    arrow_columns,
+    arrow_rows,
+    replay_sorted,
+)
 from hogflare_spark.operators.person_store import (
     PersonStoreReplay,
     snapshot_fields,
@@ -73,10 +78,14 @@ _FOLD_OUT = StructType(
 )
 
 
-# replay order within a partition: component runs are contiguous, ops
-# within a run in request order (ties only among seed rows, which load
-# disjoint records — order-insensitive)
-_FOLD_SORT = ["comp", "request_seq", "item_index", "sub"]
+# replay order within a component's run: request order (ties only among
+# seed rows, which load disjoint records — order-insensitive)
+_FOLD_ORDER = ["request_seq", "item_index", "sub"]
+# the op columns the replay kernel reads, in its unpacking order
+_OP_COLS = [
+    "request_seq", "item_index", "sub", "kind", "distinct_id", "alias_id",
+    "update", "timestamp", "emit", "comp",
+]
 
 
 def derive_person_ops(commands: DataFrame) -> DataFrame:
@@ -193,13 +202,12 @@ def fold_person_state(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (snapshots, persons).
 
-    Every component is folded by the partition-streaming replay of the
+    Every component is folded by the sorted replay of the
     PersonStoreReplay kernel (`_replay_stream` below). The replay keeps
     one component's state, never its op list: a hot distinct_id with
     millions of ops streams through one task in sorted Arrow batches.
     Connected components always runs (an empty edge set costs its one
-    edge collect), the replay is `defaultParallelism` wide, and new ids
-    come from one row_number.
+    edge collect), and new ids come from one row_number.
 
     `emit_snapshots=False` skips the per-op snapshot assembly inside the
     replay (merged-property dict + JSON dump per emitted op) for callers
@@ -247,11 +255,11 @@ def fold_person_state(
         components.withColumnRenamed("id", "distinct_id"), "distinct_id", "left"
     ).withColumn("comp", F.coalesce("comp", "distinct_id"))
 
-    def _row(row_type: str, **kw) -> dict:
-        base = {f.name: None for f in _FOLD_OUT.fields}
-        base["row_type"] = row_type
-        base.update(kw)
-        return base
+    # row tuples follow _FOLD_OUT: row_type, then the five snapshot
+    # fields (request_seq .. person_properties), then the eleven record
+    # fields (canonical_id .. prior_id)
+    no_snapshot = (None,) * 5
+    no_record = (None,) * 11
 
     def _alloc_key(alloc: tuple) -> tuple[int, int]:
         # (request_seq, item_index, sub, k) → sortable pair
@@ -260,121 +268,63 @@ def fold_person_state(
             alloc[3] if len(alloc) > 3 else 0,
         )
 
-    def _flush_store(store: PersonStoreReplay, out: list) -> None:
+    def _json_map(values: dict) -> str:
+        # map values JSON-encoded for lossless nesting (FIXTURES.md §3)
+        return json.dumps(
+            {k: json.dumps(v, separators=(",", ":")) for k, v in values.items()},
+            separators=(",", ":"),
+        )
+
+    def _flush_store(store: PersonStoreReplay, rows: list) -> None:
         """Emit a finished component's alloc events + final records."""
         for uuid_, alloc in store.alloc_events:
             a, b = _alloc_key(alloc)
-            out.append(_row("alloc", uuid=uuid_, alloc_a=a, alloc_b=b, alloc_c=0))
+            rows.append(
+                ("alloc", *no_snapshot, None, uuid_, None, None, None, None, None, a, b, 0, None)
+            )
         for canonical, record in store.records.items():
             a, b = _alloc_key(record.alloc_seq or (0, 0, 0, 0))
-            out.append(
-                _row(
+            rows.append(
+                (
                     "person",
-                    canonical_id=canonical,
-                    uuid=record.uuid,
-                    created_at=record.created_at,
-                    version=record.version,
-                    distinct_ids=json.dumps(record.distinct_ids),
-                    # map values JSON-encoded for lossless nesting
-                    # (FIXTURES.md §3)
-                    properties=json.dumps(
-                        {k: json.dumps(v, separators=(",", ":")) for k, v in record.properties.items()},
-                        separators=(",", ":"),
-                    ),
-                    properties_set_once=json.dumps(
-                        {
-                            k: json.dumps(v, separators=(",", ":"))
-                            for k, v in record.properties_set_once.items()
-                        },
-                        separators=(",", ":"),
-                    ),
-                    alloc_a=a,
-                    alloc_b=b,
-                    alloc_c=0,
-                    prior_id=record.prior_id,
+                    *no_snapshot,
+                    canonical,
+                    record.uuid,
+                    record.created_at,
+                    record.version,
+                    json.dumps(record.distinct_ids),
+                    _json_map(record.properties),
+                    _json_map(record.properties_set_once),
+                    a,
+                    b,
+                    0,
+                    record.prior_id,
                 )
             )
 
-    _COLS = [f.name for f in _FOLD_OUT.fields]
-
-    def _emit_frame(pd, s_seq, s_item, s_pid, s_created, s_props, out):
-        """Assemble one output frame. Snapshot rows dominate (one per
-        emitted op) and are accumulated as columns; low-cardinality
-        alloc/person rows keep the dict path for clarity. Uniform object
-        dtype on BOTH frames: the None-filled filler columns are all-NA,
-        and concat'ing an all-NA column against an inferred int64 twin
-        trips pandas' deprecated concat dtype inference (future versions
-        change the result dtype the Arrow conversion of _FOLD_OUT
-        depends on). The values are already Python objects, so
-        dtype=object costs nothing."""
-        rest = pd.DataFrame(out, columns=_COLS, dtype=object)
-        if not s_seq:
-            return rest if len(rest) else None
-        snap = pd.DataFrame(
-            {
-                "row_type": "snapshot",
-                "request_seq": s_seq,
-                "item_index": s_item,
-                "person_id": s_pid,
-                "person_created_at": s_created,
-                "person_properties": s_props,
-            },
-            dtype=object,
-        )
-        for c in _COLS:
-            if c not in snap.columns:
-                snap[c] = pd.Series([None] * len(snap), dtype=object)
-        snap = snap[_COLS]
-        if not len(rest):
-            return snap
-        return pd.concat([snap, rest], ignore_index=True)
-
     def _replay_stream(batches: Iterator[Any]) -> Iterator[Any]:
-        """Partition-streaming replay: rows arrive sorted by
-        (comp, request_seq, item_index, sub) — _FOLD_SORT, enforced by
-        the sortWithinPartitions below — so each component's ops are a
-        contiguous run. One kernel instance walks the whole partition,
-        switching stores at comp boundaries (state persists across Arrow
-        batches, so a component spanning batches needs no carry-over
-        buffering). This replaces groupBy().applyInPandas, whose
-        per-group Arrow-batch + pandas-frame machinery measured ~5x the
-        cost of the replay itself on realistic (many small components)
-        traffic: a no-op applyInPandas over 100k ops / 1.5k comps took
-        1.9 s where the equivalent sorted mapInPandas took 0.4 s."""
-        import pandas as pd
+        """The replay_sorted kernel: rows arrive as each component's
+        contiguous run in (request_seq, item_index, sub) order, and one
+        kernel instance walks the whole partition, switching stores at
+        comp boundaries."""
+        from hogflare_spark.functions.fastjson import loads
 
         comp_cur: Any = None
         store: PersonStoreReplay | None = None
-        from hogflare_spark.functions.fastjson import loads
-        for pdf in batches:
-            s_seq: list[int] = []
-            s_item: list[int] = []
-            s_pid: list[Any] = []
-            s_created: list[Any] = []
-            s_props: list[Any] = []
-            out: list = []
-            # Columnar extraction + plain zip: .tolist() converts the
-            # numpy int64 columns to Python ints ONCE (itertuples paid a
+        for batch in batches:
+            rows: list[tuple] = []
+            # Columnar extraction + plain zip (itertuples paid a
             # namedtuple._make per row plus int() casts per field —
             # measured ~15% of the kernel). op_time is passed as the RAW
             # (timestamp, seq_linear) pair; the store parses it only
             # when a record is actually created (person_store
             # _resolve_time — per-op eager parsing was another ~10%).
             for rseq, item, sub, kind, did, alias_id, update, ts, emit, comp in zip(
-                pdf["request_seq"].tolist(),
-                pdf["item_index"].tolist(),
-                pdf["sub"].tolist(),
-                pdf["kind"].tolist(),
-                pdf["distinct_id"].tolist(),
-                pdf["alias_id"].tolist(),
-                pdf["update"].tolist(),
-                pdf["timestamp"].tolist(),
-                pdf["emit"].tolist(),
-                pdf["comp"].tolist(),
+                *arrow_columns(batch, _OP_COLS)
             ):
                 if comp != comp_cur or store is None:
                     if store is not None:
-                        _flush_store(store, out)
+                        _flush_store(store, rows)
                     comp_cur = comp
                     store = PersonStoreReplay(comp_cur, team_id)
                 seq_linear = rseq * 1_000_000 + item * 100 + sub
@@ -391,38 +341,20 @@ def fold_person_state(
                     _, record = store.ensure_person(did, op_time, seq)
                 if emit_snapshots and emit:
                     pid, pcreated, pprops = snapshot_fields(record)
-                    s_seq.append(rseq)
-                    s_item.append(item)
-                    s_pid.append(pid)
-                    s_created.append(pcreated)
-                    s_props.append(pprops)
-            frame = _emit_frame(pd, s_seq, s_item, s_pid, s_created, s_props, out)
-            if frame is not None:
-                yield frame
+                    rows.append(
+                        ("snapshot", rseq, item, pid, pcreated, pprops, *no_record)
+                    )
+            if rows:
+                yield arrow_rows(rows, _FOLD_OUT)
         if store is not None:
-            out = []
-            _flush_store(store, out)
-            if out:
-                yield pd.DataFrame(out, columns=_COLS, dtype=object)
+            rows = []
+            _flush_store(store, rows)
+            if rows:
+                yield arrow_rows(rows, _FOLD_OUT)
 
-    # Explicit hash-partition on the fold key: the groupBy's own shuffle
-    # would be AQE-coalesced by *bytes* (a few MB of narrow op rows → 1-4
-    # partitions), serializing the CPU-bound Python replay. A pinned
-    # partition count keeps the fold as wide as the cluster.
-    n_fold = ops_with_comp.sparkSession.sparkContext.defaultParallelism
-    # partition-local sort puts each component's ops in one contiguous,
-    # replay-ordered run; no extra exchange
-    folded = (
-        ops_with_comp.repartition(n_fold, "comp")
-        .sortWithinPartitions(*_FOLD_SORT)
-        .mapInPandas(_replay_stream, _FOLD_OUT)
+    folded = replay_sorted(
+        ops_with_comp, ["comp"], _FOLD_ORDER, _replay_stream, _FOLD_OUT
     )
-    # Pin the fold output as an eagerly-materialized RDD instead of
-    # cache(): snapshots, the allocation rank and persons assembly all
-    # consume it — some from AQE broadcast threads whose plan clones
-    # defeat CacheManager sameResult matching, observed re-running the
-    # whole decode+replay chain per consumer. O(batch) state rows.
-    folded = folded.localCheckpoint(eager=True)
 
     snapshots = folded.where(F.col("row_type") == "snapshot").select(
         "request_seq", "item_index", "person_id", "person_created_at", "person_properties"

@@ -1301,8 +1301,8 @@ def hf_flags_batch_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     response shaping per lib.rs:1089-1147, evaluated table-wide (the
     reference can only do one request at a time). Runs the NATIVE path
     (compiled Columns + string assembly, one codegen'd projection); the
-    per-row Arrow kernel (batch_flag_responses) stays as the differential
-    oracle, pinned bit-identical in tests/test_round11.py."""
+    per-row kernel over the same table (tests/flag_reference.py) is its
+    differential oracle, pinned bit-identical in tests/test_round11.py."""
     from hogflare_spark.flags.model import parse_flag_config
     from hogflare_spark.flags.response import batch_flag_responses_native
 

@@ -435,7 +435,8 @@ def test_batch_flag_responses(spark):
     from pyspark.sql import Row
 
     from hogflare_spark.flags.kernel import FlagContext, evaluate_flags
-    from hogflare_spark.flags.response import batch_flag_responses, flags_response
+    from hogflare_spark.flags.response import flags_response
+    from tests.flag_reference import batch_flag_responses
 
     flags = [
         _mk_flag(key="pro-only", conditions=[

@@ -15,21 +15,26 @@ from pyspark.sql import Row
 
 from hogflare_spark.operators.group_state import fold_group_state
 from hogflare_spark.operators.normalize import decode_normalize_requests
-from hogflare_spark.operators.person_store import synthetic_time
+from hogflare_spark.operators.person_store import parse_event_time
 
 
-def _gi(gtype, gkey, props):
+def _gi(gtype, gkey, props, ts=None):
     body = {"group_type": gtype, "group_key": gkey, "properties": props}
+    if ts is not None:
+        body["timestamp"] = ts
     return ("groupidentify", body)
 
 
-def _cap(did, groups=None, gset=None):
+def _cap(did, groups=None, gset=None, ts=None):
     props = {}
     if groups:
         props["$groups"] = groups
     if gset:
         props["$group_set"] = gset
-    return ("capture", {"event": "ev", "distinct_id": did, "properties": props})
+    body = {"event": "ev", "distinct_id": did, "properties": props}
+    if ts is not None:
+        body["timestamp"] = ts
+    return ("capture", body)
 
 
 def _dumps(value):
@@ -45,9 +50,10 @@ def _sequential_lww(requests):
     records = {}
     results = []
 
-    def update(key, props, seq_linear):
+    def update(key, props, ts, seq_linear):
         rec = records.setdefault(
-            key, {"created_at": synthetic_time(seq_linear), "version": 0, "props": {}}
+            key,
+            {"created_at": parse_event_time(ts, seq_linear), "version": 0, "props": {}},
         )
         rec["version"] += 1
         rec["props"].update(props)
@@ -61,7 +67,7 @@ def _sequential_lww(requests):
         if endpoint == "groupidentify":
             key = (body["group_type"], body["group_key"])
             if isinstance(body["properties"], dict):
-                update(key, body["properties"], i * 1_000_000)
+                update(key, body["properties"], body.get("timestamp"), i * 1_000_000)
             read(i, key, True)
             continue
         props = body["properties"]
@@ -69,7 +75,9 @@ def _sequential_lww(requests):
         sub = 0
         for gtype, gprops in props.get("$group_set", {}).items():
             if gtype in groups and isinstance(gprops, dict) and gprops:
-                update((gtype, groups[gtype]), gprops, i * 1_000_000 + sub)
+                update(
+                    (gtype, groups[gtype]), gprops, body.get("timestamp"), i * 1_000_000 + sub
+                )
                 sub += 1
         for gtype, gkey in groups.items():
             read(i, (gtype, gkey), False)
@@ -123,6 +131,19 @@ GROUP_CASES = {
         _cap("u1"),
         _cap("u2", gset={"org": {"plan": "free"}}),
         _cap("u3", groups={"org": 5}),  # non-string key: no lookup
+    ],
+    # ISO event timestamps with a non-UTC offset: a record's created_at
+    # is its creating op's instant, whatever offset the event carried
+    "offset_timestamps": [
+        _gi("org", "acme", {"plan": "free"}, ts="2024-03-01T02:00:00+05:30"),
+        _cap(
+            "u1",
+            groups={"org": "beta"},
+            gset={"org": {"seats": 3}},
+            ts="2024-03-02T23:30:00.250+05:30",
+        ),
+        _gi("org", "acme", {"plan": "pro"}, ts="2024-03-03T00:00:00-08:00"),
+        _cap("u2", groups={"org": "acme"}, ts="2024-03-04T00:00:00+05:30"),
     ],
 }
 
@@ -398,3 +419,36 @@ def test_derive_group_ops_runs_no_python(spark):
     )
     plan = derive_group_ops(commands)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_folds_replay_in_arrow(spark, monkeypatch):
+    """Both folds replay through one mapInArrow stage and no pandas
+    kernel. Their outputs are pinned, so each plan is read where its pin
+    is taken; the input is pinned first, so decode's own kernel is not
+    in it."""
+    from hogflare_spark.operators.person_state import fold_person_state
+
+    raw = spark.createDataFrame(
+        [
+            Row(request_seq=i, endpoint=endpoint, body=json.dumps(body))
+            for i, (endpoint, body) in enumerate(GROUP_CASES["lww_hydration_echo_absent_empty"])
+        ]
+    )
+    commands = decode_normalize_requests(raw).localCheckpoint(eager=True)
+    frame_type = type(commands)
+    pin = frame_type.localCheckpoint
+    plans = []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return pin(df, *args, **kwargs)
+
+    for fold in (fold_person_state, fold_group_state):
+        plans.clear()
+        monkeypatch.setattr(frame_type, "localCheckpoint", spy)
+        fold(commands)
+        monkeypatch.undo()
+        replays = [p for p in plans if "MapIn" in p]
+        assert len(replays) == 1, fold.__name__
+        assert replays[0].count("MapInArrow") == 1, fold.__name__
+        assert "MapInPandas" not in replays[0], fold.__name__

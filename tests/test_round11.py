@@ -122,10 +122,8 @@ def _persons_df(spark, n=60):
 
 
 def _diff_responses(spark, persons, flags, version=2):
-    from hogflare_spark.flags.response import (
-        batch_flag_responses,
-        batch_flag_responses_native,
-    )
+    from hogflare_spark.flags.response import batch_flag_responses_native
+    from tests.flag_reference import batch_flag_responses
 
     kernel = {r["canonical_id"]: r["response"]
               for r in batch_flag_responses(persons, flags, version=version).collect()}
@@ -187,10 +185,8 @@ def test_native_flag_responses_decide_lookup_is_one_job(spark):
     kernel after unpersist_all() — the pin is not an operator cache."""
     import uuid
 
-    from hogflare_spark.flags.response import (
-        batch_flag_responses,
-        batch_flag_responses_native,
-    )
+    from hogflare_spark.flags.response import batch_flag_responses_native
+    from tests.flag_reference import batch_flag_responses
     from hogflare_spark.functions.caching import unpersist_all
 
     persons, flags = _persons_df(spark), _rich_flags()
