@@ -88,14 +88,18 @@ def _sequential_lww(requests):
     return sorted(results), groups_table
 
 
-def _spark_fold(spark, requests):
+def _commands(spark, requests):
     raw = spark.createDataFrame(
         [
             Row(request_seq=i, endpoint=endpoint, body=json.dumps(body))
             for i, (endpoint, body) in enumerate(requests)
         ]
     )
-    results, groups = fold_group_state(decode_normalize_requests(raw))
+    return decode_normalize_requests(raw)
+
+
+def _spark_fold(spark, requests):
+    results, groups = fold_group_state(_commands(spark, requests))
     got_groups = {
         (r["group_type"], r["group_key"]): (
             r["created_at"].replace(tzinfo=timezone.utc),  # session-UTC wall time
@@ -428,13 +432,8 @@ def test_folds_replay_in_arrow(spark, monkeypatch):
     in it."""
     from hogflare_spark.operators.person_state import fold_person_state
 
-    raw = spark.createDataFrame(
-        [
-            Row(request_seq=i, endpoint=endpoint, body=json.dumps(body))
-            for i, (endpoint, body) in enumerate(GROUP_CASES["lww_hydration_echo_absent_empty"])
-        ]
-    )
-    commands = decode_normalize_requests(raw).localCheckpoint(eager=True)
+    commands = _commands(spark, GROUP_CASES["lww_hydration_echo_absent_empty"])
+    commands = commands.localCheckpoint(eager=True)
     frame_type = type(commands)
     pin = frame_type.localCheckpoint
     plans = []
