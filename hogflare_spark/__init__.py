@@ -13,8 +13,9 @@ Re-expresses the capabilities of the reference event-analytics engine
 - ``sinks``     — partitioned Parquet/Iceberg writers
 
 Everything engine-side is built from pure Spark expressions so Catalyst
-can push down, prune, and codegen; Python (`applyInPandas`) appears only
-where semantics demand an ordered per-key fold.
+can push down, prune, and codegen; Python appears only as `mapInArrow`
+kernels where semantics demand it: request decode and the ordered
+person and group replays. Their workers fork from ``worker_daemon``.
 """
 
 __version__ = "0.1.0"

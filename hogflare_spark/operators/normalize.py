@@ -623,6 +623,19 @@ def fast_capture_path(raw: DataFrame, *_):
     return (F.lit(False),)
 
 
+def _numpy_safe(col) -> bool:
+    """Whether `partitioning.arrow_columns` reads this Arrow column as
+    `to_pylist` would: text, bytes, and integers without a NULL. numpy
+    reads a NULL integer as NaN and drops a timestamp's zone."""
+    import pyarrow as pa
+
+    t = col.type
+    if pa.types.is_integer(t):
+        return not col.null_count
+    return any(f(t) for f in (pa.types.is_string, pa.types.is_large_string,
+                              pa.types.is_binary, pa.types.is_large_binary))
+
+
 def decode_normalize_requests(raw: DataFrame) -> DataFrame:
     """Fused decode + normalize: raw request rows → COMMAND_SCHEMA rows
     (without `error`).
@@ -636,28 +649,31 @@ def decode_normalize_requests(raw: DataFrame) -> DataFrame:
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from hogflare_spark.operators.partitioning import fan_out
+    from hogflare_spark.operators.partitioning import arrow_columns, fan_out
     from hogflare_spark.sources.payload import decode_request_row
 
     opt_cols = ("content_type", "content_encoding", "header_api_key",
                 "header_sent_at", "geo_json", "ip")
     present = [c for c in opt_cols if c in raw.columns]
+    names = ["request_seq", "endpoint", "body", *present]
     out_schema = to_arrow_schema(COMMAND_SCHEMA)
 
     def _run(batches: Iterator[Any]) -> Iterator[Any]:
         for batch in batches:
+            fast = [n for n in names if _numpy_safe(batch.column(n))]
+            cols = dict(zip(fast, arrow_columns(batch, fast)))
+            cols.update((n, batch.column(n).to_pylist()) for n in names if n not in cols)
+            absent = [None] * batch.num_rows
             out_rows = []
-            for r in batch.to_pylist():
-                b = r["body"]
+            for seq, endpoint, b, ctype, cenc, h_api, h_sent, geo, ip in zip(
+                *(cols.get(c, absent) for c in ("request_seq", "endpoint", "body", *opt_cols))
+            ):
                 try:
                     raw_bytes = (
                         b if isinstance(b, (bytes, bytearray)) else str(b).encode()
                     )
                     items, env_api, env_sent = decode_request_row(
-                        r["endpoint"],
-                        raw_bytes,
-                        r.get("content_type"),
-                        r.get("content_encoding"),
+                        endpoint, raw_bytes, ctype, cenc
                     )
                 except Exception:  # noqa: BLE001 — reference 4xxes malformed rows
                     continue
@@ -665,23 +681,23 @@ def decode_normalize_requests(raw: DataFrame) -> DataFrame:
                     try:
                         out_rows.append(
                             command_row(
-                                r["endpoint"],
+                                endpoint,
                                 item,
-                                r["request_seq"],
+                                seq,
                                 idx,
                                 envelope_api_key=env_api,
                                 envelope_sent_at=env_sent,
-                                header_api_key=r.get("header_api_key"),
-                                header_sent_at=r.get("header_sent_at"),
-                                geo_json=r.get("geo_json"),
-                                ip=r.get("ip"),
+                                header_api_key=h_api,
+                                header_sent_at=h_sent,
+                                geo_json=geo,
+                                ip=ip,
                             )
                         )
                     except Exception as ex:  # noqa: BLE001
-                        out_rows.append(command_error_row(r["request_seq"], idx, ex))
+                        out_rows.append(command_error_row(seq, idx, ex))
             yield pa.RecordBatch.from_pylist(out_rows, schema=out_schema)
 
-    req = raw.select("request_seq", "endpoint", "body", *present)
+    req = raw.select(*names)
     if not req.isStreaming:
         req = fan_out(req)
     mapped = req.mapInArrow(_run, COMMAND_SCHEMA)

@@ -6,7 +6,10 @@ the same plan shape survives a 1000-executor cluster at 100 TB:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion/promotion decisions at runtime),
 - auto broadcast threshold left on so dimension tables broadcast,
-- Arrow enabled for the few pandas-UDF folds,
+- Arrow enabled for the Arrow kernels (decode, the person and group
+  replays),
+- Python workers forked from the engine's daemon (`worker_daemon`), and
+  no Python call-site capture while expressions are built,
 - UTC session timezone (the reference stores UTC RFC3339 everywhere,
   /root/reference/src/models.rs:16).
 """
@@ -42,8 +45,19 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for pandas-UDF boundaries (ordered folds, embeddings).
+        # Arrow for the Python boundaries (decode, the ordered replays).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Fork Python workers from the engine's daemon: it stops each task
+        # re-reading the directories of Spark's zip archives, about 270 ms
+        # of worker CPU per task (worker_daemon.py).
+        .config("spark.python.daemon.module", "hogflare_spark.worker_daemon")
+        # No Python call-site capture per `pyspark.sql.functions` call: a
+        # stack walk and extra py4j round trips each, about half of a
+        # pass's round trips (6,734 -> 3,305 on a warm identity_serve pass,
+        # scripts/pass_profile.py seed 7). The trade-off: a DataFrame error
+        # no longer names the Python file:line that built the failing
+        # expression; its error class and message are kept.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Parquet scans: vectorized reader + pushdown are defaults, but be
         # explicit: these are the difference between reading 100 TB and 2 TB.
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -10,6 +10,10 @@ for the last one:
   the engine sets none);
 - every `mapInPandas` / `mapInArrow` kernel: its tasks, the jobs they
   ran in and the worker CPU while it ran (recorded inside the worker);
+- the pass's fixed costs: its wall time outside Spark jobs (the pass
+  wall minus the union of its jobs' spans), the Python workers' CPU
+  outside kernels (in total and per Python task), and the driver's py4j
+  round trips;
 - Janino compiles (`CodegenMetrics`) during the pass;
 - the CPU of this run's own process tree, read from /proc: driver
   Python, JVM executor threads, JVM C2 and C1 compiler threads, other
@@ -224,11 +228,39 @@ def _jobs(spark, job_ids) -> list[dict]:
             cpu_ns += sd.executorCpuTime()
         jobs.append({
             "job": jid, "label": _some(j.description()) or "(none)",
+            "span_ms": (sub.getTime(), done.getTime()) if sub and done else None,
             "wall_ms": (done.getTime() - sub.getTime()) if sub and done else None,
             "tasks": j.numTasks(), "stages": stages,
             "exec_run_ms": run_ms, "exec_cpu_ms": round(cpu_ns / 1e6),
         })
     return jobs
+
+
+def _union_ms(spans) -> int:
+    """Milliseconds covered by at least one of the (start, end) spans."""
+    total, reach = 0, None
+    for start, end in sorted(spans):
+        if reach is None or start > reach:
+            total += end - start
+            reach = end
+        elif end > reach:
+            total += end - reach
+            reach = end
+    return total
+
+
+def _count_py4j(sc) -> list:
+    """Count the driver's py4j round trips from now on, in a one-element
+    list."""
+    client = sc._gateway._gateway_client
+    orig, count = client.send_command, [0]
+
+    def counted(*args, **kwargs):
+        count[0] += 1
+        return orig(*args, **kwargs)
+
+    client.send_command = counted
+    return count
 
 
 def _workload(name: str, ctx):
@@ -259,6 +291,7 @@ def main() -> None:
     restore_kernels = _time_kernels(type(spark.range(1)), kernels_dir)
     labeller = _Labeller(sc)
     labeller.install()
+    py4j = _count_py4j(sc)
     work = tempfile.mkdtemp(prefix="pass-profile-")
     try:
         ctx = workloads.Context(spark, work, args.seed, 0.0, gen.load_mix())
@@ -274,9 +307,11 @@ def main() -> None:
                 jobs0 = set(sc.statusTracker().getJobIdsForGroup(None))
                 cpu0, forks0 = _cpu_sample(), _forks()
             c0, t0 = codegen.METRIC_COMPILATION_TIME().getCount(), time.perf_counter()
+            calls0 = py4j[0]
             wl._ingest(wl.raw_path, wl._pass_dir(i), wl.prior)
             per_pass.append((time.perf_counter() - t0,
-                             codegen.METRIC_COMPILATION_TIME().getCount() - c0))
+                             codegen.METRIC_COMPILATION_TIME().getCount() - c0,
+                             py4j[0] - calls0))
         cpu1, forks1 = _cpu_sample(), _forks()
         time.sleep(0.5)  # let the status store see the last job end
         jobs = _jobs(spark, set(sc.statusTracker().getJobIdsForGroup(None)) - jobs0)
@@ -298,12 +333,17 @@ def main() -> None:
 
         print(f"{args.workload} seed {args.seed}: janino compiles before the passes "
               f"{compiles_setup}")
-        for i, (wall, compiles) in enumerate(per_pass):
-            print(f"  pass {i}: {wall:.2f} s, janino compiles {compiles}")
+        for i, (wall, compiles, calls) in enumerate(per_pass):
+            print(f"  pass {i}: {wall:.2f} s, janino compiles {compiles}, "
+                  f"py4j round trips {calls}")
+        split = _cpu_split(cpu0, cpu1)
+        py_tasks = sum(k["tasks"] for k in kernels.values())
+        outside_kernels = split.get("python_workers", 0.0) - sum(
+            k["cpu_s"] for k in kernels.values())
         print(f"last pass: {len(jobs)} jobs, job wall "
               f"{sum(j['wall_ms'] or 0 for j in jobs) / 1e3:.2f} s, "
               f"{sum(j['tasks'] for j in jobs)} tasks, "
-              f"{sum(k['tasks'] for k in kernels.values())} Python (Arrow) tasks, "
+              f"{py_tasks} Python (Arrow) tasks, "
               f"{forks1 - forks0} child processes")
         print("  jobs by engine function (jobs, wall ms, tasks, exec run ms, exec cpu ms):")
         for label, a in sorted(by_label.items(), key=lambda kv: -kv[1][1]):
@@ -316,7 +356,11 @@ def main() -> None:
         for name, k in sorted(kernels.items()):
             print(f"    {name}: {k['tasks']} tasks, {k['cpu_s']:.3f} s, "
                   f"jobs {sorted(k['jobs'], key=str)}")
-        print("  cpu s: " + ", ".join(f"{k} {v}" for k, v in _cpu_split(cpu0, cpu1).items()))
+        print("  cpu s: " + ", ".join(f"{k} {v}" for k, v in split.items()))
+        print(f"  fixed costs: wall outside jobs "
+              f"{per_pass[-1][0] - _union_ms(j['span_ms'] for j in jobs if j['span_ms']) / 1e3:.2f}"
+              f" s; Python worker cpu outside kernels {outside_kernels:.2f} s"
+              f" ({outside_kernels / max(py_tasks, 1) * 1e3:.0f} ms per Python task)")
     finally:
         labeller.uninstall()
         restore_kernels()
