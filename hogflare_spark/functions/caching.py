@@ -9,7 +9,8 @@ runs the operator per-batch accumulates cached blocks without bound
 (r5/r6 ADVICE). Operators therefore cache through `cached()`, which
 records a strong reference, and hosts call `unpersist_all()` at their
 natural quiescent points (bench.py between queries, driver_sim after
-each gate, a streaming job between micro-batches).
+each gate). The ingest pass registers no cache, so a stream of passes
+has nothing to drain.
 
 Why strong refs: unpersisting needs the DataFrame handle — a WeakSet
 entry that gets collected before `unpersist_all()` runs would leave the

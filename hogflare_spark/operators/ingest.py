@@ -1,10 +1,14 @@
-"""Batch ingest pipeline: raw request rows → events / persons / groups.
+"""Ingest: raw request rows → events / persons / groups, and the pass
+that commits them.
 
 The Spark realization of the reference's end-to-end request path
-(SURVEY.md §3.1): decode (sources/payload.py) → normalize
-(operators/normalize.py) → person fold (operators/person_state.py) →
-group fold (operators/group_state.py) → hydration joins → the 21-column
-events frame (schemas.EVENT_SCHEMA).
+(SURVEY.md §3.1): the signature gate (sources/signature.py) → decode
+(sources/payload.py) → normalize (operators/normalize.py) → person fold
+(operators/person_state.py) → group fold (operators/group_state.py) →
+hydration joins → the 21-column events frame (schemas.EVENT_SCHEMA).
+`ingest_raw_requests` returns those frames; `commit_pass` is the one
+composition that also commits them to the lake's tables (sinks/lake.py),
+exactly once per transaction, for batch writers and the stream alike.
 
 Data movement at scale: decode+normalize are shuffle-free maps; the person
 and group folds each shuffle only their op projections (narrow slices of
@@ -20,6 +24,8 @@ and created_at come from person_store.py's deterministic scheme.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -214,6 +220,20 @@ def ingest_commands(
     }
 
 
+def _decode(raw: DataFrame, signing_secret: str | None) -> DataFrame:
+    """Raw request rows → command rows. With ``signing_secret`` set, the
+    HMAC gate (S9, reference extractors.rs:320-399) runs first:
+    unsigned/mis-signed rows are the reference's 401s and never reach
+    decode."""
+    from hogflare_spark.operators.normalize import decode_normalize_requests
+
+    if signing_secret is not None:
+        from hogflare_spark.sources.signature import verify_signature_gate
+
+        raw, _ = verify_signature_gate(raw, signing_secret)
+    return decode_normalize_requests(raw)
+
+
 def ingest_raw_requests(
     raw: DataFrame,
     team_id: int | None = None,
@@ -222,23 +242,156 @@ def ingest_raw_requests(
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Full path: raw HTTP-shaped rows → {events, persons, groups}.
-
-    With ``signing_secret`` set, the HMAC gate (S9, reference
-    extractors.rs:320-399) runs first: unsigned/mis-signed rows are the
-    reference's 401s and never reach the pipeline.
-    """
-    from hogflare_spark.operators.normalize import decode_normalize_requests
-
-    if signing_secret is not None:
-        from hogflare_spark.sources.signature import verify_signature_gate
-
-        raw, _ = verify_signature_gate(raw, signing_secret)
-    commands = decode_normalize_requests(raw)
+    """Full path: raw HTTP-shaped rows → {events, persons, groups},
+    uncommitted. The signature gate runs when ``signing_secret`` is set."""
     return ingest_commands(
-        commands,
+        _decode(raw, signing_secret),
         team_id=team_id,
         group_types=group_types,
         prior_persons=prior_persons,
         prior_groups=prior_groups,
+    )
+
+
+def commit_pass(
+    raw: DataFrame,
+    warehouse: str,
+    txn: tuple[str, int],
+    *,
+    team_id: int | None = None,
+    group_types: tuple[str | None, ...] = DEFAULT_GROUP_TYPES,
+    signing_secret: str | None = None,
+) -> None:
+    """Ingest `raw` into the warehouse's `events`, `groups` and `persons`
+    tables as transaction `txn` = (app_id, batch_id): one pass of a batch
+    writer, or one stream micro-batch.
+
+    Seeding. The folds are seeded the way the reference's DO model routes
+    a request to its per-key state (persons.rs:281-326 merges are per-key
+    there): once a table has a base, the person fold is seeded with only
+    the persons the pass's distinct_ids touch (alias endpoints included)
+    and the group fold with only the groups it touches, and each fold's
+    output is committed as one `lake.upsert_table` over the entry it
+    seeded from: O(pass), not O(all persons). Persons a merge in the pass
+    absorbs get tombstone rows. The upsert that finds
+    ``lake.COMPACT_AFTER_DELTAS`` deltas compacts the table by a view
+    merge in Spark, so no pass replays the whole persons table through
+    Python. The state equals the one-shot batch fold's
+    (tests/test_streaming.py convergence tests).
+
+    Exactly-once. Each table commit records `txn`; one app_id is one
+    writer, whose batch ids only grow. A pass commits events, then
+    groups, then persons. A pass re-run with the same `txn` (after a
+    stop at any point, or after it committed) finds the transaction in a
+    table's log, seeds that table from the version just before the entry
+    that recorded it and commits nothing to that table (for events: it
+    appends nothing). A table whose commit the stop cut off gets it now;
+    the events append writes into a data directory named after the
+    transaction, so it overwrites what the stopped write left there.
+
+    At 100 TB the affected-person lookup is a join against a
+    distinct_id→canonical_id index (here: explode over the persons scan
+    + two broadcast semi/anti joins — no shuffle of the persons table,
+    but a linear scan; a bucketed index table turns it into a pruned
+    bucket join).
+    """
+    from hogflare_spark.operators.group_state import derive_group_ops
+    from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
+    from hogflare_spark.sinks import lake
+
+    spark = raw.sparkSession
+    app_id, batch_id = txn
+    e_root, g_root, p_root = (os.path.join(warehouse, t) for t in ("events", "groups", "persons"))
+    # the version each table builds on, and whether its log already
+    # holds this pass (then the fold is recomputed from the version
+    # before that entry and nothing is committed to the table; the
+    # events log is only asked whether it holds the pass's append)
+    p_seed, p_held = lake.seed_entry(p_root, app_id, batch_id)
+    g_seed, g_held = lake.seed_entry(g_root, app_id, batch_id)
+    e_held = lake.seed_entry(e_root, app_id, batch_id)[1]
+
+    # one eager pin: the touched-id and touched-group-key scans below
+    # and ingest_commands all read it
+    commands = pin_commands(_decode(raw, signing_secret))
+    # A pass over a table with a base seeds only the prior components
+    # its ids touch. The touched ids are every distinct_id the pass's
+    # person ops can reference, BOTH endpoints of alias/auto-alias edges
+    # included (mirrors derive_person_ops' gates): a pass can only merge
+    # records along its own alias edges, so seeding the intersected
+    # records (already-merged components) closes its alias closure, and
+    # untouched rows stay in base/deltas, never replayed.
+    seed_persons = seed_groups = affected_ids = floor = None
+    if p_seed is not None:
+        prior_persons = lake.table_view(spark, p_root, p_seed, PERSON_SCHEMA)
+        skip0 = F.col("skip_person") == "0"
+        touched = commands.select(
+            F.explode(
+                F.array_compact(
+                    F.array(
+                        F.when(skip0, F.col("distinct_id")),
+                        F.when(skip0, F.col("anon_distinct_id")),
+                        F.get_json_object("alias", "$.distinct_id"),
+                        F.get_json_object("alias", "$.alias"),
+                    )
+                )
+            ).alias("_did")
+        ).distinct()
+        affected_ids = (
+            prior_persons.select("canonical_id", F.explode("distinct_ids").alias("_pdid"))
+            .join(F.broadcast(touched), F.col("_pdid") == F.col("_did"), "semi")
+            .select("canonical_id")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        seed_persons = prior_persons.join(F.broadcast(affected_ids), "canonical_id", "semi")
+        floor = p_seed["max_id"]
+        if floor is None:
+            row = prior_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
+            floor = int(row["m"] or 0)
+    if g_seed is not None:
+        touched_keys = derive_group_ops(commands).select("group_type", "group_key").distinct()
+        seed_groups = lake.table_view(spark, g_root, g_seed, GROUP_SCHEMA).join(
+            F.broadcast(touched_keys), ["group_type", "group_key"], "semi"
+        )
+    out = ingest_commands(
+        commands,
+        team_id=team_id,
+        group_types=group_types,
+        prior_persons=seed_persons,
+        prior_groups=seed_groups,
+        person_id_floor=floor,
+    )
+    if not e_held:
+        lake.append_events(out["events"], e_root, txn)
+    # pinned once: the persons commit, the max-id aggregate and the
+    # tombstone anti-join below read it; the groups are a filter of
+    # the group fold's pinned output
+    new_persons = out["persons"].localCheckpoint(eager=True)
+    if not g_held:
+        # touched ∪ newly-created keys only
+        lake.upsert_table(
+            spark, out["groups"], g_root, ["group_type", "group_key"], base=g_seed, txn=txn
+        )
+    if p_held:
+        return
+    row = new_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
+    max_id = int(row["m"] or 0)
+    if affected_ids is not None:
+        # new_persons holds ONLY affected ∪ newly-created rows. A seeded
+        # canonical_id missing from the fold output was absorbed by a
+        # merge in the pass — write a tombstone (uuid NULL) so the LWW
+        # read view retires its stale base/delta row.
+        gone = affected_ids.join(new_persons.select("canonical_id"), "canonical_id", "left_anti")
+        tombstones = gone.select(
+            "canonical_id",
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in PERSON_SCHEMA.fields
+                if f.name != "canonical_id"
+            ],
+        )
+        new_persons = new_persons.unionByName(tombstones)
+        max_id = max(floor, max_id)
+    lake.upsert_table(
+        spark, new_persons, p_root, ["canonical_id"], base=p_seed, txn=txn, max_id=max_id
     )

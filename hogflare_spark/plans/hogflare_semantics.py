@@ -1026,8 +1026,9 @@ def hf_flag_eval_persons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hf_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sink contract end-to-end inside the gate: ingest the capture
-    stream, append to a date-partitioned lake dir (S10 layout), compact
+    """Sink contract end-to-end inside the gate: commit the capture
+    stream as one ingest pass (`commit_pass`) to a warehouse whose
+    events table is date-partitioned (S10 layout), compact
     small files, read BACK from the lake and aggregate — the oracle works
     from the raw events table, so any loss/duplication in the
     write-compact-read cycle breaks parity. Event time passes through as
@@ -1035,7 +1036,8 @@ def hf_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from hogflare_spark.sinks.lake import append_events, compact_events, read_events
+    from hogflare_spark.operators.ingest import commit_pass
+    from hogflare_spark.sinks.lake import compact_events, read_events
 
     ev = load_table(spark, sf_dir, "events")
     body = F.concat(
@@ -1050,14 +1052,10 @@ def hf_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("capture").alias("endpoint"),
         body.alias("body"),
     )
-    from hogflare_spark.operators.ingest import ingest_raw_requests
-
-    events = ingest_raw_requests(raw)["events"]
-    lake_dir = scratch_dir("hf_lake_")
+    warehouse = scratch_dir("hf_lake_")
+    lake_dir = os.path.join(warehouse, "events")
     try:
-        # partition by the EVENT time (client timestamp), not receipt time
-        with_date = events.withColumn("created_at", F.col("timestamp"))
-        append_events(with_date, lake_dir)
+        commit_pass(raw, warehouse, ("hf_lake_roundtrip", 0))
         compact_events(spark, lake_dir, small_file_bytes=64 * 1024 * 1024)
         back = read_events(spark, lake_dir)
         out = (
@@ -1071,7 +1069,7 @@ def hf_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        shutil.rmtree(lake_dir, ignore_errors=True)
+        shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @query(
@@ -1429,7 +1427,7 @@ _register_point_in_time_oracle()
 )
 def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDPR-style targeted deletion (sinks/lake.delete_person_rows):
-    ingest the capture stream into the date-partitioned lake, delete
+    commit the capture stream as one ingest pass, delete
     every row of the user_id % 13 == 0 subjects via the pruned-probe +
     leaf-partition-rewrite path, read back and aggregate — the oracle
     excludes the same subjects from the raw events table, so an
@@ -1438,12 +1436,8 @@ def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from hogflare_spark.operators.ingest import ingest_raw_requests
-    from hogflare_spark.sinks.lake import (
-        append_events,
-        delete_person_rows,
-        read_events,
-    )
+    from hogflare_spark.operators.ingest import commit_pass
+    from hogflare_spark.sinks.lake import delete_person_rows, read_events
 
     ev = load_table(spark, sf_dir, "events")
     body = F.concat(
@@ -1458,7 +1452,6 @@ def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("capture").alias("endpoint"),
         body.alias("body"),
     )
-    events = ingest_raw_requests(raw)["events"]
     subjects = [
         str(r[0])
         for r in ev.select("user_id")
@@ -1466,11 +1459,10 @@ def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .collect()
     ]
-    lake_dir = scratch_dir("hf_lake_del_")
+    warehouse = scratch_dir("hf_lake_del_")
+    lake_dir = os.path.join(warehouse, "events")
     try:
-        append_events(
-            events.withColumn("created_at", F.col("timestamp")), lake_dir
-        )
+        commit_pass(raw, warehouse, ("hf_lake_deletion", 0))
         delete_person_rows(spark, lake_dir, subjects)
         back = read_events(spark, lake_dir)
         return (
@@ -1485,7 +1477,7 @@ def hf_lake_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(lake_dir, ignore_errors=True)
+        shutil.rmtree(warehouse, ignore_errors=True)
 
 
 BENCH_EXTRA.update(
