@@ -33,6 +33,11 @@ delegates maintenance to the platform. Here the engine owns the sink:
   `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`; the log is the
   filesystem stand-in for Iceberg's atomic snapshot commit, kept because
   no Iceberg runtime jars are available to the engine.
+- `read_table`: the readers' path to a state table. A session keeps one
+  snapshot per table and pins a version the second time it is read, so
+  a repeated reader (a /decide server) lists and scans no parquet, while
+  a one-off read stays a lazy plan. Writers build on `table_view`, which
+  is always a fresh lazy plan.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import uuid
 from collections.abc import Sequence
 from typing import Literal
@@ -147,6 +153,15 @@ def seed_entry(root: str, app_id: str, batch_id: int) -> tuple[dict | None, bool
     return entry, True
 
 
+def _live_dirs(root: str, entry: dict) -> list[str]:
+    """The entry's data directories; FileNotFoundError once any of them
+    has been expired."""
+    paths = entry_dirs(root, entry)
+    if not all(os.path.isdir(p) for p in paths):
+        raise FileNotFoundError(f"version {entry['version']} of {root} has expired")
+    return paths
+
+
 def table_view(
     spark: SparkSession, root: str, entry: dict | None, schema=None
 ) -> DataFrame | None:
@@ -154,15 +169,14 @@ def table_view(
     A winning tombstone (a delta row with a NULL `uuid`, written by the
     stream when a merge absorbs a canonical_id) retires its key. Read
     with `schema`, or else with the schema the entry records, so
-    building the view runs no Spark job."""
+    building the view runs no Spark job. Always a fresh lazy plan over
+    the files: writers build their merges on it."""
     if entry is None:
         return None
     reader = spark.read.schema(
         StructType.fromJson(entry["schema"]) if schema is None else schema
     )
-    paths = entry_dirs(root, entry)
-    if not all(os.path.isdir(p) for p in paths):
-        raise FileNotFoundError(f"version {entry['version']} of {root} has expired")
+    paths = _live_dirs(root, entry)
     if len(paths) == 1:
         return reader.parquet(paths[0])
     merged = reader.parquet(paths[0]).withColumn("_rank", F.lit(0))
@@ -179,13 +193,52 @@ def table_view(
     return out
 
 
+# (applicationId, abspath(root), schema JSON or None) → (the data
+# directories of the version read last, its frame, whether the frame is
+# pinned). Directory names are unique per commit, so they identify a
+# version even across a table root that was removed and written again.
+_SNAPSHOTS: dict = {}
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
 def read_table(
     spark: SparkSession, root: str, schema=None, version: int | None = None
 ) -> DataFrame | None:
     """Read the latest committed version, or time-travel to `version`
     (every committed version stays readable until expired — the Iceberg
-    snapshot-read equivalent)."""
-    return table_view(spark, root, read_entry(root, version), schema)
+    snapshot-read equivalent). None for a table with no commits.
+
+    A session keeps one snapshot per table (and `schema`). The first
+    read of a version returns its lazy `table_view`, so a one-off reader
+    keeps parquet pushdown and materializes nothing. The second read of
+    the same version pins it (`localCheckpoint(eager=True)`, one Spark
+    job) and every later read returns that pin: a repeated reader, like
+    a /decide server, lists and scans no parquet. A read that resolves to
+    another version replaces the snapshot. The version is resolved from
+    the log on every call, so a commit is seen at once, and a read of an
+    expired version raises FileNotFoundError even if it was pinned. Like
+    `batch_flag_responses_native`'s table, a pin lives as long as its
+    handle; `functions.caching.unpersist_all()` does not drop it."""
+    entry = read_entry(root, version)
+    if entry is None:
+        return None
+    app = spark.sparkContext.applicationId
+    key = (app, os.path.abspath(root), None if schema is None else schema.json())
+    dirs = entry_dirs(root, entry)
+    with _SNAPSHOTS_LOCK:
+        hit = _SNAPSHOTS.get(key)
+    if hit is None or hit[0] != dirs:
+        frame, pinned = table_view(spark, root, entry, schema), False
+    else:
+        _live_dirs(root, entry)
+        if hit[2]:
+            return hit[1]
+        frame, pinned = hit[1].localCheckpoint(eager=True), True
+    with _SNAPSHOTS_LOCK:
+        for stale in [k for k in _SNAPSHOTS if k[0] != app]:
+            del _SNAPSHOTS[stale]
+        _SNAPSHOTS[key] = (dirs, frame, pinned)
+    return frame
 
 
 def expire_versions(root: str, keep_last: int = 2) -> list[int]:

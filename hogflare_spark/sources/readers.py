@@ -32,24 +32,40 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # box's ~2.5 ms/round-trip) on EVERY call, and the bench builds each
 # query 4 times over the same static tables — several seconds of pure
 # driver overhead per run. The memo caches no data and no results, but
-# it does freeze the table's schema and file listing: the scan plan
-# lists the table's files at the first `load_table` of a session, and
-# every later execution reads exactly those files again. Until a new
-# session, a file added under `sf_dir` after that first call is not read,
-# and a removed one fails the read. Keyed on applicationId so a new
-# session never sees stale py4j handles; the events normalization below
-# is part of the memoized value (it is pure plan too).
+# a scan plan does freeze the table's schema and file listing, so each
+# plan is kept with the fingerprint of the files it was planned over
+# (`_fingerprint`): a `load_table` that finds the table's path or
+# entries changed plans the table again. Keyed on applicationId so a
+# new session never sees stale py4j handles; the events normalization
+# below is part of the memoized value (it is pure plan too).
 _SCAN_MEMO: dict = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(name, mtime_ns, size) of `path` and, for a directory, of each of
+    its entries; None for a path the local filesystem cannot stat (the
+    read then reports it, or it is not a local path)."""
+    try:
+        st = os.stat(path)
+        stamps = [("", st.st_mtime_ns, st.st_size)]
+        if os.path.isdir(path):
+            for e in sorted(os.scandir(path), key=lambda e: e.name):
+                est = e.stat()
+                stamps.append((e.name, est.st_mtime_ns, est.st_size))
+    except OSError:
+        return None
+    return tuple(stamps)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     key = (spark.sparkContext.applicationId, sf_dir, name)
+    stamp = _fingerprint(f"{sf_dir}/{name}.parquet")
     hit = _SCAN_MEMO.get(key)
-    if hit is None:
-        hit = _SCAN_MEMO[key] = _load_table(spark, sf_dir, name)
-    return hit
+    if hit is None or hit[0] != stamp:
+        hit = _SCAN_MEMO[key] = (stamp, _load_table(spark, sf_dir, name))
+    return hit[1]
 
 
 def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

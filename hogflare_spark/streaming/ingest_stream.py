@@ -105,15 +105,14 @@ class StreamingIngestJob:
         return lake.read_entry(self._state_root(table))
 
     def read_persons(self, spark: SparkSession) -> DataFrame | None:
-        """The current persons view: base ∪ deltas, last writer wins per
-        canonical_id (a delta row retires or replaces its canonical_id,
-        so canonical_id is a stable upsert key across deltas)."""
-        root = self._state_root("persons")
-        return lake.table_view(spark, root, lake.read_entry(root), PERSON_SCHEMA)
+        """The current persons view, through `lake.read_table`'s snapshot:
+        base ∪ deltas, last writer wins per canonical_id (a delta row
+        retires or replaces its canonical_id, so canonical_id is a stable
+        upsert key across deltas)."""
+        return lake.read_table(spark, self._state_root("persons"), PERSON_SCHEMA)
 
     def read_groups(self, spark: SparkSession) -> DataFrame | None:
-        root = self._state_root("groups")
-        return lake.table_view(spark, root, lake.read_entry(root), GROUP_SCHEMA)
+        return lake.read_table(spark, self._state_root("groups"), GROUP_SCHEMA)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         ingest.commit_pass(

@@ -29,6 +29,11 @@ The daemon also freezes its objects (`gc.freeze()`, the idiom the `gc`
 docs give for a process that forks without exec) before it forks: a
 reused worker runs `gc.collect()` after every task, and walking the heap
 it inherits cost it about 40 ms of CPU per task, 15-20 ms once frozen.
+Most of the rest is what the worker imports in its first task (pyarrow,
+the engine's operator modules), so a worker collects and freezes once
+more after that task. The child loop looks `pyspark.daemon.worker` up on
+every task, so `main` replaces it with a wrapper that does this and then
+puts the stock function back.
 """
 
 import gc
@@ -63,6 +68,17 @@ def main() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     from pyspark import daemon
 
+    stock_worker = daemon.worker
+
+    def first_worker(sock, authenticated):
+        """A forked worker's first task, then a freeze of what it built."""
+        code = stock_worker(sock, authenticated)
+        gc.collect()
+        gc.freeze()
+        daemon.worker = stock_worker
+        return code
+
+    daemon.worker = first_worker
     importlib.invalidate_caches()  # read each archive once here, not per forked worker
     gc.freeze()
     daemon.manager()

@@ -643,3 +643,141 @@ def test_delta_tombstone_retires_key_through_recorded_schema(spark, tmp_path):
     _commit_version(tombstone, root, 1, keys=["canonical_id"], delta=True)
     got = sorted(r["canonical_id"] for r in read_table(spark, root).collect())
     assert got == ["c0", "c2"]
+
+
+# ------------------------------------------------ read_table's snapshot
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _pinned(df) -> bool:
+    """Whether `df` is planned over pinned rows, with no parquet scan."""
+    plan = _plan(df)
+    return "ExistingRDD" in plan and "parquet" not in plan.lower()
+
+
+def test_third_read_of_an_unchanged_version_scans_no_parquet(spark, tmp_path):
+    """The first read of a version is a lazy parquet plan; the second pins
+    it, and the third returns that pin: no parquet scan, same rows."""
+    from hogflare_spark.sinks.lake import read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(4)), root, ["canonical_id"])
+    first = read_table(spark, root)
+    assert "FileScan parquet" in _plan(first)
+    second, jobs = _jobs_run(spark, lambda: read_table(spark, root))
+    assert jobs >= 1  # the pin
+    third, jobs = _jobs_run(spark, lambda: read_table(spark, root))
+    assert jobs == 0
+    assert third is second and _pinned(third)
+    assert _ids(third) == _ids(first) == ["c0", "c1", "c2", "c3"]
+
+
+def test_read_table_sees_a_commit_after_its_pin(spark, tmp_path):
+    """An upsert after a version was pinned is read at once: the latest
+    version is resolved from the log on every read."""
+    from hogflare_spark.sinks.lake import read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    read_table(spark, root)
+    assert _pinned(read_table(spark, root))
+    upsert_table(spark, _person_frame(spark, [1, 7]).withColumn("version", F.lit(9).cast("long")),
+                 root, ["canonical_id"])
+    got = {r["canonical_id"]: r["version"] for r in read_table(spark, root).collect()}
+    assert got == {"c0": 1, "c1": 9, "c2": 1, "c7": 9}
+
+
+def test_expired_version_raises_even_when_pinned(spark, tmp_path, monkeypatch):
+    """Every read re-checks the version's data directories, so a pinned
+    version that `expire_versions` removed raises like any expired one."""
+    from hogflare_spark.sinks import lake
+    from hogflare_spark.sinks.lake import expire_versions, read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    read_table(spark, root, version=1)
+    assert _pinned(read_table(spark, root, version=1))
+    # a compacting commit: version 2 names none of version 1's dirs
+    monkeypatch.setattr(lake, "COMPACT_AFTER_DELTAS", 0)
+    upsert_table(spark, _person_frame(spark, [5]), root, ["canonical_id"])
+    assert expire_versions(root, keep_last=1) == [1]
+    with pytest.raises(FileNotFoundError, match="expired"):
+        read_table(spark, root, version=1)
+    assert _ids(read_table(spark, root)) == ["c0", "c1", "c2", "c5"]
+
+
+def test_interleaved_reads_of_two_versions_return_their_rows(spark, tmp_path):
+    """Reads alternating between version 1 and the latest each return
+    their own version's rows; a version read twice in a row is pinned."""
+    from hogflare_spark.sinks.lake import read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    upsert_table(spark, _person_frame(spark, range(2)), root, ["canonical_id"])
+    upsert_table(spark, _person_frame(spark, [5]), root, ["canonical_id"])
+    v1, latest = ["c0", "c1"], ["c0", "c1", "c5"]
+    for version, want in ((1, v1), (None, latest), (1, v1), (None, latest), (None, latest),
+                          (1, v1), (1, v1), (None, latest), (1, v1)):
+        assert _ids(read_table(spark, root, version=version)) == want
+    read_table(spark, root, version=1)
+    assert _pinned(read_table(spark, root, version=1))
+
+
+def test_new_session_does_not_reuse_the_old_sessions_pin(spark, tmp_path, monkeypatch):
+    """Snapshots are kept per Spark application: under another
+    applicationId (a new session) the first read plans the files again,
+    and the old application's snapshots are dropped."""
+    from pyspark import SparkContext
+
+    from hogflare_spark.sinks import lake
+
+    root = str(tmp_path / "persons")
+    lake.upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    lake.read_table(spark, root)
+    pinned = lake.read_table(spark, root)
+    assert _pinned(pinned)
+    app = spark.sparkContext.applicationId
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda self: "another-app"))
+    fresh = lake.read_table(spark, root)
+    assert fresh is not pinned and "FileScan parquet" in _plan(fresh)
+    assert _ids(fresh) == ["c0", "c1", "c2"]
+    assert not any(key[0] == app for key in lake._SNAPSHOTS)
+
+
+def test_concurrent_readers_share_one_snapshot(spark, tmp_path):
+    """Reader threads racing on one table's snapshot (more threads than
+    cores, a short switch interval) all finish without error, every
+    frame they got holds the table's rows, and the snapshot ends pinned."""
+    import sys
+    import threading
+
+    from hogflare_spark.sinks import lake
+
+    root = str(tmp_path / "persons")
+    lake.upsert_table(spark, _person_frame(spark, range(3)), root, ["canonical_id"])
+    errs, last = [], {}
+
+    def _reader(n):
+        try:
+            for _ in range(25):
+                last[n] = lake.read_table(spark, root)
+        except Exception as e:  # pragma: no cover - surfaced via errs
+            errs.append(e)
+
+    threads = [threading.Thread(target=_reader, args=(n,)) for n in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs
+    assert all(_ids(df) == ["c0", "c1", "c2"] for df in last.values()) and len(last) == 8
+    (snapshot,) = [v for k, v in lake._SNAPSHOTS.items() if k[1] == os.path.abspath(root)]
+    assert snapshot[2] and _pinned(lake.read_table(spark, root))

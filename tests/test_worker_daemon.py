@@ -138,3 +138,31 @@ def test_gated_invalidate_rereads_only_a_rewritten_zip(tmp_path, monkeypatch):
     invalidate_caches(importer)
     assert len(reads) == 3
     assert _load(importer, "mod_b").VALUE == 3
+
+
+def _freeze_count(_):
+    """This worker's pid and how many objects its collections skip."""
+    import gc as _gc
+    import os as _os
+
+    yield _os.getpid(), _gc.get_freeze_count()
+
+
+def test_reused_worker_freezes_what_its_first_task_built(spark):
+    """A worker collects and freezes once after its first task, so its
+    second task finds more frozen objects than its first did: what the
+    first task imported and built is not walked by the collection the
+    daemon's child loop runs after every task."""
+    sc = spark.sparkContext
+    # workers are pooled per environment: a new one starts a new daemon,
+    # so the first task below is its worker's first
+    sc.environment["HF_TEST_WORKER_POOL"] = uuid.uuid4().hex
+    try:
+        ((pid, first),) = _run(spark, _freeze_count, tasks=1)
+        seen = [_run(spark, _freeze_count, tasks=1)[0] for _ in range(3)]
+    finally:
+        del sc.environment["HF_TEST_WORKER_POOL"]
+    later = [frozen for p, frozen in seen if p == pid]
+    assert later, f"worker {pid} was not reused: {seen}"
+    assert first > 0
+    assert all(frozen > first for frozen in later)
