@@ -93,10 +93,11 @@ def ingest_commands(
 ) -> dict[str, DataFrame]:
     """Ingest-command rows (normalize.COMMAND_SCHEMA) → governed tables.
 
-    Returns {"events": ..., "persons": ..., "groups": ...}. The prior_*
-    frames seed the state folds (streaming incremental processing).
-    `person_id_floor` lets a caller seeding a slice of the prior persons
-    table pin the allocation base to the global max id.
+    Returns {"events", "persons", "groups"} frames and "ids_allocated",
+    the person ids the pass consumed (`fold_person_state`). The prior_*
+    frames seed the state folds; persons and groups are then the deltas
+    over those seeds. `person_id_floor` lets a caller seeding a slice of
+    the prior persons table start allocating above the id counter.
 
     The commands are pinned once (`pin_commands`) unless the caller
     passes a frame `pin_commands` returned.
@@ -107,7 +108,7 @@ def ingest_commands(
     if not getattr(commands, "_hogflare_pinned", False):
         commands = pin_commands(commands)
 
-    snapshots, persons = fold_person_state(
+    snapshots, persons, ids_allocated = fold_person_state(
         commands,
         team_id,
         prior_persons,
@@ -217,6 +218,7 @@ def ingest_commands(
         "events": events,
         "persons": persons,
         "groups": groups_table,
+        "ids_allocated": ids_allocated,
     }
 
 
@@ -242,7 +244,7 @@ def ingest_raw_requests(
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Full path: raw HTTP-shaped rows → {events, persons, groups},
+    """Full path: raw HTTP-shaped rows → `ingest_commands`' output,
     uncommitted. The signature gate runs when ``signing_secret`` is set."""
     return ingest_commands(
         _decode(raw, signing_secret),
@@ -269,15 +271,15 @@ def commit_pass(
     Seeding. The folds are seeded the way the reference's DO model routes
     a request to its per-key state (persons.rs:281-326 merges are per-key
     there): once a table has a base, the person fold is seeded with only
-    the persons the pass's distinct_ids touch (alias endpoints included)
-    and the group fold with only the groups it touches, and each fold's
-    output is committed as one `lake.upsert_table` over the entry it
-    seeded from: O(pass), not O(all persons). Persons a merge in the pass
-    absorbs get tombstone rows. The upsert that finds
-    ``lake.COMPACT_AFTER_DELTAS`` deltas compacts the table by a view
-    merge in Spark, so no pass replays the whole persons table through
-    Python. The state equals the one-shot batch fold's
-    (tests/test_streaming.py convergence tests).
+    the persons the pass's person ops touch and the group fold with only
+    the groups it touches. Each fold's delta over its seed (tombstones
+    included) is committed as one `lake.upsert_table` over the entry it
+    seeded from: O(pass), not O(all persons). The persons entry's `max_id`
+    is the id counter: the floor plus the ids the fold allocated. The
+    upsert that finds ``lake.COMPACT_AFTER_DELTAS`` deltas compacts the
+    table by a view merge in Spark, so no pass replays the whole persons
+    table through Python. The state, ids included, equals the one-shot
+    batch fold's (tests/test_streaming.py convergence tests).
 
     Exactly-once. Each table commit records `txn`; one app_id is one
     writer, whose batch ids only grow. A pass commits events, then
@@ -291,11 +293,12 @@ def commit_pass(
 
     At 100 TB the affected-person lookup is a join against a
     distinct_id→canonical_id index (here: explode over the persons scan
-    + two broadcast semi/anti joins — no shuffle of the persons table,
-    but a linear scan; a bucketed index table turns it into a pruned
-    bucket join).
+    + two broadcast semi joins — no shuffle of the persons table, but a
+    linear scan; a bucketed index table turns it into a pruned bucket
+    join).
     """
     from hogflare_spark.operators.group_state import derive_group_ops
+    from hogflare_spark.operators.person_state import derive_person_ops
     from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
     from hogflare_spark.sinks import lake
 
@@ -314,36 +317,28 @@ def commit_pass(
     # and ingest_commands all read it
     commands = pin_commands(_decode(raw, signing_secret))
     # A pass over a table with a base seeds only the prior components
-    # its ids touch. The touched ids are every distinct_id the pass's
-    # person ops can reference, BOTH endpoints of alias/auto-alias edges
-    # included (mirrors derive_person_ops' gates): a pass can only merge
-    # records along its own alias edges, so seeding the intersected
-    # records (already-merged components) closes its alias closure, and
-    # untouched rows stay in base/deltas, never replayed.
-    seed_persons = seed_groups = affected_ids = floor = None
+    # its person ops touch, both endpoints of an alias op included: a
+    # pass can only merge records along its own alias edges, so seeding
+    # the intersected records (already-merged components) closes its
+    # alias closure, and untouched rows stay in base/deltas.
+    seed_persons = seed_groups = None
+    floor = 0
     if p_seed is not None:
         prior_persons = lake.table_view(spark, p_root, p_seed, PERSON_SCHEMA)
-        skip0 = F.col("skip_person") == "0"
-        touched = commands.select(
-            F.explode(
-                F.array_compact(
-                    F.array(
-                        F.when(skip0, F.col("distinct_id")),
-                        F.when(skip0, F.col("anon_distinct_id")),
-                        F.get_json_object("alias", "$.distinct_id"),
-                        F.get_json_object("alias", "$.alias"),
-                    )
-                )
-            ).alias("_did")
+        touched = derive_person_ops(commands).select(
+            F.explode(F.array_compact(F.array("distinct_id", "alias_id"))).alias("_did")
         ).distinct()
         affected_ids = (
             prior_persons.select("canonical_id", F.explode("distinct_ids").alias("_pdid"))
             .join(F.broadcast(touched), F.col("_pdid") == F.col("_did"), "semi")
             .select("canonical_id")
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        seed_persons = prior_persons.join(F.broadcast(affected_ids), "canonical_id", "semi")
+        # one eager pin: the fold's identity edges and seed ops both read
+        # the seed
+        seed_persons = prior_persons.join(
+            F.broadcast(affected_ids), "canonical_id", "semi"
+        ).localCheckpoint(eager=True)
         floor = p_seed["max_id"]
         if floor is None:
             row = prior_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
@@ -363,35 +358,12 @@ def commit_pass(
     )
     if not e_held:
         lake.append_events(out["events"], e_root, txn)
-    # pinned once: the persons commit, the max-id aggregate and the
-    # tombstone anti-join below read it; the groups are a filter of
-    # the group fold's pinned output
-    new_persons = out["persons"].localCheckpoint(eager=True)
     if not g_held:
-        # touched ∪ newly-created keys only
         lake.upsert_table(
             spark, out["groups"], g_root, ["group_type", "group_key"], base=g_seed, txn=txn
         )
-    if p_held:
-        return
-    row = new_persons.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
-    max_id = int(row["m"] or 0)
-    if affected_ids is not None:
-        # new_persons holds ONLY affected ∪ newly-created rows. A seeded
-        # canonical_id missing from the fold output was absorbed by a
-        # merge in the pass — write a tombstone (uuid NULL) so the LWW
-        # read view retires its stale base/delta row.
-        gone = affected_ids.join(new_persons.select("canonical_id"), "canonical_id", "left_anti")
-        tombstones = gone.select(
-            "canonical_id",
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in PERSON_SCHEMA.fields
-                if f.name != "canonical_id"
-            ],
+    if not p_held:
+        lake.upsert_table(
+            spark, out["persons"], p_root, ["canonical_id"], base=p_seed, txn=txn,
+            max_id=floor + out["ids_allocated"],
         )
-        new_persons = new_persons.unionByName(tombstones)
-        max_id = max(floor, max_id)
-    lake.upsert_table(
-        spark, new_persons, p_root, ["canonical_id"], base=p_seed, txn=txn, max_id=max_id
-    )

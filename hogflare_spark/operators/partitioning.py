@@ -63,7 +63,7 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(target or spark.sparkContext.defaultParallelism)
 
 
-def replay_sorted(ops: DataFrame, keys, order, kernel, schema) -> DataFrame:
+def replay_sorted(ops: DataFrame, keys, order, kernel, schema, observe=()) -> DataFrame:
     """Per-key serial replay: every row of one `keys` value reaches one
     `kernel` call as a contiguous run, ordered by `order`, and the
     kernel's output is materialized once.
@@ -88,14 +88,15 @@ def replay_sorted(ops: DataFrame, keys, order, kernel, schema) -> DataFrame:
       Every fold output has several consumers, some planned from AQE
       broadcast threads whose plan clones defeat CacheManager sameResult
       matching; they were observed re-running the whole decode + replay
-      chain per consumer. The pin holds O(batch) state rows."""
+      chain per consumer. The pin holds O(batch) state rows.
+    - `observe` = (Observation, *metrics): metrics over the kernel's
+      output, computed by the pin's own job."""
     width = ops.sparkSession.sparkContext.defaultParallelism
-    return (
-        ops.repartition(width, *keys)
-        .sortWithinPartitions(*keys, *order)
-        .mapInArrow(kernel, schema)
-        .localCheckpoint(eager=True)
-    )
+    out = ops.repartition(width, *keys).sortWithinPartitions(*keys, *order)
+    out = out.mapInArrow(kernel, schema)
+    if observe:
+        out = out.observe(*observe)
+    return out.localCheckpoint(eager=True)
 
 
 def arrow_columns(batch, names) -> list[list]:

@@ -15,7 +15,8 @@ Spark shape (SURVEY.md §7 M3):
    (person_store.py) over each component in (request_seq, item_index,
    sub) order, emitting post-update snapshots per event (U12 — the
    event carries the person state as of *after* its own update,
-   lib.rs:462-470) plus final person records and id-allocation events;
+   lib.rs:462-470) plus final person records, tombstones and
+   id-allocation events;
 4. global sequential person ids materialize post-hoc as one row_number
    over allocation order (U10 — the replay never serializes on a
    counter; SURVEY.md §7.4.3 documents the parity condition).
@@ -35,7 +36,7 @@ import json
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -72,7 +73,6 @@ _FOLD_OUT = StructType(
         StructField("properties_set_once", StringType(), True),
         StructField("alloc_a", LongType(), True),
         StructField("alloc_b", LongType(), True),
-        StructField("alloc_c", LongType(), True),
         StructField("prior_id", LongType(), True),
     ]
 )
@@ -199,8 +199,8 @@ def fold_person_state(
     prior_persons: DataFrame | None = None,
     person_id_floor: int | None = None,
     emit_snapshots: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (snapshots, persons).
+) -> tuple[DataFrame, DataFrame, int]:
+    """Returns (snapshots, persons, allocated).
 
     Every component is folded by the sorted replay of the
     PersonStoreReplay kernel (`_replay_stream` below). The replay keeps
@@ -217,7 +217,11 @@ def fold_person_state(
 
     snapshots: (request_seq, item_index, person_id, person_created_at,
     person_properties) — join back to events on the seq pair.
-    persons: final state table per PERSON_SCHEMA.
+    persons: per PERSON_SCHEMA, the upsert delta over the seed: every
+    seeded or created person's record, plus a tombstone (`uuid` NULL)
+    for each seeded person a merge absorbed; without a seed, the table.
+    allocated: the ids the batch consumed, merged-away persons included
+    (the reference's counter skips theirs too, persons.rs:251-253).
 
     `prior_persons` (streaming incremental folds): a PERSON_SCHEMA frame
     whose records are seeded into the replay before this batch's ops —
@@ -256,10 +260,10 @@ def fold_person_state(
     ).withColumn("comp", F.coalesce("comp", "distinct_id"))
 
     # row tuples follow _FOLD_OUT: row_type, then the five snapshot
-    # fields (request_seq .. person_properties), then the eleven record
+    # fields (request_seq .. person_properties), then the ten record
     # fields (canonical_id .. prior_id)
     no_snapshot = (None,) * 5
-    no_record = (None,) * 11
+    no_record = (None,) * 10
 
     def _alloc_key(alloc: tuple) -> tuple[int, int]:
         # (request_seq, item_index, sub, k) → sortable pair
@@ -275,12 +279,13 @@ def fold_person_state(
             separators=(",", ":"),
         )
 
-    def _flush_store(store: PersonStoreReplay, rows: list) -> None:
-        """Emit a finished component's alloc events + final records."""
+    def _flush_store(store: PersonStoreReplay, seeded: list, rows: list) -> None:
+        """Emit a finished component's alloc events, final records and
+        a tombstone for each seeded record a merge removed."""
         for uuid_, alloc in store.alloc_events:
             a, b = _alloc_key(alloc)
             rows.append(
-                ("alloc", *no_snapshot, None, uuid_, None, None, None, None, None, a, b, 0, None)
+                ("alloc", *no_snapshot, None, uuid_, None, None, None, None, None, a, b, None)
             )
         for canonical, record in store.records.items():
             a, b = _alloc_key(record.alloc_seq or (0, 0, 0, 0))
@@ -297,10 +302,14 @@ def fold_person_state(
                     _json_map(record.properties_set_once),
                     a,
                     b,
-                    0,
                     record.prior_id,
                 )
             )
+        rows.extend(
+            ("person", *no_snapshot, canonical, *no_record[1:])
+            for canonical in seeded
+            if canonical not in store.records
+        )
 
     def _replay_stream(batches: Iterator[Any]) -> Iterator[Any]:
         """The replay_sorted kernel: rows arrive as each component's
@@ -311,6 +320,7 @@ def fold_person_state(
 
         comp_cur: Any = None
         store: PersonStoreReplay | None = None
+        seeded: list[str] = []  # the current component's seeded canonical ids
         for batch in batches:
             rows: list[tuple] = []
             # Columnar extraction + plain zip (itertuples paid a
@@ -324,14 +334,16 @@ def fold_person_state(
             ):
                 if comp != comp_cur or store is None:
                     if store is not None:
-                        _flush_store(store, rows)
+                        _flush_store(store, seeded, rows)
                     comp_cur = comp
                     store = PersonStoreReplay(comp_cur, team_id)
+                    seeded = []
                 seq_linear = rseq * 1_000_000 + item * 100 + sub
                 op_time = (ts, seq_linear)
                 seq = (rseq, item, sub)
                 if kind == "seed":
                     store.load_record(did, loads(update))
+                    seeded.append(did)
                     continue
                 if kind == "alias":
                     _, record = store.apply_alias(did, alias_id, op_time, seq)
@@ -348,12 +360,15 @@ def fold_person_state(
                 yield arrow_rows(rows, _FOLD_OUT)
         if store is not None:
             rows = []
-            _flush_store(store, rows)
+            _flush_store(store, seeded, rows)
             if rows:
                 yield arrow_rows(rows, _FOLD_OUT)
 
+    # the pass's id count rides the replay's pin: no job of its own
+    allocs = Observation()
     folded = replay_sorted(
-        ops_with_comp, ["comp"], _FOLD_ORDER, _replay_stream, _FOLD_OUT
+        ops_with_comp, ["comp"], _FOLD_ORDER, _replay_stream, _FOLD_OUT,
+        observe=(allocs, F.count_if(F.col("row_type") == "alloc").alias("n")),
     )
 
     snapshots = folded.where(F.col("row_type") == "snapshot").select(
@@ -407,4 +422,4 @@ def fold_person_state(
         .withColumnRenamed("properties_raw", "properties")
         .withColumnRenamed("set_once_raw", "properties_set_once")
     )
-    return snapshots, persons
+    return snapshots, persons, int(allocs.get["n"])

@@ -123,7 +123,7 @@ def hf_person_fold_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # selects off that checkpoint, so a second cache materialization
     # pass bought nothing and cost ~0.3 s of the warm gate.
     commands = decode_normalize_requests(raw)
-    _, persons = fold_person_state(commands, emit_snapshots=False)
+    _, persons, _ = fold_person_state(commands, emit_snapshots=False)
     return persons.select(
         F.col("canonical_id").cast("long").alias("user_id"),
         F.element_at("properties", "k").cast("long").alias("k_last"),
@@ -146,7 +146,7 @@ def hf_person_fold_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = _capture_requests_from_events(spark, sf_dir)
     commands = pin_commands(decode_normalize_requests(raw))
-    _, persons = fold_person_state(commands)
+    _, persons, _ = fold_person_state(commands)
     return persons.select(
         F.col("canonical_id").cast("long").alias("user_id"),
         F.element_at("properties", "k").cast("long").alias("k_last"),

@@ -29,10 +29,11 @@ delegates maintenance to the platform. Here the engine owns the sink:
   and stream alike. Every commit writes its rows as a keyed delta over
   its base entry (merge-on-read, last writer wins per key); once an
   entry holds COMPACT_AFTER_DELTAS deltas, the next commit writes the
-  merged view as a new base instead. With an Iceberg catalog this is
-  `MERGE INTO t USING s ON ... WHEN MATCHED UPDATE *`; the log is the
-  filesystem stand-in for Iceberg's atomic snapshot commit, kept because
-  no Iceberg runtime jars are available to the engine.
+  merged view as a new base instead; a base never holds a tombstone.
+  With an Iceberg catalog this is `MERGE INTO t USING s ON ... WHEN
+  MATCHED UPDATE *`; the log is the filesystem stand-in for Iceberg's
+  atomic snapshot commit, kept because no Iceberg runtime jars are
+  available to the engine.
 - `read_table`: the readers' path to a state table. A session keeps one
   snapshot per table and pins a version the second time it is read, so
   a repeated reader (a /decide server) lists and scans no parquet, while
@@ -78,7 +79,7 @@ UPSERT_RETRIES = 10
 #   deltas           delta data directories (`d=<id>`) over the base,
 #                    oldest first; the view is last-writer-wins per key
 #   keys             the key columns of that view
-#   max_id           the largest person `id` in the view, when known
+#   max_id           the person id counter (merged-away ids count), if known
 #   txns             {app_id: batch_id}: the last batch of every writer
 #                    application recorded so far (carried forward)
 #   committed_batch  the data directory this commit wrote (a delta
@@ -166,9 +167,9 @@ def table_view(
     spark: SparkSession, root: str, entry: dict | None, schema=None
 ) -> DataFrame | None:
     """The table as of `entry`: base ∪ deltas, last writer wins per key.
-    A winning tombstone (a delta row with a NULL `uuid`, written by the
-    stream when a merge absorbs a canonical_id) retires its key. Read
-    with `schema`, or else with the schema the entry records, so
+    A winning tombstone (a delta row with a NULL `uuid`, written when a
+    seeded person fold's merge absorbs a canonical_id) retires its key.
+    Read with `schema`, or else with the schema the entry records, so
     building the view runs no Spark job. Always a fresh lazy plan over
     the files: writers build their merges on it."""
     if entry is None:
@@ -360,9 +361,10 @@ def upsert_table(
     or "latest"): `updates` become the base of an empty table, else one
     more delta over `base`. Once `base` holds COMPACT_AFTER_DELTAS
     deltas, the commit writes the merged view as the new base instead:
-    the view minus the updated keys (a left-anti join) plus the updates,
-    tombstones dropped. With an Iceberg catalog this is `MERGE INTO t
-    USING s ON ... WHEN MATCHED UPDATE *` plus its rewrite_data_files.
+    the view minus the updated keys (a left-anti join) plus the updates.
+    A base never holds a tombstone (a one-directory view filters none).
+    With an Iceberg catalog this is `MERGE INTO t USING s ON ... WHEN
+    MATCHED UPDATE *` plus its rewrite_data_files.
     `updates` must have the columns and types `base` records, in any
     order; a mismatch raises ValueError before anything is written.
 
@@ -389,8 +391,9 @@ def upsert_table(
                 df = table_view(spark, root, entry).join(
                     df.select(*key_cols).distinct(), key_cols, "left_anti"
                 ).unionByName(df)
-                if "uuid" in columns:
-                    df = df.where(F.col("uuid").isNotNull())
+        if not delta and "uuid" in df.columns:
+            # a base never holds a tombstone
+            df = df.where(F.col("uuid").isNotNull())
         try:
             return _commit_version(
                 df, root, entry and entry["version"], key_cols, delta, max_id, txn

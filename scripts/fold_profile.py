@@ -66,13 +66,13 @@ def main() -> None:
 
     # the full fold from pinned commands: isolates fold+assembly cost
     def run_fold():
-        snaps, persons = fold_person_state(cmat)
+        snaps, persons, _ = fold_person_state(cmat)
         persons.count()
 
     t("fold_person_state replay (persons.count)", run_fold)
 
     def run_fold_snap():
-        snaps, persons = fold_person_state(cmat)
+        snaps, persons, _ = fold_person_state(cmat)
         snaps.count()
         persons.count()
 

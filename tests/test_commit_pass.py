@@ -1,7 +1,8 @@
 """`ingest.commit_pass` as a batch writer's pass: a re-run with the same
 transaction commits nothing, a pass stopped before its events entry
-re-runs without leaving a second copy, and a stream with a signing
-secret refuses what the batch signature gate refuses."""
+re-runs without leaving a second copy, a stream with a signing secret
+refuses what the batch signature gate refuses, person ids continue from
+the id counter, and a pass stays within its Spark job budget."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import hashlib
 import hmac
 import json
 import os
+import random
 
 import pytest
 
@@ -20,6 +22,7 @@ from tests.test_streaming import (
     _capture,
     _event_rows,
     _group_upsert,
+    _identify,
     _raw_df,
     _state,
     _write_batch,
@@ -195,3 +198,90 @@ def test_stream_with_signing_secret_matches_the_batch_gate(spark, tmp_path):
     assert json.loads(got[0]["ok-1"][1]["plan"]) == "pro"
     assert sorted(got[1]) == [("company", "acme")]
     assert _event_rows(got_events, ["request_seq"]) == [("1",), ("3",), ("5",), ("6",)]
+
+
+def test_person_ids_continue_from_the_id_counter(spark, tmp_path):
+    """A person a merge absorbs keeps the id it took, as in the
+    reference's store (persons.rs:251-253): after a pass whose identify
+    auto-alias allocates two ids and merges them into one person, the
+    persons entry records max_id 2, and the next pass's new person gets
+    the id the one-shot batch fold gives it (3, not the survivors' max
+    plus one)."""
+    from hogflare_spark.operators.ingest import commit_pass, ingest_raw_requests
+    from hogflare_spark.sinks import lake
+
+    wh = str(tmp_path / "wh")
+    batches = [[_identify(1, "p1", anon="a1")], [_capture(2, "x")]]
+    commit_pass(_raw_df(spark, batches[0]), wh, ("batch-writer", 0))
+    assert lake.read_entry(os.path.join(wh, "persons"))["max_id"] == 2
+    commit_pass(_raw_df(spark, batches[1]), wh, ("batch-writer", 1))
+
+    want = ingest_raw_requests(_raw_df(spark, batches[0] + batches[1]))
+    want_ids = {r["canonical_id"]: r["id"] for r in want["persons"].collect()}
+    got_ids = {r["canonical_id"]: r["id"] for r in _tables(spark, wh)[0].collect()}
+    assert got_ids == want_ids == {"p1": 1, "x": 3}
+    assert lake.read_entry(os.path.join(wh, "persons"))["max_id"] == want["ids_allocated"] == 3
+
+
+def _mixed_log(seed: int, n: int, seq0: int) -> list[dict]:
+    """`n` requests over 12 users: identify auto-aliases, aliases,
+    `$groups` captures, group upserts and `$set_once` captures."""
+    rnd = random.Random(seed)
+    rows = []
+    for seq in range(seq0, seq0 + n):
+        user, anon = f"user-{rnd.randrange(12)}", f"anon-{rnd.randrange(12)}"
+        kind = rnd.randrange(5)
+        if kind == 0:
+            rows.append(_identify(seq, user, {"$set": {"n": seq}}, anon=anon))
+        elif kind == 1:
+            rows.append(_alias(seq, user, anon))
+        elif kind == 2:
+            company = f"c{rnd.randrange(4)}"
+            rows.append(_capture(seq, rnd.choice([user, anon]),
+                                 {"$set": {"v": seq}, "$groups": {"company": company}}))
+        elif kind == 3:
+            rows.append(_group_upsert(seq, "company", f"c{rnd.randrange(4)}", {"size": seq}))
+        else:
+            rows.append(_capture(seq, rnd.choice([user, anon]), {"$set_once": {"first": seq}}))
+    return rows
+
+
+def _pass_jobs(spark, group: str, run) -> int:
+    """The Spark jobs `run()` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# A bootstrap pass and a seeded pass of the log above, in the test
+# session. A pass that built the tombstones and the survivor max id
+# outside the fold (a pin of the persons delta, an anti-join, a max
+# collect, and a pin of the affected ids rather than of the seed) ran 23
+# and 33 jobs.
+BOOTSTRAP_JOBS, SEEDED_JOBS = 20, 27
+
+
+def test_commit_pass_job_budget(spark, tmp_path):
+    """A bootstrap pass and a seeded pass of a fixed 40-request log each
+    run at most their budgeted number of Spark jobs; a change that cuts
+    jobs lowers the budget."""
+    from hogflare_spark.operators.ingest import commit_pass
+
+    wh = str(tmp_path / "wh")
+    jobs = [
+        _pass_jobs(
+            spark,
+            f"job-budget-{tmp_path.name}-{i}",
+            lambda i=i: commit_pass(
+                _raw_df(spark, _mixed_log(11 + i, 40, 1 + 100 * i)), wh,
+                ("batch-writer", i), group_types=GROUP_TYPES,
+            ),
+        )
+        for i in range(2)
+    ]
+    assert jobs[0] <= BOOTSTRAP_JOBS and jobs[1] <= SEEDED_JOBS, jobs

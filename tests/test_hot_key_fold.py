@@ -50,7 +50,7 @@ def test_hot_key_million_ops_default_settings(spark):
         F.lit(None).cast("string").alias("timestamp"),
     )
     cmds = hot.unionByName(normal)
-    snapshots, persons = fold_person_state(cmds, team_id=1)
+    snapshots, persons, _ = fold_person_state(cmds, team_id=1)
     by_id = {r["canonical_id"]: r for r in persons.collect()}
     assert len(by_id) == 51
     hot_rec = by_id["hot"]

@@ -623,6 +623,27 @@ def test_read_table_runs_no_spark_job(spark, tmp_path):
     ]
 
 
+def test_first_upsert_writes_no_tombstone_into_the_base(spark, tmp_path):
+    """An upsert into an empty table drops its tombstones: a base never
+    holds one, because a single-directory view does not filter them (a
+    seeded person fold's delta, committed into a fresh table)."""
+    from hogflare_spark.schemas import PERSON_SCHEMA
+    from hogflare_spark.sinks.lake import read_entry, read_table, upsert_table
+
+    root = str(tmp_path / "persons")
+    tombstone = _person_frame(spark, [1]).select(
+        "canonical_id",
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in PERSON_SCHEMA.fields if f.name != "canonical_id"],
+    )
+    upsert_table(spark, _person_frame(spark, [0, 2]).unionByName(tombstone), root,
+                 ["canonical_id"])
+    entry = read_entry(root)
+    base = spark.read.parquet(os.path.join(root, entry["base"]))
+    assert base.where(F.col("uuid").isNull()).count() == 0
+    assert _ids(base) == _ids(read_table(spark, root)) == ["c0", "c2"]
+
+
 def test_delta_tombstone_retires_key_through_recorded_schema(spark, tmp_path):
     """A delta row with a NULL `uuid` retires its key when the view is read
     with the schema the log records. The base is written from a frame

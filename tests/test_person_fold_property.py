@@ -213,7 +213,7 @@ def test_fold_matches_sequential_kernel(spark, case):
     from hogflare_spark.operators.person_state import fold_person_state
 
     requests = FOLD_CASES[case]
-    snapshots, persons = fold_person_state(decode_normalize_requests(_raw(spark, requests)))
+    snapshots, persons, _ = fold_person_state(decode_normalize_requests(_raw(spark, requests)))
     got_snapshots = {
         r["request_seq"]: (_utc(r["person_created_at"]), r["person_properties"])
         for r in snapshots.collect()

@@ -144,7 +144,9 @@ CHAOS_SPLITS = [
 def test_streaming_chaos_batch_splits_match_batch_fold(spark, tmp_path):
     """VERDICT r1 item 10: whatever micro-batch boundaries the stream
     commits under, the final persons table equals the one-shot batch fold
-    over the same ordered ops; every post-bootstrap batch is a delta."""
+    over the same ordered ops, sequential ids included (a person a merge
+    absorbs still consumes its id); every post-bootstrap batch is a
+    delta."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.streaming.ingest_stream import (
         StreamingIngestJob,
@@ -180,6 +182,7 @@ def test_streaming_chaos_batch_splits_match_batch_fold(spark, tmp_path):
             assert g["properties"] == w["properties"], (split, cid)
             assert g["properties_set_once"] == w["properties_set_once"], (split, cid)
             assert g["version"] == w["version"], (split, cid)
+            assert g["id"] == w["id"], (split, cid)
 
         # the reference's fetch_person asserts (S13 debug lookup): anon-1
         # resolves to canonical person-1 carrying the merged state
@@ -716,7 +719,8 @@ def test_stream_across_a_compaction_matches_batch_fold(spark, tmp_path, monkeypa
     alias merges before and after the compaction, ends with the state of
     the one-shot batch fold and of a sequential PersonStoreReplay. The
     compacting entry is a base with no deltas that records its txn and
-    max_id, and a replay of the compacting batch is a rewrite."""
+    max_id (the id counter of the batch fold over the same batches), and
+    a replay of the compacting batch is a rewrite."""
     from hogflare_spark.operators.ingest import ingest_raw_requests
     from hogflare_spark.sinks import lake
     from hogflare_spark.streaming.ingest_stream import StreamingIngestJob
@@ -735,8 +739,9 @@ def test_stream_across_a_compaction_matches_batch_fold(spark, tmp_path, monkeypa
         assert entry["version"] == 4 and entry["deltas"] == [], entry
         assert entry["base"] == entry["committed_batch"]
         assert entry["txns"] == {"r": 3}
-    ids = [r["id"] for r in job.read_persons(spark).collect()]
-    assert persons_entry["max_id"] == max(ids)
+    head = [r for batch in COMPACTION_BATCHES[:4] for r in batch]
+    counter = ingest_raw_requests(_raw_df(spark, head), group_types=group_types)["ids_allocated"]
+    assert persons_entry["max_id"] == counter
     # the compaction dropped the tombstone of the merged-away anon-1
     base = spark.read.parquet(os.path.join(job.warehouse_dir, "persons", persons_entry["base"]))
     assert base.where(F.col("uuid").isNull()).count() == 0
