@@ -90,13 +90,14 @@ def ingest_commands(
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
     person_id_floor: int | None = None,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Ingest-command rows (normalize.COMMAND_SCHEMA) → governed tables.
 
     Returns {"events", "persons", "groups"} frames and "ids_allocated",
     the person ids the pass consumed (`fold_person_state`). The prior_*
     frames seed the state folds; persons and groups are then the deltas
-    over those seeds. `person_id_floor` lets a caller seeding a slice of
+    over those seeds, persons with a tombstone for each seeded person a
+    merge absorbed. `person_id_floor` lets a caller seeding a slice of
     the prior persons table start allocating above the id counter.
 
     The commands are pinned once (`pin_commands`) unless the caller
@@ -243,7 +244,7 @@ def ingest_raw_requests(
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Full path: raw HTTP-shaped rows → `ingest_commands`' output,
     uncommitted. The signature gate runs when ``signing_secret`` is set."""
     return ingest_commands(

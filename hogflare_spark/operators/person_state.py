@@ -389,7 +389,7 @@ def fold_person_state(
     # new allocations continue above the prior max id (seeded records keep
     # their stored id via prior_id). `person_id_floor` overrides the
     # derived max for callers that seed only a SLICE of the prior table
-    # (the stream passes the affected persons plus the global max id its
+    # (the stream passes the affected persons plus the id counter its
     # log entry records) — without it a
     # restricted seed would re-issue ids already held by unseeded rows.
     if person_id_floor is not None:
